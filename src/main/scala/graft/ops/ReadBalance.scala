@@ -10,8 +10,14 @@ import org.apache.spark.sql.DataFrame
  * packed by openCost, or one modest file under maxPartitionBytes —
  * round-robin it across 2x the cores BEFORE the expensive pass. At
  * catalog scale inputs carry >> cores splits and this is a no-op that
- * costs one physical plan, no job. One definition, not three inlined
- * copies, so the guard's tuning can never silently diverge per path.
+ * costs one physical plan, no job. One definition, not inlined copies,
+ * so the guard's tuning can never silently diverge per path — and no
+ * session-conf mutation (split sizing) beside it.
+ *
+ * Applied ONLY where the per-row kernel measurably dominates the added
+ * exchange; for the cheaper tokenize/minhash kernels the balance
+ * shuffle measured net slower, and map-only projections must never pay
+ * a shuffle of columns they would otherwise not move.
  */
 object ReadBalance {
   def fanOut(df: DataFrame): DataFrame = {

@@ -40,13 +40,13 @@ object ImageCuration {
     import spark.implicits._
     val nImages = images.count()
 
-    // ONE decode pass (the dhashes fan-out guard: inputs with fewer
-    // splits than cores would leave the host idle on the CPU-bound pass)
-    val src = images.select(col("image_id"), col("bytes"), col("w"), col("h"), col("fmt"))
+    // ONE decode pass, behind the shared ReadBalance guard: inputs with
+    // fewer splits than cores would leave the host idle on the
+    // CPU-bound pass
+    val feats = graft.ops.ReadBalance.fanOut(
+        images.select(col("image_id"), col("bytes"), col("w"), col("h"), col("fmt")))
       .as[(String, Array[Byte], Int, Int, String)]
-    val p = spark.sparkContext.defaultParallelism
-    val balanced = if (src.rdd.getNumPartitions < p) src.repartition(p * 2) else src
-    val feats = balanced.mapPartitions(_.flatMap { case (id, bytes, w, h, fmt) =>
+      .mapPartitions(_.flatMap { case (id, bytes, w, h, fmt) =>
         scala.util.Try {
           val img = graft.media.Media.decode(id, bytes, w, h, fmt)
           val f = graft.media.Media.features(img)

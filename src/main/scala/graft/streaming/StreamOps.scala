@@ -213,20 +213,16 @@ object StreamOps {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         migrateFlatSink(batch.sparkSession, labelsOut)
         migrateFlatSink(batch.sparkSession, mergesOut)
-        val ids = graft.media.Media.dhashes(batch)
-          .withColumn("nid", xxhash64(col("image_id")))
-          .localCheckpoint(true)
+        val ids = graft.media.Media.dedupIds(batch)
         try {
           if (ids.count() > 0) {
-            val (labels, merges) = graft.media.Media
-              .incrementalImageDedupFromIds(ids, bandsTable)
+            val (labels, merges) = graft.media.Media.incrementalImageDedup(ids, bandsTable)
             val l = labels.localCheckpoint(true)
             try {
               l.write.mode("overwrite").parquet(s"$labelsOut/batch=$batchId")
               merges.write.mode("overwrite").parquet(s"$mergesOut/batch=$batchId")
-              graft.media.Media.appendImageDedupStateFromIds(
-                ids.select(col("image_id"), col("dhash")), l, bandsTable, stateDir, buckets,
-                writeLabels = false)
+              graft.media.Media.appendImageDedupState(
+                ids, l, bandsTable, stateDir, buckets, writeLabels = false)
             } finally l.unpersist()
           }
           // unpersist per batch: a long backlog drain would otherwise

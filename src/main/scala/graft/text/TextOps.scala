@@ -11,21 +11,6 @@ import org.apache.spark.sql.functions._
  * column never shuffles except where semantically required.
  */
 object TextOps {
-  /** Fan a small-split scan out to the cores before KERNEL-HEAVY per-row
-    * work — the Media.dhashes decode-balance guard applied to text: when
-    * the input arrives in fewer splits than cores (a single small
-    * parquet file puts the whole window-hash kernel pass on ONE task),
-    * redistribute first. At catalog scale inputs carry >> cores splits
-    * and the guard never fires — it costs one physical plan, no job.
-    * Applied ONLY where the per-row kernel measurably dominates the
-    * added exchange (the duplicate-span windowed projection: an
-    * (n+16)-bytes-per-char spool); for the cheaper tokenize/minhash
-    * kernels the balance shuffle + extra tasks measured NET SLOWER at
-    * bench scale, and map-only projections must never pay a shuffle of
-    * text they would otherwise not move. */
-  private[graft] def fanOut(df: DataFrame): DataFrame =
-    graft.ops.ReadBalance.fanOut(df)
-
   /** Exact dedup: hash-groupBy on md5(text); keeps the smallest doc_id
     * as the canonical representative. Only the 16-byte digest shuffles. */
   def dedupExact(docs: DataFrame): DataFrame =
@@ -567,7 +552,7 @@ object TextOps {
     * would shuffle the full projection; consumers dedupe at candidate
     * size). */
   private[graft] def duplicateSpansProjection(docs: DataFrame, n: Int): DataFrame =
-    fanOut(docs.select(col("doc_id"), col("text"))).select(col("doc_id"),
+    graft.ops.ReadBalance.fanOut(docs.select(col("doc_id"), col("text"))).select(col("doc_id"),
         explode(org.apache.spark.sql.graft.Bridge.column(
           graft.functions.CharNgramSnipsExpr(
             org.apache.spark.sql.graft.Bridge.expression(col("text")), n))).as("ws"))
@@ -605,7 +590,7 @@ object TextOps {
           .select(col("doc_id"), col("wh"), col("snip"), col("bcnt"))
           .distinct()
       } else {
-        val src = fanOut(docs.select(col("doc_id"), col("text")))
+        val src = graft.ops.ReadBalance.fanOut(docs.select(col("doc_id"), col("text")))
         val w = src.select(col("doc_id"), explode(charNgramHashes(col("text"), n)).as("wh"))
           .distinct()
         val bs = w.groupBy("wh")

@@ -41,22 +41,20 @@ class MediaSpec extends AnyFunSuite {
     }
   }
 
-  test("feature extraction + thumbnails run distributed with correct shapes") {
+  /** Channel means + luma histogram of every payload, decoded on the executors. */
+  private def distributedFeatures(df: org.apache.spark.sql.DataFrame): Array[graft.media.ImageFeatures] = {
     import spark.implicits._
+    df.select("image_id", "bytes", "w", "h", "fmt").as[(String, Array[Byte], Int, Int, String)]
+      .map { case (id, bytes, w, h, fmt) => Media.features(Media.decode(id, bytes, w, h, fmt)) }
+      .collect()
+  }
+
+  test("feature extraction runs distributed with correct shapes") {
     val imgs = ImageTable.generate(spark, 200).toDF()
-    val feats = Media.extractFeatures(imgs).collect()
+    val feats = distributedFeatures(imgs)
     assert(feats.length == 200)
     assert(feats.forall(f => f.luma_hist.sum == f.w.toLong * f.h))
     assert(feats.forall(f => f.mean_r >= 0 && f.mean_r <= 255))
-
-    val thumbs = Media.thumbnails(imgs, 4, 4)
-    val t = thumbs.as[(String, Array[Byte], Int, Int, String)].collect()
-    assert(t.length == 200)
-    t.foreach { case (id, bytes, w, h, fmt) =>
-      assert(w == 4 && h == 4 && fmt == "png")
-      val d = Media.decode(id, bytes, w, h, fmt)
-      assert(d.rgb.length == 4 * 4 * 3)
-    }
   }
 
   test("real JPEG decode via JDK ImageIO (distributed feature extraction)") {
@@ -75,7 +73,7 @@ class MediaSpec extends AnyFunSuite {
       ("j1", jpegBytes(200, 40, 90, 32, 24), 32, 24, "jpeg"),
       ("j2", jpegBytes(10, 180, 250, 48, 48), 48, 48, "jpeg"))
     val df = rows.toDF("image_id", "bytes", "w", "h", "fmt")
-    val feats = graft.media.Media.extractFeatures(df).collect().sortBy(_.image_id)
+    val feats = distributedFeatures(df).sortBy(_.image_id)
     assert(feats.map(f => (f.w, f.h)).toSeq == Seq((32, 24), (48, 48)))
     val j1 = feats(0); val j2 = feats(1)
     assert(math.abs(j1.mean_r - 200) < 8 && math.abs(j1.mean_g - 40) < 8 && math.abs(j1.mean_b - 90) < 8,
@@ -85,29 +83,6 @@ class MediaSpec extends AnyFunSuite {
     // corrupt jpeg payload falls back to the deterministic stub
     val bad = graft.media.Media.decode("x", Array[Byte](1, 2, 3), 4, 4, "jpeg")
     assert(bad.w == 4 && bad.h == 4 && bad.rgb.length == 48)
-  }
-
-  test("real WAV PCM16 decode: sine wave features recovered exactly") {
-    // author a real RIFF/WAVE via the JDK sound API, decode with ours
-    val sr = 8000; val n = 4000; val freq = 440.0
-    val pcm = new Array[Byte](n * 2)
-    for (i <- 0 until n) {
-      val v = (math.sin(2 * math.Pi * freq * i / sr) * 30000).toShort
-      pcm(2 * i) = (v & 0xFF).toByte; pcm(2 * i + 1) = ((v >> 8) & 0xFF).toByte
-    }
-    val fmt = new javax.sound.sampled.AudioFormat(sr.toFloat, 16, 1, true, false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-    val wav = bos.toByteArray
-    val dec = graft.media.Media.decodeAudio("w1", wav, 0, 0) // params ignored for real wav
-    assert(dec.sampleRate == sr && dec.samples.length == n)
-    val f = graft.media.Media.audioFeatures(dec)
-    // sine RMS = amplitude/sqrt(2); zero crossings = 2*freq*duration
-    assert(math.abs(f.rms - 30000.0 / 32768 / math.sqrt(2)) < 0.01, s"rms=${f.rms}")
-    assert(math.abs(f.zeroCrossings - 2 * freq * n / sr) <= 2, s"zc=${f.zeroCrossings}")
-    assert(math.abs(f.durSec - 0.5) < 1e-9)
   }
 
   test("unknown formats route through ImageIO service discovery before the stub") {
@@ -135,6 +110,37 @@ class MediaSpec extends AnyFunSuite {
     val b = Media.decode("x", Array[Byte](1, 2, 3), 8, 8, "jpeg")
     assert(java.util.Arrays.equals(a.rgb, b.rgb))
     assert(a.rgb.length == 8 * 8 * 3)
+
+    // FRAME-descriptor decompression bomb: a 2x2 GIF whose image
+    // descriptor is patched to claim 50000x50000 must take the stub —
+    // the header check runs before reader.read, which would otherwise
+    // allocate ~7.5 GB inside the codec. Descriptor layout:
+    // 0x2C left(2) top(2) w(2) h(2), little-endian.
+    val bi = new java.awt.image.BufferedImage(2, 2, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until 2; x <- 0 until 2) bi.setRGB(x, y, 0x112233)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(bi, "gif", bos)
+    val plain = bos.toByteArray
+    val pat = Array[Byte](0x2C, 0, 0, 0, 0, 2, 0, 2, 0)
+    val at = plain.indices.find(i => i + pat.length <= plain.length &&
+      pat.indices.forall(j => plain(i + j) == pat(j))).get
+    val fbomb = plain.clone()
+    fbomb(at + 5) = 0x50.toByte; fbomb(at + 6) = 0xC3.toByte // w = 50000
+    fbomb(at + 7) = 0x50.toByte; fbomb(at + 8) = 0xC3.toByte // h = 50000
+    val s1 = Media.decode("fbomb", fbomb, 4, 4, "gif")
+    val s2 = Media.decode("fbomb", fbomb, 4, 4, "gif")
+    assert(s1.w == 4 && s1.h == 4 && s1.rgb.length == 48,
+      "oversized frame descriptor did not degrade to the stub")
+    assert(java.util.Arrays.equals(s1.rgb, s2.rgb))
+    // LOGICAL-SCREEN bomb (header bytes 6-9): single-frame decode reads
+    // only frame 0 at its descriptor size, so the 50000x50000 screen is
+    // never allocated — the real 2x2 frame decodes
+    val sbomb = plain.clone()
+    sbomb(6) = 0x50.toByte; sbomb(7) = 0xC3.toByte
+    sbomb(8) = 0x50.toByte; sbomb(9) = 0xC3.toByte
+    val f = Media.decode("sbomb", sbomb, 4, 4, "gif")
+    assert(f.w == 2 && f.h == 2, s"logical-screen GIF decoded to ${f.w}x${f.h}")
+    assert((f.rgb(0) & 0xFF) == 0x11 && (f.rgb(1) & 0xFF) == 0x22 && (f.rgb(2) & 0xFF) == 0x33)
   }
 
   test("dhash64: format-invariant, perturbation-local, discriminative") {
@@ -199,6 +205,16 @@ class MediaSpec extends AnyFunSuite {
     val copyReps = copies.map(c => clusters(c.image_id)).toSet
     assert(copyReps.size == 1, s"identical images split into ${copyReps.size} clusters")
     assert(distinct.map(d => clusters(d.image_id)).toSet.size == 10)
+    // every entry point of the one dedup chain induces the same partition
+    def partition(m: Map[String, Any]): Set[Set[String]] =
+      m.groupBy(_._2).values.map(_.keySet).toSet
+    val phased = Media.imageDupClustersPhased(df, maxHamming = 2)._1
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val ids = Media.dedupIds(df)
+    val viaNid = Media.imageDupLabelsNid(ids, maxHamming = 2).join(ids, "nid")
+      .select("image_id", "rep").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(partition(phased) == partition(clusters))
+    assert(partition(viaNid) == partition(clusters))
   }
 
   /** Brute-force Hamming<=2 truth over a hash set, for exact-set asserts. */
@@ -264,7 +280,7 @@ class MediaSpec extends AnyFunSuite {
       spark.createDataset(aRows).toDF(), dir, "dedup_state_bands", buckets = 4)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val (bl, mg) = Media.incrementalImageDedup(
-      spark.createDataset(bRows).toDF(), "dedup_state_bands")
+      Media.dedupIds(spark.createDataset(bRows).toDF()), "dedup_state_bands")
     val bLabels = bl.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val merges = mg.collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
@@ -303,10 +319,10 @@ class MediaSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("dedupappend").toString
     val tbl = "dedup_append_bands"
     Media.writeImageDedupState(spark.createDataset(aRows).toDF(), dir, tbl, buckets = 4)
-    val (bl, _) = Media.incrementalImageDedup(spark.createDataset(bRows).toDF(), tbl)
+    val (bl, _) = Media.incrementalImageDedup(Media.dedupIds(spark.createDataset(bRows).toDF()), tbl)
     val blM = bl.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    Media.appendImageDedupState(spark.createDataset(bRows).toDF(), bl, tbl, dir, buckets = 4)
-    val (cl, _) = Media.incrementalImageDedup(spark.createDataset(cRows).toDF(), tbl)
+    Media.appendImageDedupState(Media.dedupIds(spark.createDataset(bRows).toDF()), bl, tbl, dir, buckets = 4)
+    val (cl, _) = Media.incrementalImageDedup(Media.dedupIds(spark.createDataset(cRows).toDF()), tbl)
     val clM = cl.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val b45 = originals(45).image_id
     assert(clM(b45 + "_rc") == blM(b45),
@@ -346,259 +362,6 @@ class MediaSpec extends AnyFunSuite {
     assert(ll.features.head._3.contains(9L))
   }
 
-  test("MJPEG AVI: real frame sampling from a RIFF container") {
-    // author a minimal AVI (RIFF/hdrl/movi) whose '00dc' chunks are real
-    // JDK-encoded JPEGs of distinct solid colors
-    def jpeg(r: Int, g: Int, b: Int): Array[Byte] = {
-      val bi = new java.awt.image.BufferedImage(16, 12, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 12; x <- 0 until 16) bi.setRGB(x, y, (r << 16) | (g << 8) | b)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(bi, "jpeg", bos)
-      bos.toByteArray
-    }
-    def le32(v: Int): Array[Byte] =
-      Array((v & 0xFF).toByte, ((v >> 8) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte, ((v >> 24) & 0xFF).toByte)
-    def chunk(tag: String, data: Array[Byte]): Array[Byte] =
-      tag.getBytes("US-ASCII") ++ le32(data.length) ++ data ++
-        (if (data.length % 2 == 1) Array(0.toByte) else Array.empty[Byte])
-    def list(typ: String, body: Array[Byte]): Array[Byte] =
-      chunk("LIST", typ.getBytes("US-ASCII") ++ body)
-    val frames = Seq(jpeg(250, 10, 10), jpeg(10, 250, 10), jpeg(10, 10, 250))
-    val body = list("hdrl", chunk("avih", new Array[Byte](56))) ++
-      list("movi", frames.flatMap(f => chunk("00dc", f)).toArray)
-    val avi = "RIFF".getBytes("US-ASCII") ++ le32(body.length + 4) ++
-      "AVI ".getBytes("US-ASCII") ++ body
-
-    val got = Media.sampleFrames("v1", avi, 0, 0, nFrames = 0, every = 2)
-    assert(got.map(_.image_id) == Seq("v1#f0", "v1#f2"), got.map(_.image_id))
-    assert(got.forall(f => f.w == 16 && f.h == 12))
-    def mean(img: graft.media.DecodedImage, c: Int): Double =
-      img.rgb.indices.collect { case i if i % 3 == c => img.rgb(i) & 0xFF }.sum /
-        (img.w * img.h).toDouble
-    assert(mean(got(0), 0) > 200 && mean(got(0), 1) < 60, "frame 0 not red")
-    assert(mean(got(1), 2) > 200 && mean(got(1), 0) < 60, "frame 2 not blue")
-    // non-AVI payloads keep the deterministic stub shape
-    val stub = Media.sampleFrames("v2", Array[Byte](1, 2, 3), 8, 8, nFrames = 4, every = 2)
-    assert(stub.map(_.image_id) == Seq("v2#f0", "v2#f2") && stub.forall(_.rgb.length == 192))
-    // a corrupt chunk length (claims 4 GiB) must terminate the walk —
-    // no decodable frames, so the caller falls through to the stub
-    val bad = "RIFF".getBytes("US-ASCII") ++ le32(100) ++ "AVI ".getBytes("US-ASCII") ++
-      "00dc".getBytes("US-ASCII") ++ le32(0xFFFFFFF8) ++ new Array[Byte](16)
-    val sf = Media.sampleFrames("v3", bad, 4, 4, nFrames = 2, every = 1)
-    assert(sf.map(_.image_id) == Seq("v3#f0", "v3#f1") && sf.forall(_.rgb.length == 48))
-  }
-
-  test("animated GIF: multi-frame sampling through the JDK reader") {
-    import javax.imageio.ImageIO
-    def solid(r: Int, g: Int, b: Int): java.awt.image.BufferedImage = {
-      val bi = new java.awt.image.BufferedImage(10, 8, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 8; x <- 0 until 10) bi.setRGB(x, y, (r << 16) | (g << 8) | b)
-      bi
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    val writer = ImageIO.getImageWritersByFormatName("gif").next()
-    val ios = ImageIO.createImageOutputStream(bos)
-    writer.setOutput(ios)
-    writer.prepareWriteSequence(null)
-    Seq(solid(240, 20, 20), solid(20, 240, 20), solid(20, 20, 240), solid(240, 240, 20))
-      .foreach(bi => writer.writeToSequence(new javax.imageio.IIOImage(bi, null, null), null))
-    writer.endWriteSequence(); ios.close(); writer.dispose()
-
-    val got = Media.sampleFrames("g1", bos.toByteArray, 0, 0, nFrames = 0, every = 3)
-    assert(got.map(_.image_id) == Seq("g1#f0", "g1#f3"), got.map(_.image_id))
-    assert(got.forall(f => f.w == 10 && f.h == 8))
-    assert((got(0).rgb(0) & 0xFF) > 200 && (got(0).rgb(1) & 0xFF) < 60, "frame 0 not red")
-    assert((got(1).rgb(0) & 0xFF) > 200 && (got(1).rgb(1) & 0xFF) > 200, "frame 3 not yellow")
-  }
-
-  test("delta-encoded GIF: sub-rectangle frames composite on the logical screen") {
-    import javax.imageio.{ImageIO, ImageTypeSpecifier}
-    import javax.imageio.metadata.IIOMetadataNode
-    def solid(w: Int, h: Int, rgb: Int): java.awt.image.BufferedImage = {
-      val bi = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) bi.setRGB(x, y, rgb)
-      bi
-    }
-    val writer = ImageIO.getImageWritersByFormatName("gif").next()
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = ImageIO.createImageOutputStream(bos)
-    writer.setOutput(ios)
-    // stream metadata pins the 20x16 LOGICAL SCREEN (bigger than frame 0)
-    val smeta = writer.getDefaultStreamMetadata(null)
-    val sfmt = "javax_imageio_gif_stream_1.0"
-    val sroot = smeta.getAsTree(sfmt).asInstanceOf[IIOMetadataNode]
-    val lsd = {
-      val kids = sroot.getChildNodes
-      (0 until kids.getLength).map(kids.item).find(_.getNodeName == "LogicalScreenDescriptor")
-        .map(_.asInstanceOf[IIOMetadataNode]).getOrElse {
-          val n = new IIOMetadataNode("LogicalScreenDescriptor"); sroot.appendChild(n); n
-        }
-    }
-    lsd.setAttribute("logicalScreenWidth", "20")
-    lsd.setAttribute("logicalScreenHeight", "16")
-    lsd.setAttribute("colorResolution", "7")
-    lsd.setAttribute("pixelAspectRatio", "0")
-    smeta.setFromTree(sfmt, sroot)
-    def frameMeta(img: java.awt.image.BufferedImage, x: Int, y: Int) = {
-      val m = writer.getDefaultImageMetadata(new ImageTypeSpecifier(img), null)
-      val fmt = "javax_imageio_gif_image_1.0"
-      val root = m.getAsTree(fmt).asInstanceOf[IIOMetadataNode]
-      val kids = root.getChildNodes
-      val desc = (0 until kids.getLength).map(kids.item)
-        .find(_.getNodeName == "ImageDescriptor").get.asInstanceOf[IIOMetadataNode]
-      desc.setAttribute("imageLeftPosition", x.toString)
-      desc.setAttribute("imageTopPosition", y.toString)
-      m.setFromTree(fmt, root)
-      m
-    }
-    writer.prepareWriteSequence(smeta)
-    // frame 0 is a small 6x5 patch at (10, 8): frame-0-sized canvases
-    // (the old bug) would clip the full-screen frame 1 to 16x13
-    val f0 = solid(6, 5, 0x20C020)
-    val f1 = solid(20, 16, 0xC02020)
-    writer.writeToSequence(new javax.imageio.IIOImage(f0, null, frameMeta(f0, 10, 8)), null)
-    writer.writeToSequence(new javax.imageio.IIOImage(f1, null, frameMeta(f1, 0, 0)), null)
-    writer.endWriteSequence(); ios.close(); writer.dispose()
-
-    val got = Media.sampleFrames("gd", bos.toByteArray, 0, 0, nFrames = 0, every = 1)
-    assert(got.map(_.image_id) == Seq("gd#f0", "gd#f1"))
-    assert(got.forall(f => f.w == 20 && f.h == 16),
-      s"canvas not logical-screen-sized: ${got.map(f => (f.w, f.h))}")
-    // frame 0 composite: green patch at (10,8), background untouched
-    def px(img: graft.media.DecodedImage, x: Int, y: Int): (Int, Int, Int) = {
-      val o = (y * img.w + x) * 3
-      ((img.rgb(o) & 0xFF), (img.rgb(o + 1) & 0xFF), (img.rgb(o + 2) & 0xFF))
-    }
-    assert(px(got(0), 12, 10)._2 > 150, "patch pixel not green")
-    assert(px(got(0), 0, 0)._2 < 60, "background unexpectedly painted")
-    // frame 1 composite: full red screen, including the far corner the
-    // old frame-0-sized canvas would have clipped
-    assert(px(got(1), 19, 15)._1 > 150, "corner pixel clipped — canvas not logical screen")
-  }
-
-  test("adversarial AVI: 100k nested LISTs walk iteratively (no stack overflow)") {
-    // pure nesting: each 12-byte level is LIST + len + type, innermost
-    // holds only its type. A recursive walk overflows the JVM stack
-    // around ~10k frames; the iterative walk must degrade to the stub.
-    val n = 100000
-    val total = 12 * n
-    val body = new Array[Byte](total)
-    def le32At(a: Array[Byte], o: Int, v: Int): Unit = {
-      a(o) = (v & 0xFF).toByte; a(o + 1) = ((v >> 8) & 0xFF).toByte
-      a(o + 2) = ((v >> 16) & 0xFF).toByte; a(o + 3) = ((v >> 24) & 0xFF).toByte
-    }
-    for (i <- 0 until n) {
-      val o = 12 * i
-      System.arraycopy("LIST".getBytes("US-ASCII"), 0, body, o, 4)
-      le32At(body, o + 4, total - o - 8) // payload = type + everything nested
-      System.arraycopy("mv  ".getBytes("US-ASCII"), 0, body, o + 8, 4)
-    }
-    val avi = "RIFF".getBytes("US-ASCII") ++
-      Array((total + 4 & 0xFF).toByte, ((total + 4 >> 8) & 0xFF).toByte,
-        ((total + 4 >> 16) & 0xFF).toByte, ((total + 4 >> 24) & 0xFF).toByte) ++
-      "AVI ".getBytes("US-ASCII") ++ body
-    val got = Media.sampleFrames("deep", avi, 4, 4, nFrames = 2, every = 1)
-    assert(got.map(_.image_id) == Seq("deep#f0", "deep#f1") && got.forall(_.rgb.length == 48),
-      "nested-LIST AVI did not degrade to the stub")
-  }
-
-  test("GIF disposal: restoreToBackgroundColor clears the frame rect; decompression bomb stubs") {
-    import javax.imageio.{ImageIO, ImageTypeSpecifier}
-    import javax.imageio.metadata.IIOMetadataNode
-    def solid(w: Int, h: Int, rgb: Int): java.awt.image.BufferedImage = {
-      val bi = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) bi.setRGB(x, y, rgb)
-      bi
-    }
-    def writeGif(frames: Seq[(java.awt.image.BufferedImage, Int, Int, String)],
-                 screen: Option[(Int, Int)]): Array[Byte] = {
-      val writer = ImageIO.getImageWritersByFormatName("gif").next()
-      val bos = new java.io.ByteArrayOutputStream()
-      val ios = ImageIO.createImageOutputStream(bos)
-      writer.setOutput(ios)
-      val smeta = screen.map { case (sw, sh) =>
-        val m = writer.getDefaultStreamMetadata(null)
-        val sfmt = "javax_imageio_gif_stream_1.0"
-        val root = m.getAsTree(sfmt).asInstanceOf[IIOMetadataNode]
-        val kids = root.getChildNodes
-        val lsd = (0 until kids.getLength).map(kids.item)
-          .find(_.getNodeName == "LogicalScreenDescriptor")
-          .map(_.asInstanceOf[IIOMetadataNode]).getOrElse {
-            val nn = new IIOMetadataNode("LogicalScreenDescriptor"); root.appendChild(nn); nn
-          }
-        lsd.setAttribute("logicalScreenWidth", sw.toString)
-        lsd.setAttribute("logicalScreenHeight", sh.toString)
-        lsd.setAttribute("colorResolution", "7")
-        lsd.setAttribute("pixelAspectRatio", "0")
-        m.setFromTree(sfmt, root)
-        m
-      }.orNull
-      writer.prepareWriteSequence(smeta)
-      frames.foreach { case (img, x, y, disposal) =>
-        val m = writer.getDefaultImageMetadata(new ImageTypeSpecifier(img), null)
-        val fmt = "javax_imageio_gif_image_1.0"
-        val root = m.getAsTree(fmt).asInstanceOf[IIOMetadataNode]
-        val kids = root.getChildNodes
-        val desc = (0 until kids.getLength).map(kids.item)
-          .find(_.getNodeName == "ImageDescriptor").get.asInstanceOf[IIOMetadataNode]
-        desc.setAttribute("imageLeftPosition", x.toString)
-        desc.setAttribute("imageTopPosition", y.toString)
-        val gce = (0 until kids.getLength).map(kids.item)
-          .find(_.getNodeName == "GraphicControlExtension")
-          .map(_.asInstanceOf[IIOMetadataNode]).getOrElse {
-            val nn = new IIOMetadataNode("GraphicControlExtension"); root.appendChild(nn); nn
-          }
-        gce.setAttribute("disposalMethod", disposal)
-        gce.setAttribute("userInputFlag", "FALSE")
-        gce.setAttribute("transparentColorFlag", "FALSE")
-        gce.setAttribute("delayTime", "10")
-        gce.setAttribute("transparentColorIndex", "0")
-        m.setFromTree(fmt, root)
-        writer.writeToSequence(new javax.imageio.IIOImage(img, null, m), null)
-      }
-      writer.endWriteSequence(); ios.close(); writer.dispose()
-      bos.toByteArray
-    }
-    // frame 0: full green, disposal restoreToBackgroundColor; frame 1:
-    // 4x4 red patch. A do-not-dispose-only compositor keeps the green
-    // under frame 1; a compliant one clears it first.
-    val gif = writeGif(Seq(
-      (solid(10, 8, 0x20C020), 0, 0, "restoreToBackgroundColor"),
-      (solid(4, 4, 0xC02020), 0, 0, "doNotDispose")), None)
-    val got = Media.sampleFrames("disp", gif, 0, 0, nFrames = 0, every = 1)
-    assert(got.length == 2)
-    def px(img: graft.media.DecodedImage, x: Int, y: Int): (Int, Int, Int) = {
-      val o = (y * img.w + x) * 3
-      ((img.rgb(o) & 0xFF), (img.rgb(o + 1) & 0xFF), (img.rgb(o + 2) & 0xFF))
-    }
-    assert(px(got(0), 8, 6)._2 > 150, "frame 0 not green")
-    assert(px(got(1), 1, 1)._1 > 150, "frame 1 patch not red")
-    assert(px(got(1), 8, 6)._2 < 60,
-      s"frame 0's pixels survived its restoreToBackgroundColor disposal: ${px(got(1), 8, 6)}")
-
-    // decompression bomb: a ~200-byte GIF declaring a 50000x50000
-    // logical screen must stub, not allocate a 7.5 GB canvas
-    val bomb = writeGif(Seq((solid(2, 2, 0x112233), 0, 0, "none")), Some((50000, 50000)))
-    val stub = Media.sampleFrames("bomb", bomb, 4, 4, nFrames = 2, every = 1)
-    assert(stub.map(_.image_id) == Seq("bomb#f0", "bomb#f1") && stub.forall(_.rgb.length == 48),
-      "oversized logical screen did not degrade to the stub")
-
-    // FRAME-descriptor bomb: patch the 2x2 frame's ImageDescriptor to
-    // claim 50000x50000 (the canvas cap alone would miss this — the
-    // allocation happens inside reader.read). Descriptor layout:
-    // 0x2C left(2) top(2) w(2) h(2); patch w/h little-endian.
-    val plain = writeGif(Seq((solid(2, 2, 0x112233), 0, 0, "none")), None)
-    val pat = Array[Byte](0x2C, 0, 0, 0, 0, 2, 0, 2, 0)
-    val at = plain.indices.find(i => i + pat.length <= plain.length &&
-      pat.indices.forall(j => plain(i + j) == pat(j))).get
-    val fbomb = plain.clone()
-    fbomb(at + 5) = 0x50.toByte; fbomb(at + 6) = 0xC3.toByte // w = 50000
-    fbomb(at + 7) = 0x50.toByte; fbomb(at + 8) = 0xC3.toByte // h = 50000
-    val stub2 = Media.sampleFrames("fbomb", fbomb, 4, 4, nFrames = 2, every = 1)
-    assert(stub2.map(_.image_id) == Seq("fbomb#f0", "fbomb#f1") && stub2.forall(_.rgb.length == 48),
-      "oversized frame descriptor did not degrade to the stub")
-  }
-
   test("dedup state append: single-writer lease rejects concurrent writers, steals stale ones") {
     import spark.implicits._
     val originals = (0L until 20L).map(i => ImageTable.row(77L, i))
@@ -606,41 +369,24 @@ class MediaSpec extends AnyFunSuite {
     val tbl = "dedup_lease_bands"
     Media.writeImageDedupState(spark.createDataset(originals.take(10)).toDF(), dir, tbl, buckets = 4)
     val bRows = originals.drop(10)
-    val (bl, _) = Media.incrementalImageDedup(spark.createDataset(bRows).toDF(), tbl)
+    val (bl, _) = Media.incrementalImageDedup(Media.dedupIds(spark.createDataset(bRows).toDF()), tbl)
     val blC = bl.localCheckpoint(true)
     // a FRESH lease held by "another writer" must reject the append
     val lease = java.nio.file.Paths.get(dir, ".writer_lease")
     java.nio.file.Files.createFile(lease)
     val ex = intercept[IllegalStateException] {
-      Media.appendImageDedupState(spark.createDataset(bRows).toDF(), blC, tbl, dir, buckets = 4)
+      Media.appendImageDedupState(Media.dedupIds(spark.createDataset(bRows).toDF()), blC, tbl, dir, buckets = 4)
     }
     assert(ex.getMessage.contains("another writer"), ex.getMessage)
     // a STALE lease (crashed writer, mtime beyond the lease window) is stolen
     java.nio.file.Files.setLastModifiedTime(lease,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600 * 1000))
-    Media.appendImageDedupState(spark.createDataset(bRows).toDF(), blC, tbl, dir, buckets = 4)
+    Media.appendImageDedupState(Media.dedupIds(spark.createDataset(bRows).toDF()), blC, tbl, dir, buckets = 4)
     assert(!java.nio.file.Files.exists(lease), "lease not released after append")
     // the append landed (a B hash has its 6 band rows)
     val h = Media.dhash64(Media.decode(bRows.head.image_id, bRows.head.bytes,
       bRows.head.w, bRows.head.h, bRows.head.fmt))
     assert(spark.table(tbl).filter(col("dhash") === h).count() == 6)
-  }
-
-  test("audio/video payload plumbing: features + frame sampling") {
-    import spark.implicits._
-    val audio = (0 until 50).map { i =>
-      (s"aud$i", Array.tabulate[Byte](64)(j => ((i * 31 + j) & 0xFF).toByte), 16000, 1600)
-    }.toDF("media_id", "bytes", "sample_rate", "n_samples")
-    val feats = Media.extractAudioFeatures(audio).collect()
-    assert(feats.length == 50)
-    assert(feats.forall(f => f.rms > 0 && f.rms < 1.2 && f.durSec == 0.1))
-    // deterministic
-    val feats2 = Media.extractAudioFeatures(audio).collect()
-    assert(feats.map(_.rms).toSeq == feats2.map(_.rms).toSeq)
-
-    val frames = Media.sampleFrames("vid1", Array[Byte](1, 2, 3), 8, 8, nFrames = 30, every = 10)
-    assert(frames.map(_.image_id) == Seq("vid1#f0", "vid1#f10", "vid1#f20"))
-    assert(frames.forall(_.rgb.length == 8 * 8 * 3))
   }
 
   test("tileset writer: z/x/y.png layout + metadata.json, ONE render job") {

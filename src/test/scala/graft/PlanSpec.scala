@@ -361,23 +361,40 @@ class PlanSpec extends AnyFunSuite {
         val head = if (i < 100) boiler + " " else ""
         (i, s"$head${rndStr(i * 2 + 1)} $span ${rndStr(i * 2 + 2)}")
       }.toDF("doc_id", "text")
-      // plan shape (uncheckpointed variant: one assertable tree)
-      val planDf = graft.text.TextOps.duplicateSpansImpl(docs, 30, 64, checkpoint = false)
-      val plan = planDf.queryExecution.executedPlan
-      val exchanges = allNodes(plan).collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      // plan shape (uncheckpointed variant: one assertable tree).
+      // Keyed text shuffles are banned; the ONE sanctioned text exchange
+      // is ReadBalance's round-robin fan-out (fires only when splits <
+      // cores), at most once and directly above the scan. Returns how
+      // many fan-outs the plan holds.
+      def textExchanges(input: org.apache.spark.sql.DataFrame): Int = {
+        val plan = graft.text.TextOps.duplicateSpansImpl(input, 30, 64, checkpoint = false)
+          .queryExecution.executedPlan
+        val exchanges = allNodes(plan).collect {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+        }
+        assert(exchanges.nonEmpty)
+        val (fanOuts, keyed) = exchanges.filter(_.output.exists(_.name == "text"))
+          .partition(_.outputPartitioning
+            .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning])
+        assert(keyed.isEmpty, "text column shuffled: " +
+          keyed.map(_.output.map(_.name).mkString(", ")).mkString("; "))
+        assert(fanOuts.size <= 1, s"${fanOuts.size} round-robin text exchanges:\n$plan")
+        def unwrap(p: SparkPlan): SparkPlan = p match {
+          case w: org.apache.spark.sql.execution.WholeStageCodegenExec => unwrap(w.child)
+          case i: org.apache.spark.sql.execution.InputAdapter => unwrap(i.child)
+          case c: org.apache.spark.sql.execution.ColumnarToRowExec => unwrap(c.child)
+          case other => other
+        }
+        fanOuts.foreach { e =>
+          assert(unwrap(e.child).isInstanceOf[org.apache.spark.sql.execution.LeafExecNode],
+            s"round-robin text exchange not directly above the scan:\n$e")
+        }
+        assert(plan.toString().contains("BroadcastHashJoin"), plan.toString().take(2000))
+        fanOuts.size
       }
-      assert(exchanges.nonEmpty)
-      exchanges.foreach { e =>
-        // duplicate spans is the ONE operator with the sanctioned
-        // round-robin read-balance (TextOps.fanOut via ReadBalance,
-        // fires only when splits < cores); keyed text shuffles banned
-        val roundRobin = e.outputPartitioning
-          .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning]
-        assert(roundRobin || !e.output.exists(_.name == "text"),
-          "text column shuffled: " + e.output.map(_.name).mkString(", "))
-      }
-      assert(plan.toString().contains("BroadcastHashJoin"), plan.toString().take(2000))
+      assert(textExchanges(docs) == 0) // 4 local splits on 4 cores: no fan-out
+      // a one-split input fires the fan-out, exactly once, above the scan
+      assert(textExchanges(spark.createDataFrame(docs.rdd.coalesce(1), docs.schema)) == 1)
 
       // independent truth: replicate the capped-pair algorithm on the
       // actual 30-char WINDOW STRINGS (no hashes anywhere) — small
@@ -672,5 +689,56 @@ class PlanSpec extends AnyFunSuite {
     assert(r.getLong(0) == graft.text.PortableHash.simhash62(
       org.apache.spark.unsafe.types.UTF8String.fromString("the quick brown fox")))
     assert(r.getInt(1) == 16 && r.getInt(2) == 4)
+  }
+
+  test("image dedup edge list: every exchange stays in nid space (no image_id shuffles)") {
+    import spark.implicits._
+    import graft.media.Media
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    // shuffle joins everywhere: a broadcast side would hide which
+    // columns a join moves
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    try {
+      val originals = (0L until 40L).map(i => graft.tables.ImageTable.row(42L, i))
+      // exact copies (the pregroup's stars) + re-encodes (banded pairs)
+      val copies = Seq(3, 9).map(i => originals(i).copy(image_id = originals(i).image_id + "_cp"))
+      val reencodes = Seq(0, 7).map { i =>
+        val o = originals(i)
+        val img = Media.decode(o.image_id, o.bytes, o.w, o.h, o.fmt)
+        o.copy(image_id = o.image_id + "_re", bytes = Media.reencodePng(img), fmt = "png")
+      }
+      val ids = Media.dedupIds(spark.createDataset(originals ++ copies ++ reencodes).toDF())
+      // every action from here on (pregroup + banding checkpoints, the
+      // final count) is captured; the decode pass above is not
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      val nEdges =
+        try {
+          val n = Media.dupEdges(ids, maxHamming = 2)._1.count()
+          org.apache.spark.TestBus.drain(spark.sparkContext)
+          n
+        } finally spark.listenerManager.unregister(listener)
+      assert(nEdges >= 4, s"$nEdges edges for 2 exact copies + 2 re-encodes")
+      import scala.jdk.CollectionConverters._
+      val exchanges = plans.asScala.toSeq.flatMap(allNodes).collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }
+      assert(exchanges.nonEmpty)
+      exchanges.foreach { e =>
+        assert(!e.output.exists(_.name == "image_id"),
+          "image_id rides a dedup shuffle: " + e.output.map(_.name).mkString(", "))
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+    }
   }
 }

@@ -18,6 +18,10 @@ object RefBinaries {
         Files.walk(buildDir).sorted(java.util.Comparator.reverseOrder())
           .forEach(p => Files.delete(p))
       }
+      if (!Files.isDirectory(srcDir))
+        throw new IllegalStateException(
+          s"reference source tree $srcDir is missing: the golden tests build their oracle " +
+            "binaries from it and cannot run without it")
       Files.createDirectories(buildDir)
       Files.list(srcDir).forEach { p =>
         if (Files.isRegularFile(p))

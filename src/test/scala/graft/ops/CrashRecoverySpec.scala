@@ -116,24 +116,24 @@ class CrashRecoverySpec extends AnyFunSuite {
 
     val refTbl = "crash_img_ref"
     Media.writeImageDedupState(spark.createDataset(aRows).toDF(), s"$base/ref", refTbl, buckets = 4)
-    val (refBl, _) = Media.incrementalImageDedup(spark.createDataset(bRows).toDF(), refTbl)
-    Media.appendImageDedupState(spark.createDataset(bRows).toDF(), refBl, refTbl, s"$base/ref", buckets = 4)
+    val (refBl, _) = Media.incrementalImageDedup(Media.dedupIds(spark.createDataset(bRows).toDF()), refTbl)
+    Media.appendImageDedupState(Media.dedupIds(spark.createDataset(bRows).toDF()), refBl, refTbl, s"$base/ref", buckets = 4)
 
     val tbl = "crash_img_crashed"
     Media.writeImageDedupState(spark.createDataset(aRows).toDF(), s"$base/st", tbl, buckets = 4)
-    val (bl, _) = Media.incrementalImageDedup(spark.createDataset(bRows).toDF(), tbl)
+    val (bl, _) = Media.incrementalImageDedup(Media.dedupIds(spark.createDataset(bRows).toDF()), tbl)
     // CRASH: bands appended, labels never written, stale lease left over
-    Media.appendImageDedupStateFromIds(
-      Media.dhashes(spark.createDataset(bRows).toDF()), bl, tbl, s"$base/st", buckets = 4,
+    Media.appendImageDedupState(
+      Media.dedupIds(spark.createDataset(bRows).toDF()), bl, tbl, s"$base/st", buckets = 4,
       writeLabels = false)
     val lease = plantStaleLease(s"$base/st")
 
     // RECOVERY: replay the whole batch
-    val (blR, _) = Media.incrementalImageDedup(spark.createDataset(bRows).toDF(), tbl)
+    val (blR, _) = Media.incrementalImageDedup(Media.dedupIds(spark.createDataset(bRows).toDF()), tbl)
     assert(blR.collect().map(r => (r.getString(0), r.getString(1))).toMap ==
       bl.collect().map(r => (r.getString(0), r.getString(1))).toMap,
       "replayed incremental resolve diverged from the pre-crash resolve")
-    Media.appendImageDedupState(spark.createDataset(bRows).toDF(), blR, tbl, s"$base/st", buckets = 4)
+    Media.appendImageDedupState(Media.dedupIds(spark.createDataset(bRows).toDF()), blR, tbl, s"$base/st", buckets = 4)
     assert(!java.nio.file.Files.exists(lease), "recovery writer leaked its lease")
 
     def bandRows(t: String): Seq[(Long, Long, Long, String)] =
