@@ -272,7 +272,7 @@ object SparkEntry {
         .select(col("s_suppkey").as("qid"),
           expr(s"${x32Sql("s_suppkey", "s_suppkey * 3 + 1")} >> 8").as("qx"),
           expr(s"${y32Sql("s_suppkey", "s_suppkey * 5 + 2")} >> 8").as("qy"))
-      Knn.knnJoin(s, pts, qs, k = 5, tileShift = 19)
+      Knn.knnJoin(s, pts, qs, k = 5, tileShift = Some(19))
     }),
 
     // F11: antimeridian wrap detection on consecutive-line segments
@@ -629,7 +629,7 @@ object SparkEntry {
         .select(col("s_suppkey").as("qid"),
           expr(s"${x32Sql("s_suppkey", "s_suppkey * 3 + 1")} >> 8").as("qx"),
           expr(s"${y32Sql("s_suppkey", "s_suppkey * 5 + 2")} >> 8").as("qy"))
-      Knn.knnJoinAuto(s, pts, qs, k = 5)
+      Knn.knnJoin(s, pts, qs, k = 5)
     }),
 
     // salient terms: top-3 per doc by tf among terms in <= 80% of docs

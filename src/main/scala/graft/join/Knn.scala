@@ -1,14 +1,14 @@
 package graft.join
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
  * k-nearest-neighbor join via cell-ring expansion (the reference's
  * neighbor-ring probe, render.c:947-967, generalized): points are
- * bucketed by tile at a density-chosen zoom; each query probes its
- * kRing(r) tiles through a shuffle hash join; an exact top-k window
+ * bucketed by tile at a caller-given or density-chosen zoom; each query
+ * probes its 3x3 ring of tiles through a hash join; an exact top-k window
  * finishes. Queries whose k-th candidate distance exceeds the ring
  * guarantee radius fall back to an exact broadcast pass, so results are
  * exactly the true kNN (ties broken by id) — which the DuckDB
@@ -20,110 +20,74 @@ import org.apache.spark.sql.functions._
  */
 object Knn {
 
-  /** Density-derived bucketing shift from ONE cheap aggregate over the
-    * point table (count + bbox): the smallest tiles whose average
-    * (2*ring+1)^2-tile ring still holds ~targetFactor*k points, so the
-    * exact fallback stays RARE without the caller guessing a zoom.
-    * Callers who know their data keep passing tileShift explicitly —
-    * this is the default, not a cap. Uniform-density model: a ring in a
-    * below-average-density pocket can still fall back (exactness is
-    * never at stake, only the fallback rate). */
-  // density-shift memo keyed by the ANALYZED plan (semanticHash), k,
-  // ring, factor: a session running the same join twice (bench min-of-2
-  // passes, dashboards) pays the count+bbox aggregate once. Performance
-  // -only: a stale shift can never change RESULTS (the exact fallback
-  // guarantees that), and the key changes with any plan change — only
-  // in-place file mutation under an unchanged plan could reuse a stale
-  // entry, which Spark's own relation caching already treats as UB.
-  private val shiftMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int, Double), java.lang.Integer]()
+  /** Each query probes its (2*Ring+1)^2 neighborhood of tiles. */
+  private val Ring = 1
 
-  // targetFactor 8 (not 4): the density model is uniform, and a query
-  // in a below-average pocket at factor 4 lands right at the resolve
-  // boundary — r6's bench had exactly one such query, whose fallback
-  // (even d2-capped) costs a full map-side point scan. One extra
-  // doubling is a linear candidate-count cost (~2x rows in the ring
-  // join, still ~8k per query) that buys a quadratically safer margin;
-  // the measured workload went 1 fallback -> 0 with the extra shift.
-  /** THE density-model safety factor (see the factor-4->8 history
-    * above) — single source for every auto-shift entry point. */
-  final val DefaultTargetFactor = 8.0
+  /** Density-model safety factor: the auto shift picks the smallest
+    * tiles whose average ring holds ~TargetFactor*k points. 8, not 4:
+    * the model is uniform, and a query in a below-average-density pocket
+    * at factor 4 lands right at the resolve boundary, where its fallback
+    * costs a full map-side point scan. One extra doubling costs ~2x ring
+    * candidates and took the measured workload from 1 fallback to 0. */
+  private val TargetFactor = 8.0
 
-  def autoTileShift(points: DataFrame, k: Int, ring: Int = 1,
-                    targetFactor: Double = DefaultTargetFactor): Int =
-    autoTileShiftChecked(points, k, ring, targetFactor)._1
+  /** d2 exactness: |coord| < 2^30 keeps dx^2 + dy^2 < 2^63 under ANSI. */
+  private val CoordBound = 1L << 30
 
-  /** (shift, boundsVerifiedThisCall): true only when the sizing
-    * aggregate ran NOW (memo miss) and therefore just enforced the
-    * points-side |coord| < 2^30 contract — the caller can then skip its
-    * own probe instead of scanning the table a second time. */
-  private def autoTileShiftChecked(points: DataFrame, k: Int, ring: Int,
-                                   targetFactor: Double): (Int, Boolean) = {
-    val key = (points.queryExecution.analyzed.semanticHash(), k, ring, targetFactor)
-    val hit = shiftMemo.get(key)
-    if (hit != null) return (hit.intValue(), false)
-    val computed = autoTileShiftUncached(points, k, ring, targetFactor)
-    if (shiftMemo.size < 256) shiftMemo.put(key, Int.box(computed))
-    (computed, true)
+  private def inBounds(vs: Long*): Boolean = vs.forall(v => v > -CoordBound && v < CoordBound)
+
+  /** Points (id, x, y) with long coords and NULL-coordinate rows dropped:
+    * such a point never matches the ring join but would enter the exact
+    * fallback with d2 = NULL, which ascending window order sorts NULLS
+    * FIRST, stealing rn=1 from a true neighbor. */
+  private def pointsOf(points: DataFrame): DataFrame =
+    points.select(col("id"), col("x").cast("long"), col("y").cast("long"))
+      .filter(col("x").isNotNull && col("y").isNotNull)
+
+  /** THE points-side sizing-and-bounds aggregate: one row of count plus
+    * the x/y extent. Every join call computes it exactly once, inside
+    * the same action as the query-side aggregate (see [[knnJoinWithStats]]). */
+  private def pointStats(points: DataFrame): DataFrame =
+    pointsOf(points).agg(count(lit(1)).as("n"), min(col("x")).as("x0"), max(col("x")).as("x1"),
+      min(col("y")).as("y0"), max(col("y")).as("y1"))
+
+  /** From a [[pointStats]] row (fields 0-4): enforces the |coord| < 2^30
+    * contract (raw 32-bit world coords must be pre-shifted right by 2 or
+    * more) and, when the caller gives no `tileShift`, derives one from
+    * point density: the smallest tiles whose average ring still holds
+    * ~TargetFactor*k points, so the exact fallback stays rare.
+    * Uniform-density model: a ring in a sparse pocket can still fall
+    * back; exactness is never at stake, only the fallback rate. */
+  private def shiftFrom(r: Row, k: Int, tileShift: Option[Int]): Int = {
+    if (r.isNullAt(1)) return tileShift.getOrElse(16) // no points: any shift works
+    val (x0, x1, y0, y1) = (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
+    require(inBounds(x0, x1, y0, y1),
+      s"knnJoin point coords must satisfy |coord| < 2^30 for exact d2 " +
+        s"(got extent [$x0, $x1] x [$y0, $y1]); shift raw 32-bit coords right first")
+    tileShift.getOrElse {
+      val density = r.getLong(0) / (math.max(x1 - x0, 1L).toDouble * math.max(y1 - y0, 1L))
+      val ringTiles = (2.0 * Ring + 1) * (2 * Ring + 1)
+      // expected ring points = density * ringTiles * 4^shift >= TargetFactor * k
+      val need = TargetFactor * k / (density * ringTiles)
+      val shift = math.ceil(math.log(math.max(need, 1.0)) / math.log(4.0)).toInt
+      math.min(math.max(shift, 0), 31)
+    }
   }
 
-  private def autoTileShiftUncached(points: DataFrame, k: Int, ring: Int,
-                                    targetFactor: Double): Int = {
-    val r = points.agg(
-      count(lit(1)).as("n"),
-      min(col("x").cast("long")).as("x0"), max(col("x").cast("long")).as("x1"),
-      min(col("y").cast("long")).as("y0"), max(col("y").cast("long")).as("y1")).head()
-    if (r.isNullAt(1)) return 16 // empty table: any shift works
-    // d2 exactness contract (enforced here for free — the agg already
-    // ran): |coord| < 2^30 keeps dx^2 + dy^2 < 2^63 under ANSI. Raw
-    // 32-bit world coords must be pre-shifted (>> 2 or more).
-    val bound = 1L << 30
-    require(Seq(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-        .forall(v => v > -bound && v < bound),
-      s"knnJoin coords must satisfy |coord| < 2^30 for exact d2 " +
-        s"(got extent [${r.getLong(1)}, ${r.getLong(2)}] x [${r.getLong(3)}, ${r.getLong(4)}]); " +
-        "shift raw 32-bit coords right first")
-    val n = math.max(r.getLong(0), 1L)
-    val ex = math.max(r.getLong(2) - r.getLong(1), 1L).toDouble
-    val ey = math.max(r.getLong(4) - r.getLong(3), 1L).toDouble
-    val density = n / (ex * ey)
-    val ringTiles = (2.0 * ring + 1) * (2 * ring + 1)
-    // expected ring points = density * ringTiles * 4^shift >= targetFactor * k
-    val need = targetFactor * k / (density * ringTiles)
-    val shift = math.ceil(math.log(math.max(need, 1.0)) / math.log(4.0)).toInt
-    math.min(math.max(shift, 0), 31)
-  }
-
-  /** [[knnJoin]] with the bucketing zoom derived from point density. */
-  def knnJoinAuto(spark: SparkSession, points: DataFrame, queries: DataFrame,
-                  k: Int, ring: Int = 1): DataFrame =
-    knnJoinAutoWithStats(spark, points, queries, k, ring)._1
-
-  /** [[knnJoinAuto]] plus the fallback-query count (see
-    * [[knnJoinWithStats]]). */
-  def knnJoinAutoWithStats(spark: SparkSession, points: DataFrame, queries: DataFrame,
-                           k: Int, ring: Int = 1): (DataFrame, Long) = {
-    // the bound contract is now enforced on EVERY call: on a memo miss
-    // the sizing aggregate itself just verified it (no second scan); on
-    // a memo hit the impl's concurrent probe re-checks it — a hit
-    // previously skipped the check, so files overwritten with wider
-    // coords under an unchanged plan could overflow d2 mid-join
-    // un-diagnosed
-    val (shift, checkedNow) = autoTileShiftChecked(points, k, ring, DefaultTargetFactor)
-    knnJoinImpl(spark, points, queries, k, shift, ring, probeBounds = !checkedNow)
-  }
+  /** The shift a [[knnJoin]] call on `points` derives when given no
+    * `tileShift`, through the same aggregate and checks. */
+  private[graft] def tileShiftFor(points: DataFrame, k: Int): Int =
+    shiftFrom(pointStats(points).head(), k, None)
 
   /**
-   * points:  (id, x, y)  — integer coords (scaled so d2 is exact).
+   * points:  (id, x, y)    integer coords with |coord| < 2^30 (so d2 is exact).
    * queries: (qid, qx, qy)
-   * z: bucketing zoom over the 32-bit coordinate space; coordScale: the
-   * number of low bits the coords were pre-shifted by (so tile =
-   * coord >> (32 - coordScale - z) ... we keep it simple: caller passes
-   * tileShift = bits to shift a coord right to get its tile).
+   * tileShift: bits to shift a coord right to get its bucketing tile;
+   * None derives it from point density (see [[tileShiftFor]]).
    */
   def knnJoin(spark: SparkSession, points: DataFrame, queries: DataFrame,
-              k: Int, tileShift: Int, ring: Int = 1): DataFrame =
-    knnJoinWithStats(spark, points, queries, k, tileShift, ring)._1
+              k: Int, tileShift: Option[Int] = None): DataFrame =
+    knnJoinWithStats(spark, points, queries, k, tileShift)._1
 
   /** [[knnJoin]] plus the number of queries the exact broadcast
     * fallback handled (0 = everything resolved in-ring). Returned to
@@ -132,47 +96,8 @@ object Knn {
     * fraction means the bucketing zoom is density-mismatched and the
     * fallback is doing the work a better tile size would have avoided. */
   def knnJoinWithStats(spark: SparkSession, points: DataFrame, queries: DataFrame,
-                       k: Int, tileShift: Int, ring: Int = 1): (DataFrame, Long) =
-    knnJoinImpl(spark, points, queries, k, tileShift, ring, probeBounds = true)
-
-  private def knnJoinImpl(spark: SparkSession, points: DataFrame, queries: DataFrame,
-                          k: Int, tileShift: Int, ring: Int,
-                          probeBounds: Boolean): (DataFrame, Long) = {
-    // NULL coords are dropped on BOTH sides: a point with a NULL
-    // coordinate never matches the ring join but would enter the exact
-    // fallback with d2 = NULL, which ascending window order sorts
-    // NULLS FIRST — stealing rn=1 from a true neighbor.
-    val pts = points.select(col("id"), col("x").cast("long"), col("y").cast("long"))
-      .filter(col("x").isNotNull && col("y").isNotNull)
-      .withColumn("tx", expr(s"x >> $tileShift"))
-      .withColumn("ty", expr(s"y >> $tileShift"))
-    // |coord| < 2^30 d2-exactness contract on the POINTS side, on EVERY
-    // call path (probeBounds=false only when the caller's sizing
-    // aggregate enforced it in THIS call): unshifted raw 32-bit coords
-    // overflow dx^2+dy^2 mid-join under ANSI (or silently mis-order
-    // with ANSI off). The pruned 2-column agg runs as a CONCURRENT job
-    // (guide §2.6 — Spark actions are thread-safe) so its scan overlaps
-    // the query-side sizing aggregate below instead of serializing in
-    // front of it; the future is awaited before any join work is
-    // launched. (If a query-side precondition throws first, the one
-    // bounded probe job simply runs out in the background.)
-    val boundsProbe = if (!probeBounds) None else Some(scala.concurrent.Future {
-      pts.agg(min(col("x")).as("x0"), max(col("x")).as("x1"),
-        min(col("y")).as("y0"), max(col("y")).as("y1")).head()
-    }(scala.concurrent.ExecutionContext.global))
-    def awaitPointBounds(): Unit = boundsProbe.foreach { f =>
-      val pb = scala.concurrent.blocking {
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-      }
-      if (!pb.isNullAt(0)) {
-        val bound = 1L << 30
-        require((0 until 4).map(pb.getLong).forall(v => v > -bound && v < bound),
-          s"knnJoin point coords must satisfy |coord| < 2^30 for exact d2 " +
-            s"(got extent [${pb.getLong(0)}, ${pb.getLong(1)}] x [${pb.getLong(2)}, ${pb.getLong(3)}]); " +
-            "shift raw 32-bit coords right first")
-      }
-    }
-
+                       k: Int, tileShift: Option[Int] = None): (DataFrame, Long) = {
+    tileShift.foreach(s => require(s >= 0 && s <= 31, s"knnJoin tileShift must be in [0, 31] (got $s)"))
     // each query probes its (2r+1)^2 ring of tiles. NULL qids are
     // dropped up front: results are keyed by qid, so a NULL row is
     // unanswerable anyway — and if it entered, the per-qid window would
@@ -187,11 +112,33 @@ object Knn {
     val q = queries.select(col("qid"), col("qx").cast("long"), col("qy").cast("long"))
       .filter(col("qid").isNotNull && col("qx").isNotNull && col("qy").isNotNull)
       .dropDuplicates("qid", "qx", "qy")
+    // ONE action funds every decision: the points-side bounds and shift
+    // (fields 0-4), and per query (fields 5-10) broadcast sizing, the
+    // duplicate-qid contract, the query-side d2-exactness bound and the
+    // resolved/unresolved split (per DISTINCT qid). The two scans run as
+    // concurrent stages of that action.
+    val stats = pointStats(points).crossJoin(q.agg(count(lit(1)).as("rows"),
+      countDistinct(col("qid")).as("qids"),
+      min(col("qx")).as("qx0"), max(col("qx")).as("qx1"),
+      min(col("qy")).as("qy0"), max(col("qy")).as("qy1"))).head()
+    val shift = shiftFrom(stats, k, tileShift)
+    val qRows = stats.getLong(5)
+    val qCount = stats.getLong(6)
+    require(qRows == qCount,
+      s"knnJoin: ${qRows - qCount} duplicate qid row(s) with CONFLICTING coordinates " +
+        "(exact duplicates collapse; one qid cannot ask two different queries)")
+    // the same |coord| < 2^30 contract as the points side
+    require(qRows == 0 || inBounds((7 to 10).map(stats.getLong): _*),
+      "knnJoin query coords must satisfy |coord| < 2^30 for exact d2; shift raw 32-bit coords right first")
+
+    val pts = pointsOf(points)
+      .withColumn("tx", expr(s"x >> $shift"))
+      .withColumn("ty", expr(s"y >> $shift"))
     val qTiles = q
-      .withColumn("dx", explode(sequence(lit(-ring), lit(ring))))
-      .withColumn("dy", explode(sequence(lit(-ring), lit(ring))))
-      .withColumn("tx", expr(s"(qx >> $tileShift) + dx"))
-      .withColumn("ty", expr(s"(qy >> $tileShift) + dy"))
+      .withColumn("dx", explode(sequence(lit(-Ring), lit(Ring))))
+      .withColumn("dy", explode(sequence(lit(-Ring), lit(Ring))))
+      .withColumn("tx", expr(s"(qx >> $shift) + dx"))
+      .withColumn("ty", expr(s"(qy >> $shift) + dy"))
       .drop("dx", "dy")
 
     val d2 = (col("x") - col("qx")) * (col("x") - col("qx")) +
@@ -201,31 +148,7 @@ object Knn {
     // Broadcast the query-tile ring only while it plausibly fits in an
     // executor (rows ~ |queries| * (2r+1)^2); past that, fall back to a
     // shuffle hash join — still no cross product, just hashed on tile id.
-    // ONE tiny action funds every per-query decision: broadcast sizing,
-    // the duplicate-qid contract, the query-side d2-exactness bound,
-    // and the resolved/unresolved split (per DISTINCT qid).
-    val qAgg = q.agg(count(lit(1)).as("rows"),
-      countDistinct(col("qid")).as("qids"),
-      min(col("qx")).as("x0"), max(col("qx")).as("x1"),
-      min(col("qy")).as("y0"), max(col("qy")).as("y1")).head()
-    val qRows = qAgg.getLong(0)
-    val qCount = qAgg.getLong(1)
-    require(qRows == qCount,
-      s"knnJoin: ${qRows - qCount} duplicate qid row(s) with CONFLICTING coordinates " +
-        "(exact duplicates collapse; one qid cannot ask two different queries)")
-    if (qRows > 0) {
-      // same |coord| < 2^30 d2-exactness contract the auto path checks
-      // on the points side — the query table is tiny, so this is free
-      val bound = 1L << 30
-      require(Seq(qAgg.getLong(2), qAgg.getLong(3), qAgg.getLong(4), qAgg.getLong(5))
-          .forall(v => v > -bound && v < bound),
-        "knnJoin query coords must satisfy |coord| < 2^30 for exact d2; shift raw 32-bit coords right first")
-    }
-    // join the concurrent points-side probe before any join work: a
-    // bounds violation must surface as this contract error, not as an
-    // ANSI overflow somewhere inside the candidate join
-    awaitPointBounds()
-    val ringRows = qRows * (2L * ring + 1) * (2L * ring + 1)
+    val ringRows = qRows * (2L * Ring + 1) * (2L * Ring + 1)
     // broadcast gate in BYTES, not rows: qid's type is caller-chosen,
     // and 4M rows of long string qids is a very different broadcast
     // from 4M rows of longs
@@ -246,9 +169,9 @@ object Knn {
       .localCheckpoint(true)
 
     // ring guarantee: everything within guard of the query is in the ring
-    val guard = (ring.toLong) << tileShift // min distance to outside the ring
+    val guard = Ring.toLong << shift // min distance to outside the ring
     // a ring wider than the coordinate space trivially resolves every
-    // query; guard*guard would wrap negative for tileShift >= 31 and
+    // query; guard*guard would wrap negative for shift >= 31 and
     // mark EVERYTHING unresolved (full-corpus fallback)
     val guard2 = if (guard >= (1L << 31)) Long.MaxValue else guard * guard
     def qstats = cand.groupBy("qid")

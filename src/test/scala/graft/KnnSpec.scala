@@ -26,7 +26,7 @@ class KnnSpec extends AnyFunSuite {
       (5 until 10).map(i => (i.toLong, (1L << 23) + r.nextLong(1L << 20), (1L << 23) + r.nextLong(1L << 20))))
       .toDF("qid", "qx", "qy")
 
-    val got = graft.join.Knn.knnJoin(spark, pts, qs, k = 7, tileShift = 14)
+    val got = graft.join.Knn.knnJoin(spark, pts, qs, k = 7, tileShift = Some(14))
       .select("qid", "id", "rn").as[(Long, Long, Int)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._3).map(_._2).toSeq).toMap
 
@@ -58,7 +58,7 @@ class KnnSpec extends AnyFunSuite {
     val outside = (0 until 3).map(i => (200L + i, qx - 1600L - i, qy))
     val pts = (corner ++ outside).toDF("id", "x", "y")
     val qs = Seq((1L, qx, qy)).toDF("qid", "qx", "qy")
-    val (res, fbCnt) = graft.join.Knn.knnJoinWithStats(spark, pts, qs, k = 5, tileShift = 10)
+    val (res, fbCnt) = graft.join.Knn.knnJoinWithStats(spark, pts, qs, k = 5, tileShift = Some(10))
     assert(fbCnt == 1L, s"query must be fallback-handled (got $fbCnt)")
     val got = res.select("id", "rn").as[(Long, Int)].collect().sortBy(_._2).map(_._1).toSeq
     val expect = (corner ++ outside).map { case (id, x, y) =>
@@ -81,7 +81,7 @@ class KnnSpec extends AnyFunSuite {
     val qs = Seq((Some(1L), 1000L, 1000L), (None, 2000L, 2000L),
       (Some(2L), (1L << 23), (1L << 23)))
       .toDF("qid", "qx", "qy")
-    val (res, fbCnt) = graft.join.Knn.knnJoinWithStats(spark, pts, qs, k = 5, tileShift = 14)
+    val (res, fbCnt) = graft.join.Knn.knnJoinWithStats(spark, pts, qs, k = 5, tileShift = Some(14))
     val rows = res.select("qid", "id", "rn").as[(Option[Long], Long, Int)].collect()
     assert(rows.forall(_._1.isDefined), "null qid leaked into results")
     // the old bug reported 0 here (NULL group counted resolved, fast
@@ -112,10 +112,11 @@ class KnnSpec extends AnyFunSuite {
       (58 until 60).map(i =>
         (i.toLong, r.nextLong(1L << 22), r.nextLong(1L << 22)))).toDF("qid", "qx", "qy")
 
-    val shift = graft.join.Knn.autoTileShift(pts, k = 5)
+    // the shift the join derives when given none: the same sizing
+    // aggregate, read directly
+    val shift = graft.join.Knn.tileShiftFor(pts, k = 5)
     assert(shift > 0 && shift < 31, s"degenerate auto shift $shift")
-    val (gotDf, fallbacks) =
-      graft.join.Knn.knnJoinWithStats(spark, pts, qs, k = 5, tileShift = shift)
+    val (gotDf, fallbacks) = graft.join.Knn.knnJoinWithStats(spark, pts, qs, k = 5)
     val got = gotDf
       .select("qid", "id", "rn").as[(Long, Long, Int)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._3).map(_._2).toSeq).toMap
@@ -145,7 +146,7 @@ class KnnSpec extends AnyFunSuite {
     val pts = spark.createDataFrame(spark.sparkContext.parallelize(ptRows, 2), ptsSchema)
     // the same far query REPEATED: candidates must not duplicate
     val qs = Seq((1L, 1L << 22, 1L << 22), (1L, 1L << 22, 1L << 22)).toDF("qid", "qx", "qy")
-    val got = graft.join.Knn.knnJoin(spark, pts, qs, k = 4, tileShift = 12)
+    val got = graft.join.Knn.knnJoin(spark, pts, qs, k = 4, tileShift = Some(12))
       .select("qid", "id", "rn").as[(Long, Long, Int)].collect().sortBy(_._3)
     assert(got.length == 4, s"expected 4 rows, got ${got.length}")
     assert(got.map(_._2).distinct.length == 4, "duplicate query rows duplicated candidates")
@@ -153,8 +154,51 @@ class KnnSpec extends AnyFunSuite {
     // one qid with two DIFFERENT coordinates is a contract violation
     val bad = Seq((1L, 0L, 0L), (1L, 5L, 5L)).toDF("qid", "qx", "qy")
     val e = intercept[IllegalArgumentException] {
-      graft.join.Knn.knnJoin(spark, pts, bad, k = 2, tileShift = 12).collect()
+      graft.join.Knn.knnJoin(spark, pts, bad, k = 2, tileShift = Some(12)).collect()
     }
     assert(e.getMessage.contains("CONFLICTING"))
+  }
+
+  test("d2 exactness: |coord| >= 2^30 rejects on the points side and the query side, on every call path") {
+    import spark.implicits._
+    val r = new scala.util.Random(5)
+    val ok = (0 until 100).map(i => (i.toLong, r.nextLong(1L << 20), r.nextLong(1L << 20)))
+    val pts = (ok :+ ((100L, 1L << 30, 5L))).toDF("id", "x", "y")
+    val qs = Seq((1L, 1000L, 1000L)).toDF("qid", "qx", "qy")
+    def rejects(call: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains("|coord| < 2^30"), e.getMessage)
+    }
+    rejects(graft.join.Knn.knnJoin(spark, pts, qs, k = 3, tileShift = Some(14)).collect())
+    rejects(graft.join.Knn.knnJoin(spark, pts, qs, k = 3).collect())
+    // a second auto call on the SAME DataFrame must check again
+    rejects(graft.join.Knn.knnJoin(spark, pts, qs, k = 3).collect())
+    val farQ = Seq((1L, -(1L << 30), 1000L)).toDF("qid", "qx", "qy")
+    rejects(graft.join.Knn.knnJoin(spark, ok.toDF("id", "x", "y"), farQ, k = 3).collect())
+  }
+
+  test("tileShift outside [0, 31] is rejected; both ends of the range stay exact") {
+    import spark.implicits._
+    val r = new scala.util.Random(11)
+    val pts = (0 until 300).map(i => (i.toLong, r.nextLong(1L << 20), r.nextLong(1L << 20)))
+      .toDF("id", "x", "y")
+    val qs = Seq((1L, 5000L, 7000L), (2L, 900000L, 300000L)).toDF("qid", "qx", "qy")
+    Seq(-1, 32, 64).foreach { s =>
+      val e = intercept[IllegalArgumentException] {
+        graft.join.Knn.knnJoin(spark, pts, qs, k = 3, tileShift = Some(s)).collect()
+      }
+      assert(e.getMessage.contains("[0, 31]"), e.getMessage)
+    }
+    val allPts = pts.as[(Long, Long, Long)].collect()
+    Seq(0, 31).foreach { s =>
+      val got = graft.join.Knn.knnJoin(spark, pts, qs, k = 3, tileShift = Some(s))
+        .select("qid", "id", "rn").as[(Long, Long, Int)].collect()
+      qs.as[(Long, Long, Long)].collect().foreach { case (qid, qx, qy) =>
+        val expect = allPts.map { case (id, x, y) =>
+          (id, (x - qx) * (x - qx) + (y - qy) * (y - qy))
+        }.sortBy(t => (t._2, t._1)).take(3).map(_._1).toSeq
+        assert(got.filter(_._1 == qid).sortBy(_._3).map(_._2).toSeq == expect, s"shift=$s qid=$qid")
+      }
+    }
   }
 }
