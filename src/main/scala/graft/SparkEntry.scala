@@ -191,7 +191,7 @@ object SparkEntry {
       .repartitionByRange(4, col("cell"))
       .sortWithinPartitions(col("cell"), col("meta"))
     val ranked = graft.render.Render.withGlobalRank(pts)
-    graft.render.Render.renderPoints(ranked, 5, 48, graft.core.RenderParams())
+    graft.render.Render.renderTiles(Some(ranked), None, 5, 48, graft.core.RenderParams())
       .toDF()
       .select(col("z"), col("x"), col("y"), length(col("png")).as("png_bytes"))
   }

@@ -265,19 +265,6 @@ object Ann {
     semDedup(vecs, cids, cvecs, minCos)
   }
 
-  /** Profiling hook: just the within-cell cos-threshold pair graph of
-    * [[semDedup]] (no guard action, no components). Checkpoints the
-    * assignment like the operator does — without it both self-join
-    * sides re-run the centroid kernel and the profiler misattributes
-    * ~2x assignment cost to the pair phase. */
-  private[graft] def semDedupPairsForProfile(vecs: DataFrame, cids: Array[Long],
-                                             cvecs: Array[Array[Double]],
-                                             minCos: Double): DataFrame = {
-    val asg = ivfAssign(vecs, cids, cvecs)
-      .select(col("vec_id"), col("cell")).localCheckpoint(true)
-    withinCellPairs(asg, vecs, minCos)
-  }
-
   /** IVF-probed ANN top-k: queries probe their `nprobe` nearest
     * centroid cells (map-side kernel); candidates are the vectors
     * assigned to those cells via a BROADCAST join on the cell id (the

@@ -25,14 +25,18 @@ case class FeatCmd(tkey: Long, slot: Long, vertices: Array[Long], meta: Long, ow
  * Tile rasterization — the reference's `render` pipeline
  * (render.c:932-1003 + process :74-368) as one Spark job:
  *
- *   features -> [rank filter (step sampling)] -> flatMap to the tiles
- *   each feature is drawn into (own tile, spill ring, line pyramid) ->
- *   groupByKey(tile) -> canvas accumulation -> tone map -> PNG.
+ *   narrow (cell, meta, rank) point source -> flatMap to the tiles each
+ *   feature is drawn into (pyramidCmds: own tile + 8-neighbour spill
+ *   ring, step-sampled by rank; lineCmds: the line pyramid) -> one
+ *   explicit repartition + sort on the tile key (streamGroups) -> canvas
+ *   accumulation -> tone map -> PNG (renderOne).
  *
  * One shuffle; tiles are independent (the reference's xargs -P8 becomes
- * the shuffle partitioning). Dense-city tiles are the skew risk: the
- * canvas is an associative monoid (Canvas.merge), so skewed tiles can be
- * salted into sub-groups and merged; AQE handles moderate skew.
+ * the shuffle partitioning). The repartition count is explicit because
+ * AQE would coalesce the small command shuffle into one partition and
+ * serialize the CPU-heavy reducers. Dense-city tiles are the skew risk:
+ * the canvas is an associative monoid, so renderPyramidSalted renders
+ * hot tiles as salted partial canvases and merges them.
  */
 object Render {
   /** Add a global `rank` column over the (cell, meta)-sorted order —
@@ -155,90 +159,80 @@ object Render {
   private def circleSwapsAt(p: RenderParams, step: Int, z: Int, row: Long): Boolean =
     step > 1 && p.cloudSize(z, 0, row.toInt) * p.tilesize > .0625
 
-  /** Point draw commands for zoom zDraw (own tile + spill ring).
-    * `emitSpill = false` reproduces assemble mode, where the reference
-    * skips the neighbor-probe loop entirely (do_tile render.c:947:
-    * `&& !assemble`) — brush splats and clouds are clipped at tile
-    * windows instead of pulled from neighbors. */
+  /** The narrow (cell, meta, rank) projection every point render reads;
+    * a missing `meta` column renders as meta 0. `rank` is selected
+    * whenever a requested zoom samples (step > 1), so an unranked input
+    * fails at analysis there: it never defaults to 0, which would
+    * render every row as sampled. */
+  private def pointSource(points: DataFrame, zooms: Seq[Int], p: RenderParams): DataFrame =
+    points.select(col("cell"),
+      (if (points.columns.contains("meta")) col("meta") else lit(0L)).as("meta"),
+      (if (zooms.exists(p.pointParams(_)._1 > 1)) col("rank") else lit(0L)).as("rank"))
+
+  /** Point draw commands for one zoom zDraw. `emitSpill = false`
+    * reproduces assemble mode, where the reference skips the
+    * neighbor-probe loop entirely (do_tile render.c:947: `&& !assemble`)
+    * — brush splats and clouds are clipped at tile windows instead of
+    * pulled from neighbors. Outside circle mode this is pyramidCmds at
+    * one zoom, after a column-level `rank % step` filter that drops
+    * unsampled rows before deserialisation. */
   private def pointCmds(points: DataFrame, zDraw: Int, p: RenderParams,
                         emitSpill: Boolean = true): Dataset[FeatCmd] = {
     val spark = points.sparkSession
     import spark.implicits._
     val (step, _, _) = p.pointParams(zDraw)
-    val circleMode = p.circle > 0
-    // circle mode with striding: the stride decision is per RECEIVING
-    // tile row (the step/innerstep swap depends on the receiver's cloud
-    // pixel size), so the rank must ride into the flatMap
-    val perReceiverStride = circleMode && step > 1
-    val sampled = if (step <= 1 || perReceiverStride) points
-      else points.filter(col("rank") % step === 0)
-    val spill = emitSpill && brushSpills(p, zDraw)
-    // widest possible receiver ring at this zoom = ring at the extreme-
-    // latitude row (row 0); bounds the per-record row scan
-    val dyMax = if (circleMode) circleRing(p, zDraw, 0L) else 0
-    val hasMeta = points.columns.contains("meta")
-    val hasRank = points.columns.contains("rank")
-    sampled.select(col("cell"),
-      (if (hasMeta) col("meta") else lit(0L)).as("meta"),
-      (if (hasRank) col("rank") else lit(0L)).as("rank"))
-      .as[(Long, Long, Long)]
+    if (p.circle <= 0) {
+      val sampled = if (step > 1) points.filter(col("rank") % step === 0) else points
+      return pyramidCmds(pointSource(sampled, Seq(zDraw), p), Seq(zDraw), p, emitSpill)
+    }
+    // circle mode: the stride decision is per RECEIVING tile row (the
+    // step/innerstep swap depends on the receiver's cloud pixel size),
+    // so the rank rides into the flatMap unfiltered.
+    // Widest possible receiver ring at this zoom = ring at the extreme-
+    // latitude row (row 0); bounds the per-record row scan.
+    val dyMax = circleRing(p, zDraw, 0L)
+    pointSource(points, Seq(zDraw), p).as[(Long, Long, Long)]
       .flatMap { case (cell, meta, rank) =>
         val tx = Cell.tileX(cell, zDraw)
         val ty = Cell.tileY(cell, zDraw)
         val n = 1L << zDraw
         val strided = step > 1 && rank % step == 0
-        if (!circleMode) {
-          val own = FeatCmd(Cell.tileKey(zDraw, tx, ty), -1, Array(cell), meta, own = true)
-          if (!spill) Iterator.single(own)
+        // A record reaches receiver (rx, ry) iff it is within the
+        // receiver's ring r(ry) and passes the receiver's stride rule
+        // (unstrided when the receiver swaps step into innerstep).
+        // Emission is a LAZY iterator — a degenerate giant cloud
+        // streams its (2r+1)^2 commands through the shuffle writer
+        // instead of buffering them in task memory, so the ring needs
+        // no safety cap.
+        def passes(row: Long): Boolean =
+          step <= 1 || strided || circleSwapsAt(p, step, zDraw, row)
+        val own =
+          if (passes(ty))
+            Iterator.single(FeatCmd(Cell.tileKey(zDraw, tx, ty), -1, Array(cell), meta, own = true))
+          else Iterator.empty
+        // scan candidate receiver rows; a receiver at row ry reaches
+        // this record iff |ry - ty| <= ring(ry) (ring grows poleward)
+        val dyLo = if (emitSpill) -dyMax else dyMax + 1
+        val spillIt = (dyLo to dyMax).iterator.flatMap { dy =>
+          val ry = ty + dy
+          if (ry < 0 || ry >= n) Iterator.empty
           else {
-            val nbrs = for {
-              dx <- -1 to 1; dy <- -1 to 1
-              if dx != 0 || dy != 0
-              nx = tx + dx; ny = ty + dy
-              if ny >= 0 && ny < n && nx >= 0 && nx < n
-            } yield FeatCmd(Cell.tileKey(zDraw, nx, ny),
-              (-dx + 1L) * 3 + (-dy + 1), Array(cell), meta, own = false)
-            Iterator.single(own) ++ nbrs.iterator
+            val r = circleRing(p, zDraw, ry)
+            if (math.abs(dy) <= r && passes(ry)) {
+              (-r to r).iterator.flatMap { dx =>
+                val rx = tx + dx
+                if (rx >= 0 && rx < n && (dx != 0 || dy != 0)) {
+                  // receiver probe order: xx ascending outer, yy inner
+                  // (render.c:957-965); sender offset inside that loop
+                  val slot = (r - dx).toLong * (2 * r + 1) + (r - dy)
+                  Iterator.single(FeatCmd(Cell.tileKey(zDraw, rx.toInt, ry.toInt), slot,
+                    Array(cell), meta, own = false))
+                } else Iterator.empty
+              }
+            } else Iterator.empty
           }
-        } else {
-          // circle mode: receiver-dependent ring radius AND striding.
-          // A record reaches receiver (rx, ry) iff it is within the
-          // receiver's ring r(ry) and passes the receiver's stride rule
-          // (unstrided when the receiver swaps step into innerstep).
-          // Emission is a LAZY iterator — a degenerate giant cloud
-          // streams its (2r+1)^2 commands through the shuffle writer
-          // instead of buffering them in task memory, so the ring needs
-          // no safety cap.
-          def passes(row: Long): Boolean =
-            step <= 1 || strided || circleSwapsAt(p, step, zDraw, row)
-          val own =
-            if (passes(ty))
-              Iterator.single(FeatCmd(Cell.tileKey(zDraw, tx, ty), -1, Array(cell), meta, own = true))
-            else Iterator.empty
-          // scan candidate receiver rows; a receiver at row ry reaches
-          // this record iff |ry - ty| <= ring(ry) (ring grows poleward)
-          val dyLo = if (emitSpill) -dyMax else dyMax + 1
-          val spillIt = (dyLo to dyMax).iterator.flatMap { dy =>
-            val ry = ty + dy
-            if (ry < 0 || ry >= n) Iterator.empty
-            else {
-              val r = circleRing(p, zDraw, ry)
-              if (math.abs(dy) <= r && passes(ry)) {
-                (-r to r).iterator.flatMap { dx =>
-                  val rx = tx + dx
-                  if (rx >= 0 && rx < n && (dx != 0 || dy != 0)) {
-                    // receiver probe order: xx ascending outer, yy inner
-                    // (render.c:957-965); sender offset inside that loop
-                    val slot = (r - dx).toLong * (2 * r + 1) + (r - dy)
-                    Iterator.single(FeatCmd(Cell.tileKey(zDraw, rx.toInt, ry.toInt), slot,
-                      Array(cell), meta, own = false))
-                  } else Iterator.empty
-                }
-              } else Iterator.empty
-            }
-          }
-          own ++ spillIt
         }
+        own ++ spillIt
       }
   }
 
@@ -356,75 +350,20 @@ object Render {
                   requireOwn: Boolean = true,
                   only: Option[(Int, Int) => Boolean] = None,
                   pointSpill: Boolean = true): Dataset[TileOut] = {
-    val spark = points.map(_.sparkSession).orElse(lines.map(_.sparkSession)).get
-    import spark.implicits._
-    val pc = points.map(pointCmds(_, zDraw, p, emitSpill = pointSpill))
-    val lc = lines.map(lineCmds(_, zDraw, mapbits, p))
-    val all = (pc, lc) match {
-      case (Some(a), Some(b)) => a.union(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case _ => throw new IllegalArgumentException("no input")
-    }
+    val all = unionCmds(points.map(pointCmds(_, zDraw, p, emitSpill = pointSpill)),
+      lines.map(lineCmds(_, zDraw, mapbits, p)))
     val cmds = only match {
       case Some(pred) =>
         all.filter(c => pred(Cell.tileKeyX(c.tkey), Cell.tileKeyY(c.tkey)))
       case None => all
     }
-    processGrouped(cmds) { (tkey, recs) =>
-      val z = Cell.tileKeyZ(tkey)
-      val tx = Cell.tileKeyX(tkey)
-      val ty = Cell.tileKeyY(tkey)
-      sortRecs(recs)
-      if (requireOwn && !recs.exists(_.own)) Iterator.empty
-      else {
-        val canvas = renderCanvas(recs, z, tx, ty, mapbits, p)
-        val rgba = ToneMap(canvas, p)
-        Iterator.single(TileOut(z, tx, ty, Png.encode(rgba, p.tilesize, p.tilesize)))
-      }
-    }
+    processGrouped(cmds)(renderOne(_, _, mapbits, p, requireOwn))
   }
 
-  /** Convenience: points only. */
-  def renderPoints(points: DataFrame, zDraw: Int, mapbits: Int, p: RenderParams): Dataset[TileOut] =
-    renderTiles(Some(points), None, zDraw, mapbits, p)
-
-  /** Render a whole zoom pyramid in ONE pass + ONE shuffle: a single
-    * flatMap emits every zoom's commands (the tile key embeds z), so
-    * the tileset build is one job regardless of pyramid depth. */
-  def renderPyramid(points: DataFrame, zooms: Seq[Int], mapbits: Int, p: RenderParams): Dataset[TileOut] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    if (p.circle > 0) {
-      // circle clouds need receiver-dependent rings and striding — reuse
-      // the single-zoom command builder per zoom (still ONE shuffle: the
-      // unions feed one repartition in processGrouped)
-      val cmds = zooms.map(z => pointCmds(points, z, p)).reduce(_ union _)
-      return processGrouped(cmds)(renderOne(_, _, mapbits, p, requireOwn = true))
-    }
-    val zArr = zooms.toArray
-    val steps = zArr.map(z => p.pointParams(z)._1.toLong)
-    val spills = zArr.map(z => brushSpills(p, z))
-    val needRank = steps.exists(_ > 1)
-    val hasMeta = points.columns.contains("meta")
-    // read-balance BEFORE the per-zoom command flatMap: a small ranked
-    // snapshot packs into a handful of scan splits (openCost-packed
-    // files), which would run the zooms-x command emission feeding the
-    // render shuffle on those few tasks while the rest of the host
-    // idles. No-op whenever the input already carries >= cores splits
-    // (the catalog-scale case). Rank/meta are STORED values — moving
-    // rows does not change any command, and the render groups re-key by
-    // tile after this anyway.
-    val narrow = points.select(col("cell"),
-      (if (hasMeta) col("meta") else lit(0L)).as("meta"),
-      (if (needRank) col("rank") else lit(0L)).as("rank"))
-    val src = graft.ops.ReadBalance.fanOut(narrow).as[(Long, Long, Long)]
-    // one shared command emitter + finisher (pyramidCmds/renderOne) —
-    // an earlier inline copy here drifted from the salted path's once
-    val cmds = pyramidCmds(src, zArr,
-      zArr.zip(steps).toMap, zArr.zip(spills).toMap)
-    processGrouped(cmds)(renderOne(_, _, mapbits, p, requireOwn = true))
-  }
+  /** Render a whole zoom pyramid of points in ONE pass + ONE shuffle:
+    * renderPyramidAll without lines. */
+  def renderPyramid(points: DataFrame, zooms: Seq[Int], mapbits: Int, p: RenderParams): Dataset[TileOut] =
+    renderPyramidAll(Some(points), None, zooms, mapbits, p)
 
   /** Leaflet-retina tiles (`render -r`, render.c:900-914): tile (z,x,y)
     * is rendered from its PARENT zoom's records and parameters at double
@@ -438,14 +377,7 @@ object Render {
     require(z > 0, "retina tiles need z > 0 (the reference renders z=0 normally)")
     val zr = z - 1
     val p2 = p.copy(tilesize = p.tilesize * 2)
-    val pc = points.map(pointCmds(_, zr, p2))
-    val lc = lines.map(lineCmds(_, zr, mapbits, p2))
-    val cmds = (pc, lc) match {
-      case (Some(a), Some(b)) => a.union(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case _ => throw new IllegalArgumentException("no input")
-    }
+    val cmds = unionCmds(points.map(pointCmds(_, zr, p2)), lines.map(lineCmds(_, zr, mapbits, p2)))
     val ts = p.tilesize
     processGrouped(cmds) { (tkey, recs) =>
       sortRecs(recs)
@@ -544,39 +476,39 @@ object Render {
   }
 
   /** Full mixed tileset (points + polylines, every zoom) in ONE job and
-    * ONE shuffle: the per-zoom point commands come from the pyramid
-    * emitter and every zoom's line commands union into the same
-    * repartition — a complete z0..N tileset build is a single pass over
-    * each input regardless of pyramid depth. */
+    * ONE shuffle: one flatMap emits every zoom's point commands (the
+    * tile key embeds z) and every zoom's line commands union into the
+    * same repartition — a complete z0..N tileset build is a single pass
+    * over each input regardless of pyramid depth. Circle clouds need
+    * receiver-dependent rings and striding, so they take the single-zoom
+    * builder per zoom (still one shuffle: the unions feed one
+    * repartition). */
   def renderPyramidAll(points: Option[DataFrame], lines: Option[Dataset[Feature]],
                        zooms: Seq[Int], mapbits: Int, p: RenderParams): Dataset[TileOut] = {
-    require(points.nonEmpty || lines.nonEmpty, "no input")
-    val spark = points.map(_.sparkSession).orElse(lines.map(_.sparkSession)).get
-    import spark.implicits._
-    val pc: Option[Dataset[FeatCmd]] = points.map { pts =>
+    // the pyramid source is read-balanced BEFORE the per-zoom command
+    // flatMap: a small ranked snapshot packs into a handful of scan
+    // splits (openCost-packed files), which would run the zooms-x command
+    // emission feeding the render shuffle on those few tasks while the
+    // rest of the host idles. No-op whenever the input already carries
+    // >= cores splits (the catalog-scale case). Rank and meta are STORED
+    // values — moving rows changes no command, and the render groups
+    // re-key by tile after this anyway.
+    val pc = points.map { pts =>
       if (p.circle > 0) zooms.map(z => pointCmds(pts, z, p)).reduce(_ union _)
-      else {
-        val zArr = zooms.toArray
-        val steps = zArr.map(z => p.pointParams(z)._1.toLong)
-        val spillsArr = zArr.map(z => brushSpills(p, z))
-        val needRank = steps.exists(_ > 1)
-        val hasMeta = pts.columns.contains("meta")
-        val src = pts.select(col("cell"),
-          (if (hasMeta) col("meta") else lit(0L)).as("meta"),
-          (if (needRank) col("rank") else lit(0L)).as("rank")).as[(Long, Long, Long)]
-        pyramidCmds(src, zArr, zArr.zip(steps).toMap, zArr.zip(spillsArr).toMap)
-      }
+      else pyramidCmds(graft.ops.ReadBalance.fanOut(pointSource(pts, zooms, p)), zooms, p)
     }
-    val lc: Option[Dataset[FeatCmd]] =
-      lines.map(ls => zooms.map(z => lineCmds(ls, z, mapbits, p)).reduce(_ union _))
-    val cmds = (pc, lc) match {
+    val lc = lines.map(ls => zooms.map(z => lineCmds(ls, z, mapbits, p)).reduce(_ union _))
+    processGrouped(unionCmds(pc, lc))(renderOne(_, _, mapbits, p, requireOwn = true))
+  }
+
+  /** Point and line commands feed ONE shuffle. */
+  private def unionCmds(pc: Option[Dataset[FeatCmd]], lc: Option[Dataset[FeatCmd]]): Dataset[FeatCmd] =
+    (pc, lc) match {
       case (Some(a), Some(b)) => a.union(b)
       case (Some(a), None) => a
       case (None, Some(b)) => b
       case _ => throw new IllegalArgumentException("no input")
     }
-    processGrouped(cmds)(renderOne(_, _, mapbits, p, requireOwn = true))
-  }
 
   /** Tile membership of polylines at zoom zDraw — the line→tile
     * enumeration that drives the pyramid join (reference do_tile
@@ -604,16 +536,7 @@ object Render {
   def renderVectorTiles(points: Option[DataFrame], lines: Option[Dataset[Feature]],
                         zDraw: Int, mapbits: Int, p: RenderParams,
                         requireOwn: Boolean = true): Dataset[TileOut] = {
-    val spark = points.map(_.sparkSession).orElse(lines.map(_.sparkSession)).get
-    import spark.implicits._
-    val pc = points.map(pointCmds(_, zDraw, p))
-    val lc = lines.map(lineCmds(_, zDraw, mapbits, p))
-    val cmds = (pc, lc) match {
-      case (Some(a), Some(b)) => a.union(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case _ => throw new IllegalArgumentException("no input")
-    }
+    val cmds = unionCmds(points.map(pointCmds(_, zDraw, p)), lines.map(lineCmds(_, zDraw, mapbits, p)))
     val ext = Mvt.Extent
     processGrouped(cmds) { (tkey, recs) =>
       val z = Cell.tileKeyZ(tkey)
@@ -701,13 +624,9 @@ object Render {
     // unsalted path (clouds self-limit: meta dots cap per record)
     if (p.circle > 0) return renderPyramid(points, zooms, mapbits, p)
     // hot tiles: sampled own-count per (z,tile) above threshold
-    val hasMeta = points.columns.contains("meta")
-    val steps = zooms.map(z => z -> p.pointParams(z)._1.toLong).toMap
-    val needRank = steps.values.exists(_ > 1)
-    val src0 = points.select(col("cell"),
-      (if (hasMeta) col("meta") else lit(0L)).as("meta"),
-      (if (needRank) col("rank") else lit(0L)).as("rank")).as[(Long, Long, Long)]
+    val src = graft.ops.ReadBalance.fanOut(pointSource(points, zooms, p)) // balanced as in renderPyramidAll
     val zArr = zooms.toArray
+    val steps = zArr.map(z => p.pointParams(z)._1.toLong)
     // per-tile: own-record count (hot detection) AND whether any own
     // record would set `further` (draw a bb>1 brush) — the spill gate.
     // The unsalted path sets `further` while scanning own records
@@ -717,9 +636,10 @@ object Render {
     // precomputed over ALL own records, not ignored (ignoreFurther=true
     // drew spill brushes on tiles where the unsalted/reference path
     // draws none — e.g. metabrush tiles whose metas are all 0/1).
-    val hotAgg: Map[Long, Boolean] = src0.flatMap { case (cell, meta, rank) =>
-      zArr.iterator.filter(z => rank % steps(z) == 0)
-        .map { z =>
+    val hotAgg: Map[Long, Boolean] = src.as[(Long, Long, Long)].flatMap { case (cell, meta, rank) =>
+      zArr.indices.iterator.filter(zi => rank % steps(zi) == 0)
+        .map { zi =>
+          val z = zArr(zi)
           val ty = Cell.tileY(cell, z)
           (Cell.tileKey(z, Cell.tileX(cell, z), ty), ownSetsFurther(z, ty, meta, p))
         }
@@ -732,10 +652,9 @@ object Render {
     if (hotAgg.isEmpty) return renderPyramid(points, zooms, mapbits, p)
     val hotB = spark.sparkContext.broadcast(hotAgg)
 
-    val cmds = pyramidCmds(src0, zArr, steps, zooms.map(z => z -> brushSpills(p, z)).toMap)
-    val cold = processGrouped(cmds.filter(c => !hotB.value.contains(c.tkey))) { (tkey, recs) =>
-      renderOne(tkey, recs, mapbits, p, requireOwn = true)
-    }
+    val cmds = pyramidCmds(src, zooms, p)
+    val cold = processGrouped(cmds.filter(c => !hotB.value.contains(c.tkey)))(
+      renderOne(_, _, mapbits, p, requireOwn = true))
     // hot path: salt -> partial canvases -> merge -> tone map. BOTH
     // shuffles go through streamGroups (explicit repartition): a bare
     // groupByKey exchange here is exactly the tiny-but-CPU-heavy shape
@@ -797,21 +716,28 @@ object Render {
     bb > 1
   }
 
-  /** Emit pyramid commands from a typed (cell, meta, rank) source. */
-  private def pyramidCmds(src: Dataset[(Long, Long, Long)], zArr: Array[Int],
-                          steps: Map[Int, Long], spills: Map[Int, Boolean]): Dataset[FeatCmd] = {
+  /** THE point-command emitter outside circle mode, for one zoom or a
+    * whole pyramid: every step-sampled row (rank % step(z) == 0) goes to
+    * its own tile at each zoom, plus the 8-neighbour spill ring where
+    * the zoom's brush can spill (brushSpills). `emitSpill = false` is
+    * assemble mode: no ring at any zoom. `src` is a pointSource. */
+  private def pyramidCmds(src: DataFrame, zooms: Seq[Int], p: RenderParams,
+                          emitSpill: Boolean = true): Dataset[FeatCmd] = {
     val spark = src.sparkSession
     import spark.implicits._
-    src.flatMap { case (cell, meta, rank) =>
+    val zArr = zooms.toArray
+    val steps = zArr.map(z => p.pointParams(z)._1.toLong)
+    val spills = zArr.map(z => emitSpill && brushSpills(p, z))
+    src.as[(Long, Long, Long)].flatMap { case (cell, meta, rank) =>
       val out = scala.collection.mutable.ArrayBuffer.empty[FeatCmd]
       var zi = 0
       while (zi < zArr.length) {
         val z = zArr(zi)
-        if (rank % steps(z) == 0) {
+        if (rank % steps(zi) == 0) {
           val tx = Cell.tileX(cell, z)
           val ty = Cell.tileY(cell, z)
           out += FeatCmd(Cell.tileKey(z, tx, ty), -1, Array(cell), meta, own = true)
-          if (spills(z)) {
+          if (spills(zi)) {
             val n = 1L << z
             var dx = -1
             while (dx <= 1) {
@@ -834,7 +760,8 @@ object Render {
     }
   }
 
-  /** Shared per-tile finisher. */
+  /** THE PNG tile finisher (renderTiles, renderPyramidAll and the salted
+    * path's cold tiles). */
   private def renderOne(tkey: Long, recs: Array[FeatCmd], mapbits: Int, p: RenderParams,
                         requireOwn: Boolean): Iterator[TileOut] = {
     val z = Cell.tileKeyZ(tkey)

@@ -115,23 +115,92 @@ class GoldenLineSpec extends AnyFunSuite {
     }
   }
 
-  test("renderPyramidAll (mixed, one shuffle) is byte-identical to per-zoom renders") {
+  // points from the line corpus's first vertices, unranked and ranked
+  lazy val plainPts = {
     import spark.implicits._
-    // points from the line corpus's first vertices + the lines themselves
-    val pts = featuresDs.map(f => (f.cell, f.meta)).toDF("cell", "meta")
-    val zooms = 14 to 16 // step == 1 at these zooms: no rank needed
+    featuresDs.map(f => (f.cell, f.meta)).toDF("cell", "meta")
+  }
+  lazy val rankedPts = Render.withGlobalRank(plainPts)
+
+  /** Independent tile-key set of a point render: a row owns tile(cell, z)
+    * iff it is step-sampled at z (rank % step == 0), or, in cloud mode,
+    * the receiving tile's cloud spans more than 1/16 pixel, where the
+    * reference swaps step into innerstep (render.c:175-182). */
+  def expectedKeys(pts: org.apache.spark.sql.DataFrame, zooms: Seq[Int],
+                   p: RenderParams): Set[(Int, Int, Int)] = {
+    val hasRank = pts.columns.contains("rank")
+    pts.collect().toSeq.flatMap { r =>
+      val cell = r.getAs[Long]("cell")
+      val rank = if (hasRank) r.getAs[Long]("rank") else 0L
+      zooms.flatMap { z =>
+        val step = p.pointParams(z)._1
+        val ty = Cell.tileY(cell, z)
+        val swaps = p.circle > 0 && step > 1 && p.cloudSize(z, 0, ty) * p.tilesize > .0625
+        if (rank % step == 0 || swaps) Some((z, Cell.tileX(cell, z), ty)) else None
+      }
+    }.toSet
+  }
+
+  // (case, points, with lines, zooms, params)
+  lazy val pyramidCases = Seq(
+    ("mixed points + lines, z14-16 (step 1, unranked)",
+      plainPts, true, 14 to 16, RenderParams()),
+    ("ranked points, z0-8 (every zoom step-sampled)",
+      rankedPts, false, 0 to 8, RenderParams()),
+    ("metabrush (spill ring always emitted), z10-14",
+      rankedPts, false, 10 to 14, RenderParams(metabrush = true)),
+    ("cloud mode (circle > 0), z9-13",
+      rankedPts, false, 9 to 13, RenderParams(circle = 500)),
+    ("points without a meta column, z10-15",
+      rankedPts.select("cell", "rank"), false, 10 to 15, RenderParams()))
+
+  // one pass per pyramidCases input, the mixed points + lines case first
+  test("renderPyramidAll (mixed, one shuffle) is byte-identical to per-zoom renders") {
+    for ((name, pts, withLines, zooms, p) <- pyramidCases) {
+      val lines = if (withLines) Some(featuresDs) else None
+      val onePass = Render.renderPyramidAll(Some(pts), lines, zooms, mapbits, p)
+        .collect().map(t => ((t.z, t.x, t.y), t.png)).toMap
+      val perZoom = zooms.map(z => Render.renderTiles(Some(pts), lines, z, mapbits, p))
+        .reduce(_ union _)
+        .collect().map(t => ((t.z, t.x, t.y), t.png)).toMap
+      assert(onePass.nonEmpty, name)
+      assert(onePass.keySet == perZoom.keySet, s"$name: tile sets differ: " +
+        s"${onePass.keySet.diff(perZoom.keySet).take(3)} / ${perZoom.keySet.diff(onePass.keySet).take(3)}")
+      val bad = perZoom.collect { case (k, png) if !java.util.Arrays.equals(png, onePass(k)) => k }
+      assert(bad.isEmpty, s"$name: diffs at ${bad.take(5)}")
+      // every line's first vertex is also a point here, so lines add no
+      // tile of their own to the point rule
+      val expected = expectedKeys(pts, zooms, p)
+      assert(onePass.keySet == expected, s"$name: rendered vs independent tile keys: " +
+        s"${onePass.keySet.diff(expected).take(3)} / ${expected.diff(onePass.keySet).take(3)}")
+    }
+  }
+
+  test("an unranked point input fails at analysis on every render entry point at a step > 1 zoom") {
+    val z = 10 // step 8 under the default dot base
+    assert(RenderParams().pointParams(z)._1 > 1)
     val p = RenderParams()
-    val onePass = Render.renderPyramidAll(Some(pts), Some(featuresDs), zooms, mapbits, p)
-      .collect().map(t => ((t.z, t.x, t.y), t.png)).toMap
-    val perZoom = zooms.map(z =>
-      Render.renderTiles(Some(pts), Some(featuresDs), z, mapbits, p))
-      .reduce(_ union _)
-      .collect().map(t => ((t.z, t.x, t.y), t.png)).toMap
-    assert(onePass.keySet == perZoom.keySet,
-      s"tile sets differ: ${onePass.keySet.diff(perZoom.keySet).take(3)} / ${perZoom.keySet.diff(onePass.keySet).take(3)}")
-    val bad = perZoom.collect { case (k, png) if !java.util.Arrays.equals(png, onePass(k)) => k }
-    assert(bad.isEmpty, s"diffs at ${bad.take(5)}")
-    assert(onePass.nonEmpty)
+    val renders: Seq[(String, () => Any)] = Seq(
+      "renderTiles" -> (() => Render.renderTiles(Some(plainPts), None, z, mapbits, p).collect()),
+      "renderPyramid" -> (() => Render.renderPyramid(plainPts, Seq(z), mapbits, p).collect()),
+      "renderPyramid (z10 + step-1 z14)" -> (() => Render.renderPyramid(plainPts, Seq(z, 14), mapbits, p).collect()),
+      "renderPyramidAll" -> (() => Render.renderPyramidAll(Some(plainPts), Some(featuresDs), Seq(z), mapbits, p).collect()),
+      "renderPyramidSalted" -> (() => Render.renderPyramidSalted(plainPts, Seq(z), mapbits, p).collect()))
+    for ((name, run) <- renders) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](run())
+      assert(e.getMessage.contains("rank"), s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("cloud mode: an unranked point input fails at analysis at a step > 1 zoom too") {
+    val p = RenderParams(circle = 500)
+    for (run <- Seq(() => Render.renderTiles(Some(plainPts), None, 10, mapbits, p),
+                    () => Render.renderPyramid(plainPts, Seq(10, 14), mapbits, p))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](run().collect())
+      assert(e.getMessage.contains("rank"), e.getMessage)
+    }
+    // a step-1 zoom needs no rank
+    assert(Render.renderTiles(Some(plainPts), None, 14, mapbits, p).count() > 0)
   }
 
   test("line dump rows (render -d) match reference incl. clip predicate") {

@@ -67,7 +67,7 @@ class GoldenRenderSpec extends AnyFunSuite {
   }
 
   def ourTile(z: Int, x: Int, y: Int, params: RenderParams = RenderParams()): Option[Array[Byte]] = {
-    val tiles = Render.renderPoints(pointsDf, z, mapbits, params).collect()
+    val tiles = Render.renderTiles(Some(pointsDf), None, z, mapbits, params).collect()
     tiles.find(t => t.x == x && t.y == y).map(_.png)
   }
 

@@ -683,6 +683,57 @@ class PlanSpec extends AnyFunSuite {
     assert(r.getInt(1) == 16 && r.getInt(2) == 4)
   }
 
+  test("render pyramids: ONE hash exchange on tkey, at most one round-robin fan-out directly above the scan") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
+    import org.apache.spark.sql.execution._
+    val dir = java.nio.file.Files.createTempDirectory("plan").toString + "/ranked"
+    graft.render.Render.writeRankedSnapshot(spark.read.parquet(sortedPath).select("cell", "meta"), dir)
+    // a small snapshot packs into fewer splits than cores: the fan-out fires
+    val ranked = graft.render.Render.readRankedSnapshot(spark, dir)
+    val lines = (0 until 50).map { i =>
+      val c0 = graft.core.Cell.encode(1000000 * i, 2000000 * i)
+      val c1 = graft.core.Cell.encode(1000000 * i + 50000000, 2000000 * i + 30000000)
+      graft.encode.Feature(c0, Array(c0, c1), i.toLong)
+    }.toDS()
+    val zooms = 0 to 8
+    val p = graft.core.RenderParams()
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    // AQE wraps the plan before its stages exist; disable it so
+    // executedPlan holds the real exchange nodes
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      def unwrap(n: SparkPlan): SparkPlan = n match {
+        case w: WholeStageCodegenExec => unwrap(w.child)
+        case i: InputAdapter => unwrap(i.child)
+        case c: ColumnarToRowExec => unwrap(c.child)
+        case pr: ProjectExec => unwrap(pr.child)
+        case other => other
+      }
+      for ((name, tiles) <- Seq(
+        "renderPyramid" -> graft.render.Render.renderPyramid(ranked, zooms, 48, p),
+        "renderPyramidAll(points, lines)" ->
+          graft.render.Render.renderPyramidAll(Some(ranked), Some(lines), zooms, 48, p))) {
+        val plan = tiles.queryExecution.executedPlan
+        val exchanges = allNodes(plan).collect {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+        }
+        val hash = exchanges.filter(_.outputPartitioning.isInstanceOf[HashPartitioning])
+        val fanOuts = exchanges.filter(_.outputPartitioning.isInstanceOf[RoundRobinPartitioning])
+        assert(hash.size == 1, s"$name: ${hash.size} hash exchanges:\n$plan")
+        assert(hash.head.outputPartitioning.asInstanceOf[HashPartitioning].expressions
+          .flatMap(_.references.map(_.name)) == Seq("tkey"), s"$name: not keyed on tkey:\n$plan")
+        assert(fanOuts.size <= 1, s"$name: ${fanOuts.size} round-robin exchanges:\n$plan")
+        assert(exchanges.size == hash.size + fanOuts.size, s"$name: other exchanges:\n$plan")
+        fanOuts.foreach { e =>
+          assert(unwrap(e.child).isInstanceOf[LeafExecNode],
+            s"$name: round-robin exchange not directly above the scan:\n$plan")
+        }
+        assert(tiles.count() > 0, name)
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
   test("image dedup edge list: every exchange stays in nid space (no image_id shuffles)") {
     import spark.implicits._
     import graft.media.Media
