@@ -25,27 +25,24 @@ import org.apache.spark.sql.functions._
  * State layout (a labeled IVF index):
  *   dir/centroids              (cid, cvec) — the fixed quantizer
  *   dir/vectors/cell=N/...     (vec_id, embedding, rep) at INGEST time
- *   dir/labels                 (vec_id, rep) for every vector
  * Index reps are sticky like band-index rows: merges compose as
  * (rep_a -> merged_rep) events downstream (ops.StickyLabels — shared
  * with both other modalities, so label semantics can never diverge);
  * rows are never rewritten. Writers (rebuild AND append) serialize on
- * ops.StateLease. vec_id must be a corpus-unique Long (it IS the graph
- * node id).
+ * ops.StateLease.withLease. vec_id must be a corpus-unique Long (it IS
+ * the graph node id).
  */
 object SemDedupState {
 
   /** Build the state: full [[Ann.semDedup]] over `vecs` (k-means
     * quantizer trained here), then persist centroids + the labeled
-    * cell-partitioned vector index + labels. Returns the labels. */
+    * cell-partitioned vector index. Returns the labels (vec_id, rep). */
   def writeSemDedupState(vecs: DataFrame, k: Int, iters: Int, minCos: Double,
                          dir: String): DataFrame = {
     val (cids, cvecs) = Ann.kmeansCentroids(vecs, k, iters)
     val labeled = Ann.semDedup(vecs, cids, cvecs, minCos)
       .select(col("vec_id"), col("cell"), col("rep")).localCheckpoint(true)
-    val lease = graft.ops.StateLease.acquire(dir)
-    try {
-      graft.ops.StateLease.checkFenced(lease)
+    graft.ops.StateLease.withLease(dir) {
       val spark = vecs.sparkSession
       import spark.implicits._
       cids.zip(cvecs).toSeq.map { case (cid, v) => (cid, v.toSeq) }
@@ -56,10 +53,7 @@ object SemDedupState {
         .select(col("vec_id"), col("embedding"), col("rep"), col("cell"))
         .sortWithinPartitions(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/vectors")
-      labeled.select(col("vec_id"), col("rep"))
-        .write.mode("overwrite").parquet(s"$dir/labels")
-      graft.ops.StateLease.checkFenced(lease)
-    } finally graft.ops.StateLease.release(lease)
+    }
     labeled.select(col("vec_id"), col("rep"))
   }
 
@@ -141,20 +135,16 @@ object SemDedupState {
     * assign against the index's own centroids, drop vec_ids already
     * present in their cells (batch-replay idempotency — the presence
     * probe reads only the batch's cell partitions, id column only),
-    * and append (vec_id, embedding, rep) rows partitioned by cell,
-    * plus the labels (skippable for callers with their own idempotent
-    * label sink). Lease-guarded single writer per corpus. */
-  def appendSemDedupState(newVecs: DataFrame, newLabels: DataFrame, dir: String,
-                          writeLabels: Boolean = true): Unit = {
-    val spark = newVecs.sparkSession
-    val lease = graft.ops.StateLease.acquire(dir)
-    try {
-      graft.ops.StateLease.checkFenced(lease)
+    * and append (vec_id, embedding, rep) rows partitioned by cell.
+    * Lease-guarded single writer per corpus. */
+  def appendSemDedupState(newVecs: DataFrame, newLabels: DataFrame, dir: String): Unit =
+    graft.ops.StateLease.withLease(dir) {
+      val spark = newVecs.sparkSession
       val (cids, cvecs) = Ann.collectCentroids(spark.read.parquet(s"$dir/centroids"))
       // embedding-carrying checkpoint is consumed entirely within this
-      // call — unpersist it (the prepareBatch withRep lesson: leaking
-      // one embedding batch of executor storage per micro-batch drained
-      // is the exact leak class the text path fixed)
+      // call — release it (leaking one embedding batch of executor
+      // storage per micro-batch drained is the leak class every
+      // per-batch checkpoint must avoid)
       val asg = Ann.ivfAssign(newVecs, cids, cvecs).localCheckpoint(true)
       try {
         val cells = asg.select("cell").distinct().collect().map(_.getLong(0))
@@ -165,9 +155,6 @@ object SemDedupState {
           .select(col("vec_id"), col("embedding"), col("rep"), col("cell"))
           .sortWithinPartitions(col("cell"))
           .write.mode("append").partitionBy("cell").parquet(s"$dir/vectors")
-        if (writeLabels) newLabels.write.mode("append").parquet(s"$dir/labels")
-      } finally asg.unpersist()
-      graft.ops.StateLease.checkFenced(lease)
-    } finally graft.ops.StateLease.release(lease)
-  }
+      } finally graft.ops.Checkpoint.release(asg)
+    }
 }

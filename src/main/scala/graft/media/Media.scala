@@ -472,17 +472,15 @@ object Media {
   }
 
   /** Build the persisted dedup state for [[incrementalImageDedup]]:
-    * runs the full batch clustering, then lands
-    *  - `<table>` (catalog, parquet at `dir/bands`): one row per
-    *    (distinct dhash x 6 level-1 bands) — (band_key, dhash, rep_nid,
-    *    rep) — BUCKETED by band_key, so incremental probes join the
-    *    corpus-sized side with zero shuffle;
-    *  - `dir/labels`: (image_id, rep) for every image.
-    * Returns the labels. At 10^12 images the bands table is ~300 B/
-    * distinct hash; probes read only matching buckets. */
+    * runs the full batch clustering, then lands `<table>` (catalog,
+    * parquet at `dir/bands`): one row per (distinct dhash x 6 level-1
+    * bands) — (band_key, dhash, rep_nid, rep) — BUCKETED by band_key,
+    * so incremental probes join the corpus-sized side with zero
+    * shuffle. Returns the labels (image_id, rep) for every image. At
+    * 10^12 images the bands table is ~300 B/distinct hash; probes read
+    * only matching buckets. */
   def writeImageDedupState(images: DataFrame, dir: String, table: String,
                            buckets: Int, maxHamming: Int = 2): DataFrame = {
-    val spark = images.sparkSession
     // ONE payload-decode pass feeds both the clustering and the index
     val ids = dedupIds(images)
     val (edges, repIds) = dupEdges(ids, maxHamming)
@@ -492,25 +490,10 @@ object Media {
     // extra distinct pass runs here
     val distinctHash = repIds.join(labels.select(col("nid"), col("rep")), "nid")
       .select(col("dhash"), col("rep"), xxhash64(col("rep")).as("rep_nid"))
-    val named = labels.select(col("image_id"), col("rep"))
-    // rebuild under the SAME per-corpus lease the appenders hold (see
-    // TextDedupState.writeTextDedupState): an unguarded DROP + overwrite
-    // interleaving with a concurrent append would mix two state
-    // generations under one bucket spec
-    val lease = graft.ops.StateLease.acquire(dir)
-    try {
-      graft.ops.StateLease.checkFenced(lease)
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      distinctHash
-        .select(explode(packedBandKeys(col("dhash"))).as("band_key"),
-          col("dhash"), col("rep_nid"), col("rep"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "band_key").sortBy("band_key")
-        .option("path", s"$dir/bands").saveAsTable(table)
-      named.write.mode("overwrite").parquet(s"$dir/labels")
-      graft.ops.StateLease.checkFenced(lease)
-    } finally graft.ops.StateLease.release(lease)
-    named
+    graft.ops.StateLease.writeBandIndex(table, dir, buckets, rebuild = true)(
+      distinctHash.select(explode(packedBandKeys(col("dhash"))).as("band_key"),
+        col("dhash"), col("rep_nid"), col("rep")))
+    labels.select(col("image_id"), col("rep"))
   }
 
   /** Deduplicate a NEW batch, given as its [[dedupIds]] projection,
@@ -573,32 +556,26 @@ object Media {
     * exact-dhash match detected through the band-0 bucket join —
     * identical hashes share every band, so one band suffices, and the
     * corpus side stays shuffle-free), labeled with the batch's FINAL
-    * reps from [[incrementalImageDedup]]'s newLabels; plus the labels
-    * themselves (skippable via `writeLabels` when the caller lands
-    * labels in its own idempotent sink, as the streaming wrapper does).
-    * `buckets` must match the value the state was built with (Spark
-    * refuses mismatched bucket specs on append).
+    * reps from [[incrementalImageDedup]]'s newLabels. The presence
+    * check makes a replayed fold a no-op. `buckets` must match the
+    * value the state was built with.
     *
     * Merge semantics: band rows of clusters ABSORBED by an earlier
     * merge keep their original rep — labels compose through the
     * accumulated merge tables (rep_a -> merged_rep), they are never
-    * rewritten in place. Single-writer per corpus, ENFORCED by a lease
-    * file under `dir` (stale leases from crashed writers are stolen
+    * rewritten in place. Single-writer per corpus, ENFORCED by the
+    * StateLease on `dir` (stale leases from crashed writers are stolen
     * after 15 min): a concurrent append throws instead of corrupting
     * the bucketed index. */
   def appendImageDedupState(ids: DataFrame, newLabels: DataFrame,
-                            bandsTable: String, dir: String, buckets: Int,
-                            writeLabels: Boolean = true): Unit = {
-    val spark = ids.sparkSession
-    val lease = graft.ops.StateLease.acquire(dir)
-    try {
-      graft.ops.StateLease.checkFenced(lease)
+                            bandsTable: String, dir: String, buckets: Int): Unit =
+    graft.ops.StateLease.writeBandIndex(bandsTable, dir, buckets, rebuild = false) {
       val distinctNew = ids.groupBy(col("dhash")).agg(min(col("image_id")).as("member_id"))
       def band0(dhash: Column): Column = { // packed (b=0, q0, q1) key
         def quarter(i: Int) = shiftrightunsigned(dhash, i * 16).bitwiseAND(lit(0xFFFFL))
         shiftleft(quarter(0), 16).bitwiseOR(quarter(1))
       }
-      val idx0 = spark.table(bandsTable)
+      val idx0 = ids.sparkSession.table(bandsTable)
         .filter(col("band_key") < (1L << 32)) // band 0 rows only
         .select(col("band_key"), col("dhash").as("old_dhash"))
       val fresh = distinctNew.withColumn("band_key", band0(col("dhash")))
@@ -611,13 +588,5 @@ object Media {
         .join(newLabels.withColumnRenamed("image_id", "member_id"), "member_id")
         .select(explode(packedBandKeys(col("dhash"))).as("band_key"),
           col("dhash"), xxhash64(col("rep")).as("rep_nid"), col("rep"))
-        .write.mode("append").format("parquet")
-        .bucketBy(buckets, "band_key").sortBy("band_key")
-        .option("path", s"$dir/bands").saveAsTable(bandsTable)
-      if (writeLabels) newLabels.write.mode("append").parquet(s"$dir/labels")
-      // post-write fence check: a steal DURING the append must fail the
-      // job loudly — the successor may have interleaved bucket files
-      graft.ops.StateLease.checkFenced(lease)
-    } finally graft.ops.StateLease.release(lease)
-  }
+    }
 }

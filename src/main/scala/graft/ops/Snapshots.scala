@@ -39,15 +39,8 @@ object Snapshots {
     * commits would otherwise both read snapshot N and both write
     * data/N+1 (interleaved part files, last manifest wins — a silently
     * corrupted chain). */
-  def commit(root: String, df: DataFrame, parents: Seq[Long] = Nil): Long = {
-    val lease = StateLease.acquire(root)
-    try {
-      StateLease.checkFenced(lease)
-      val r = commitLocked(root, df, parents)
-      StateLease.checkFenced(lease)
-      r
-    } finally StateLease.release(lease)
-  }
+  def commit(root: String, df: DataFrame, parents: Seq[Long] = Nil): Long =
+    StateLease.withLease(root)(commitLocked(root, df, parents))
 
   /** Files.list streams hold a directory fd until closed — drain and
     * close eagerly (a long-running incremental driver polls these per
@@ -100,15 +93,8 @@ object Snapshots {
     * incrementality (README.md:97-107) without rewriting history.
     * The parent pointer is read INSIDE the lease — reading it before
     * acquisition would reintroduce the lost-parent race. */
-  def append(root: String, df: DataFrame): Long = {
-    val lease = StateLease.acquire(root)
-    try {
-      StateLease.checkFenced(lease)
-      val r = commitLocked(root, df, currentSnapshot(root).toSeq)
-      StateLease.checkFenced(lease)
-      r
-    } finally StateLease.release(lease)
-  }
+  def append(root: String, df: DataFrame): Long =
+    StateLease.withLease(root)(commitLocked(root, df, currentSnapshot(root).toSeq))
 }
 
 /** One lineage record per completed work unit (bucket of the tile
@@ -165,22 +151,14 @@ object CheckpointedTiles {
    */
   def run(spark: SparkSession, snapshotRoot: String, out: String, z: Int,
           mapbits: Int, bucketLevel: Int = 1,
-          failAtBucket: Option[Int] = None): Int = {
+          failAtBucket: Option[Int] = None): Int =
     // single writer per tileset: two concurrent resumers would race the
     // same uncommitted bucket's overwrite (interleaved part files from
-    // two jobs) before the loser's ATOMIC_MOVE even fails
-    val lease = StateLease.acquire(out)
-    try {
-      StateLease.checkFenced(lease)
-      val r = runLocked(spark, snapshotRoot, out, z, mapbits, bucketLevel, failAtBucket)
-      // before AND after, per the lease protocol: a mid-run stale steal
-      // (heartbeat stalled past the lease horizon while a rival resumer
-      // took over the same bucket dirs) must fail THIS run loudly, not
-      // let both writers report success over interleaved part files
-      StateLease.checkFenced(lease)
-      r
-    } finally StateLease.release(lease)
-  }
+    // two jobs) before the loser's ATOMIC_MOVE even fails; the lease's
+    // post-run fence check fails THIS run loudly if a rival resumer
+    // stale-stole the lease mid-run
+    StateLease.withLease(out)(
+      runLocked(spark, snapshotRoot, out, z, mapbits, bucketLevel, failAtBucket))
 
   private def runLocked(spark: SparkSession, snapshotRoot: String, out: String, z: Int,
                         mapbits: Int, bucketLevel: Int,

@@ -1,18 +1,22 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
+
 /**
- * Single-writer lease for persisted incremental-dedup state (image band
- * index, text band index): a concurrent append would interleave files
- * under the same bucket spec and corrupt the bucketing silently, so
- * appends must be serialized per corpus and this lease ENFORCES it.
+ * Single-writer lease for persisted incremental state: the image and
+ * text band indexes, the semantic-dedup vector index, Snapshots commits
+ * and CheckpointedTiles resumes. A concurrent append would interleave
+ * files under the same bucket spec (or the same snapshot / bucket dir)
+ * and corrupt the state silently, so writes must be serialized per
+ * state root and this lease ENFORCES it. Writers go through
+ * [[withLease]]; the bucketed band indexes through [[writeBandIndex]].
  *
  * Acquisition is an atomic create-file with an OWNER TOKEN in the body;
  * a daemon HEARTBEAT thread touches the lease mtime every leaseMs/3, so
  * a live append — however long — is never mistaken for a crashed
  * writer; only a lease whose mtime is older than `leaseMs` (heartbeat
  * dead == holder dead) is stolen. Release deletes the file only while
- * the token still matches (never a successor's lease). Callers release
- * in a finally.
+ * the token still matches (never a successor's lease).
  *
  * FENCING: a live writer whose heartbeat stalls past leaseMs (long GC,
  * NFS pause) can be legitimately stale-stolen. When its heartbeat
@@ -21,8 +25,8 @@ package graft.ops
  * appending recreates the two-writer corruption. So every tick READS
  * the lease and compares the token: on mismatch (or a vanished file)
  * the heartbeat sets a `fenced` flag and exits without touching
- * anything; appenders call [[checkFenced]] around their writes and the
- * fenced writer FAILS instead of silently double-writing.
+ * anything; [[withLease]] calls [[checkFenced]] around the write and
+ * the fenced writer FAILS instead of silently double-writing.
  */
 object StateLease {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -30,7 +34,7 @@ object StateLease {
                          fenced: java.util.concurrent.atomic.AtomicBoolean)
 
   /** Throw if this lease was stolen out from under a stalled heartbeat.
-    * Appenders call this before AND after the guarded write: before =
+    * [[withLease]] calls this before AND after the body: before =
     * don't start doomed work; after = a steal DURING the write must
     * fail the job loudly (the successor may have interleaved files).
     *
@@ -58,6 +62,40 @@ object StateLease {
           "have two writers — verify the band index before further appends")
     }
   }
+
+  /** Run `body` as the single writer of the state under `dir`: acquire
+    * the lease, check the fence, run the body, check the fence again,
+    * release in a finally. The body runs INSIDE the lease, so whatever
+    * it reads of the state (a parent snapshot pointer, the index rows a
+    * presence check compares against) is what it writes against. */
+  def withLease[T](dir: String)(body: => T): T = {
+    val lease = acquire(dir)
+    try {
+      checkFenced(lease)
+      val r = body
+      checkFenced(lease)
+      r
+    } finally release(lease)
+  }
+
+  /** The one writer of a bucketed band index (image and text dedup
+    * state), under the lease on `dir`: `rows` land as parquet at
+    * `dir/bands`, bucketed and sorted by `band_key`, registered as the
+    * catalog table `table` (bucket metadata lives in the catalog, so
+    * readers use spark.table, never read.parquet). `rebuild` drops and
+    * overwrites the table — under the SAME lease the appenders hold, so
+    * a rebuild never interleaves with an append; otherwise rows append,
+    * and `buckets` must match the build's (Spark refuses mismatched
+    * bucket specs). `rows` is evaluated inside the lease. */
+  def writeBandIndex(table: String, dir: String, buckets: Int, rebuild: Boolean)
+                    (rows: => DataFrame): Unit =
+    withLease(dir) {
+      val df = rows
+      if (rebuild) df.sparkSession.sql(s"DROP TABLE IF EXISTS $table")
+      df.write.mode(if (rebuild) "overwrite" else "append").format("parquet")
+        .bucketBy(buckets, "band_key").sortBy("band_key")
+        .option("path", s"$dir/bands").saveAsTable(table)
+    }
 
   def acquire(dir: String, leaseMs: Long = 15 * 60 * 1000L): Lease = {
     val p = java.nio.file.Paths.get(dir, ".writer_lease")

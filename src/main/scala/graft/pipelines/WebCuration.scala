@@ -147,13 +147,17 @@ object WebCuration {
     * tokenizes/hashes only its own docs; the curated corpus never
     * re-shuffles.
     *
-    * Sinks are batchId-keyed overwrite dirs (replay-idempotent, the
-    * incrementalTextDedupStream contract): `outDir/curated/batch=N`
-    * (url, ts, redacted text, n_toks), `outDir/labels/batch=N`,
-    * `outDir/merges/batch=N`. Sequence packing is a GLOBAL prefix sum
-    * and stays a batch job over the curated corpus (run
-    * TextOps.sequencePack over `outDir/curated` when cutting a
-    * training snapshot); per-doc token counts are emitted here.
+    * Runs on the shared replay-safe driver
+    * (streaming.StreamOps.replaySafeStream): sinks are batchId-keyed
+    * overwrite dirs, `outDir/curated/batch=N` (url, ts, redacted text,
+    * n_toks), `outDir/labels/batch=N`, `outDir/merges/batch=N`, each
+    * migrated from the flat-era layout; the state fold runs last; every
+    * per-batch checkpoint (both funnel checkpoints, the prepared text
+    * batch, the labels) is released after the batch. Sequence packing
+    * is a GLOBAL prefix sum and stays a batch job over the curated
+    * corpus (run TextOps.sequencePack over `outDir/curated` when
+    * cutting a training snapshot); per-doc token counts are emitted
+    * here.
     *
     * Bootstrap contract: `bandsTable`/`stateDir` must exist —
     * TextDedupState.writeTextDedupState over the initial corpus
@@ -162,40 +166,31 @@ object WebCuration {
                 bandsTable: String, stateDir: String, buckets: Int,
                 checkpointDir: String, lang: String = "en",
                 maxAvgLmCost: Long = Long.MaxValue): org.apache.spark.sql.streaming.StreamingQuery = {
+    import graft.text.TextDedupState
     val pages = graft.sources.WarcSource.warcStream(spark, warcDir)
       .filter(col("rec_type") === "response" && col("html").isNotNull)
-    pages.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // one checkpoint hook for both funnel checkpoints; collected
-        // and unpersisted per batch (leaking one text-carrying block
-        // per micro-batch inflates executor storage on backlog drains)
-        val ckpts = scala.collection.mutable.ListBuffer.empty[DataFrame]
-        val filtered = funnelStages(batch, lang, maxAvgLmCost,
-          df => { val c = df.localCheckpoint(true); ckpts += c; c }).redacted
-        try {
-          if (filtered.count() > 0) {
-            val (labels, merges, bands) = graft.text.TextDedupState
-              .incrementalTextDedupPrepared(
-                filtered.select(col("doc_id"), col("text")), bandsTable)
-            val l = labels.localCheckpoint(true)
-            try {
-              filtered
-                .join(l.filter(col("doc_id") === col("rep")).select("doc_id"), "doc_id")
-                .withColumn("n_toks", TextOps.bpeVocabTokenCount(col("text")))
-                .write.mode("overwrite").parquet(s"$outDir/curated/batch=$batchId")
-              l.write.mode("overwrite").parquet(s"$outDir/labels/batch=$batchId")
-              merges.write.mode("overwrite").parquet(s"$outDir/merges/batch=$batchId")
-              // fold LAST: a crash before the fold replays the batch
-              // wholesale (sticky labels make the replay idempotent)
-              graft.text.TextDedupState.appendTextDedupStateFromBands(
-                bands, l, bandsTable, stateDir, buckets, writeLabels = false)
-            } finally l.unpersist()
-          }
-        } finally ckpts.foreach(_.unpersist())
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    // prepared batch: the funnel's redacted docs + their hashing, which
+    // runs only once the driver has found the funnel output non-empty
+    type Batch = (DataFrame, () => TextDedupState.PreparedDocs)
+    val curated: (Batch, DataFrame) => DataFrame = { case ((red, _), labels) =>
+      // keepers: docs whose resolved rep is themselves (first-ever member)
+      red.join(labels.filter(col("doc_id") === col("rep")).select("doc_id"), "doc_id")
+        .withColumn("n_toks", TextOps.bpeVocabTokenCount(col("text")))
+    }
+    graft.streaming.StreamOps.replaySafeStream[Batch](pages, checkpointDir,
+      s"$outDir/labels", s"$outDir/merges", Seq(s"$outDir/curated" -> curated))(
+      prepare = (batch, hold) => {
+        val red = funnelStages(batch, lang, maxAvgLmCost,
+          df => hold(df.localCheckpoint(true))).redacted
+        lazy val docs = {
+          val p = TextDedupState.prepare(red.select(col("doc_id"), col("text")))
+          p.checkpoints.foreach(hold)
+          p
+        }
+        ((red, () => docs), red)
+      },
+      resolve = { case (_, docs) => TextDedupState.incrementalTextDedup(docs(), bandsTable) },
+      fold = { case ((_, docs), labels) =>
+        TextDedupState.appendTextDedupState(docs(), labels, bandsTable, stateDir, buckets) })
   }
 }

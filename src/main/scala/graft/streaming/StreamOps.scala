@@ -190,124 +190,118 @@ object StreamOps {
     }
   }
 
+  /** The replay-safe micro-batch driver behind every persisted-state
+    * dedup stream (image, text, semantic, pipelines.WebCuration). A
+    * modality supplies three steps:
+    *  - `prepare(batch, hold)` -> (prepared batch, rows): `hold`
+    *    registers each per-batch checkpoint the step makes (and returns
+    *    it); empty `rows` skip the batch;
+    *  - `resolve(prepared)` -> (labels, merges) against the state;
+    *  - `fold(prepared, labels)` folds the batch into the state.
+    * The driver owns everything else, per micro-batch: flat-era sink
+    * roots migrate ([[migrateFlatSink]]); the labels are checkpointed;
+    * `extraSinks` (root -> rows from the prepared batch and the
+    * labels), labels and merges OVERWRITE `<root>/batch=N`; the fold
+    * runs LAST; every held checkpoint is released in a finally (a
+    * backlog drain would otherwise accumulate dead checkpoint blocks).
+    *
+    * EVERY write is idempotent under batch replay (a crash between the
+    * sink writes and the checkpoint commit replays the batch under the
+    * same batchId): the batch=N dirs are overwritten, and a replayed
+    * fold skips what the first run already indexed, while sticky labels
+    * make the replayed resolve identical. Readers see a `batch`
+    * partition column under every sink root. */
+  private[graft] def replaySafeStream[P](input: DataFrame, checkpointDir: String,
+      labelsOut: String, mergesOut: String,
+      extraSinks: Seq[(String, (P, DataFrame) => DataFrame)] = Nil)(
+      prepare: (DataFrame, DataFrame => DataFrame) => (P, DataFrame),
+      resolve: P => (DataFrame, DataFrame),
+      fold: (P, DataFrame) => Unit): StreamingQuery =
+    input.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        (extraSinks.map(_._1) ++ Seq(labelsOut, mergesOut))
+          .foreach(migrateFlatSink(batch.sparkSession, _))
+        val held = scala.collection.mutable.ListBuffer.empty[DataFrame]
+        def hold(df: DataFrame): DataFrame = { held += df; df }
+        def land(root: String, df: DataFrame): Unit =
+          df.write.mode("overwrite").parquet(s"$root/batch=$batchId")
+        try {
+          val (p, rows) = prepare(batch, hold)
+          if (rows.count() > 0) {
+            val (labels, merges) = resolve(p)
+            val l = hold(labels.localCheckpoint(true))
+            extraSinks.foreach { case (root, sinkRows) => land(root, sinkRows(p, l)) }
+            land(labelsOut, l)
+            land(mergesOut, merges)
+            fold(p, l)
+          }
+        } finally held.foreach(graft.ops.Checkpoint.release)
+        ()
+      }
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+
   /** Continuous perceptual dedup with PERSISTED content-addressed
     * state: each micro-batch dedups against the band index built by
     * Media.writeImageDedupState (corpus side never shuffles), lands its
-    * labels and merge events in parquet sinks, and folds its fresh
-    * hashes back into the state so LATER batches see it. Complements
+    * labels and merge events in `labelsOut/batch=N` and
+    * `mergesOut/batch=N`, and folds its fresh hashes back into the
+    * state so LATER batches see it — through [[replaySafeStream]], so
+    * every write is replay-idempotent. Complements
     * [[streamingImageDedup]], whose watermark bounds state by TIME —
-    * this state is permanent and cross-restart.
-    *
-    * EVERY write is idempotent under batch replay (a crash between the
-    * sink writes and the checkpoint commit replays the batch): labels
-    * and merges land in batchId-keyed subdirectories with overwrite
-    * (readers see a `batch` partition column under labelsOut/mergesOut),
-    * and the band-index fold skips already-present hashes — so a replay
-    * rewrites the same rows instead of duplicating them. The state's
-    * own labels append is skipped (labelsOut IS the durable label
-    * record for a streamed corpus). */
+    * this state is permanent and cross-restart. The batch decodes ONCE:
+    * its [[graft.media.Media.dedupIds]] projection feeds both the
+    * resolve and the fold. */
   def incrementalDedupStream(images: DataFrame, bandsTable: String, stateDir: String,
                              buckets: Int, labelsOut: String, mergesOut: String,
                              checkpointDir: String): StreamingQuery =
-    images.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        migrateFlatSink(batch.sparkSession, labelsOut)
-        migrateFlatSink(batch.sparkSession, mergesOut)
-        val ids = graft.media.Media.dedupIds(batch)
-        try {
-          if (ids.count() > 0) {
-            val (labels, merges) = graft.media.Media.incrementalImageDedup(ids, bandsTable)
-            val l = labels.localCheckpoint(true)
-            try {
-              l.write.mode("overwrite").parquet(s"$labelsOut/batch=$batchId")
-              merges.write.mode("overwrite").parquet(s"$mergesOut/batch=$batchId")
-              graft.media.Media.appendImageDedupState(
-                ids, l, bandsTable, stateDir, buckets, writeLabels = false)
-            } finally l.unpersist()
-          }
-          // unpersist per batch: a long backlog drain would otherwise
-          // accumulate dead checkpoint blocks until GC happens to run
-        } finally ids.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    replaySafeStream[DataFrame](images, checkpointDir, labelsOut, mergesOut)(
+      prepare = (batch, hold) => {
+        val ids = hold(graft.media.Media.dedupIds(batch))
+        (ids, ids)
+      },
+      resolve = ids => graft.media.Media.incrementalImageDedup(ids, bandsTable),
+      fold = (ids, labels) =>
+        graft.media.Media.appendImageDedupState(ids, labels, bandsTable, stateDir, buckets))
 
   /** Continuous TEXT near-dup dedup with persisted state — the text
-    * analog of [[incrementalDedupStream]], same idempotency contract:
-    * labels/merges land in batchId-keyed overwrite paths (flat-era
-    * files auto-migrate to batch=legacy), the band fold skips
-    * already-indexed texts, the state's own labels append is skipped.
-    * Each micro-batch tokenizes/hashes ONLY its own docs; the corpus
-    * never re-shuffles (bucketed index probes). */
+    * analog of [[incrementalDedupStream]], same driver and idempotency
+    * contract. Each micro-batch tokenizes/hashes ONLY its own docs,
+    * exactly once (TextDedupState.prepare feeds resolve and fold); the
+    * corpus never re-shuffles (bucketed index probes). */
   def incrementalTextDedupStream(docs: DataFrame, bandsTable: String, stateDir: String,
                                  buckets: Int, labelsOut: String, mergesOut: String,
-                                 checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        migrateFlatSink(batch.sparkSession, labelsOut)
-        migrateFlatSink(batch.sparkSession, mergesOut)
-        val b = batch.localCheckpoint(true)
-        try {
-          if (b.count() > 0) {
-            // Prepared variant: the dedup's band rows feed the state fold
-            // too, so every doc is tokenized/minhashed exactly ONCE
-            val (labels, merges, bands) = graft.text.TextDedupState
-              .incrementalTextDedupPrepared(b, bandsTable)
-            val l = labels.localCheckpoint(true)
-            try {
-              l.write.mode("overwrite").parquet(s"$labelsOut/batch=$batchId")
-              merges.write.mode("overwrite").parquet(s"$mergesOut/batch=$batchId")
-              graft.text.TextDedupState.appendTextDedupStateFromBands(
-                bands, l, bandsTable, stateDir, buckets, writeLabels = false)
-            } finally l.unpersist()
-          }
-          // unpersist per batch (bounds checkpoint blocks on backlog drains)
-        } finally b.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+                                 checkpointDir: String): StreamingQuery = {
+    import graft.text.TextDedupState
+    replaySafeStream[TextDedupState.PreparedDocs](docs, checkpointDir, labelsOut, mergesOut)(
+      prepare = (batch, hold) => {
+        val p = TextDedupState.prepare(batch)
+        p.checkpoints.foreach(hold)
+        (p, p.bands)
+      },
+      resolve = p => TextDedupState.incrementalTextDedup(p, bandsTable),
+      fold = (p, labels) =>
+        TextDedupState.appendTextDedupState(p, labels, bandsTable, stateDir, buckets))
+  }
 
   /** Continuous SEMANTIC dedup with persisted state — the embedding
     * modality's analog of [[incrementalDedupStream]] (image) and
-    * [[incrementalTextDedupStream]], same idempotency contract:
-    * labels/merges land in batchId-keyed overwrite paths (flat-era
-    * files auto-migrate), the state fold drops vec_ids already present
-    * in their cells, the state's own labels append is skipped. Each
-    * micro-batch assigns/probes ONLY its own vectors against the
-    * batch's cells' partitions; the corpus never re-shuffles. The
-    * assignment runs once in the dedup and once in the fold — a
-    * map-side kernel over a batch-sized input, not worth the prepared-
-    * variant plumbing the text path's per-doc hashing justified. */
+    * [[incrementalTextDedupStream]], same driver and idempotency
+    * contract. Each micro-batch assigns/probes ONLY its own vectors
+    * against the batch's cells' partitions; the corpus never
+    * re-shuffles. The assignment runs once in the dedup and once in the
+    * fold — a map-side kernel over a batch-sized input. */
   def incrementalSemDedupStream(vecs: DataFrame, stateDir: String, minCos: Double,
                                 labelsOut: String, mergesOut: String,
                                 checkpointDir: String): StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        migrateFlatSink(batch.sparkSession, labelsOut)
-        migrateFlatSink(batch.sparkSession, mergesOut)
-        val b = batch.localCheckpoint(true)
-        try {
-          if (b.count() > 0) {
-            val (labels, merges) = graft.ann.SemDedupState
-              .incrementalSemDedup(b, stateDir, minCos)
-            val l = labels.localCheckpoint(true)
-            try {
-              l.write.mode("overwrite").parquet(s"$labelsOut/batch=$batchId")
-              merges.write.mode("overwrite").parquet(s"$mergesOut/batch=$batchId")
-              graft.ann.SemDedupState.appendSemDedupState(b, l, stateDir,
-                writeLabels = false)
-            } finally l.unpersist()
-          }
-        } finally b.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    replaySafeStream[DataFrame](vecs, checkpointDir, labelsOut, mergesOut)(
+      prepare = (batch, hold) => {
+        val b = hold(batch.localCheckpoint(true))
+        (b, b)
+      },
+      resolve = b => graft.ann.SemDedupState.incrementalSemDedup(b, stateDir, minCos),
+      fold = (b, labels) => graft.ann.SemDedupState.appendSemDedupState(b, labels, stateDir))
 
   /** Incremental tileset maintenance — the reference's "encode new
     * files, merge, re-render" loop (README.md:97-107) as ONE streaming

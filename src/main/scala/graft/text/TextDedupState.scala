@@ -19,12 +19,15 @@ import org.apache.spark.sql.functions._
  * exact text_md5 equality), so cross-batch EXACT copies link no matter
  * their eligibility and the incremental partition equals one-shot
  * clustering regardless of batch boundaries. The persisted state is
- *  - `<table>` (catalog, parquet at `dir/bands`): one row per
- *    (distinct-md5 rep doc x (bands + 1)) — (band, band_key, text_md5,
- *    rep) — BUCKETED by band_key so incremental probes join the
- *    corpus-sized side with ZERO shuffle (read via spark.table, never
- *    read.parquet: bucket metadata lives in the catalog);
- *  - `dir/labels`: (doc_id, rep) for every doc.
+ * `<table>` (catalog, parquet at `dir/bands`): one row per
+ * (distinct-md5 rep doc x (bands + 1)) — (band, band_key, text_md5,
+ * rep) — BUCKETED by band_key so incremental probes join the
+ * corpus-sized side with ZERO shuffle (read via spark.table, never
+ * read.parquet: bucket metadata lives in the catalog).
+ *
+ * A batch is hashed ONCE: [[prepare]] (the text analog of
+ * Media.dedupIds) feeds both [[incrementalTextDedup]] and
+ * [[appendTextDedupState]].
  *
  * Exact duplicates (identical text — the bulk of web duplication)
  * collapse by an md5 pregroup before banding, so a million-copy
@@ -45,11 +48,19 @@ object TextDedupState {
   private def md5Key(md5Col: Column): Column =
     xxhash64(md5Col).bitwiseAND(lit(0x3FFFFFFFFFFFFFFFL)).bitwiseOR(lit(1L << 62))
 
-  /** Batch preparation: (CHECKPOINTED star edges from the md5 pregroup,
-    * CHECKPOINTED band rows). Band rows = the LSH bands of eligible
-    * reps PLUS one md5 row (band = -1) for EVERY rep; the checkpoints
-    * matter — bands feed the pair join (which scans twice) plus the
-    * probe/index writes (CLAUDE.md multi-consumer invariant).
+  /** A batch of documents hashed once by [[prepare]]: `ids` (doc_id as
+    * Long, lazy over the input), the md5-pregroup `starEdges` and the
+    * `bands` rows, both CHECKPOINTED — the callers that own the batch
+    * release `checkpoints` once the batch is folded. */
+  final case class PreparedDocs(ids: DataFrame, starEdges: DataFrame, bands: DataFrame) {
+    def checkpoints: Seq[DataFrame] = Seq(starEdges, bands)
+  }
+
+  /** Batch preparation over (doc_id, text): star edges from the md5
+    * pregroup plus band rows — the LSH bands of eligible reps PLUS one
+    * md5 row (band = -1) for EVERY rep. Both are checkpointed: bands
+    * feed the pair join (which scans twice) plus the probe/index writes
+    * (CLAUDE.md multi-consumer invariant).
     *
     * Band keys and the md5 digest compute MAP-SIDE off the scan, so
     * the checkpointed projection — (doc_id, 32-char md5, <= bands
@@ -59,10 +70,10 @@ object TextDedupState {
     * DOC, not per rep — identical texts produce identical keys, so the
     * rep band rows are unchanged; the trade is minhash CPU on
     * duplicate copies for zero text bytes on any exchange. The narrow
-    * checkpoint is unpersisted HERE once both derived checkpoints have
+    * checkpoint is released HERE once both derived checkpoints have
     * materialized (leaking one per micro-batch inflates executor
     * storage batch over batch). */
-  private[text] def prepareBatch(docs: DataFrame): (DataFrame, DataFrame) = {
+  def prepare(docs: DataFrame): PreparedDocs = {
     val keyed = docs.select(col("doc_id").cast("long").as("doc_id"),
         md5(col("text")).as("text_md5"),
         when(TextOps.lshEligible(col("text")),
@@ -82,8 +93,8 @@ object TextDedupState {
       val md5Bands = reps.select(col("doc_id"), col("text_md5"),
         lit(-1).as("band"), md5Key(col("text_md5")).as("band_key"))
       val bands = lshBands.unionByName(md5Bands).localCheckpoint(true)
-      (starEdges, bands)
-    } finally keyed.unpersist()
+      PreparedDocs(docs.select(col("doc_id").cast("long").as("doc_id")), starEdges, bands)
+    } finally graft.ops.Checkpoint.release(keyed)
   }
 
   /** In-batch near-dup pairs from prepared band rows: the capped LSH
@@ -97,61 +108,37 @@ object TextDedupState {
 
   /** Build the persisted state: batch-cluster `docs` (md5 pregroup +
     * capped LSH pairs + connected components — the q42 partition),
-    * land the bucketed band index and the labels, return the labels. */
+    * land the bucketed band index, return the labels (doc_id, rep). */
   def writeTextDedupState(docs: DataFrame, dir: String, table: String,
                           buckets: Int): DataFrame = {
-    val spark = docs.sparkSession
-    val (starEdges, bands) = prepareBatch(docs)
+    val p = prepare(docs)
     val comp = graft.ops.Components
-      .connectedComponents(starEdges.unionByName(batchPairs(bands)))
+      .connectedComponents(p.starEdges.unionByName(batchPairs(p.bands)))
       .withColumnRenamed("node", "doc_id")
-    val labels = docs.select(col("doc_id").cast("long").as("doc_id"))
+    val labels = p.ids
       .join(comp, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep"))
       .localCheckpoint(true)
-    // the rebuild takes the SAME per-corpus lease the appenders hold:
-    // an unguarded DROP + overwrite interleaving with a concurrent
-    // append's saveAsTable would mix two state generations under one
-    // bucket spec — the exact two-writer corruption the lease exists for
-    val lease = graft.ops.StateLease.acquire(dir)
-    try {
-      graft.ops.StateLease.checkFenced(lease)
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      bands
+    graft.ops.StateLease.writeBandIndex(table, dir, buckets, rebuild = true)(
+      p.bands
         .join(labels, "doc_id")
-        .select(col("band"), col("band_key"), col("text_md5"), col("rep"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, "band_key").sortBy("band_key")
-        .option("path", s"$dir/bands").saveAsTable(table)
-      labels.write.mode("overwrite").parquet(s"$dir/labels")
-      graft.ops.StateLease.checkFenced(lease)
-    } finally graft.ops.StateLease.release(lease)
+        .select(col("band"), col("band_key"), col("text_md5"), col("rep")))
     labels
   }
 
-  /** Dedup a NEW batch against the persisted band index WITHOUT
-    * touching the old corpus: within the batch, the full md5-pregroup +
-    * capped-LSH clustering; across the boundary, the batch's band rows
-    * (LSH + md5) probe the BUCKETED index (corpus side never shuffles;
-    * only (doc_id, band_key) rows do) — a shared LSH band key IS a
-    * match (the batch criterion) and md5 rows match on verified exact
-    * text, so boundary semantics equal re-clustering the union for
-    * eligible AND ineligible docs. Old labels are sticky; bridges emit
-    * merges (see ops.StickyLabels). Returns (labels(doc_id, rep),
-    * merges(rep_a, merged_rep)). */
-  def incrementalTextDedup(newDocs: DataFrame, bandsTable: String):
+  /** Dedup a NEW prepared batch against the persisted band index
+    * WITHOUT touching the old corpus: within the batch, the full
+    * md5-pregroup + capped-LSH clustering; across the boundary, the
+    * batch's band rows (LSH + md5) probe the BUCKETED index (corpus side
+    * never shuffles; only (doc_id, band_key) rows do) — a shared LSH
+    * band key IS a match (the batch criterion) and md5 rows match on
+    * verified exact text, so boundary semantics equal re-clustering the
+    * union for eligible AND ineligible docs. Old labels are sticky;
+    * bridges emit merges (see ops.StickyLabels). Returns
+    * (labels(doc_id, rep), merges(rep_a, merged_rep)). */
+  def incrementalTextDedup(batch: PreparedDocs, bandsTable: String):
       (DataFrame, DataFrame) = {
-    val (labels, merges, _) = incrementalTextDedupPrepared(newDocs, bandsTable)
-    (labels, merges)
-  }
-
-  /** [[incrementalTextDedup]] that also returns the batch's prepared
-    * band rows, so a caller that will fold the batch into the state
-    * (the streaming wrapper) hashes each document ONCE. */
-  def incrementalTextDedupPrepared(newDocs: DataFrame, bandsTable: String):
-      (DataFrame, DataFrame, DataFrame) = {
-    val spark = newDocs.sparkSession
-    val (starEdges, bands) = prepareBatch(newDocs)
+    val spark = batch.bands.sparkSession
     // boundary probe: batch band rows join the bucketed index; md5-band
     // hits additionally verify exact text equality. The hit set is
     // candidate-sized and checkpointed — the edge list AND the old-rep
@@ -159,7 +146,7 @@ object TextDedupState {
     val idx = spark.table(bandsTable)
       .select(col("band").as("i_band"), col("band_key"),
         col("text_md5").as("i_md5"), col("rep"))
-    val probeHits = bands.select(col("doc_id"), col("text_md5"), col("band_key"))
+    val probeHits = batch.bands.select(col("doc_id"), col("text_md5"), col("band_key"))
       .join(idx, "band_key")
       .filter(col("i_band") =!= -1 || col("i_md5") === col("text_md5"))
       .select(col("doc_id"), col("rep"))
@@ -168,11 +155,9 @@ object TextDedupState {
     val newOldEdges = probeHits.select(col("doc_id").as("a"), col("rep").as("b"))
     val oldReps = probeHits.select(col("rep").as("rep_nid"), col("rep")).distinct()
     val comp = graft.ops.Components.connectedComponents(
-      starEdges.unionByName(batchPairs(bands)).unionByName(newOldEdges))
-    val ids = newDocs.select(col("doc_id").cast("long").as("doc_id"))
-      .withColumn("nid", col("doc_id"))
-    val (labels, merges) = graft.ops.StickyLabels.resolve(comp, oldReps, ids, "doc_id")
-    (labels, merges, bands)
+      batch.starEdges.unionByName(batchPairs(batch.bands)).unionByName(newOldEdges))
+    graft.ops.StickyLabels.resolve(comp, oldReps,
+      batch.ids.withColumn("nid", col("doc_id")), "doc_id")
   }
 
   /** Fold a processed batch into the state so the NEXT batch sees it:
@@ -180,25 +165,13 @@ object TextDedupState {
     * is NOT already indexed (presence = exact text_md5 match through
     * the md5-band bucket join — covers LSH-ineligible docs too, and
     * the corpus side stays shuffle-free), labeled with the batch's
-    * FINAL reps; plus the labels (skippable via `writeLabels` for
-    * callers with their own idempotent label sink). Single-writer per
-    * corpus, enforced by ops.StateLease. */
-  def appendTextDedupState(newDocs: DataFrame, newLabels: DataFrame,
-                           bandsTable: String, dir: String, buckets: Int,
-                           writeLabels: Boolean = true): Unit =
-    appendTextDedupStateFromBands(prepareBatch(newDocs)._2, newLabels,
-      bandsTable, dir, buckets, writeLabels)
-
-  /** [[appendTextDedupState]] over band rows already prepared by
-    * [[incrementalTextDedupPrepared]] — one hashing pass per batch. */
-  def appendTextDedupStateFromBands(bands: DataFrame, newLabels: DataFrame,
-                                    bandsTable: String, dir: String, buckets: Int,
-                                    writeLabels: Boolean = true): Unit = {
-    val lease = graft.ops.StateLease.acquire(dir)
-    try {
-      graft.ops.StateLease.checkFenced(lease)
-      val spark = bands.sparkSession
-      val idxMd5 = spark.table(bandsTable).filter(col("band") === -1)
+    * FINAL reps. The presence check makes a replayed fold a no-op.
+    * Single-writer per corpus, enforced by ops.StateLease. */
+  def appendTextDedupState(batch: PreparedDocs, newLabels: DataFrame,
+                           bandsTable: String, dir: String, buckets: Int): Unit =
+    graft.ops.StateLease.writeBandIndex(bandsTable, dir, buckets, rebuild = false) {
+      val bands = batch.bands
+      val idxMd5 = bands.sparkSession.table(bandsTable).filter(col("band") === -1)
         .select(col("band_key"), col("text_md5").as("old_md5"))
       val fresh = bands.filter(col("band") === -1)
         .join(idxMd5, Seq("band_key"), "left")
@@ -209,13 +182,5 @@ object TextDedupState {
       bands.join(fresh, "doc_id")
         .join(newLabels.select(col("doc_id").cast("long").as("doc_id"), col("rep")), "doc_id")
         .select(col("band"), col("band_key"), col("text_md5"), col("rep"))
-        .write.mode("append").format("parquet")
-        .bucketBy(buckets, "band_key").sortBy("band_key")
-        .option("path", s"$dir/bands").saveAsTable(bandsTable)
-      if (writeLabels) newLabels.write.mode("append").parquet(s"$dir/labels")
-      // post-write fence check (see StateLease scaladoc): fail loudly if
-      // the lease was stale-stolen while this append ran
-      graft.ops.StateLease.checkFenced(lease)
-    } finally graft.ops.StateLease.release(lease)
-  }
+    }
 }

@@ -142,22 +142,13 @@ class SemDedupStateSpec extends AnyFunSuite {
     // two micro-batches via the file source + AvailableNow restarts
     // (the TextDedupStateSpec pattern): batch 2 near-dups a batch-1
     // vector, visible only through the state fold
-    val in = s"$base/in"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-    def feed(rows: Seq[(Long, Array[Float])], tag: String): Unit = {
-      val tmp = s"$base/feed_$tag"
-      df(rows).coalesce(1).write.parquet(tmp)
-      new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet"))
-        .foreach(f => java.nio.file.Files.copy(f.toPath,
-          java.nio.file.Paths.get(in, s"${tag}_${f.getName}")))
-    }
     val schema = df(Seq((0L, vec(0, 0)))).schema
-    def runOnce(): Unit = {
-      val q = graft.streaming.StreamOps.incrementalSemDedupStream(
+    val fx = new StreamFixture(base, (in, ckpt) =>
+      graft.streaming.StreamOps.incrementalSemDedupStream(
         spark.readStream.schema(schema).parquet(in), dir, 0.95,
-        s"$base/labels", s"$base/merges", s"$base/ckpt")
-      q.awaitTermination()
-    }
+        s"$base/labels", s"$base/merges", ckpt))
+    def feed(rows: Seq[(Long, Array[Float])], tag: String): Unit = fx.feed(df(rows), tag)
+    def runOnce(): Unit = fx.runOnce()
     feed(Seq((500L, vec(70, 1)), (501L, vec(90, 0))), "b1"); runOnce()
     feed(Seq((600L, vec(90, 2))), "b2"); runOnce() // near batch-1's 501, not in A
     val out = spark.read.parquet(s"$base/labels")

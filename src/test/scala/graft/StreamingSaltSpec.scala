@@ -14,6 +14,16 @@ class StreamingSaltSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
+  private val sessionSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType)))
+
+  /** (user_id, epoch ms) events as a `sessionSchema` frame. */
+  private def sessionEvents(rows: Seq[(Long, Long)]): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    rows.toDF("user_id", "ms").select(col("user_id"), expr("timestamp_millis(ms)").as("ts"))
+  }
+
   test("streaming windowed tile counts match the batch rollup") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
@@ -109,25 +119,18 @@ class StreamingSaltSpec extends AnyFunSuite {
       o.copy(image_id = o.image_id + tag, bytes = Media.reencodePng(img), fmt = "png")
     }
     val base = java.nio.file.Files.createTempDirectory("incdedupstream").toString
-    val in = s"$base/in"; new java.io.File(in).mkdirs()
     val tbl = "stream_dedup_bands"
     // initial state from the first 30 originals
     Media.writeImageDedupState(
       spark.createDataset(originals.take(30)).toDF(), s"$base/state", tbl, buckets = 4)
-    def feed(rows: Seq[graft.tables.ImageRow], tag: String): Unit = {
-      val tmp = s"$base/stage_$tag"
-      spark.createDataset(rows).toDF().coalesce(1).write.parquet(tmp)
-      new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet"))
-        .foreach(f => java.nio.file.Files.copy(f.toPath,
-          java.nio.file.Paths.get(in, s"${tag}_${f.getName}")))
-    }
     val schema = spark.createDataset(originals.take(1)).toDF().schema
-    def runOnce(): Unit = {
-      val q = StreamOps.incrementalDedupStream(
+    val fx = new StreamFixture(base, (in, ckpt) =>
+      StreamOps.incrementalDedupStream(
         spark.readStream.schema(schema).parquet(in), tbl, s"$base/state", 4,
-        s"$base/labels", s"$base/merges", s"$base/ckpt")
-      q.awaitTermination()
-    }
+        s"$base/labels", s"$base/merges", ckpt))
+    def feed(rows: Seq[graft.tables.ImageRow], tag: String): Unit =
+      fx.feed(spark.createDataset(rows).toDF(), tag)
+    def runOnce(): Unit = fx.runOnce()
     // batch 1: fresh originals 30-39 + a dup of a STATE image
     feed(originals.slice(30, 40) :+ re(7, "_s"), "b1"); runOnce()
     // batch 2: originals 40-49 + a dup of a BATCH-1-only image
@@ -161,28 +164,18 @@ class StreamingSaltSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.core.RenderParams
     val base = java.nio.file.Files.createTempDirectory("inctiles").toString
-    val in = s"$base/in"; val snap = s"$base/snap"
-    val tilesDir = s"$base/tiles"; val ckpt = s"$base/ckpt"
-    new java.io.File(in).mkdirs()
+    val snap = s"$base/snap"; val tilesDir = s"$base/tiles"
     val all = graft.tables.ImageTable.generateGeo(spark, 3000).toDF()
       .select(col("cell"), col("meta"))
-    def feed(batch: org.apache.spark.sql.DataFrame, tag: String): Unit = {
-      val tmp = s"$base/stage_$tag"
-      batch.coalesce(1).write.parquet(tmp)
-      new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet"))
-        .foreach(f => java.nio.file.Files.copy(f.toPath,
-          java.nio.file.Paths.get(in, s"${tag}_${f.getName}")))
-    }
     // z6 is step-sampled (step > 1): maintained by the wholesale
     // low-zoom cadence, here every 2nd batch so the final batch refreshes
     val zooms = Seq(6, 14, 15) // z15 exercises brush spill rings
     val p = RenderParams()
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(all.schema).parquet(in)
-      val q = StreamOps.incrementalTiles(stream, snap, tilesDir, ckpt, zooms, 48, p,
-        lowZoomEvery = 2)
-      q.awaitTermination()
-    }
+    val fx = new StreamFixture(base, (in, ckpt) =>
+      StreamOps.incrementalTiles(spark.readStream.schema(all.schema).parquet(in),
+        snap, tilesDir, ckpt, zooms, 48, p, lowZoomEvery = 2))
+    def feed(batch: org.apache.spark.sql.DataFrame, tag: String): Unit = fx.feed(batch, tag)
+    def runOnce(): Unit = fx.runOnce()
     feed(all.filter(pmod(col("cell"), lit(2)) === 0), "b1"); runOnce()
     feed(all.filter(pmod(col("cell"), lit(2)) === 1), "b2"); runOnce()
 
@@ -258,29 +251,17 @@ class StreamingSaltSpec extends AnyFunSuite {
     import spark.implicits._
     val now = 1700000000000L
     val base = java.nio.file.Files.createTempDirectory("sess").toString
-    val in = s"$base/in"; new java.io.File(in).mkdirs()
-    val ckpt = s"$base/ckpt"
-    def feed(rows: Seq[(Long, Long)], tag: String): Unit = {
-      val df = rows.toDF("user_id", "ms")
-        .select(col("user_id"), expr("timestamp_millis(ms)").as("ts"))
-      val tmp = s"$base/stage_$tag"
-      df.coalesce(1).write.parquet(tmp)
-      new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet"))
-        .foreach(f => java.nio.file.Files.copy(f.toPath,
-          java.nio.file.Paths.get(in, s"${tag}_${f.getName}")))
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType)))
-    def runOnce(): Set[(Long, Long)] = {
-      val sessions = StreamOps.sessionize(spark,
-        spark.readStream.schema(schema).parquet(in), gapMs = 60000)
-      // parquet sink: the memory sink cannot recover from a checkpoint,
-      // and resuming across query restarts is what this test exercises
-      val q = sessions.writeStream.outputMode("append").format("parquet")
+    // parquet sink: the memory sink cannot recover from a checkpoint,
+    // and resuming across query restarts is what this test exercises
+    val fx = new StreamFixture(base, (in, ckpt) =>
+      StreamOps.sessionize(spark, spark.readStream.schema(sessionSchema).parquet(in),
+        gapMs = 60000)
+        .writeStream.outputMode("append").format("parquet")
         .option("path", s"$base/out").option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
+    def feed(rows: Seq[(Long, Long)], tag: String): Unit = fx.feed(sessionEvents(rows), tag)
+    def runOnce(): Set[(Long, Long)] = {
+      fx.runOnce()
       spark.read.parquet(s"$base/out")
         .select("userId", "nEvents").as[(Long, Long)].collect().toSet
     }
@@ -306,34 +287,23 @@ class StreamingSaltSpec extends AnyFunSuite {
     import spark.implicits._
     val now = 1700000000000L
     val base = java.nio.file.Files.createTempDirectory("sess_stray").toString
-    val in = s"$base/in"; new java.io.File(in).mkdirs()
-    val ckpt = s"$base/ckpt"
-    def feed(rows: Seq[(Long, Long)], tag: String): Unit = {
-      val df = rows.toDF("user_id", "ms")
-        .select(col("user_id"), expr("timestamp_millis(ms)").as("ts"))
-      val tmp = s"$base/stage_$tag"
-      df.coalesce(1).write.parquet(tmp)
-      new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet"))
-        .foreach(f => java.nio.file.Files.copy(f.toPath,
-          java.nio.file.Paths.get(in, s"${tag}_${f.getName}")))
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType)))
-    def runOnce(): Set[(Long, Long, Long, Long)] = {
-      // generous lateness bound so the hours-old stray is NOT dropped
-      // by the watermark — the stray-vs-rewind logic must handle it
-      val sessions = StreamOps.sessionize(spark,
-        spark.readStream.schema(schema).parquet(in), gapMs = 60000,
-        watermark = "8 hours")
-      val q = sessions.writeStream.outputMode("append").format("parquet")
-        .option("path", s"$base/out").option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.read.parquet(s"$base/out")
+    // generous lateness bound so the hours-old stray is NOT dropped
+    // by the watermark — the stray-vs-rewind logic must handle it
+    def lateSessions(dir: String): StreamFixture = new StreamFixture(dir, (in, ckpt) =>
+      StreamOps.sessionize(spark, spark.readStream.schema(sessionSchema).parquet(in),
+        gapMs = 60000, watermark = "8 hours")
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", s"$dir/out").option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
+    def drain(fx: StreamFixture): Set[(Long, Long, Long, Long)] = {
+      fx.runOnce()
+      spark.read.parquet(s"${fx.base}/out")
         .select("userId", "nEvents", "startTs", "endTs")
         .as[(Long, Long, Long, Long)].collect().toSet
     }
+    val fx = lateSessions(base)
+    def feed(rows: Seq[(Long, Long)], tag: String): Unit = fx.feed(sessionEvents(rows), tag)
+    def runOnce(): Set[(Long, Long, Long, Long)] = drain(fx)
     val h = 3600 * 1000L
     // batch 1: live session at now+6h (two events)
     feed(Seq((1L, now + 6 * h), (1L, now + 6 * h + 1000)), "b1")
@@ -364,29 +334,9 @@ class StreamingSaltSpec extends AnyFunSuite {
     assert(!out3.exists(s => s._3 == now && s._2 == 1L),
       s"stray run split across micro-batches: $out3")
     // a stray run that reaches within gap of the live session BRIDGES in
-    val base2 = java.nio.file.Files.createTempDirectory("sess_bridge").toString
-    val in2 = s"$base2/in"; new java.io.File(in2).mkdirs()
-    def feed2(rows: Seq[(Long, Long)], tag: String): Unit = {
-      val df = rows.toDF("user_id", "ms")
-        .select(col("user_id"), expr("timestamp_millis(ms)").as("ts"))
-      val tmp = s"$base2/stage_$tag"
-      df.coalesce(1).write.parquet(tmp)
-      new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet"))
-        .foreach(f => java.nio.file.Files.copy(f.toPath,
-          java.nio.file.Paths.get(in2, s"${tag}_${f.getName}")))
-    }
-    def runOnce2(): Set[(Long, Long, Long, Long)] = {
-      val sessions = StreamOps.sessionize(spark,
-        spark.readStream.schema(schema).parquet(in2), gapMs = 60000,
-        watermark = "8 hours")
-      val q = sessions.writeStream.outputMode("append").format("parquet")
-        .option("path", s"$base2/out").option("checkpointLocation", s"$base2/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.read.parquet(s"$base2/out")
-        .select("userId", "nEvents", "startTs", "endTs")
-        .as[(Long, Long, Long, Long)].collect().toSet
-    }
+    val fx2 = lateSessions(java.nio.file.Files.createTempDirectory("sess_bridge").toString)
+    def feed2(rows: Seq[(Long, Long)], tag: String): Unit = fx2.feed(sessionEvents(rows), tag)
+    def runOnce2(): Set[(Long, Long, Long, Long)] = drain(fx2)
     feed2(Seq((9L, now + 6 * h)), "b1"); runOnce2()
     // strays at -90s and -45s: the -45s one is within gap of the live
     // start, so the whole stray run merges (batch semantics: one session)

@@ -10,39 +10,14 @@ import java.nio.charset.StandardCharsets.UTF_8
   * exact dedup, near-dup keep-one, packing) and the funnel counts must
   * tell the story. */
 class WebCurationSpec extends AnyFunSuite {
+  import WebCurationSpec._
+
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
-
-  private def gzMember(b: Array[Byte]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(bos)
-    gz.write(b); gz.close()
-    bos.toByteArray
-  }
-
-  private def response(url: String, date: String, html: String): Array[Byte] = {
-    val pay = (s"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + html).getBytes(UTF_8)
-    (s"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: $url\r\n" +
-      s"WARC-Date: $date\r\nContent-Length: ${pay.length}\r\n\r\n").getBytes(UTF_8) ++
-      pay ++ "\r\n\r\n".getBytes(UTF_8)
-  }
-
-  // corpus-vocabulary sentences (what the q63 fixture was trained on),
-  // with " the " / " and " so the language heuristic reads en. Each
-  // keeper gets a DISJOINT vocabulary slice — docs that merely share
-  // the training vocabulary would otherwise be genuine char-5-gram
-  // near-dups of each other and the LSH stage would (correctly)
-  // collapse the whole fixture into one cluster.
-  private val coreA = "the fast table scan and the hash join keep " +
-    "the scan join table hash fast scan join and the table hash end"
-  private val coreB = "the row value batch merge and the key part row " +
-    "value batch merge key part row value and the batch merge end"
-  private val coreC = "the query window column data and the group stream " +
-    "query window column data group stream query window and the end"
 
   test("WARC -> curated parquet: every stage acts; funnel counts are honest") {
     val d1 = "2024-04-01T00:00:00Z"
@@ -110,7 +85,6 @@ class WebCurationSpec extends AnyFunSuite {
   test("streaming curation: later batches dedup against everything ever curated") {
     import org.apache.spark.sql.functions.col
     val base = java.nio.file.Files.createTempDirectory("curstream").toString
-    val in = s"$base/in"; new java.io.File(in).mkdirs()
     val tbl = "cur_stream_bands"
     // bootstrap: empty state (the documented contract)
     val empty = spark.createDataFrame(
@@ -121,23 +95,22 @@ class WebCurationSpec extends AnyFunSuite {
     graft.text.TextDedupState.writeTextDedupState(empty, s"$base/state", tbl, buckets = 4)
 
     val d1 = "2024-04-01T00:00:00Z"
-    def feed(name: String, members: Seq[Array[Byte]]): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get(in, name),
-        members.flatMap(m => gzMember(m).toSeq).toArray)
-    def runOnce(): Unit =
+    val fx = new StreamFixture(base, (in, ckpt) =>
       graft.pipelines.WebCuration.runStream(spark, in, s"$base/out", tbl,
-        s"$base/state", buckets = 4, checkpointDir = s"$base/ckpt")
-        .awaitTermination()
+        s"$base/state", buckets = 4, checkpointDir = ckpt))
+    def feed(tag: String, members: Seq[Array[Byte]]): Unit =
+      fx.feed(tag)(warcFile(_, members))
+    def runOnce(): Unit = fx.runOnce()
 
     // batch 1: keeper A + a German page the funnel drops
-    feed("b1.warc.gz", Seq(
+    feed("b1", Seq(
       response("http://a.example.org/1", d1, s"<html><body>$coreA alpha</body></html>"),
       response("http://de.example.org/", d1,
         "<html><body>der schnelle tisch und die reihe der wert</body></html>")))
     runOnce()
     // batch 2: an exact COPY of A under a new url (md5 state match), a
     // near-dup of A (LSH state match), and a genuinely new keeper B
-    feed("b2.warc.gz", Seq(
+    feed("b2", Seq(
       response("http://mirror.example.org/copy", d1, s"<html><body>$coreA alpha</body></html>"),
       response("http://a.example.org/2", d1, s"<html><body>$coreA alpha v</body></html>"),
       response("http://b.example.org/", d1, s"<html><body>$coreB beta</body></html>")))
@@ -152,4 +125,41 @@ class WebCurationSpec extends AnyFunSuite {
     // cross-batch merges recorded none (no two OLD clusters bridged)
     assert(spark.read.parquet(s"$base/out/merges").count() == 0)
   }
+}
+
+/** WARC fixture builders, shared with the stream replay specs. */
+object WebCurationSpec {
+  /** Write `members` as one multi-member gzip WARC, `dir/crawl.warc.gz`. */
+  def warcFile(dir: String, members: Seq[Array[Byte]]): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "crawl.warc.gz"),
+      members.flatMap(m => gzMember(m).toSeq).toArray)
+  }
+
+  def gzMember(b: Array[Byte]): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val gz = new java.util.zip.GZIPOutputStream(bos)
+    gz.write(b); gz.close()
+    bos.toByteArray
+  }
+
+  def response(url: String, date: String, html: String): Array[Byte] = {
+    val pay = (s"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + html).getBytes(UTF_8)
+    (s"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: $url\r\n" +
+      s"WARC-Date: $date\r\nContent-Length: ${pay.length}\r\n\r\n").getBytes(UTF_8) ++
+      pay ++ "\r\n\r\n".getBytes(UTF_8)
+  }
+
+  // corpus-vocabulary sentences (what the q63 fixture was trained on),
+  // with " the " / " and " so the language heuristic reads en. Each
+  // keeper gets a DISJOINT vocabulary slice — docs that merely share
+  // the training vocabulary would otherwise be genuine char-5-gram
+  // near-dups of each other and the LSH stage would (correctly)
+  // collapse the whole fixture into one cluster.
+  val coreA = "the fast table scan and the hash join keep " +
+    "the scan join table hash fast scan join and the table hash end"
+  val coreB = "the row value batch merge and the key part row " +
+    "value batch merge key part row value and the batch merge end"
+  val coreC = "the query window column data and the group stream " +
+    "query window column data group stream query window and the end"
 }

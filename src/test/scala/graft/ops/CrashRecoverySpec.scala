@@ -9,15 +9,17 @@ import graft.text.TextDedupState
 
 /**
  * End-to-end crash recovery for the incremental dedup state, BOTH
- * modalities: a writer dies mid-append (band rows landed, labels did
- * not, its lease file left behind with a dead heartbeat), the retrying
- * driver's next attempt steals the stale lease after the timeout and
- * replays the WHOLE batch (incremental resolve + append). The
- * recovered state must equal a never-crashed run exactly: no duplicate
- * band rows (the md5/dhash presence check makes the replayed append a
- * no-op), identical labels, lease released. The lease-steal and
- * batch-replay idempotency are unit-tested separately (StateLease,
- * StreamOps); this spec exercises the full recovery path in one story.
+ * modalities: a writer dies right after its append (band rows landed,
+ * the batch's labels never reached the caller's sink, its lease file
+ * left behind with a dead heartbeat), the retrying driver's next
+ * attempt steals the stale lease after the timeout and replays the
+ * WHOLE batch (incremental resolve + append). The recovered state must
+ * equal a never-crashed run exactly: no duplicate band rows (the
+ * md5/dhash presence check makes the replayed append a no-op), the
+ * never-crashed run's labels, lease released. The lease-steal and
+ * stream-replay idempotency are tested separately (StateLeaseSpec,
+ * StreamReplaySpec); this spec exercises the full recovery path in one
+ * story — plus the crash-restore contract of the low-zoom tile swap.
  */
 class CrashRecoverySpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -60,25 +62,28 @@ class CrashRecoverySpec extends AnyFunSuite {
 
     // reference: the never-crashed run
     val refTbl = "crash_text_ref"
-    TextDedupState.writeTextDedupState(textDf(a), s"$base/ref", refTbl, buckets = 4)
-    val (refBl, _) = TextDedupState.incrementalTextDedup(textDf(b), refTbl)
-    TextDedupState.appendTextDedupState(textDf(b), refBl, refTbl, s"$base/ref", buckets = 4)
+    val refA = TextDedupState.writeTextDedupState(textDf(a), s"$base/ref", refTbl, buckets = 4)
+    val refB = TextDedupState.prepare(textDf(b))
+    val (refBl, _) = TextDedupState.incrementalTextDedup(refB, refTbl)
+    TextDedupState.appendTextDedupState(refB, refBl, refTbl, s"$base/ref", buckets = 4)
 
     // crashing run: same batches
     val tbl = "crash_text_crashed"
-    TextDedupState.writeTextDedupState(textDf(a), s"$base/st", tbl, buckets = 4)
-    val (bl, _) = TextDedupState.incrementalTextDedup(textDf(b), tbl)
-    // CRASH: bands appended, labels never written, stale lease left over
-    TextDedupState.appendTextDedupState(textDf(b), bl, tbl, s"$base/st", buckets = 4,
-      writeLabels = false)
+    val stA = TextDedupState.writeTextDedupState(textDf(a), s"$base/st", tbl, buckets = 4)
+    val pb = TextDedupState.prepare(textDf(b))
+    val (bl, _) = TextDedupState.incrementalTextDedup(pb, tbl)
+    // CRASH: bands appended, labels never landed, stale lease left over
+    TextDedupState.appendTextDedupState(pb, bl, tbl, s"$base/st", buckets = 4)
     val lease = plantStaleLease(s"$base/st")
 
     // RECOVERY: driver retries the whole batch; acquire() must steal
-    val (blR, _) = TextDedupState.incrementalTextDedup(textDf(b), tbl)
-    assert(blR.collect().map(r => (r.getLong(0), r.getLong(1))).toMap ==
-      bl.collect().map(r => (r.getLong(0), r.getLong(1))).toMap,
+    val pbR = TextDedupState.prepare(textDf(b))
+    val (blR, _) = TextDedupState.incrementalTextDedup(pbR, tbl)
+    def labels(d: DataFrame): Map[Long, Long] =
+      d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels(blR) == labels(bl),
       "replayed incremental resolve diverged from the pre-crash resolve")
-    TextDedupState.appendTextDedupState(textDf(b), blR, tbl, s"$base/st", buckets = 4)
+    TextDedupState.appendTextDedupState(pbR, blR, tbl, s"$base/st", buckets = 4)
     assert(!java.nio.file.Files.exists(lease), "recovery writer leaked its lease")
 
     // recovered state == never-crashed state (bands as a multiset, labels as a set)
@@ -87,15 +92,13 @@ class CrashRecoverySpec extends AnyFunSuite {
         .map(r => (r.getInt(0), r.getLong(1), r.getString(2), r.getLong(3))).toSeq.sorted
     assert(bandRows(tbl) == bandRows(refTbl),
       "recovered band index differs from the never-crashed run")
-    def labels(d: String): Map[Long, Long] =
-      spark.read.parquet(d).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels(s"$base/st/labels") == labels(s"$base/ref/labels"),
+    assert(labels(stA) ++ labels(blR) == labels(refA) ++ labels(refBl),
       "recovered labels differ from the never-crashed run")
 
     // and the NEXT batch behaves identically on both states
     val c = Seq((300L, textDoc(22, 1))) // near-dup of a batch-B doc
-    val (clRec, _) = TextDedupState.incrementalTextDedup(textDf(c), tbl)
-    val (clRef, _) = TextDedupState.incrementalTextDedup(textDf(c), refTbl)
+    val (clRec, _) = TextDedupState.incrementalTextDedup(TextDedupState.prepare(textDf(c)), tbl)
+    val (clRef, _) = TextDedupState.incrementalTextDedup(TextDedupState.prepare(textDf(c)), refTbl)
     assert(clRec.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       clRef.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
   }
@@ -115,23 +118,23 @@ class CrashRecoverySpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("crashimage").toString
 
     val refTbl = "crash_img_ref"
-    Media.writeImageDedupState(spark.createDataset(aRows).toDF(), s"$base/ref", refTbl, buckets = 4)
+    val refA = Media.writeImageDedupState(spark.createDataset(aRows).toDF(), s"$base/ref", refTbl, buckets = 4)
     val (refBl, _) = Media.incrementalImageDedup(Media.dedupIds(spark.createDataset(bRows).toDF()), refTbl)
     Media.appendImageDedupState(Media.dedupIds(spark.createDataset(bRows).toDF()), refBl, refTbl, s"$base/ref", buckets = 4)
 
     val tbl = "crash_img_crashed"
-    Media.writeImageDedupState(spark.createDataset(aRows).toDF(), s"$base/st", tbl, buckets = 4)
+    val stA = Media.writeImageDedupState(spark.createDataset(aRows).toDF(), s"$base/st", tbl, buckets = 4)
     val (bl, _) = Media.incrementalImageDedup(Media.dedupIds(spark.createDataset(bRows).toDF()), tbl)
-    // CRASH: bands appended, labels never written, stale lease left over
+    // CRASH: bands appended, labels never landed, stale lease left over
     Media.appendImageDedupState(
-      Media.dedupIds(spark.createDataset(bRows).toDF()), bl, tbl, s"$base/st", buckets = 4,
-      writeLabels = false)
+      Media.dedupIds(spark.createDataset(bRows).toDF()), bl, tbl, s"$base/st", buckets = 4)
     val lease = plantStaleLease(s"$base/st")
 
     // RECOVERY: replay the whole batch
     val (blR, _) = Media.incrementalImageDedup(Media.dedupIds(spark.createDataset(bRows).toDF()), tbl)
-    assert(blR.collect().map(r => (r.getString(0), r.getString(1))).toMap ==
-      bl.collect().map(r => (r.getString(0), r.getString(1))).toMap,
+    def labels(d: DataFrame): Map[String, String] =
+      d.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(labels(blR) == labels(bl),
       "replayed incremental resolve diverged from the pre-crash resolve")
     Media.appendImageDedupState(Media.dedupIds(spark.createDataset(bRows).toDF()), blR, tbl, s"$base/st", buckets = 4)
     assert(!java.nio.file.Files.exists(lease), "recovery writer leaked its lease")
@@ -141,9 +144,54 @@ class CrashRecoverySpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq.sorted
     assert(bandRows(tbl) == bandRows(refTbl),
       "recovered band index differs from the never-crashed run")
-    def labels(d: String): Map[String, String] =
-      spark.read.parquet(d).collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(labels(s"$base/st/labels") == labels(s"$base/ref/labels"),
+    assert(labels(stA) ++ labels(blR) == labels(refA) ++ labels(refBl),
       "recovered labels differ from the never-crashed run")
+  }
+
+  // -------- low-zoom tile swap (StreamOps.refreshLowZooms) --------
+
+  /** The tiles dir of a refresh that crashed: `.lowzoom.old/<z>/0/0.png`
+    * holding the bytes `old-<z>` for each of `oldZooms`, no live zoom
+    * dirs, plus the `.lowzoom.swapping` marker when the crash hit
+    * mid-swap. refreshLowZooms then runs against a MISSING snapshot
+    * dir, so its repair step runs and the render after it fails. */
+  private def crashedRefresh(oldZooms: Seq[Int], midSwap: Boolean,
+                             requested: Seq[Int]): java.nio.file.Path = {
+    import java.nio.file.Files
+    val tiles = Files.createTempDirectory("lowzoomcrash")
+    oldZooms.foreach { z =>
+      val t = tiles.resolve(s".lowzoom.old/$z/0/0.png")
+      Files.createDirectories(t.getParent)
+      Files.write(t, s"old-$z".getBytes("UTF-8"))
+    }
+    if (midSwap) Files.createFile(tiles.resolve(".lowzoom.swapping"))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      graft.streaming.StreamOps.refreshLowZooms(spark, tiles.resolve("no_snapshot").toString,
+        tiles.toString, requested, 48, graft.core.RenderParams())
+    }
+    assert(!Files.exists(tiles.resolve(".lowzoom.old")) &&
+      !Files.exists(tiles.resolve(".lowzoom.swapping")), "repair left the old tree behind")
+    tiles
+  }
+
+  private def tileText(tiles: java.nio.file.Path, z: Int): String =
+    new String(java.nio.file.Files.readAllBytes(tiles.resolve(s"$z/0/0.png")), "UTF-8")
+
+  test("low-zoom swap crashed mid-swap: a requested zoom comes back with its old bytes") {
+    val tiles = crashedRefresh(Seq(3), midSwap = true, requested = Seq(3))
+    assert(tileText(tiles, 3) == "old-3")
+  }
+
+  test("low-zoom swap crashed mid-swap: a zoom no longer requested is not resurrected") {
+    val tiles = crashedRefresh(Seq(2, 3), midSwap = true, requested = Seq(3))
+    assert(tileText(tiles, 3) == "old-3")
+    assert(!java.nio.file.Files.exists(tiles.resolve("2")),
+      "a zoom outside the requested set came back as an orphan tile dir")
+  }
+
+  test("low-zoom .old tree without the swap marker is litter: nothing is restored") {
+    val tiles = crashedRefresh(Seq(3), midSwap = false, requested = Seq(3))
+    assert(!java.nio.file.Files.exists(tiles.resolve("3")),
+      "a completed swap's replaced generation was resurrected")
   }
 }

@@ -49,7 +49,7 @@ class TextDedupStateSpec extends AnyFunSuite {
     // A-internal: exact + near dups of family 3 co-cluster
     assert(aLabels(100L) == aLabels(3L) && aLabels(101L) == aLabels(3L))
 
-    val (bl, merges) = TextDedupState.incrementalTextDedup(df(b), tbl)
+    val (bl, merges) = TextDedupState.incrementalTextDedup(TextDedupState.prepare(df(b)), tbl)
     val bLabels = labelsMap(bl)
     // sticky: the boundary near-dup and exact copy adopt A's labels
     assert(bLabels(200L) == aLabels(5L), s"boundary near-dup got ${bLabels(200L)}")
@@ -77,13 +77,14 @@ class TextDedupStateSpec extends AnyFunSuite {
     val a = Seq((0L, "X 9!"), (1L, doc(1, 0)))
     val aLabels = labelsMap(TextDedupState.writeTextDedupState(df(a), s"$base/state", tbl, buckets = 4))
     val (bl, _) = TextDedupState.incrementalTextDedup(
-      df(Seq((10L, "X 9!"), (11L, doc(9, 0)))), tbl)
+      TextDedupState.prepare(df(Seq((10L, "X 9!"), (11L, doc(9, 0))))), tbl)
     val bLabels = labelsMap(bl)
     assert(bLabels(10L) == aLabels(0L),
       s"ineligible exact copy got ${bLabels(10L)}, expected ${aLabels(0L)}")
     assert(bLabels(11L) == 11L, "unrelated doc must stay a singleton")
     // and an ineligible NON-copy never false-matches through the md5 band
-    val (cl, _) = TextDedupState.incrementalTextDedup(df(Seq((20L, "Y 7?"))), tbl)
+    val (cl, _) = TextDedupState.incrementalTextDedup(
+      TextDedupState.prepare(df(Seq((20L, "Y 7?")))), tbl)
     assert(labelsMap(cl)(20L) == 20L)
   }
 
@@ -94,10 +95,11 @@ class TextDedupStateSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("textdedupchain").toString
     val tbl = "text_dedup_bands_chain"
     TextDedupState.writeTextDedupState(df(a), s"$base/state", tbl, buckets = 4)
-    val (bl, _) = TextDedupState.incrementalTextDedup(df(b), tbl)
+    val pb = TextDedupState.prepare(df(b))
+    val (bl, _) = TextDedupState.incrementalTextDedup(pb, tbl)
     val blM = labelsMap(bl)
-    TextDedupState.appendTextDedupState(df(b), bl, tbl, s"$base/state", buckets = 4)
-    val (cl, _) = TextDedupState.incrementalTextDedup(df(c), tbl)
+    TextDedupState.appendTextDedupState(pb, bl, tbl, s"$base/state", buckets = 4)
+    val (cl, _) = TextDedupState.incrementalTextDedup(TextDedupState.prepare(df(c)), tbl)
     assert(labelsMap(cl)(400L) == blM(21L),
       "C's near-dup of a B doc did not resolve through B's folded state")
     // no-bloat: doc 2's text was indexed by A; B's exact copy (id 300)
@@ -115,24 +117,16 @@ class TextDedupStateSpec extends AnyFunSuite {
   test("streaming wrapper: micro-batches resolve against folded state, idempotent sinks") {
     import graft.streaming.StreamOps
     val base = java.nio.file.Files.createTempDirectory("textdedupstream").toString
-    val in = s"$base/in"; new java.io.File(in).mkdirs()
     val tbl = "text_dedup_bands_stream"
     val a = (0 until 6).map(i => (i.toLong, doc(i, 0)))
     TextDedupState.writeTextDedupState(df(a), s"$base/state", tbl, buckets = 4)
-    def feed(rows: Seq[(Long, String)], tag: String): Unit = {
-      val tmp = s"$base/stage_$tag"
-      df(rows).coalesce(1).write.parquet(tmp)
-      new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet"))
-        .foreach(f => java.nio.file.Files.copy(f.toPath,
-          java.nio.file.Paths.get(in, s"${tag}_${f.getName}")))
-    }
     val schema = df(Seq((0L, "x"))).schema
-    def runOnce(): Unit = {
-      val q = StreamOps.incrementalTextDedupStream(
+    val fx = new graft.StreamFixture(base, (in, ckpt) =>
+      StreamOps.incrementalTextDedupStream(
         spark.readStream.schema(schema).parquet(in), tbl, s"$base/state", 4,
-        s"$base/labels", s"$base/merges", s"$base/ckpt")
-      q.awaitTermination()
-    }
+        s"$base/labels", s"$base/merges", ckpt))
+    def feed(rows: Seq[(Long, String)], tag: String): Unit = fx.feed(df(rows), tag)
+    def runOnce(): Unit = fx.runOnce()
     feed(Seq((50L, doc(50, 0)), (51L, doc(2, 1))), "b1"); runOnce() // near-dup of state doc 2
     feed(Seq((60L, doc(50, 1))), "b2"); runOnce() // near-dup of a BATCH-1 doc
     val labels = spark.read.parquet(s"$base/labels")
