@@ -217,7 +217,7 @@ object Ann {
     // sides and the final cell re-attach (multi-consumer invariant)
     val asg = ivfAssign(vecs, cids, cvecs)
       .select(col("vec_id"), col("cell")).localCheckpoint(true)
-    cellPairBudgetCheck(asg, maxCandPairs, "semDedup")
+    cellPairBudgetCheck(asg, maxCandPairs)
     val pairs = withinCellPairs(asg, vecs, minCos)
     val labels = graft.ops.Components.labelAll(
       vecs.select(col("vec_id")),
@@ -231,25 +231,22 @@ object Ann {
     * within-cell candidate pair count must stay under `maxCandPairs` —
     * a too-coarse quantizer fails with sizing guidance instead of
     * launching an accidental near-all-pairs job. */
-  private[graft] def cellPairBudgetCheck(asg: DataFrame, maxCandPairs: Long,
-                                         who: String): Unit = {
+  private def cellPairBudgetCheck(asg: DataFrame, maxCandPairs: Long): Unit = {
     val hist = asg.groupBy("cell").agg(count(lit(1)).as("n"))
       .agg(sum(expr("n * (n - 1) DIV 2")).as("pairs")).head()
     val cand0 = if (hist.isNullAt(0)) 0L else hist.getLong(0)
     require(cand0 <= maxCandPairs,
-      s"$who: ~$cand0 within-cell candidate pairs exceed the $maxCandPairs budget — " +
+      s"semDedup: ~$cand0 within-cell candidate pairs exceed the $maxCandPairs budget — " +
         "the quantizer is far too coarse for this corpus; raise k (cells should hold " +
         "roughly sqrt-of-corpus vectors) or raise maxCandPairs explicitly")
   }
 
-  /** THE within-cell cos-threshold pair graph (single source — the
-    * batch operator, the incremental state's in-batch edges, and the
-    * profiler all use this exact shape): (cell, vec_id)-only self-join,
+  /** The within-cell cos-threshold pair graph: (cell, vec_id)-only self-join,
     * embeddings re-joined by id for the exact cosine — no array column
     * ever rides the cell shuffle. `asg` must be checkpointed by the
     * caller (it feeds BOTH self-join sides). */
-  private[graft] def withinCellPairs(asg: DataFrame, vecs: DataFrame,
-                                     minCos: Double): DataFrame = {
+  private def withinCellPairs(asg: DataFrame, vecs: DataFrame,
+                              minCos: Double): DataFrame = {
     val a = asg.select(col("cell"), col("vec_id").as("vec_a"))
     val b = asg.select(col("cell"), col("vec_id").as("vec_b"))
     val ea = vecs.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))

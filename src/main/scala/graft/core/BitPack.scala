@@ -120,23 +120,6 @@ object BitPack {
     (xs, ys, meta)
   }
 
-  /** Start/end key buffers for tile (z,x,y) over `bytes`-wide records
-    * (util.c:88-102): start = tile prefix + zeros, end = prefix + ones
-    * (ones continue through the meta bits). */
-  def tileRangeBufs(z: Int, tx: Int, ty: Int, bytes: Int): (Array[Byte], Array[Byte]) = {
-    val start = new Array[Byte](bytes)
-    val x = tx << (32 - z)
-    val y = ty << (32 - z)
-    val off = putBits2(start, 0, x, y, 2 * z, 0)
-    val end = java.util.Arrays.copyOf(start, bytes)
-    var i = off
-    while (i < bytes * 8) {
-      end(i >> 3) = (end(i >> 3) | (1 << (7 - (i & 7)))).toByte
-      i += 1
-    }
-    (start, end)
-  }
-
   /** Unsigned lexicographic comparison over whole records (util.c:6-9). */
   def compare(a: Array[Byte], b: Array[Byte]): Int = {
     val n = math.min(a.length, b.length)

@@ -31,15 +31,6 @@ final class Canvas(val width: Int, val height: Int) extends Serializable {
   }
   def hasHue: Boolean = cxArr != null
 
-  var clipx: Int = 0
-  var clipy: Int = 0
-  var clipw: Int = Int.MaxValue
-  var cliph: Int = Int.MaxValue
-
-  def setClip(x: Int, y: Int, w: Int, h: Int): Unit = {
-    clipx = x; clipy = y; clipw = w; cliph = h
-  }
-
   /** Zero the dirty region (buffer reuse across tiles). */
   def reset(): Unit = {
     if (maxY >= minY) {
@@ -52,15 +43,13 @@ final class Canvas(val width: Int, val height: Int) extends Serializable {
       }
     }
     minY = height; maxY = -1
-    clipx = 0; clipy = 0; clipw = Int.MaxValue; cliph = Int.MaxValue
   }
 
   /** graphics.c:221-235 */
   def putPixel(x: Double, y: Double, bright: Double, hue: Double): Unit = {
     val x0 = math.floor(x).toInt
     val y0 = math.floor(y).toInt
-    if (x0 >= 0 && y0 >= 0 && x0 <= width - 1 && y0 <= height - 1 &&
-        x0 >= clipx && x0 < clipx + clipw && y0 >= clipy && y0 < clipy + cliph) {
+    if (x0 >= 0 && y0 >= 0 && x0 <= width - 1 && y0 <= height - 1) {
       val i = y0 * width + x0
       image(i) += bright
       if (y0 < minY) minY = y0
@@ -107,8 +96,6 @@ final class Canvas(val width: Int, val height: Int) extends Serializable {
     maxY = math.max(maxY, o.maxY)
     this
   }
-
-  def nonZeroPixels: Int = image.count(_ != 0.0)
 
   /** Extract a sub-window as a fresh canvas (the leaflet-retina path
     * renders the parent tile at double size and crops each quadrant). */

@@ -1,48 +1,8 @@
 package graft.encode
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.functions._
-
 /** A spatial feature: a polyline of cell-id vertices (n=1 = point) plus
   * an unsigned metadata value — the engine's fundamental abstraction
   * (reference data model: encode.c:31-185). `cell` duplicates
   * vertices(0) as a top-level column so sorting/pruning sees a plain
   * Long. */
 case class Feature(cell: Long, vertices: Array[Long], meta: Long)
-
-/**
- * Index build (the reference's `encode` job, encode.c:236-408
- * re-expressed Spark-first): project -> cell-encode -> range partition
- * by cell -> sort within partitions -> sorted parquet.
- *
- * The shuffle introduced by repartitionByRange is the analog of the
- * reference's external sort (50 MB runs + k-way merge, encode.c:334-403);
- * Spark's sort-shuffle spills the same way. The sorted parquet gives
- * Parquet row-group min/max pruning on `cell`, which is the analog of
- * the reference's binary search over the sorted mmap (util.c:12-31).
- */
-object Encode {
-  /** mapbits truncation: keep 2*(zoom+8) bits like the reference
-    * (encode.c:13). Operates directly on comparable cell ids. */
-  def truncateCell(c: org.apache.spark.sql.Column, encodeZoom: Int): org.apache.spark.sql.Column = {
-    val mapbits = 2 * (encodeZoom + 8)
-    if (mapbits >= 64) c
-    else c.bitwiseAND(lit(-1L << (64 - mapbits)))
-  }
-
-  /** Write a cell-sorted snapshot of a feature table. Partitioning:
-    * range on cell => every zoom-z tile is contained in O(1) partitions
-    * and Parquet min/max prunes files + row groups for tile range scans.
-    * `numPartitions` scales with data size (at 100 TB: thousands). */
-  def writeSorted(df: DataFrame, path: String, numPartitions: Int): Unit = {
-    df.repartitionByRange(numPartitions, col("cell"))
-      .sortWithinPartitions(col("cell"), col("meta"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(path)
-  }
-
-  /** Sorted feature table reader. */
-  def readSorted(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-}

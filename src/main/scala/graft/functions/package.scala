@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, shiftrightunsigned}
 
 /** Column-level API for the engine's spatial functions. */
 package object functions {
@@ -21,13 +20,6 @@ package object functions {
   def geotag_lat(p: Column): Column = column(GeotagLatExpr(expression(p)))
   def geotag_lon(p: Column): Column = column(GeotagLonExpr(expression(p)))
   def geotag_cell(p: Column): Column = column(GeotagCellExpr(expression(p)))
-
-  /** tile x at zoom z containing the cell. */
-  def tile_x(c: Column, z: Int): Column =
-    if (z == 0) lit(0L) else shiftrightunsigned(cell_x(c), 32 - z)
-
-  def tile_y(c: Column, z: Int): Column =
-    if (z == 0) lit(0L) else shiftrightunsigned(cell_y(c), 32 - z)
 
   /** Single source for SQL-name registration, shared by [[registerAll]]
     * (temp functions) and [[graft.GraftExtensions]] (injectFunction) —

@@ -19,35 +19,28 @@ case class ImageFeatures(image_id: String, w: Int, h: Int,
  * can read are STUBBED with deterministic fakes (clearly marked).
  */
 object Media {
-  /** Decode one payload. Real decoders: "raw" (interleaved RGB), "png"
-    * (the engine's own codec), and EVERY other format via JDK ImageIO
-    * service discovery (in-memory cache only — the thread-local-reuse
-    * PNG hot path stays on our own codec; ImageIO is fine on this
-    * colder batch-decode path). The JDK ships jpeg/gif/bmp/wbmp
-    * readers, and any codec jar dropped on the classpath (e.g. a webp
-    * ImageIO plugin) registers through the same SPI — so new formats
-    * start decoding with NO code change here; the format string is
-    * never consulted, the reader sniffs the bytes. STUB: payloads no
-    * registered reader accepts fall back to a deterministic fake
-    * raster from the byte hash so the pipeline shape stays testable
-    * (no webp codec ships in this container). */
+  /** Decode one payload. Real decoders: "raw" (interleaved RGB) and
+    * EVERY other format via JDK ImageIO service discovery (in-memory
+    * cache only), behind one header-checked read ([[imageioRead]]).
+    * The JDK ships png/jpeg/gif/bmp/wbmp readers, and any codec jar
+    * dropped on the classpath (e.g. a webp ImageIO plugin) registers
+    * through the same SPI — so new formats start decoding with NO code
+    * change here; the reader sniffs the bytes. A payload labelled
+    * "png" that does not decode throws (the curation decode gate drops
+    * it). STUB: other payloads no registered reader accepts fall back
+    * to a deterministic fake raster from the byte hash so the pipeline
+    * shape stays testable (no webp codec ships in this container). */
   def decode(id: String, bytes: Array[Byte], w: Int, h: Int, fmt: String): DecodedImage = fmt match {
     case "raw" =>
       require(bytes.length == w * h * 3, s"raw payload size mismatch for $id")
       DecodedImage(id, w, h, bytes)
     case "png" =>
-      val (rgba, dw, dh) = Png.decode(bytes)
-      val rgb = new Array[Byte](dw * dh * 3)
-      var i = 0; var p = 0
-      while (i < dw * dh) {
-        rgb(3 * i) = rgba(p); rgb(3 * i + 1) = rgba(p + 1); rgb(3 * i + 2) = rgba(p + 2)
-        i += 1; p += 4
-      }
-      DecodedImage(id, dw, dh, rgb)
+      imageioRead(bytes).fold(
+        why => throw new IllegalArgumentException(s"png payload $id: $why"),
+        bufferedToDecoded(id, _))
     case _ =>
-      val bi = imageioRead(bytes)
-      if (bi == null) stubDecode(id, bytes, w, h) // no reader / corrupt / bomb payload
-      else bufferedToDecoded(id, bi)
+      // no reader / corrupt / bomb payload -> stub
+      imageioRead(bytes).fold(_ => stubDecode(id, bytes, w, h), bufferedToDecoded(id, _))
   }
 
   /** Decoded-pixel ceiling for untrusted payloads: a decompression bomb
@@ -61,42 +54,56 @@ object Media {
     * allocation (reader.getWidth/Height parse only the header). Catches
     * NonFatal only: an OutOfMemoryError or other VM error must
     * propagate and fail the task rather than be swallowed into a stub
-    * decode on a wounded executor. Returns null for unreadable,
-    * truncated, or over-cap payloads (callers stub). */
-  private def imageioRead(bytes: Array[Byte]): java.awt.image.BufferedImage =
+    * decode on a wounded executor. Unreadable, truncated or over-cap
+    * payloads return Left(reason). */
+  private def imageioRead(bytes: Array[Byte]): Either[String, java.awt.image.BufferedImage] =
     try {
       javax.imageio.ImageIO.setUseCache(false) // never touch disk
       val iis = javax.imageio.ImageIO.createImageInputStream(
         new java.io.ByteArrayInputStream(bytes))
       try {
         val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) null
+        if (!readers.hasNext) Left(s"no image reader accepts these ${bytes.length} bytes")
         else {
           val reader = readers.next()
           try {
             reader.setInput(iis)
             val dw = reader.getWidth(0).toLong
             val dh = reader.getHeight(0).toLong
-            if (dw <= 0 || dh <= 0 || dw * dh > MaxDecodePixels) null
-            else reader.read(0)
+            if (dw <= 0 || dh <= 0 || dw * dh > MaxDecodePixels)
+              Left(s"header claims ${dw}x$dh pixels, outside the MaxDecodePixels cap ($MaxDecodePixels)")
+            else Right(reader.read(0))
           } finally reader.dispose()
         }
       } finally iis.close() // dispose() never closes the reader's input
-    } catch { case scala.util.control.NonFatal(_) => null }
+    } catch { case scala.util.control.NonFatal(e) => Left(s"unreadable image: $e") }
 
+  /** BufferedImage -> interleaved RGB. ImageIO reads 8-bit gray (and
+    * gray+alpha) into a LINEAR gray colour space, where getRGB would
+    * brighten every sample (64 -> 137); those images copy raster band
+    * 0 into r = g = b instead, so a gray payload decodes to the same
+    * pixels as its raw form. */
   private def bufferedToDecoded(id: String, bi: java.awt.image.BufferedImage): DecodedImage = {
     val dw = bi.getWidth; val dh = bi.getHeight
+    val cm = bi.getColorModel
+    val gray = cm.getColorSpace.getType == java.awt.color.ColorSpace.TYPE_GRAY &&
+      cm.getComponentSize(0) == 8
     val rgb = new Array[Byte](dw * dh * 3)
     val row = new Array[Int](dw)
     var y = 0
     while (y < dh) {
-      bi.getRGB(0, y, dw, 1, row, 0, dw)
+      if (gray) bi.getRaster.getSamples(0, y, dw, 1, 0, row)
+      else bi.getRGB(0, y, dw, 1, row, 0, dw)
       var x = 0
       while (x < dw) {
         val px = row(x); val o = (y * dw + x) * 3
-        rgb(o) = ((px >> 16) & 0xFF).toByte
-        rgb(o + 1) = ((px >> 8) & 0xFF).toByte
-        rgb(o + 2) = (px & 0xFF).toByte
+        if (gray) {
+          rgb(o) = px.toByte; rgb(o + 1) = px.toByte; rgb(o + 2) = px.toByte
+        } else {
+          rgb(o) = ((px >> 16) & 0xFF).toByte
+          rgb(o + 1) = ((px >> 8) & 0xFF).toByte
+          rgb(o + 2) = (px & 0xFF).toByte
+        }
         x += 1
       }
       y += 1
@@ -276,7 +283,8 @@ object Media {
     * replaces the earlier star-pairs-to-bucket-min escape, whose
     * unverifiable star edges had to be Hamming-filtered away, silently
     * losing connectivity through any >cap band bucket. */
-  private def bandPairs(members: DataFrame, bits: Int, cap: Int): DataFrame = {
+  private def bandPairs(members: DataFrame, bits: Int, cap: Int,
+                        hold: DataFrame => DataFrame): DataFrame = {
     val banded = subBands(members, bits)
     // per-bucket stats via hash agg (map-side combine); singleton
     // buckets — the vast majority — never rejoin (AQE broadcasts the
@@ -291,7 +299,7 @@ object Media {
     // re-derive its ancestors' (profiled: the level-1 pass alone ran
     // ~4x per action, >half the dedup band phase, to produce pairs
     // from a few thousand collided rows)
-    val collided = banded.join(stats, Seq("key")).localCheckpoint(true)
+    val collided = hold(banded.join(stats, Seq("key")).localCheckpoint(true))
     val terminal = bits <= 16
     val allowAll = if (terminal) collided else collided.filter(col("bcnt") <= cap)
     // each side carries its member's ORIGINAL 64-bit hash (it rode the
@@ -307,7 +315,7 @@ object Media {
     else {
       val hot = collided.filter(col("bcnt") > cap)
         .select(col("doc_id"), col("dhash"), col("key"), col("resid"))
-      allPairs.unionByName(bandPairs(hot, bits / 2, cap))
+      allPairs.unionByName(bandPairs(hot, bits / 2, cap, hold))
     }
   }
 
@@ -339,7 +347,7 @@ object Media {
       .join(distinctH.select(col("dhash"), col("image_id").as("rep_id")), "dhash")
       .filter(col("image_id") =!= col("rep_id"))
       .select(col("rep_id").as("img_a"), col("image_id").as("img_b"))
-    verifiedPairs(distinctH.select(col("image_id").as("doc_id"), col("dhash")), maxHamming)
+    verifiedPairs(distinctH.select(col("image_id").as("doc_id"), col("dhash")), maxHamming, identity)
       .unionByName(exactStars)
   }
 
@@ -348,10 +356,11 @@ object Media {
     * then the exact Hamming check as a map-side filter. The distinct
     * runs over (ids, hashes), but dh_a/dh_b are functions of the ids,
     * so it dedupes (img_a, img_b). */
-  private def verifiedPairs(reps: DataFrame, maxHamming: Int): DataFrame = {
+  private def verifiedPairs(reps: DataFrame, maxHamming: Int,
+                            hold: DataFrame => DataFrame): DataFrame = {
     require(maxHamming <= 2, "chunk-pair banding only guarantees recall for Hamming <= 2")
     val members = reps.select(col("doc_id"), col("dhash"), lit(0L).as("key"), col("dhash").as("resid"))
-    bandPairs(members, 64, cap = 64).distinct()
+    bandPairs(members, 64, cap = 64, hold).distinct()
       .filter(graft.text.TextOps.hamming64(col("dh_a"), col("dh_b")) <= maxHamming)
       .select(col("img_a"), col("img_b"))
   }
@@ -391,15 +400,19 @@ object Media {
     *
     * Then the rep table bands directly (it is one row per distinct hash
     * BY CONSTRUCTION, so [[imageNearDupPairs]]' re-distinct and
-    * exact-star passes are skipped). */
-  private[graft] def dupEdges(ids: DataFrame, maxHamming: Int): (DataFrame, DataFrame) = {
+    * exact-star passes are skipped). `hold` registers every checkpoint
+    * made here, for a caller that frees them once the edges are
+    * materialized ([[graft.ops.Checkpoint.holding]]). */
+  private[graft] def dupEdges(ids: DataFrame, maxHamming: Int,
+                              hold: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
     val slim = ids.select(col("nid"), col("dhash"))
     val groups = slim.groupBy(col("dhash")).agg(min(col("nid")).as("grep"))
-    val withRep = slim.join(groups, "dhash").localCheckpoint(true)
+    val withRep = hold(slim.join(groups, "dhash").localCheckpoint(true))
     val exactEdges = withRep.filter(col("nid") =!= col("grep"))
       .select(col("nid").as("a"), col("grep").as("b"))
     val repIds = withRep.filter(col("nid") === col("grep")).drop("grep")
-    val nearEdges = verifiedPairs(repIds.select(col("nid").as("doc_id"), col("dhash")), maxHamming)
+    val nearEdges = verifiedPairs(repIds.select(col("nid").as("doc_id"), col("dhash")),
+      maxHamming, hold)
       .select(col("img_a").as("a"), col("img_b").as("b"))
     (exactEdges.unionByName(nearEdges), repIds)
   }
@@ -437,7 +450,11 @@ object Media {
     * aggregations move 8-byte keys only; attach names at the end by
     * joining back on nid. */
   def imageDupLabelsNid(ids: DataFrame, maxHamming: Int = 2): DataFrame = {
-    val labels = componentLabels(dupEdges(ids, maxHamming)._1)
+    // components checkpoint (or collect) the edges first, so the
+    // edge build's own checkpoints are dead once the labels exist
+    val labels = graft.ops.Checkpoint.holding { hold =>
+      componentLabels(dupEdges(ids, maxHamming, hold)._1)
+    }
     ids.select(col("nid")).join(labels, Seq("nid"), "left")
       .select(col("nid"), coalesce(col("rep"), col("nid")).as("rep"))
   }
@@ -454,7 +471,9 @@ object Media {
     val ids = dedupIds(images)
     val tDecode = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
-    val edges = dupEdges(ids, maxHamming)._1.localCheckpoint(true)
+    val edges = graft.ops.Checkpoint.holding { hold =>
+      dupEdges(ids, maxHamming, hold)._1.localCheckpoint(true)
+    }
     val tBand = (System.nanoTime() - t1) / 1e9
     (resolveNames(ids, edges).drop("nid"), tDecode, tBand)
   }

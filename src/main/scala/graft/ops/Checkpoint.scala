@@ -16,4 +16,12 @@ object Checkpoint {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false)
     case _ => df.unpersist()
   }
+
+  /** Run `body` with a `hold` that registers each checkpoint the body
+    * makes (and returns it); every held frame is released when `body`
+    * ends, normally or not. `body`'s result must not read a held frame. */
+  def holding[T](body: (DataFrame => DataFrame) => T): T = {
+    val held = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    try body { df => held += df; df } finally held.foreach(release)
+  }
 }

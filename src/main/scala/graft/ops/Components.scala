@@ -170,6 +170,7 @@ object Components {
           val (ra, rb) = (find(a), find(b))
           if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
+      Checkpoint.release(cur)
       val out = parent.keysIterator.map(v => (v, find(v))).toSeq ++
         parent.values.map(r => { val rr = find(r); (rr, rr) }).toSeq.distinct
       return (out.distinct.toDF("node", "rep")
@@ -186,6 +187,7 @@ object Components {
       val nfp = fingerprint(next)
       converged = nfp == fp
       fp = nfp
+      Checkpoint.release(cur) // next is materialized: the old round is dead
       cur = next
       it += 1
       // negative hubNodes = hub set exceeded the broadcast cap and the

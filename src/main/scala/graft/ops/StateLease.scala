@@ -4,9 +4,9 @@ import org.apache.spark.sql.DataFrame
 
 /**
  * Single-writer lease for persisted incremental state: the image and
- * text band indexes, the semantic-dedup vector index, Snapshots commits
- * and CheckpointedTiles resumes. A concurrent append would interleave
- * files under the same bucket spec (or the same snapshot / bucket dir)
+ * text band indexes, Snapshots commits and CheckpointedTiles resumes.
+ * A concurrent append would interleave files under the same bucket
+ * spec (or the same snapshot / bucket dir)
  * and corrupt the state silently, so writes must be serialized per
  * state root and this lease ENFORCES it. Writers go through
  * [[withLease]]; the bucketed band indexes through [[writeBandIndex]].

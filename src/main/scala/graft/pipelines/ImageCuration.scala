@@ -93,8 +93,8 @@ object ImageCuration {
 
           val out = spark.read.parquet(outDir)
           (out, ImageCurationCounts(nImages, nDecoded, nSized, nInformative, out.count()))
-        } finally scored.unpersist()
-      } finally informative.unpersist()
-    } finally feats.unpersist()
+        } finally graft.ops.Checkpoint.release(scored)
+      } finally graft.ops.Checkpoint.release(informative)
+    } finally graft.ops.Checkpoint.release(feats)
   }
 }

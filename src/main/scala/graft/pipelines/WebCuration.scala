@@ -37,8 +37,8 @@ case class CurationCounts(pages: Long, extracted: Long, langKept: Long,
  * text-carrying checkpoints (extract, redact) exist because each feeds
  * several downstream consumers and holds the output of an expensive
  * regex/decode pass (the multi-consumer invariant); both are
- * unpersisted before returning — the returned frame reads the written
- * parquet, pinning nothing.
+ * released (ops.Checkpoint.release) before returning — the returned
+ * frame reads the written parquet, pinning nothing.
  */
 object WebCuration {
   /** @param maxAvgLmCost CCNet-style perplexity ceiling: drop documents
@@ -133,8 +133,8 @@ object WebCuration {
           coalesce(max(col("last_seq")) + 1, lit(0L))).head()
         (out, CurationCounts(nPages, nExtracted, nLang, nQuality, nFluent,
           nExact, agg.getLong(0), agg.getLong(1), agg.getLong(2)))
-      } finally red.unpersist()
-    } finally extracted.unpersist()
+      } finally graft.ops.Checkpoint.release(red)
+    } finally graft.ops.Checkpoint.release(extracted)
   }
 
   /** Continuous crawl ingestion: the [[run]] funnel per micro-batch,

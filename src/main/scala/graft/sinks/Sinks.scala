@@ -21,16 +21,6 @@ object Sinks {
     features.map(dumpTextLine(_, metabits))
   }
 
-  /** S7: GeoJSON dump (`render -D`, dump.c:21-68). Delegates to the
-    * reference-exact [[dumpGeoJsonLine]] — the previous parallel
-    * implementation nested LineString coordinates one level too deep
-    * (invalid GeoJSON). */
-  def geoJsonDump(features: Dataset[Feature], metabits: Int): Dataset[String] = {
-    val spark = features.sparkSession
-    import spark.implicits._
-    features.map(dumpGeoJsonLine(_, metabits))
-  }
-
   /** One dump_out text row (dump.c:70-90): "lat,lon ... [bits:meta ]// hex "
     * — each field is space-TERMINATED like the reference's printf. */
   def dumpTextLine(f: Feature, metabits: Int): String = {

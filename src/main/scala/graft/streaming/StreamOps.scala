@@ -2,14 +2,14 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
  * Structured Streaming operators. The reference engine is batch-only —
  * incrementality is encode-new + merge (README.md:97-107) and is covered
  * by Snapshots.append — but a Spark-native engine also serves the
  * streaming shape of the same aggregations: windowed tile stats over an
- * event stream, and stateful sessionization.
+ * event stream, watermark-bounded dedup and persisted-state dedup.
  */
 object StreamOps {
   /** Windowed per-tile counts over a streaming point source with event
@@ -22,96 +22,6 @@ object StreamOps {
       .withColumn("ty", expr(s"y32 >> ${32 - z}"))
       .groupBy(org.apache.spark.sql.functions.window(col("ts"), window), col("tx"), col("ty"))
       .agg(count(lit(1)).as("cnt"))
-
-  case class Session(userId: Long, nEvents: Long, startTs: Long, endTs: Long)
-
-  /** Stateful sessionization with a gap timeout (flatMapGroupsWithState
-    * + EventTimeTimeout), with Spark's own session-window append-mode
-    * semantics: state holds EVERY open session of the user (sorted,
-    * pairwise gap-separated), events merge into the session whose
-    * [startTs - gap, endTs + gap] window contains them (coalescing the
-    * neighbor a merge bridges), and a session is emitted ONLY once the
-    * event-time watermark passes its endTs + gapMs — the point after
-    * which no admissible event can still extend it. That makes the
-    * result batch-equivalent REGARDLESS of how events split across
-    * micro-batches: a late stray run, arriving hours before the live
-    * session and spread over several batches, still emits as ONE
-    * session (an emit-on-supersede formulation split it — one session
-    * per batch — and could never retract in append mode). The cost is
-    * the standard watermark tradeoff: emission latency equals the
-    * lateness bound. State stays bounded by the watermark horizon, not
-    * by user count; an idle user's last session flushes via the
-    * event-time timeout. `watermark` is the lateness bound.
-    *
-    * State-schema note: the per-user state is `Seq[Session]` (it was a
-    * single `Session` before stray-event splitting landed) — a
-    * checkpoint written by the old shape fails Spark's state-schema
-    * compatibility check on restart, BY DESIGN loudly rather than
-    * silently misreading rows. Spark has no state-store writer to
-    * migrate `flatMapGroupsWithState` state in place; the operational
-    * path is to drain the old query (stop the source, let the
-    * watermark advance past every open session so state empties), then
-    * restart on a fresh checkpointLocation with this version. */
-  def sessionize(spark: SparkSession, events: DataFrame, gapMs: Long,
-                 watermark: String = "0 seconds"): DataFrame = {
-    import spark.implicits._
-    // the watermark rides as attribute METADATA on the ts column: it
-    // must survive into the typed Dataset (projecting ts away through
-    // unix_millis strips it and the event-time timeout is rejected)
-    val typed = events
-      .select(col("user_id").cast("long").as("user_id"),
-        col("ts").cast("timestamp").as("ts"))
-      .withWatermark("ts", watermark)
-      .as[(Long, java.sql.Timestamp)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[Seq[Session], Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[(Long, java.sql.Timestamp)], state: GroupState[Seq[Session]]) =>
-          val wm = state.getCurrentWatermarkMs
-          // emit what the watermark has finalized, keep the rest, arm
-          // the timeout for the earliest still-open close point (must
-          // register beyond the current watermark or Spark rejects it)
-          def flush(ss: Seq[Session]): Iterator[Session] = {
-            val (emit, keep) = ss.partition(_.endTs + gapMs <= wm)
-            if (keep.isEmpty) { if (state.exists) state.remove() }
-            else {
-              state.update(keep)
-              state.setTimeoutTimestamp(
-                math.max(keep.map(_.endTs + gapMs).min, wm + 1))
-            }
-            emit.sortBy(_.startTs).iterator
-          }
-          if (state.hasTimedOut) flush(state.getOption.getOrElse(Nil))
-          else {
-            var ss: List[Session] = state.getOption.getOrElse(Nil).toList
-            it.map(_._2.getTime).toSeq.sorted.foreach { t =>
-              // sessions are sorted by startTs and > gap apart; find the
-              // first whose window t falls at-or-before
-              val (before, after) = ss.span(s => s.endTs + gapMs < t)
-              after match {
-                case s :: rest if t >= s.startTs - gapMs =>
-                  // extend without rewinding semantics: start=min, end=max
-                  val ext = s.copy(nEvents = s.nEvents + 1,
-                    startTs = math.min(s.startTs, t), endTs = math.max(s.endTs, t))
-                  // a forward extension may bridge the next session; the
-                  // sorted invariant means at most ONE merge per event (a
-                  // backward extension can't reach `before`: its sessions
-                  // all have endTs + gap < t = the new startTs)
-                  val merged = rest match {
-                    case n :: tail if n.startTs - ext.endTs <= gapMs =>
-                      ext.copy(nEvents = ext.nEvents + n.nEvents,
-                        endTs = math.max(ext.endTs, n.endTs)) :: tail
-                    case _ => ext :: rest
-                  }
-                  ss = before ++ merged
-                case _ =>
-                  ss = before ++ (Session(uid, 1, t, t) :: after)
-              }
-            }
-            flush(ss)
-          }
-      }.toDF()
-  }
 
   /** Streaming exact dedup: first occurrence of each content digest
     * passes, duplicates within the watermark horizon drop. State is one
@@ -191,7 +101,7 @@ object StreamOps {
   }
 
   /** The replay-safe micro-batch driver behind every persisted-state
-    * dedup stream (image, text, semantic, pipelines.WebCuration). A
+    * dedup stream (image, text, pipelines.WebCuration). A
     * modality supplies three steps:
     *  - `prepare(batch, hold)` -> (prepared batch, rows): `hold`
     *    registers each per-batch checkpoint the step makes (and returns
@@ -221,11 +131,9 @@ object StreamOps {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         (extraSinks.map(_._1) ++ Seq(labelsOut, mergesOut))
           .foreach(migrateFlatSink(batch.sparkSession, _))
-        val held = scala.collection.mutable.ListBuffer.empty[DataFrame]
-        def hold(df: DataFrame): DataFrame = { held += df; df }
         def land(root: String, df: DataFrame): Unit =
           df.write.mode("overwrite").parquet(s"$root/batch=$batchId")
-        try {
+        graft.ops.Checkpoint.holding { hold =>
           val (p, rows) = prepare(batch, hold)
           if (rows.count() > 0) {
             val (labels, merges) = resolve(p)
@@ -235,8 +143,7 @@ object StreamOps {
             land(mergesOut, merges)
             fold(p, l)
           }
-        } finally held.foreach(graft.ops.Checkpoint.release)
-        ()
+        }
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -284,24 +191,6 @@ object StreamOps {
       fold = (p, labels) =>
         TextDedupState.appendTextDedupState(p, labels, bandsTable, stateDir, buckets))
   }
-
-  /** Continuous SEMANTIC dedup with persisted state — the embedding
-    * modality's analog of [[incrementalDedupStream]] (image) and
-    * [[incrementalTextDedupStream]], same driver and idempotency
-    * contract. Each micro-batch assigns/probes ONLY its own vectors
-    * against the batch's cells' partitions; the corpus never
-    * re-shuffles. The assignment runs once in the dedup and once in the
-    * fold — a map-side kernel over a batch-sized input. */
-  def incrementalSemDedupStream(vecs: DataFrame, stateDir: String, minCos: Double,
-                                labelsOut: String, mergesOut: String,
-                                checkpointDir: String): StreamingQuery =
-    replaySafeStream[DataFrame](vecs, checkpointDir, labelsOut, mergesOut)(
-      prepare = (batch, hold) => {
-        val b = hold(batch.localCheckpoint(true))
-        (b, b)
-      },
-      resolve = b => graft.ann.SemDedupState.incrementalSemDedup(b, stateDir, minCos),
-      fold = (b, labels) => graft.ann.SemDedupState.appendSemDedupState(b, labels, stateDir))
 
   /** Incremental tileset maintenance — the reference's "encode new
     * files, merge, re-render" loop (README.md:97-107) as ONE streaming
@@ -539,19 +428,5 @@ object StreamOps {
       graft.sinks.Sinks.mergeTilesetMetadata(tilesDir, snapshotDir, rendered.min, rendered.max)
     // old generation deleted LAST; temp now holds only metadata litter
     deleteRecursive(old); deleteRecursive(tmp)
-  }
-
-  /** Run a streaming query over a bounded source synchronously into a
-    * memory sink named `name` (read it with `spark.table(name)`);
-    * returns the already-drained StreamingQuery. */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode = OutputMode.Append): StreamingQuery = {
-    val q = df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q
   }
 }

@@ -88,11 +88,11 @@ object TextDedupState {
         .select(col("doc_id").as("a"), col("grep").as("b"))
         .localCheckpoint(true)
       val reps = withRep.filter(col("doc_id") === col("grep"))
-      val lshBands = reps.select(col("doc_id"), col("text_md5"),
+      val keyBands = reps.select(col("doc_id"), col("text_md5"),
         posexplode(col("bks")).as(Seq("band", "band_key")))
       val md5Bands = reps.select(col("doc_id"), col("text_md5"),
         lit(-1).as("band"), md5Key(col("text_md5")).as("band_key"))
-      val bands = lshBands.unionByName(md5Bands).localCheckpoint(true)
+      val bands = keyBands.unionByName(md5Bands).localCheckpoint(true)
       PreparedDocs(docs.select(col("doc_id").cast("long").as("doc_id")), starEdges, bands)
     } finally graft.ops.Checkpoint.release(keyed)
   }

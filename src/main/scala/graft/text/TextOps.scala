@@ -40,17 +40,6 @@ object TextOps {
   def ngramHashSet(c: Column, n: Int): Column =
     array_distinct(charNgramHashes(c, n))
 
-  /** n-gram Jaccard similarity between two text columns over the
-    * one-pass hash sets (exact up to ~2^-62 collisions; the former
-    * string-set form paid the [[ngrams]] quadratic seek per doc). */
-  def jaccard(a: Column, b: Column, n: Int): Column = {
-    val ga = ngramHashSet(a, n)
-    val gb = ngramHashSet(b, n)
-    val inter = size(array_intersect(ga, gb))
-    val uni = size(ga) + size(gb) - inter
-    when(uni === 0, lit(1.0)).otherwise(inter.cast("double") / uni.cast("double"))
-  }
-
   /** Whitespace tokens: nonempty chunks between single spaces — THE
     * token definition, shared by counts, shingles and the SQL oracles
     * (list_filter(string_split(...))); one source or parity breaks. */
@@ -629,26 +618,6 @@ object TextOps {
     * shingle (the SQL oracle filters identically). */
   def lshEligible(text: Column): Column =
     length(regexp_replace(text, "[^a-z ]", "")) >= LshShingle
-
-  /** MinHash signature over character `shingle`-grams of the sanitized
-    * ([a-z ]-only) text: array of `perms` affine-permuted minima.
-    * Callers must exclude texts with < `shingle` clean chars (the SQL
-    * oracle filters them the same way). */
-  def minhashSignature(c: Column, shingle: Int, perms: Int): Column =
-    column(graft.functions.MinhashSigExpr(expression(c), shingle, perms))
-
-  /** LSH band keys from a minhash signature: a seeded polynomial fold
-    * of each band's slice (seed = band+1, so keys never collide across
-    * bands and the flat key is joinable directly). Static expansion —
-    * no interpreted lambda. */
-  def lshBands(sig: Column, bands: Int, rows: Int): Column =
-    array((0 until bands).map { b =>
-      var acc: Column = lit((b + 1).toLong)
-      (0 until rows).foreach { j =>
-        acc = (acc * 1000003L + element_at(sig, b * rows + j + 1)) % PortableHash.P
-      }
-      acc
-    }: _*)
 
   /** Fused minhash + band keys in one kernel call per row (the shape
     * to explode for the LSH self-join). */

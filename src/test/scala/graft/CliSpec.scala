@@ -154,8 +154,8 @@ class CliSpec extends AnyFunSuite {
 
   test("Cli render -A -d / -A -D bbox dumps (reference segfaults here)") {
     // The reference CRASHES on -A + dump: render.c:866-880 leaves gc NULL
-    // when dump != 0 but still calls setClip(gc, ...) per tile, and
-    // setClip (graphics.c:519-524) dereferences gc unconditionally. So
+    // when dump != 0 but still sets the clip rectangle on gc per tile,
+    // and that setter (graphics.c:519-524) dereferences gc unconditionally. So
     // there is no reference output to golden against; instead we check
     // our -A dump equals the concatenation of our own single-tile dumps
     // (each byte-exact vs the reference, see the test above) in the

@@ -84,15 +84,17 @@ class HilbertLshSpec extends AnyFunSuite {
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(truth.nonEmpty)
 
-    // LSH candidates: 16 permutations, 4 bands x 4 rows
-    val sig = docs.select(col("doc_id"), TextOps.minhashSignature(col("text"), 5, 16).as("sig"))
-    val bands = sig.select(col("doc_id"), explode(TextOps.lshBands(col("sig"), 4, 4)).as("bk"))
+    // LSH candidates from the production kernel: 4 bands x 4 rows
+    // over a 16-permutation signature
+    val bands = docs.select(col("doc_id"),
+      explode(TextOps.minhashBandKeys(col("text"), 5, 4, 4)).as("bk"))
     val cands = bands.as("x").join(bands.as("y"),
       col("x.bk") === col("y.bk") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct().as[(Long, Long)].collect().toSet
 
     val recall = truth.intersect(cands).size.toDouble / truth.size
+    info(s"recall=$recall truth=${truth.size} cands=${cands.size}")
     assert(recall >= 0.9, s"recall=$recall truth=${truth.size} cands=${cands.size}")
     // candidates should not explode (precision sanity: < 5% of all pairs)
     val allPairs = 160L * 159 / 2

@@ -74,4 +74,20 @@ class ImageCurationSpec extends AnyFunSuite {
     // untouched corpus images are singletons
     assert(rows.filter(_._1.startsWith("img")).forall(_._2._2 == 1L))
   }
+
+  test("run releases every checkpoint it makes") {
+    import spark.implicits._
+    val images = ((0 until 24).map { i =>
+      val r = graft.tables.ImageTable.row(43L, i.toLong)
+      (r.image_id, r.bytes, r.w, r.h, r.fmt)
+    } ++ Seq(gradient("grad_b_32", 32, 32), gradient("grad_b_24", 24, 24)))
+      .toDF("image_id", "bytes", "w", "h", "fmt")
+    val out = java.nio.file.Files.createTempDirectory("imgcur_rel").toString + "/curated"
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (_, c) = graft.pipelines.ImageCuration.run(spark, images, out, minPixels = 60L)
+    assert(c.kept > 0)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"checkpoint RDDs still persisted after run: $left")
+  }
 }

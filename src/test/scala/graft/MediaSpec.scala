@@ -141,6 +141,53 @@ class MediaSpec extends AnyFunSuite {
     val f = Media.decode("sbomb", sbomb, 4, 4, "gif")
     assert(f.w == 2 && f.h == 2, s"logical-screen GIF decoded to ${f.w}x${f.h}")
     assert((f.rgb(0) & 0xFF) == 0x11 && (f.rgb(1) & 0xFF) == 0x22 && (f.rgb(2) & 0xFF) == 0x33)
+    // IHDR bomb: a 1x1 RGBA PNG whose header is patched (CRC fixed) to
+    // claim 12000x12000 — a few dozen bytes that ImageIO.read would
+    // expand into ~550 MB before failing. Labelled png, it must fail
+    // at the header check, before any pixel allocation.
+    val pbos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(new java.awt.image.BufferedImage(1, 1,
+      java.awt.image.BufferedImage.TYPE_INT_ARGB), "png", pbos)
+    val pbomb = pbos.toByteArray
+    val ihdr = java.nio.ByteBuffer.wrap(pbomb)
+    assert(new String(pbomb, 12, 4, "US-ASCII") == "IHDR")
+    ihdr.putInt(16, 12000).putInt(20, 12000)
+    val crc = new java.util.zip.CRC32()
+    crc.update(pbomb, 12, 17)
+    ihdr.putInt(29, crc.getValue.toInt)
+    val e = intercept[IllegalArgumentException](Media.decode("pbomb", pbomb, 4, 4, "png"))
+    assert(e.getMessage.contains("12000x12000") && e.getMessage.contains("MaxDecodePixels"),
+      e.getMessage)
+  }
+
+  test("gray and gray+alpha PNGs decode to their raw samples, not linear-gray brightened") {
+    import java.awt.image.{BufferedImage, ComponentColorModel, DataBuffer}
+    val (w, h) = (24, 16)
+    // a gradient holding 64 (which getRGB's linear-gray path reads as 137)
+    def sample(x: Int, y: Int): Int = if (x == 0 && y == 0) 64 else (x * 9 + y * 5) & 0xFF
+    def png(bi: BufferedImage): Array[Byte] = {
+      for (y <- 0 until h; x <- 0 until w) {
+        bi.getRaster.setSample(x, y, 0, sample(x, y))
+        if (bi.getRaster.getNumBands == 2) bi.getRaster.setSample(x, y, 1, 200)
+      }
+      val bos = new java.io.ByteArrayOutputStream()
+      assert(javax.imageio.ImageIO.write(bi, "png", bos))
+      bos.toByteArray
+    }
+    val grayAlphaCm = new ComponentColorModel(
+      java.awt.color.ColorSpace.getInstance(java.awt.color.ColorSpace.CS_GRAY),
+      Array(8, 8), true, false, java.awt.Transparency.TRANSLUCENT, DataBuffer.TYPE_BYTE)
+    val grayPng = png(new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY))
+    val grayAlphaPng = png(new BufferedImage(grayAlphaCm,
+      grayAlphaCm.createCompatibleWritableRaster(w, h), false, null))
+    val raw = Array.tabulate(w * h * 3)(i => sample((i / 3) % w, (i / 3) / w).toByte)
+    val rawImg = Media.decode("g", raw, w, h, "raw")
+    Seq("gray" -> grayPng, "gray+alpha" -> grayAlphaPng).foreach { case (kind, bytes) =>
+      val img = Media.decode("g", bytes, w, h, "png")
+      assert((img.rgb(0) & 0xFF) == 64, s"$kind: first sample decoded to ${img.rgb(0) & 0xFF}")
+      assert(java.util.Arrays.equals(img.rgb, rawImg.rgb), s"$kind pixels differ from raw")
+      assert(Media.dhash64(img) == Media.dhash64(rawImg), s"$kind dhash differs from raw")
+    }
   }
 
   test("dhash64: format-invariant, perturbation-local, discriminative") {

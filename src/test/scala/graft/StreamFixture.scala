@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** A file-fed `AvailableNow` stream for specs: `feed` stages one
   * micro-batch's input files, `runOnce` restarts the query from its
@@ -50,5 +50,20 @@ final class StreamFixture(val base: String, start: (String, String) => Streaming
     Files.delete(commits.resolve(last.toString))
     Files.deleteIfExists(commits.resolve(s".$last.crc"))
     (last, runOnce())
+  }
+}
+
+object StreamFixture {
+  /** Run a streaming query over a bounded source synchronously into a
+    * memory sink named `name` (read it with `spark.table(name)`);
+    * returns the already-drained StreamingQuery. */
+  def runToMemory(df: DataFrame, name: String): StreamingQuery = {
+    val q = df.writeStream
+      .format("memory")
+      .queryName(name)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.processAllAvailable()
+    q
   }
 }

@@ -10,7 +10,7 @@ import graft.media.Media
 import graft.tables.ImageTable
 
 /** The replay-safe contract of every persisted-state dedup stream —
-  * image, text, semantic and WebCuration — as one table: a batch that
+  * image, text and WebCuration — as one table: a batch that
   * Spark replays under the same batchId (a crash between the sinks and
   * the commit) rewrites identical labels, merges and curated rows and
   * adds no index rows; flat-era sink files migrate to `batch=legacy`. */
@@ -111,39 +111,6 @@ class StreamReplaySpec extends AnyFunSuite {
     }
   }
 
-  // ---- semantic ----
-  private def vec(family: Long, variant: Int): Array[Float] = {
-    val r = new scala.util.Random(family * 97 + 13)
-    val b = Array.fill(16)((r.nextDouble() - 0.5).toFloat)
-    if (variant == 0) b else b.map(_ + variant * 1e-4f)
-  }
-  private def vecs(rs: Seq[(Long, Array[Float])]): DataFrame = {
-    import spark.implicits._
-    rs.toDF("vec_id", "embedding")
-  }
-
-  private val semantic = new Subject("semantic") {
-    def bootstrap(base: String, tbl: String): Unit =
-      graft.ann.SemDedupState.writeSemDedupState(
-        vecs((70L until 82L).map(i => (i, vec(i, 0)))), k = 3, iters = 2, minCos = 0.95,
-        s"$base/state")
-    def start(base: String, tbl: String, in: String, ckpt: String): StreamingQuery =
-      streaming.StreamOps.incrementalSemDedupStream(
-        spark.readStream.schema(vecs(Seq((0L, vec(0, 0)))).schema).parquet(in),
-        s"$base/state", 0.95, labelsOut(base), mergesOut(base), ckpt)
-    def feeds: Seq[StreamFixture => Unit] = Seq(
-      // a near-dup of a state vector + a fresh vector
-      _.feed(vecs(Seq((500L, vec(70, 1)), (501L, vec(90, 0)))), "b0"),
-      // a near-dup of the batch-0 vector + another state near-dup
-      _.feed(vecs(Seq((600L, vec(90, 2)), (601L, vec(71, 1)))), "b1"))
-    override def indexRows(base: String, tbl: String): Long =
-      spark.read.parquet(s"$base/state/vectors").count()
-    def legacyLabels: DataFrame = {
-      import spark.implicits._
-      Seq((9000L, 9000L)).toDF("vec_id", "rep")
-    }
-  }
-
   // ---- WebCuration ----
   private val web = new Subject("WebCuration") {
     import WebCurationSpec._
@@ -174,7 +141,7 @@ class StreamReplaySpec extends AnyFunSuite {
     }
   }
 
-  private val subjects = Seq(image, text, semantic, web)
+  private val subjects = Seq(image, text, web)
 
   /** Spark jobs launched by `f`, counted by a listener. */
   private def jobsOf[T](f: => T): (T, Int) = {

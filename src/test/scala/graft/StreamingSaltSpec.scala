@@ -14,16 +14,6 @@ class StreamingSaltSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  private val sessionSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType)))
-
-  /** (user_id, epoch ms) events as a `sessionSchema` frame. */
-  private def sessionEvents(rows: Seq[(Long, Long)]): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    rows.toDF("user_id", "ms").select(col("user_id"), expr("timestamp_millis(ms)").as("ts"))
-  }
-
   test("streaming windowed tile counts match the batch rollup") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
@@ -67,7 +57,7 @@ class StreamingSaltSpec extends AnyFunSuite {
     df.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(df.schema).parquet(dir)
     val deduped = StreamOps.streamingDedup(stream, watermark = "10 minutes")
-    val q = StreamOps.runToMemory(deduped, "dedup_out")
+    val q = StreamFixture.runToMemory(deduped, "dedup_out")
     q.stop()
     val out = spark.sql("SELECT text FROM dedup_out").as[String].collect()
     // 1 representative of the duplicate + 100 uniques
@@ -96,7 +86,7 @@ class StreamingSaltSpec extends AnyFunSuite {
     df.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(df.schema).parquet(dir)
     val deduped = StreamOps.streamingImageDedup(stream, watermark = "10 minutes")
-    val q = StreamOps.runToMemory(deduped, "imgdedup_out")
+    val q = StreamFixture.runToMemory(deduped, "imgdedup_out")
     q.stop()
     val out = spark.sql("SELECT image_id, bytes FROM imgdedup_out")
       .as[(String, Array[Byte])].collect()
@@ -153,7 +143,7 @@ class StreamingSaltSpec extends AnyFunSuite {
     val batch = graft.sources.TextSource.read(spark, dir, 16, 8).collect()
       .map(f => (f.cell, f.vertices.toSeq, f.meta)).toSet
     val stream = graft.sources.TextSource.readStream(spark, dir, 16, 8)
-    val q = StreamOps.runToMemory(stream.toDF(), "txt_out")
+    val q = StreamFixture.runToMemory(stream.toDF(), "txt_out")
     q.stop()
     val streamed = spark.sql("SELECT * FROM txt_out").as[graft.encode.Feature].collect()
       .map(f => (f.cell, f.vertices.toSeq, f.meta)).toSet
@@ -245,108 +235,6 @@ class StreamingSaltSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       StreamOps.incrementalTiles(stream, snap, tilesDir, ckpt, Seq(6), 48, p, lowZoomEvery = 0)
     }
-  }
-
-  test("stateful sessionization closes sessions on gaps AND flushes idle users via the watermark") {
-    import spark.implicits._
-    val now = 1700000000000L
-    val base = java.nio.file.Files.createTempDirectory("sess").toString
-    // parquet sink: the memory sink cannot recover from a checkpoint,
-    // and resuming across query restarts is what this test exercises
-    val fx = new StreamFixture(base, (in, ckpt) =>
-      StreamOps.sessionize(spark, spark.readStream.schema(sessionSchema).parquet(in),
-        gapMs = 60000)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$base/out").option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
-    def feed(rows: Seq[(Long, Long)], tag: String): Unit = fx.feed(sessionEvents(rows), tag)
-    def runOnce(): Set[(Long, Long)] = {
-      fx.runOnce()
-      spark.read.parquet(s"$base/out")
-        .select("userId", "nEvents").as[(Long, Long)].collect().toSet
-    }
-    feed(Seq((1L, now), (1L, now + 1000), (1L, now + 500000), // gap closes first session
-      (2L, now + 10)), "b1")
-    val closed1 = runOnce()
-    // user 1's first session closed by the in-stream gap
-    assert(closed1.contains((1L, 2L)), closed1.toString)
-    // a later batch advances the watermark past user 2's endTs + gap:
-    // the IDLE user's session must flush via the event-time timeout
-    // (the old NoTimeout formulation held it in state forever)
-    feed(Seq((3L, now + 700000)), "b2")
-    val closed2 = runOnce()
-    assert(closed2.contains((2L, 1L)),
-      s"idle user 2's session never flushed: $closed2")
-    // user 1's last session (endTs now+500000, timeout now+560000 <
-    // watermark now+700000) flushes too; user 3's stays open
-    assert(closed2.contains((1L, 1L)), closed2.toString)
-    assert(!closed2.contains((3L, 1L)), closed2.toString)
-  }
-
-  test("sessionize: a late event wholly BEFORE the live session emits separately, never rewinds it") {
-    import spark.implicits._
-    val now = 1700000000000L
-    val base = java.nio.file.Files.createTempDirectory("sess_stray").toString
-    // generous lateness bound so the hours-old stray is NOT dropped
-    // by the watermark — the stray-vs-rewind logic must handle it
-    def lateSessions(dir: String): StreamFixture = new StreamFixture(dir, (in, ckpt) =>
-      StreamOps.sessionize(spark, spark.readStream.schema(sessionSchema).parquet(in),
-        gapMs = 60000, watermark = "8 hours")
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$dir/out").option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start())
-    def drain(fx: StreamFixture): Set[(Long, Long, Long, Long)] = {
-      fx.runOnce()
-      spark.read.parquet(s"${fx.base}/out")
-        .select("userId", "nEvents", "startTs", "endTs")
-        .as[(Long, Long, Long, Long)].collect().toSet
-    }
-    val fx = lateSessions(base)
-    def feed(rows: Seq[(Long, Long)], tag: String): Unit = fx.feed(sessionEvents(rows), tag)
-    def runOnce(): Set[(Long, Long, Long, Long)] = drain(fx)
-    val h = 3600 * 1000L
-    // batch 1: live session at now+6h (two events)
-    feed(Seq((1L, now + 6 * h), (1L, now + 6 * h + 1000)), "b1")
-    runOnce()
-    // batch 2: strays hours BEFORE the session — one at now, one
-    // separated by > gap. batch 2b: a third stray IN-GAP of the first,
-    // arriving in a LATER micro-batch: it must merge into the same
-    // stray session (an emit-on-supersede formulation emitted the first
-    // stray at batch end and the run split into two 1-event sessions).
-    feed(Seq((1L, now), (1L, now + 200000)), "b2")
-    val out2 = runOnce()
-    // nothing is final yet — the watermark (maxTs - 8h) is hours before
-    // every open session; in particular the live session never rewound
-    assert(out2.isEmpty, s"emitted before the watermark finalized: $out2")
-    feed(Seq((1L, now + 30000)), "b2b")
-    runOnce()
-    // batch 3: an event far ahead pushes the watermark (15h - 8h = 7h)
-    // past every stray AND the live session — all flush, none merged
-    // across a > gap boundary, the live session un-rewound
-    feed(Seq((1L, now + 15 * h)), "b3")
-    val out3 = runOnce()
-    assert(out3.contains((1L, 2L, now, now + 30000)),
-      s"cross-batch stray run did not sessionize together: $out3")
-    assert(out3.contains((1L, 1L, now + 200000, now + 200000)),
-      s"separated stray not emitted alone: $out3")
-    assert(out3.contains((1L, 2L, now + 6 * h, now + 6 * h + 1000)),
-      s"live session rewound or absorbed strays: $out3")
-    assert(!out3.exists(s => s._3 == now && s._2 == 1L),
-      s"stray run split across micro-batches: $out3")
-    // a stray run that reaches within gap of the live session BRIDGES in
-    val fx2 = lateSessions(java.nio.file.Files.createTempDirectory("sess_bridge").toString)
-    def feed2(rows: Seq[(Long, Long)], tag: String): Unit = fx2.feed(sessionEvents(rows), tag)
-    def runOnce2(): Set[(Long, Long, Long, Long)] = drain(fx2)
-    feed2(Seq((9L, now + 6 * h)), "b1"); runOnce2()
-    // strays at -90s and -45s: the -45s one is within gap of the live
-    // start, so the whole stray run merges (batch semantics: one session)
-    feed2(Seq((9L, now + 6 * h - 90000), (9L, now + 6 * h - 45000)), "b2")
-    runOnce2()
-    // push the watermark (15h - 8h) past the merged session's close
-    feed2(Seq((9L, now + 15 * h)), "b3")
-    val out4 = runOnce2()
-    assert(out4.contains((9L, 3L, now + 6 * h - 90000, now + 6 * h)),
-      s"stray run within gap of live start did not bridge: $out4")
   }
 
   test("circle/cloud mode: scatter density is deterministic and conserves dot counts") {

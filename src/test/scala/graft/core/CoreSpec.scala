@@ -136,19 +136,6 @@ class CoreSpec extends AnyFunSuite {
     }
   }
 
-  test("tileRangeBufs matches Cell.tileRange on the cell prefix") {
-    forAllSamples { r =>
-      val z = 1 + r.nextInt(16)
-      val n = 1 << z
-      val tx = r.nextInt(n); val ty = r.nextInt(n)
-      val (start, end) = BitPack.tileRangeBufs(z, tx, ty, 8)
-      val sv = java.nio.ByteBuffer.wrap(start).getLong ^ Long.MinValue
-      val ev = java.nio.ByteBuffer.wrap(end).getLong ^ Long.MinValue
-      assert(sv == Cell.tileRangeLo(z, tx, ty))
-      assert(ev == Cell.tileRangeHi(z, tx, ty))
-    }
-  }
-
   test("Wu line conserves brightness for in-canvas lines") {
     val g = new Canvas(64, 64)
     Raster.wuLine(5.3, 7.2, 40.9, 30.1, g, 1.0, -1)
