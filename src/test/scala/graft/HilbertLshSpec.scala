@@ -188,21 +188,21 @@ class HilbertLshSpec extends AnyFunSuite {
       assert(RefBinaries.run("encode", Seq("-o", "/tmp/ops_ref.dm", "-z16", "-m8", "/tmp/ops_mixed.txt"))._1 == 0)
     }
     val (rc, out) = RefBinaries.run("enumerate", Seq("-z6", "-d", "/tmp/ops_ref.dm"))
-    if (rc == 0 && new String(out).nonEmpty) {
-      import spark.implicits._
-      val refRows = new String(out).linesIterator.filter(_.nonEmpty).map { l =>
-        val p = l.trim.split("\\s+") // fname z x y len
-        ((p(1).toInt, p(2).toInt, p(3).toInt), p(4).toDouble)
-      }.toSeq.groupBy(_._1).map { case (k, v) => (k, v.map(_._2).sum) }
-        .filter(_._1._1 == 6)
-      val feats = graft.sources.TextSource.read(spark, "/tmp/ops_mixed.txt", 16, 8)
-      val ours = graft.query.TileOps.enumerateRollupFeatures(feats, 6, 6)
-        .select("tx", "ty", "len").as[(Int, Int, Double)].collect()
-        .map { case (x, y, len) => ((6, x, y), len) }.toMap
-      assert(ours.keySet == refRows.keySet)
-      refRows.foreach { case (k, len) =>
-        assert(math.abs(ours(k) - len) < 1e-4 * math.max(1.0, len), s"tile $k: ref=$len ours=${ours(k)}")
-      }
-    } else cancel("reference corpus not present (run GoldenOpsSpec first)")
+    assert(rc == 0, s"reference enumerate -d exited $rc")
+    assert(new String(out).nonEmpty, "reference enumerate -d printed nothing")
+    import spark.implicits._
+    val refRows = new String(out).linesIterator.filter(_.nonEmpty).map { l =>
+      val p = l.trim.split("\\s+") // fname z x y len
+      ((p(1).toInt, p(2).toInt, p(3).toInt), p(4).toDouble)
+    }.toSeq.groupBy(_._1).map { case (k, v) => (k, v.map(_._2).sum) }
+      .filter(_._1._1 == 6)
+    val feats = graft.sources.TextSource.read(spark, "/tmp/ops_mixed.txt", 16, 8)
+    val ours = graft.query.TileOps.enumerateRollupFeatures(feats, 6, 6)
+      .select("tx", "ty", "len").as[(Int, Int, Double)].collect()
+      .map { case (x, y, len) => ((6, x, y), len) }.toMap
+    assert(ours.keySet == refRows.keySet)
+    refRows.foreach { case (k, len) =>
+      assert(math.abs(ours(k) - len) < 1e-4 * math.max(1.0, len), s"tile $k: ref=$len ours=${ours(k)}")
+    }
   }
 }

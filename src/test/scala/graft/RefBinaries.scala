@@ -18,7 +18,7 @@ object RefBinaries {
         Files.walk(buildDir).sorted(java.util.Comparator.reverseOrder())
           .forEach(p => Files.delete(p))
       }
-      if (!Files.isDirectory(srcDir))
+      if (!treePresent)
         throw new IllegalStateException(
           s"reference source tree $srcDir is missing: the golden tests build their oracle " +
             "binaries from it and cannot run without it")
@@ -34,8 +34,9 @@ object RefBinaries {
     buildDir
   }
 
-  def available: Boolean =
-    try { dir; true } catch { case _: Throwable => false }
+  /** Whether the reference source tree exists; starts no build. A tree
+    * that is present but fails `make` still fails `dir`, loudly. */
+  def treePresent: Boolean = Files.isDirectory(srcDir)
 
   /** Run a reference binary; returns (exitCode, stdout bytes).
     * Uses file redirection (no pump-thread race on binary stdout). */
