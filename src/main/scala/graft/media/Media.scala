@@ -78,32 +78,21 @@ object Media {
       } finally iis.close() // dispose() never closes the reader's input
     } catch { case scala.util.control.NonFatal(e) => Left(s"unreadable image: $e") }
 
-  /** BufferedImage -> interleaved RGB. ImageIO reads 8-bit gray (and
-    * gray+alpha) into a LINEAR gray colour space, where getRGB would
-    * brighten every sample (64 -> 137); those images copy raster band
-    * 0 into r = g = b instead, so a gray payload decodes to the same
-    * pixels as its raw form. */
+  /** BufferedImage -> interleaved RGB, read through [[Png.argbRow]] so
+    * a gray payload decodes to the same pixels as its raw form. */
   private def bufferedToDecoded(id: String, bi: java.awt.image.BufferedImage): DecodedImage = {
     val dw = bi.getWidth; val dh = bi.getHeight
-    val cm = bi.getColorModel
-    val gray = cm.getColorSpace.getType == java.awt.color.ColorSpace.TYPE_GRAY &&
-      cm.getComponentSize(0) == 8
     val rgb = new Array[Byte](dw * dh * 3)
     val row = new Array[Int](dw)
     var y = 0
     while (y < dh) {
-      if (gray) bi.getRaster.getSamples(0, y, dw, 1, 0, row)
-      else bi.getRGB(0, y, dw, 1, row, 0, dw)
+      Png.argbRow(bi, y, row)
       var x = 0
       while (x < dw) {
         val px = row(x); val o = (y * dw + x) * 3
-        if (gray) {
-          rgb(o) = px.toByte; rgb(o + 1) = px.toByte; rgb(o + 2) = px.toByte
-        } else {
-          rgb(o) = ((px >> 16) & 0xFF).toByte
-          rgb(o + 1) = ((px >> 8) & 0xFF).toByte
-          rgb(o + 2) = (px & 0xFF).toByte
-        }
+        rgb(o) = (px >> 16).toByte
+        rgb(o + 1) = (px >> 8).toByte
+        rgb(o + 2) = px.toByte
         x += 1
       }
       y += 1
@@ -217,7 +206,10 @@ object Media {
 
   /** images df (image_id, bytes, w, h, fmt) -> (image_id, dhash):
     * the only pass that reads the payload column; everything downstream
-    * shuffles (String, Long) rows. */
+    * shuffles (String, Long) rows. A row whose payload [[decode]]
+    * rejects (a `png` that does not decode or is over MaxDecodePixels,
+    * a `raw` payload of the wrong size) is dropped, as the curation
+    * decode gate drops it, instead of failing the job. */
   def dhashes(images: DataFrame): DataFrame = {
     val spark = images.sparkSession
     import spark.implicits._
@@ -227,8 +219,10 @@ object Media {
     // guard — a no-op whenever the scan already has >= cores splits).
     graft.ops.ReadBalance.fanOut(src)
       .as[(String, Array[Byte], Int, Int, String)]
-      .mapPartitions(_.map { case (id, bytes, w, h, fmt) =>
-        (id, dhash64(decode(id, bytes, w, h, fmt)))
+      .mapPartitions(_.flatMap { case (id, bytes, w, h, fmt) =>
+        val img = try Some(decode(id, bytes, w, h, fmt))
+                  catch { case _: IllegalArgumentException => None }
+        img.map(i => (id, dhash64(i)))
       })
       .toDF("image_id", "dhash")
   }

@@ -305,8 +305,8 @@ object Sinks {
     Files.createDirectories(Paths.get(dir))
 
     // pack every record, tagged with its (n, common) file identity;
-    // cached so the per-group loop below re-filters the cached packed
-    // rows instead of re-running the upstream DAG per group
+    // cached because the sort samples its input in a job of its own
+    // before the shuffle re-reads it
     val packed: Dataset[(Int, Int, Array[Byte])] = features.map { f =>
       val xs = f.vertices.map(c => Cell.decodeX(c).toInt)
       val ys = f.vertices.map(c => Cell.decodeY(c).toInt)
@@ -315,25 +315,27 @@ object Sinks {
       (n, common, BitPack.pack(xs, ys, f.meta, metabits, mapbits, metabits, common))
     }.cache()
 
-    val groups = packed.select(col("_1"), col("_2")).distinct()
-      .as[(Int, Int)].collect().sorted
+    // one sort by (file, memcmp order of the packed record), then one
+    // pass in that order that starts a new file whenever (n, common)
+    // changes
+    val memcmp: Ordering[Array[Byte]] = (a, b) => BitPack.compare(a, b)
+    val sorted = packed.rdd.sortBy(identity)(
+      Ordering.Tuple3(Ordering.Int, Ordering.Int, memcmp), scala.reflect.classTag[(Int, Int, Array[Byte])])
     var maxn = 0
-    groups.foreach { case (n, common) =>
-      maxn = math.max(maxn, n)
-      val sorted = packed.filter(r => r._1 == n && r._2 == common)
-        .map(_._3)
-        .rdd
-        .sortBy(identity[Array[Byte]])(
-          new Ordering[Array[Byte]] {
-            def compare(a: Array[Byte], b: Array[Byte]): Int = BitPack.compare(a, b)
-          },
-          scala.reflect.classTag[Array[Byte]])
-      val fname = if (n == 1) "1,0" else s"$n,$common"
-      val out = new java.io.BufferedOutputStream(
-        new java.io.FileOutputStream(s"$dir/$fname"))
-      sorted.toLocalIterator.foreach(out.write)
-      out.close()
-    }
+    var group = (0, -1)
+    var out: java.io.OutputStream = null
+    try {
+      sorted.toLocalIterator.foreach { case (n, common, bytes) =>
+        if ((n, common) != group) {
+          if (out != null) out.close()
+          group = (n, common)
+          maxn = math.max(maxn, n)
+          val fname = if (n == 1) "1,0" else s"$n,$common"
+          out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(s"$dir/$fname"))
+        }
+        out.write(bytes)
+      }
+    } finally if (out != null) out.close()
     packed.unpersist()
     Files.writeString(Paths.get(dir, "meta"), s"1\n$mapbits $metabits $maxn\n")
   }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.{Mvt, Png}
+import graft.core.{Cell, Mvt, Png}
 import graft.media.Media
 import graft.tables.ImageTable
 
@@ -145,6 +145,14 @@ class MediaSpec extends AnyFunSuite {
     // claim 12000x12000 — a few dozen bytes that ImageIO.read would
     // expand into ~550 MB before failing. Labelled png, it must fail
     // at the header check, before any pixel allocation.
+    val e = intercept[IllegalArgumentException](Media.decode("pbomb", ihdrBomb, 4, 4, "png"))
+    assert(e.getMessage.contains("12000x12000") && e.getMessage.contains("MaxDecodePixels"),
+      e.getMessage)
+  }
+
+  /** A 1x1 RGBA PNG whose IHDR is patched (CRC fixed) to claim
+    * 12000x12000 pixels. */
+  private def ihdrBomb: Array[Byte] = {
     val pbos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(new java.awt.image.BufferedImage(1, 1,
       java.awt.image.BufferedImage.TYPE_INT_ARGB), "png", pbos)
@@ -155,9 +163,18 @@ class MediaSpec extends AnyFunSuite {
     val crc = new java.util.zip.CRC32()
     crc.update(pbomb, 12, 17)
     ihdr.putInt(29, crc.getValue.toInt)
-    val e = intercept[IllegalArgumentException](Media.decode("pbomb", pbomb, 4, 4, "png"))
-    assert(e.getMessage.contains("12000x12000") && e.getMessage.contains("MaxDecodePixels"),
-      e.getMessage)
+    pbomb
+  }
+
+  test("a gray raw image and its gray+alpha PNG re-encode decode to the same pixels and dhash") {
+    val (w, h) = (24, 16)
+    val raw = Array.tabulate(w * h)(i => ((i * 37) ^ (i >> 3)).toByte).flatMap(g => Array(g, g, g))
+    val rawImg = Media.decode("g", raw, w, h, "raw")
+    val png = Media.reencodePng(rawImg)
+    assert(png(25) == 4, s"re-encode wrote colour type ${png(25)}, not gray+alpha")
+    val pngImg = Media.decode("g_re", png, w, h, "png")
+    assert(java.util.Arrays.equals(pngImg.rgb, rawImg.rgb), "gray re-encode changed pixels")
+    assert(Media.dhash64(pngImg) == Media.dhash64(rawImg), "gray re-encode changed the dhash")
   }
 
   test("gray and gray+alpha PNGs decode to their raw samples, not linear-gray brightened") {
@@ -210,6 +227,30 @@ class MediaSpec extends AnyFunSuite {
       java.lang.Long.bitCount(Media.dhash64(rawImg) ^ Media.dhash64(img))
     }
     assert(dists.forall(_ > 10), s"independent images too close: $dists")
+  }
+
+  test("dhashes drops payloads that do not decode and keeps every other row") {
+    import spark.implicits._
+    val originals = (0L until 40L).map(i => ImageTable.row(42L, i))
+    val dups = Seq(0L, 7L, 21L).map { i =>
+      val o = originals(i.toInt)
+      o.copy(image_id = o.image_id + "_re",
+        bytes = Media.reencodePng(Media.decode(o.image_id, o.bytes, o.w, o.h, o.fmt)), fmt = "png")
+    }
+    val png = originals(1)
+    val bad = Seq(
+      png.copy(image_id = "corrupt", bytes = png.bytes.take(png.bytes.length / 2)),
+      png.copy(image_id = "bomb", bytes = ihdrBomb),
+      originals(0).copy(image_id = "short_raw", bytes = originals(0).bytes.drop(3)))
+    val df = spark.createDataset(originals ++ bad ++ dups).toDF()
+    val ids = Media.dhashes(df).select("image_id").as[String].collect().toSet
+    assert(ids == (originals ++ dups).map(_.image_id).toSet)
+    val clusters = Media.imageDupClusters(df, maxHamming = 2)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    Seq(0L, 7L, 21L).foreach { i =>
+      val id = originals(i.toInt).image_id
+      assert(clusters(id) == clusters(s"${id}_re"), s"dup $id not co-clustered")
+    }
   }
 
   test("image near-dup pipeline: banded pairs + clusters find re-encoded copies") {
@@ -473,6 +514,39 @@ class MediaSpec extends AnyFunSuite {
     assert(rgba.length == w * h * 4)
     val lit = rgba.grouped(4).count(px => px(0) != 0 || px(1) != 0 || px(2) != 0)
     assert(lit > 50, s"only $lit lit pixels")
+  }
+
+  test("assemble over a one-tile window equals the tone-mapped canvas of that tile") {
+    import spark.implicits._
+    val geo = graft.render.Render.withGlobalRank(
+      ImageTable.generateGeo(spark, 3000).toDF().select(col("cell"), col("meta")))
+    val pts = geo.select("cell", "meta", "rank").as[(Long, Long, Long)].collect()
+    val z = 12
+    val (tx, ty) = pts.groupBy { case (c, _, _) => (Cell.tileX(c, z), Cell.tileY(c, z)) }
+      .maxBy(_._2.length)._1
+    // a window 1/1024 of a tile inside each edge: the stitched image is
+    // the tile's own pixels from (0, 0), one pixel short on each axis
+    val inset = 1L << (32 - z - 10)
+    def lon(wx: Long) = wx * 360.0 / (1L << 32) - 180.0
+    def lat(wy: Long) = math.toDegrees(math.atan(math.sinh(math.Pi * (1 - 2.0 * wy / (1L << 32)))))
+    val (x0, y0) = (tx.toLong << (32 - z), ty.toLong << (32 - z))
+    val (x1, y1) = (x0 + (1L << (32 - z)), y0 + (1L << (32 - z)))
+    for (p <- Seq(graft.core.RenderParams(), graft.core.RenderParams(color = 0xFF8000))) {
+      val (rgba, w, h) = graft.sinks.Sinks.assemble(Some(geo), None, z,
+        lat(y0 + inset), lon(x0 + inset), lat(y1 - inset), lon(x1 - inset), 48, p)
+      val ts = p.tilesize
+      assert(w == ts - 1 && h == ts - 1, s"window $w x $h")
+      val step = p.pointParams(z)._1
+      val recs = pts.collect { case (c, m, r) if Cell.tileX(c, z) == tx && Cell.tileY(c, z) == ty && r % step == 0 =>
+        graft.render.FeatCmd(Cell.tileKey(z, tx, ty), -1, Array(c), m, own = true) }
+      assert(recs.nonEmpty)
+      graft.render.Render.sortRecs(recs)
+      val tile = graft.core.ToneMap(graft.render.Render.renderCanvas(recs, z, tx, ty, 48, p), p)
+      for (y <- 0 until h; x <- 0 until w) {
+        val (o, t) = (4 * (y * w + x), 4 * (y * ts + x))
+        assert(rgba.slice(o, o + 4).sameElements(tile.slice(t, t + 4)), s"color ${p.color}: pixel ($x, $y)")
+      }
+    }
   }
 
   test("vector tiles render from the point table") {
