@@ -10,8 +10,9 @@ import org.apache.spark.sql.execution.ExplainMode
  * Bench.scala stays the frozen harness; this main exists so
  * optimization rounds can (a) time each declared query against the
  * noop sink in isolation, with per-query job/stage/shuffle telemetry
- * from a SparkListener, and (b) dump `.explain("formatted")` plans to
- * `plans/<tag>/` for the before/after evidence the round requires.
+ * from a SparkListener, and (b) dump each query's `.explain("formatted")`
+ * plan to `plans/<tag>/<q>.txt` and its generated Java to
+ * `plans/<tag>/<q>.codegen.txt`, so two tags diff in one command.
  *
  * Usage (same env contract as Bench):
  *   runMain graft.BenchExtra explain <dirTag> [query...]
@@ -64,7 +65,16 @@ object BenchExtra {
           val df = SparkEntry.queries(name)(spark, sfDir)
           val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
           java.nio.file.Files.writeString(dir.resolve(s"$name.txt"), txt)
-          println(s"explained $name -> plans/$tag/$name.txt")
+          // AQE plans its stages only as they run, so an unexecuted
+          // adaptive plan has no generated code: plan the codegen dump
+          // with AQE off to show every stage's Java
+          val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+          spark.conf.set("spark.sql.adaptive.enabled", "false")
+          val codegen = try SparkEntry.queries(name)(spark, sfDir).queryExecution
+            .explainString(ExplainMode.fromString("codegen"))
+          finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+          java.nio.file.Files.writeString(dir.resolve(s"$name.codegen.txt"), codegen)
+          println(s"explained $name -> plans/$tag/$name{,.codegen}.txt")
         }
       case "time" =>
         val names = if (rest.nonEmpty) rest else SparkEntry.queries.keys.toSeq.sorted

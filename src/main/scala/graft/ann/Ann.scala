@@ -51,10 +51,7 @@ object Ann {
     * that the DuckDB oracle reproduces exactly — the projections fold
     * doubles in the same sequential order, so the sign bits (hence
     * buckets and candidate sets) match bit-for-bit. */
-  def rhpSignature(v: Column, planes: Int): Column = {
-    import org.apache.spark.sql.graft.Bridge.{column, expression}
-    column(graft.functions.RhpSigExpr(expression(v), planes))
-  }
+  def rhpSignature(v: Column, planes: Int): Column = graft.functions.Kernels.RhpSig(v, planes)
 
   /** Deterministic random projection to `planes` output dimensions
     * (Johnson–Lindenstrauss reduction on the portable plane matrix the
@@ -62,10 +59,8 @@ object Ann {
     * pre-index dimensionality cut. Map-only codegen kernel; at 100 TB
     * this is a pure scan→project stage and downstream ops shuffle
     * `planes` doubles per row instead of the full embedding. */
-  def randomProjection(v: Column, planes: Int): Column = {
-    import org.apache.spark.sql.graft.Bridge.{column, expression}
-    column(graft.functions.RhpProjectExpr(expression(v), planes))
-  }
+  def randomProjection(v: Column, planes: Int): Column =
+    graft.functions.Kernels.RhpProject(v, planes)
 
   /** (band, key) struct array of a vector's LSH band keys. Defaults
     * (64 planes, 8 bands of 8 rows) give 256 possible keys per band —
@@ -163,19 +158,16 @@ object Ann {
   /** Map-side nearest-centroid assignment (exact cosine, tie to the
     * smaller cid): a zero-shuffle codegen kernel over the embedding
     * column — the 100 TB replacement for crossJoin+Window argmax. */
-  def nearestCentroid(v: Column, cids: Array[Long], cvecs: Array[Array[Double]]): Column = {
-    import org.apache.spark.sql.graft.Bridge.{column, expression}
-    column(graft.functions.NearestCentroidExpr(
-      expression(v), cids.toSeq, cvecs.map(_.toSeq).toSeq))
-  }
+  def nearestCentroid(v: Column, cids: Array[Long], cvecs: Array[Array[Double]]): Column =
+    graft.functions.Kernels.NearestCentroid(v, cids, cvecs, selfDots(cvecs))
 
   /** Map-side n-nearest-centroid probe list in (cos desc, cid asc)
     * order. */
-  def nearestCentroids(v: Column, cids: Array[Long], cvecs: Array[Array[Double]], n: Int): Column = {
-    import org.apache.spark.sql.graft.Bridge.{column, expression}
-    column(graft.functions.NearestCentroidsExpr(
-      expression(v), cids.toSeq, cvecs.map(_.toSeq).toSeq, n))
-  }
+  def nearestCentroids(v: Column, cids: Array[Long], cvecs: Array[Array[Double]], n: Int): Column =
+    graft.functions.Kernels.NearestCentroids(v, cids, cvecs, selfDots(cvecs), n)
+
+  private def selfDots(cvecs: Array[Array[Double]]): Array[Double] =
+    cvecs.map(graft.functions.CentroidKernel.selfDot)
 
   /** IVF-flat coarse quantization: assign every vector to its nearest
     * centroid by cosine (ties by centroid id). Map-only — the centroid

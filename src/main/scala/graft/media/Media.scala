@@ -532,11 +532,13 @@ object Media {
     * merge instead of relabeling the corpus: returns
     * (newLabels(image_id, rep), merges(rep_a, merged_rep)) — apply
     * merges downstream as rep_a -> merged_rep, at most a
-    * label-table-sized join, never a re-cluster. */
-  def incrementalImageDedup(ids: DataFrame, bandsTable: String,
-                            maxHamming: Int = 2): (DataFrame, DataFrame) = {
+    * label-table-sized join, never a re-cluster. `hold` registers
+    * every checkpoint made here, for a caller that frees them once the
+    * labels and merges are landed ([[graft.ops.Checkpoint.holding]]). */
+  def incrementalImageDedup(ids: DataFrame, bandsTable: String, maxHamming: Int = 2,
+                            hold: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
     val spark = ids.sparkSession
-    val (batchEdges, repIds) = dupEdges(ids, maxHamming)
+    val (batchEdges, repIds) = dupEdges(ids, maxHamming, hold)
     // boundary probe: new distinct hashes explode their 6 band keys and
     // join the BUCKETED index — corpus side shuffle-free — then verify
     // by exact Hamming against the matched member hash. The hit set is
@@ -548,10 +550,10 @@ object Media {
       .select(col("nid"), col("dhash").as("new_dhash"),
         explode(packedBandKeys(col("dhash"))).as("band_key"))
     val index = spark.table(bandsTable)
-    val probeHits = probes.join(index, "band_key")
+    val probeHits = hold(probes.join(index, "band_key")
       .filter(graft.text.TextOps.hamming64(col("new_dhash"), col("dhash")) <= maxHamming)
       .select(col("nid"), col("rep_nid"), col("rep"))
-      .localCheckpoint(true)
+      .localCheckpoint(true))
     val newOldEdges = probeHits.select(col("nid").as("a"), col("rep_nid").as("b"))
       .distinct()
     val oldReps = probeHits.select(col("rep_nid"), col("rep")).distinct()
@@ -559,7 +561,7 @@ object Media {
     // sticky labels + merge events: shared resolution (ops.StickyLabels,
     // one source with the text path)
     graft.ops.StickyLabels.resolve(comp, oldReps,
-      ids.select(col("image_id"), col("nid")), "image_id")
+      ids.select(col("image_id"), col("nid")), "image_id", hold)
   }
 
   /** Fold a processed batch (its [[dedupIds]] projection; only

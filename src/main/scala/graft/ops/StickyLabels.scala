@@ -25,27 +25,26 @@ object StickyLabels {
    *                nodes in the graph; `rep` is the entity-typed label
    * @param ids     (idCol, nid) name map of the batch's entities
    * @param idCol   entity id column name (e.g. "image_id", "doc_id")
+   * @param hold    registers the anchor checkpoint, for a caller that
+   *                frees it once the labels and merges are landed
+   *                ([[graft.ops.Checkpoint.holding]])
    * @return (labels (idCol, rep) for every batch entity — singletons
    *         label to themselves; merges (rep_a, merged_rep))
    */
-  def resolve(comp: DataFrame, oldReps: DataFrame, ids: DataFrame,
-              idCol: String): (DataFrame, DataFrame) = {
+  def resolve(comp: DataFrame, oldReps: DataFrame, ids: DataFrame, idCol: String,
+              hold: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
     // ONE anchor join + aggregation computes BOTH the sticky label (the
     // min-by-nid old rep) and the merge inputs (the distinct old-rep
     // set) — a second identical join/groupBy here would re-run the
     // component aggregation upstream too (comp is an uncached groupBy
     // over the Components checkpoint). The checkpoint rides the
-    // returned lazy labels/merges frames, so callers can't unpersist
-    // it; that's deliberate — it is one ROW PER ANCHORED COMPONENT
-    // (candidate-sized, no payloads), and the ContextCleaner reclaims
-    // the blocks when the per-batch frames go out of scope, unlike the
-    // corpus-text-sized checkpoints the dedup paths unpersist eagerly.
-    val anchorAgg = comp.join(oldReps.select(col("rep_nid").as("node"),
+    // returned lazy labels/merges frames: it is held until they land.
+    val anchorAgg = hold(comp.join(oldReps.select(col("rep_nid").as("node"),
         col("rep").as("old_rep"), col("rep_nid").as("old_nid")), "node")
       .groupBy(col("rep").as("crep"))
       .agg(min(struct(col("old_nid"), col("old_rep"))).as("m"),
         collect_set(col("old_rep")).as("reps"))
-      .localCheckpoint(true)
+      .localCheckpoint(true))
     // sticky labels: a component containing old reps labels to the
     // MINIMUM old rep nid (deterministic), not the component min
     val compOld = anchorAgg.select(col("crep"), col("m.old_rep").as("sticky_rep"))

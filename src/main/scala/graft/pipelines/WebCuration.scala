@@ -189,7 +189,7 @@ object WebCuration {
         }
         ((red, () => docs), red)
       },
-      resolve = { case (_, docs) => TextDedupState.incrementalTextDedup(docs(), bandsTable) },
+      resolve = { case ((_, docs), hold) => TextDedupState.incrementalTextDedup(docs(), bandsTable, hold) },
       fold = { case ((_, docs), labels) =>
         TextDedupState.appendTextDedupState(docs(), labels, bandsTable, stateDir, buckets) })
   }

@@ -106,7 +106,9 @@ object StreamOps {
     *  - `prepare(batch, hold)` -> (prepared batch, rows): `hold`
     *    registers each per-batch checkpoint the step makes (and returns
     *    it); empty `rows` skip the batch;
-    *  - `resolve(prepared)` -> (labels, merges) against the state;
+    *  - `resolve(prepared, hold)` -> (labels, merges) against the
+    *    state, holding its checkpoints the same way (the labels and
+    *    merges are landed before they are released);
     *  - `fold(prepared, labels)` folds the batch into the state.
     * The driver owns everything else, per micro-batch: flat-era sink
     * roots migrate ([[migrateFlatSink]]); the labels are checkpointed;
@@ -125,7 +127,7 @@ object StreamOps {
       labelsOut: String, mergesOut: String,
       extraSinks: Seq[(String, (P, DataFrame) => DataFrame)] = Nil)(
       prepare: (DataFrame, DataFrame => DataFrame) => (P, DataFrame),
-      resolve: P => (DataFrame, DataFrame),
+      resolve: (P, DataFrame => DataFrame) => (DataFrame, DataFrame),
       fold: (P, DataFrame) => Unit): StreamingQuery =
     input.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -136,7 +138,7 @@ object StreamOps {
         graft.ops.Checkpoint.holding { hold =>
           val (p, rows) = prepare(batch, hold)
           if (rows.count() > 0) {
-            val (labels, merges) = resolve(p)
+            val (labels, merges) = resolve(p, hold)
             val l = hold(labels.localCheckpoint(true))
             extraSinks.foreach { case (root, sinkRows) => land(root, sinkRows(p, l)) }
             land(labelsOut, l)
@@ -168,7 +170,7 @@ object StreamOps {
         val ids = hold(graft.media.Media.dedupIds(batch))
         (ids, ids)
       },
-      resolve = ids => graft.media.Media.incrementalImageDedup(ids, bandsTable),
+      resolve = (ids, hold) => graft.media.Media.incrementalImageDedup(ids, bandsTable, hold = hold),
       fold = (ids, labels) =>
         graft.media.Media.appendImageDedupState(ids, labels, bandsTable, stateDir, buckets))
 
@@ -187,7 +189,7 @@ object StreamOps {
         p.checkpoints.foreach(hold)
         (p, p.bands)
       },
-      resolve = p => TextDedupState.incrementalTextDedup(p, bandsTable),
+      resolve = (p, hold) => TextDedupState.incrementalTextDedup(p, bandsTable, hold),
       fold = (p, labels) =>
         TextDedupState.appendTextDedupState(p, labels, bandsTable, stateDir, buckets))
   }

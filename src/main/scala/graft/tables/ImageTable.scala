@@ -104,8 +104,8 @@ object ImageTable {
   private val hotLon = Array(-74.0060, -0.1278, 139.6503, 151.2093)
 
   /** Scalar geotag kernels — static-forwarder-friendly so the codegen'd
-    * GeotagLat/Lon/CellExpr can call them from generated Java (same
-    * pattern as graft.core.Cell.encode in CellEncodeExpr). */
+    * geotag_lat/lon/cell kernels (graft.functions.Kernels) can call them
+    * from generated Java, like graft.core.Cell.encode for cell_encode. */
   def geotagLat(phash: Long): Double = {
     val h2 = splitmix64(phash, 7L)
     if ((h2 & 0xFF) < 77) { // ~30%: city hotspots

@@ -113,8 +113,8 @@ object Bpe {
   /** Learned-vocab token count of a document: pre-tokenize with the
     * SAME runs-of-letters / runs-of-digits / single-other rule as
     * TextOps.BpePattern (a char loop, not a per-row regex), then sum
-    * per-word BPE lengths. One kernel call per row (codegen'd via
-    * BpeTokenCountExpr). */
+    * per-word BPE lengths. One kernel call per row (the codegen'd
+    * bpe_token_count kernel, graft.functions.Kernels). */
   def tokenCount(text: UTF8String): Long = {
     val s = text.toString
     val n = s.length

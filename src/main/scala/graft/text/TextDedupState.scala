@@ -100,10 +100,11 @@ object TextDedupState {
   /** In-batch near-dup pairs from prepared band rows: the capped LSH
     * pair join over the LSH rows only (md5 rows are redundant in-batch
     * — identical texts already collapsed into one rep). */
-  private def batchPairs(bands: DataFrame): DataFrame =
+  private def batchPairs(bands: DataFrame,
+                         hold: DataFrame => DataFrame = identity): DataFrame =
     TextOps.cappedCandidatePairs(
       bands.filter(col("band") =!= -1).select(col("doc_id"), col("band_key")),
-      "band_key", cap = TextOps.LshCap)
+      "band_key", cap = TextOps.LshCap, hold)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
 
   /** Build the persisted state: batch-cluster `docs` (md5 pregroup +
@@ -135,9 +136,10 @@ object TextDedupState {
     * verified exact text, so boundary semantics equal re-clustering the
     * union for eligible AND ineligible docs. Old labels are sticky;
     * bridges emit merges (see ops.StickyLabels). Returns
-    * (labels(doc_id, rep), merges(rep_a, merged_rep)). */
-  def incrementalTextDedup(batch: PreparedDocs, bandsTable: String):
-      (DataFrame, DataFrame) = {
+    * (labels(doc_id, rep), merges(rep_a, merged_rep)); `hold` registers
+    * the checkpoints made here ([[graft.ops.Checkpoint.holding]]). */
+  def incrementalTextDedup(batch: PreparedDocs, bandsTable: String,
+                           hold: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
     val spark = batch.bands.sparkSession
     // boundary probe: batch band rows join the bucketed index; md5-band
     // hits additionally verify exact text equality. The hit set is
@@ -146,18 +148,18 @@ object TextDedupState {
     val idx = spark.table(bandsTable)
       .select(col("band").as("i_band"), col("band_key"),
         col("text_md5").as("i_md5"), col("rep"))
-    val probeHits = batch.bands.select(col("doc_id"), col("text_md5"), col("band_key"))
+    val probeHits = hold(batch.bands.select(col("doc_id"), col("text_md5"), col("band_key"))
       .join(idx, "band_key")
       .filter(col("i_band") =!= -1 || col("i_md5") === col("text_md5"))
       .select(col("doc_id"), col("rep"))
       .distinct()
-      .localCheckpoint(true)
+      .localCheckpoint(true))
     val newOldEdges = probeHits.select(col("doc_id").as("a"), col("rep").as("b"))
     val oldReps = probeHits.select(col("rep").as("rep_nid"), col("rep")).distinct()
     val comp = graft.ops.Components.connectedComponents(
-      batch.starEdges.unionByName(batchPairs(batch.bands)).unionByName(newOldEdges))
+      batch.starEdges.unionByName(batchPairs(batch.bands, hold)).unionByName(newOldEdges))
     graft.ops.StickyLabels.resolve(comp, oldReps,
-      batch.ids.withColumn("nid", col("doc_id")), "doc_id")
+      batch.ids.withColumn("nid", col("doc_id")), "doc_id", hold)
   }
 
   /** Fold a processed batch into the state so the NEXT batch sees it:

@@ -62,10 +62,7 @@ object TextOps {
     * real merge-rank BPE in one codegen kernel call per row — the
     * counts that actually drive token budgets, vs the pre-tokenizer
     * upper bound above. */
-  def bpeVocabTokenCount(c: Column): Column = {
-    import org.apache.spark.sql.graft.Bridge.{column, expression}
-    column(graft.functions.BpeTokenCountExpr(expression(c)))
-  }
+  def bpeVocabTokenCount(c: Column): Column = graft.functions.Kernels.BpeTokenCount(c)
 
   private val stopwords = Map(
     "en" -> Seq(" the ", " and ", " of "),
@@ -127,10 +124,7 @@ object TextOps {
       .withColumn("keep", when(col("score") >= 0, lit(1)).otherwise(lit(0)))
 
   /** Trained integer quality margin of one text column value. */
-  def qualityScore(c: Column): Column = {
-    import org.apache.spark.sql.graft.Bridge.{column, expression}
-    column(graft.functions.QualityScoreExpr(expression(c)))
-  }
+  def qualityScore(c: Column): Column = graft.functions.Kernels.QualityScore(c)
 
   /** Boilerplate-line removal (the C4/RefinedWeb line-dedup rule: drop
     * every line that repeats >= minCount times across the corpus —
@@ -161,16 +155,10 @@ object TextOps {
   }
 
   /** Per-line h64 hashes of one text column value. */
-  def lineHashes(c: Column): Column = {
-    import org.apache.spark.sql.graft.Bridge.{column, expression}
-    column(graft.functions.LineHashesExpr(expression(c)))
-  }
+  def lineHashes(c: Column): Column = graft.functions.Kernels.LineHashes(c)
 
   /** One-pass hot-line rewrite of one text column value. */
-  def dropHotLines(c: Column, hot: Array[Long]): Column = {
-    import org.apache.spark.sql.graft.Bridge.{column, expression}
-    column(graft.functions.DropHotLinesExpr(expression(c), hot))
-  }
+  def dropHotLines(c: Column, hot: Array[Long]): Column = graft.functions.Kernels.DropHotLines(c, hot)
 
   /** Bigram-LM perplexity scoring (the CCNet/KenLM-style fluency
     * filter; [[unigramRarity]] is the corpus-statistics stand-in):
@@ -197,10 +185,7 @@ object TextOps {
   }
 
   /** Trained integer bigram-LM cost of one text column value. */
-  def lmCost(c: Column): Column = {
-    import org.apache.spark.sql.graft.Bridge.{column, expression}
-    column(graft.functions.LmCostExpr(expression(c)))
-  }
+  def lmCost(c: Column): Column = graft.functions.Kernels.LmCost(c)
 
   /** Within-document repetition metrics (the Gopher/MassiveText-style
     * repetition signals, as integer COUNTS so the DuckDB oracle is
@@ -408,27 +393,19 @@ object TextOps {
     * (tokenize once, emit all windows); the earlier transform/slice
     * HOF inlined the split into every window lambda — O(tokens^2)
     * character work per doc, fatal at web-document lengths. */
-  def tokenShingles(c: Column, n: Int): Column = {
-    import org.apache.spark.sql.graft.Bridge.{column, expression}
-    column(graft.functions.TokenShinglesExpr(expression(c), n))
-  }
+  def tokenShingles(c: Column, n: Int): Column = graft.functions.Kernels.TokenShingles(c, n)
 
   /** 62-bit hashes of the token `n`-gram shingles — the 100 TB
     * contamination keys: the shingle strings never materialize and the
     * join/broadcast carries 8-byte Longs. Same h64 = (poly31<<31)|poly37
     * packing as PortableHash.tokenHashSql, so the DuckDB oracle
     * reproduces every value exactly. */
-  def tokenShingleHashes(c: Column, n: Int): Column = {
-    import org.apache.spark.sql.graft.Bridge.{column, expression}
-    column(graft.functions.TokenShingleHashesExpr(expression(c), n))
-  }
+  def tokenShingleHashes(c: Column, n: Int): Column =
+    graft.functions.Kernels.TokenShingleHashes(c, n)
 
   /** Rolling character-`n`-gram hashes (one O(chars) pass per doc) —
     * seeds for exact-substring matching. */
-  def charNgramHashes(c: Column, n: Int): Column = {
-    import org.apache.spark.sql.graft.Bridge.{column, expression}
-    column(graft.functions.CharNgramHashesExpr(expression(c), n))
-  }
+  def charNgramHashes(c: Column, n: Int): Column = graft.functions.Kernels.CharNgramHashes(c, n)
 
   /** Benchmark decontamination: flag documents sharing any token
     * `n`-gram with the probe corpus (eval/test sets) — the standard
@@ -529,9 +506,7 @@ object TextOps {
     * size). */
   private[graft] def duplicateSpansProjection(docs: DataFrame, n: Int): DataFrame =
     graft.ops.ReadBalance.fanOut(docs.select(col("doc_id"), col("text"))).select(col("doc_id"),
-        explode(org.apache.spark.sql.graft.Bridge.column(
-          graft.functions.CharNgramSnipsExpr(
-            org.apache.spark.sql.graft.Bridge.expression(col("text")), n))).as("ws"))
+        explode(graft.functions.Kernels.CharNgramSnips(col("text"), n)).as("ws"))
       .select(col("doc_id"), col("ws.wh").as("wh"), col("ws.snip").as("snip"))
 
   /** checkpoint=false keeps the whole lineage in ONE plan so PlanSpec
@@ -604,8 +579,6 @@ object TextOps {
   // full SQL oracles; the Spark side runs as one codegen'd kernel call
   // per row instead of interpreted HOFs) ----
 
-  import org.apache.spark.sql.graft.Bridge.{column, expression}
-
   /** THE batch MinHash-LSH geometry (q28/q42) — single source shared
     * with the persisted incremental state (TextDedupState), whose
     * boundary-vs-batch equivalence silently breaks if these drift. */
@@ -622,13 +595,13 @@ object TextOps {
   /** Fused minhash + band keys in one kernel call per row (the shape
     * to explode for the LSH self-join). */
   def minhashBandKeys(c: Column, shingle: Int, bands: Int, rows: Int): Column =
-    column(graft.functions.MinhashBandsExpr(expression(c), shingle, bands, rows))
+    graft.functions.Kernels.MinhashBands(c, shingle, bands, rows)
 
   /** 62-bit SimHash over whitespace tokens of the sanitized text
     * (token hash = two packed 31-bit polynomial hashes; see
     * PortableHash.simhash62). */
   def simhash64(c: Column): Column =
-    column(graft.functions.SimhashExpr(expression(c)))
+    graft.functions.Kernels.Simhash(c)
 
   /** Candidate pairs from exploded (doc_id, band_key) rows with a
     * hot-bucket cap — the 100 TB guard: a cluster of near-identical
@@ -638,8 +611,11 @@ object TextOps {
     * doc_id (O(bucket) instead of O(bucket^2)), which preserves
     * connected-component dedup semantics (every member still links to
     * the representative). Deterministic, so the SQL oracle reproduces
-    * it exactly. */
-  def cappedCandidatePairs(bands: DataFrame, keyCol: String, cap: Int): DataFrame = {
+    * it exactly. `hold` registers the collided-member checkpoint
+    * ([[graft.ops.Checkpoint.holding]]); by default the ContextCleaner
+    * reclaims it. */
+  def cappedCandidatePairs(bands: DataFrame, keyCol: String, cap: Int,
+                           hold: DataFrame => DataFrame = identity): DataFrame = {
     // Per-bucket stats via hash aggregation (map-side combine), NOT a
     // window: a window sorts the ENTIRE band table, but singleton
     // buckets — the overwhelming majority under selective keys — can't
@@ -654,7 +630,7 @@ object TextOps {
     // self-join's two sides and the star branch would otherwise EACH
     // re-evaluate the upstream band computation — for minhash callers
     // that is the fused signature kernel over every document, run 3x
-    val stats = bands.join(bstats, Seq(keyCol)).localCheckpoint(true)
+    val stats = hold(bands.join(bstats, Seq(keyCol)).localCheckpoint(true))
     val small = stats.filter(col("bcnt") <= cap)
     val allPairs = small.as("a").join(small.as("b"),
       col(s"a.$keyCol") === col(s"b.$keyCol") && col("a.doc_id") < col("b.doc_id"))

@@ -13,7 +13,8 @@ import graft.tables.ImageTable
   * image, text and WebCuration — as one table: a batch that
   * Spark replays under the same batchId (a crash between the sinks and
   * the commit) rewrites identical labels, merges and curated rows and
-  * adds no index rows; flat-era sink files migrate to `batch=legacy`. */
+  * adds no index rows; flat-era sink files migrate to `batch=legacy`;
+  * no checkpoint a micro-batch makes stays persisted after it. */
 class StreamReplaySpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -177,6 +178,23 @@ class StreamReplaySpec extends AnyFunSuite {
       assert(after.merges == before.merges, "replayed merges differ")
       assert(after.curated == before.curated, "replayed curated rows differ")
       assert(after.indexRows == before.indexRows, "replay added index rows")
+    }
+  }
+
+  subjects.foreach { s =>
+    test(s"${s.name} stream: three micro-batches release every checkpoint they make") {
+      val base = java.nio.file.Files.createTempDirectory(s"release_${s.name}").toString
+      val tbl = s"release_${s.name.toLowerCase}_bands"
+      s.bootstrap(base, tbl)
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val fx = s.fixture(base, tbl)
+      s.feeds.foreach { feed => feed(fx); fx.runOnce() }
+      val (_, ran) = fx.replayLast()
+      assert(ran.nonEmpty, "the replay ran no micro-batch")
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(left.isEmpty, "checkpoint RDDs still persisted after 3 micro-batches:\n" +
+        left.map(sc.getPersistentRDDs(_).toDebugString).mkString("\n"))
     }
   }
 
