@@ -412,17 +412,9 @@ object Cli {
       // point scan to the target tile's neighbor-ring cell ranges — the
       // Spark analog of the reference's per-range binary search. Cloud
       // mode keeps the full scan (rings are latitude-dependent).
-      def ringFiltered(zz: Int, tx: Int, ty: Int) = {
-        val n = 1L << zz
-        val ranges = for {
-          dx <- -1 to 1; dy <- -1 to 1
-          nx = tx + dx; ny = ty + dy
-          if nx >= 0 && nx < n && ny >= 0 && ny < n
-        } yield (Cell.tileRangeLo(zz, nx.toInt, ny.toInt), Cell.tileRangeHi(zz, nx.toInt, ny.toInt))
-        points.filter(ranges.map { case (lo, hi) =>
-          col("cell") >= lo && col("cell") <= hi
-        }.reduce(_ || _))
-      }
+      def ringFiltered(zz: Int, tx: Int, ty: Int) =
+        points.filter(graft.query.TileOps.cellInRanges(Cell.kRing(zz, tx, ty, 1)
+          .map { case (rx, ry) => (Cell.tileRangeLo(zz, rx, ry), Cell.tileRangeHi(zz, rx, ry)) }))
       locally {
         val tiles =
           if (flags.contains('r'))

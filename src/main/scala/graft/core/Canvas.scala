@@ -12,7 +12,7 @@ package graft.core
  * reset/tone-map only walk dirty memory — at high zooms most tiles are
  * nearly empty and the canvas traffic, not the drawing, is the cost.
  */
-final class Canvas(val width: Int, val height: Int) extends Serializable {
+final class Canvas(val width: Int, val height: Int) extends DrawTarget with Serializable {
   val image = new Array[Double](width * height)
   private var cxArr: Array[Double] = null
   private var cyArr: Array[Double] = null
@@ -71,6 +71,13 @@ final class Canvas(val width: Int, val height: Int) extends Serializable {
     putPixel(x + 1, y + 1, bright * fx * fy, hue)
   }
 
+  def drawBrush(x: Double, y: Double, bright: Double, brush: Double, hue: Double, gaussian: Boolean): Unit =
+    Raster.drawBrush(x, y, this, bright, brush, hue, gaussian)
+
+  def drawClip(x0: Double, y0: Double, x1: Double, y1: Double, bright: Double, hue: Double,
+               antialias: Boolean, thick: Double): Unit =
+    Raster.drawClip(x0, y0, x1, y1, this, bright, hue, antialias, thick)
+
   def merge(o: Canvas): Canvas = {
     // only o's dirty rows can hold non-zero values — walk just those:
     // at high zooms most partial canvases are nearly empty and this
@@ -122,6 +129,17 @@ final class Canvas(val width: Int, val height: Int) extends Serializable {
     }
     c
   }
+}
+
+/** The three draw calls of the render loop (Render.renderCanvasInto): a
+  * bilinear pixel splat, a brush splat and a clipped line. A Canvas
+  * rasterizes them; the raster-text debug backend records them instead
+  * — the reference links one render.c against graphics.c or raster.c. */
+trait DrawTarget {
+  def drawPixel(x: Double, y: Double, bright: Double, hue: Double): Unit
+  def drawBrush(x: Double, y: Double, bright: Double, brush: Double, hue: Double, gaussian: Boolean): Unit
+  def drawClip(x0: Double, y0: Double, x1: Double, y1: Double, bright: Double, hue: Double,
+               antialias: Boolean, thick: Double): Unit
 }
 
 /** Stateless rasterization kernels drawing into a Canvas. Semantics match

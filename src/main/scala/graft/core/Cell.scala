@@ -133,10 +133,15 @@ object Cell {
       b
     }
     node(0, 0, 0, maxRanges * 4)
-    // merge adjacent/overlapping ranges
-    val sorted = out.sortBy(_._1)
+    coalesceRanges(out.toSeq)
+  }
+
+  /** Inclusive (lo, hi) cell ranges sorted and fused wherever they
+    * overlap or touch: the result is sorted, disjoint and non-adjacent,
+    * and covers exactly the input's cells. */
+  def coalesceRanges(ranges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
     val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    sorted.foreach { case (lo, hi) =>
+    ranges.sorted.foreach { case (lo, hi) =>
       // adjacent-or-overlapping; the MaxValue guard keeps `+ 1` from
       // wrapping when a range ends at the top of the cell space
       if (merged.nonEmpty &&

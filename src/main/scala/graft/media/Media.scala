@@ -421,10 +421,12 @@ object Media {
     * themselves). Only nids that ARE a component rep need resolving — a
     * component-count-sized set — which keeps both joins broadcastable
     * (an unrestricted name map would be a corpus x corpus shuffle join
-    * at scale). */
-  private def resolveNames(ids: DataFrame, edges: DataFrame): DataFrame = {
-    val labels = componentLabels(edges)
-      .localCheckpoint(true) // duplicate-node-sized; feeds two joins + the rep set
+    * at scale). `hold` registers the labels checkpoint
+    * ([[graft.ops.Checkpoint.holding]]). */
+  private def resolveNames(ids: DataFrame, edges: DataFrame,
+                           hold: DataFrame => DataFrame = identity): DataFrame = {
+    val labels = hold(componentLabels(edges)
+      .localCheckpoint(true)) // duplicate-node-sized; feeds two joins + the rep set
     val repNames = ids.select(col("nid").as("rep"), col("image_id").as("rep_id"))
       .join(labels.select(col("rep")).distinct(), "rep")
     ids.select(col("image_id"), col("nid")).join(labels, Seq("nid"), "left")
@@ -491,23 +493,25 @@ object Media {
     * so incremental probes join the corpus-sized side with zero
     * shuffle. Returns the labels (image_id, rep) for every image. At
     * 10^12 images the bands table is ~300 B/distinct hash; probes read
-    * only matching buckets. */
+    * only matching buckets. Every checkpoint made on the way is freed
+    * once the index is written; only the returned labels' stays. */
   def writeImageDedupState(images: DataFrame, dir: String, table: String,
-                           buckets: Int, maxHamming: Int = 2): DataFrame = {
-    // ONE payload-decode pass feeds both the clustering and the index
-    val ids = dedupIds(images)
-    val (edges, repIds) = dupEdges(ids, maxHamming)
-    val labels = resolveNames(ids, edges).localCheckpoint(true)
-    // each distinct hash finds its label by its rep member's nid — the
-    // rep table already holds one (nid, dhash) per distinct hash, so no
-    // extra distinct pass runs here
-    val distinctHash = repIds.join(labels.select(col("nid"), col("rep")), "nid")
-      .select(col("dhash"), col("rep"), xxhash64(col("rep")).as("rep_nid"))
-    graft.ops.StateLease.writeBandIndex(table, dir, buckets, rebuild = true)(
-      distinctHash.select(explode(packedBandKeys(col("dhash"))).as("band_key"),
-        col("dhash"), col("rep_nid"), col("rep")))
-    labels.select(col("image_id"), col("rep"))
-  }
+                           buckets: Int, maxHamming: Int = 2): DataFrame =
+    graft.ops.Checkpoint.holding { hold =>
+      // ONE payload-decode pass feeds both the clustering and the index
+      val ids = hold(dedupIds(images))
+      val (edges, repIds) = dupEdges(ids, maxHamming, hold)
+      val labels = resolveNames(ids, edges, hold).localCheckpoint(true)
+      // each distinct hash finds its label by its rep member's nid — the
+      // rep table already holds one (nid, dhash) per distinct hash, so no
+      // extra distinct pass runs here
+      val distinctHash = repIds.join(labels.select(col("nid"), col("rep")), "nid")
+        .select(col("dhash"), col("rep"), xxhash64(col("rep")).as("rep_nid"))
+      graft.ops.StateLease.writeBandIndex(table, dir, buckets, rebuild = true)(
+        distinctHash.select(explode(packedBandKeys(col("dhash"))).as("band_key"),
+          col("dhash"), col("rep_nid"), col("rep")))
+      labels.select(col("image_id"), col("rep"))
+    }
 
   /** Deduplicate a NEW batch, given as its [[dedupIds]] projection,
     * against persisted state WITHOUT touching the old corpus — the only

@@ -46,12 +46,13 @@ object Components {
     * map-side split keeps their rows out of the hash exchange
     * entirely); everything else takes the plain shuffle join. Returns
     * (joined rows with column m, hub count). */
-  private def skewSafeReparent(rows: DataFrame, mIn: DataFrame,
-                               hubDegree: Long): (DataFrame, Long) = {
-    // materialize the re-parent map ONCE (eager, lineage-free, freed by
-    // the ContextCleaner): the hub count probe and the join(s) below all
-    // read it — without this each consumer re-runs the degree aggregation
-    val m = mIn.localCheckpoint(true)
+  private def skewSafeReparent(rows: DataFrame, mIn: DataFrame, hubDegree: Long,
+                               hold: DataFrame => DataFrame): (DataFrame, Long) = {
+    // materialize the re-parent map ONCE (eager, lineage-free, held
+    // until the round's edges are): the hub count probe and the join(s)
+    // below all read it — without this each consumer re-runs the degree
+    // aggregation
+    val m = hold(mIn.localCheckpoint(true))
     val hubs = m.filter(col("deg") > hubDegree).select(col("u"), col("m"))
     val hubCount = hubs.count()
     if (hubCount == 0 || hubCount > MaxHubBroadcast)
@@ -67,12 +68,13 @@ object Components {
 
   /** large-star: every neighbor v > u re-parents to m(u) = min(N(u) ∪ {u}).
     * Input/output edges are (a, b) Long columns, orientation-free. */
-  private def largeStar(edges: DataFrame, hubDegree: Long): (DataFrame, Long) = {
+  private def largeStar(edges: DataFrame, hubDegree: Long,
+                        hold: DataFrame => DataFrame): (DataFrame, Long) = {
     val sym = edges.select(col("a").as("u"), col("b").as("v"))
       .unionByName(edges.select(col("b").as("u"), col("a").as("v")))
     val m = sym.groupBy("u").agg(min(col("v")).as("minv"), count(lit(1)).as("deg"))
       .select(col("u"), least(col("u"), col("minv")).as("m"), col("deg"))
-    val (joined, hubs) = skewSafeReparent(sym.filter(col("v") > col("u")), m, hubDegree)
+    val (joined, hubs) = skewSafeReparent(sym.filter(col("v") > col("u")), m, hubDegree, hold)
     (joined.select(col("v").as("a"), col("m").as("b"))
       .filter(col("a") =!= col("b"))
       .distinct(), hubs)
@@ -80,13 +82,14 @@ object Components {
 
   /** small-star: orient (max, min); every small neighbor and u itself
     * re-parent to the minimum neighbor. */
-  private def smallStar(edges: DataFrame, hubDegree: Long): (DataFrame, Long) = {
+  private def smallStar(edges: DataFrame, hubDegree: Long,
+                        hold: DataFrame => DataFrame): (DataFrame, Long) = {
     val oriented = edges.select(
       greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .filter(col("u") =!= col("v"))
     val m = oriented.groupBy("u")
       .agg(min(col("v")).as("m"), count(lit(1)).as("deg"))
-    val (joined, hubs) = skewSafeReparent(oriented, m, hubDegree)
+    val (joined, hubs) = skewSafeReparent(oriented, m, hubDegree, hold)
     val moved = joined
       .select(col("v").as("a"), col("m").as("b"))
       .filter(col("a") =!= col("b"))
@@ -181,9 +184,12 @@ object Components {
     // launch a second job per connectedComponents call for the same bit
     var converged = fp._1 == 0L
     while (!converged && it < maxIter) {
-      val (ls, lsHubs) = largeStar(cur, hubDegree)
-      val (next0, ssHubs) = smallStar(ls, hubDegree)
-      val next = next0.localCheckpoint(true)
+      // the round's two re-parent maps are dead once `next` is materialized
+      val (next, lsHubs, ssHubs) = Checkpoint.holding { hold =>
+        val (ls, lsHubs) = largeStar(cur, hubDegree, hold)
+        val (next0, ssHubs) = smallStar(ls, hubDegree, hold)
+        (next0.localCheckpoint(true), lsHubs, ssHubs)
+      }
       val nfp = fingerprint(next)
       converged = nfp == fp
       fp = nfp

@@ -203,10 +203,9 @@ object CheckpointedTiles {
         if (failAtBucket.contains(b))
           throw new RuntimeException(s"injected failure at bucket $b")
         // input: the bucket's ring of level-L cells (spill sources)
-        val ranges = Cell.kRing(L, bx, by, 1)
-          .map { case (rx, ry) => (Cell.tileRangeLo(L, rx, ry), Cell.tileRangeHi(L, rx, ry)) }
-        val cond = ranges.map { case (lo, hi) => col("cell").between(lo, hi) }.reduce(_ || _)
-        val pts = table.filter(cond).select(ptCols: _*)
+        val pts = table.filter(graft.query.TileOps.cellInRanges(Cell.kRing(L, bx, by, 1)
+          .map { case (rx, ry) => (Cell.tileRangeLo(L, rx, ry), Cell.tileRangeHi(L, rx, ry)) }))
+          .select(ptCols: _*)
         // lineage row count covers the bucket's OWN cell range only —
         // counting the ring input would tally border rows in up to 9
         // buckets and make summed lineage rows useless as a

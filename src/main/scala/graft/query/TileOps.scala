@@ -96,6 +96,20 @@ object TileOps {
   def tileRangeScan(points: DataFrame, z: Int, tx: Int, ty: Int): DataFrame =
     points.filter(col("cell").between(Cell.tileRangeLo(z, tx, ty), Cell.tileRangeHi(z, tx, ty)))
 
+  /** THE cell-range predicate: `cell` lies in one of the inclusive
+    * (lo, hi) ranges. Ranges are sorted and coalesced first
+    * (Cell.coalesceRanges), the BETWEENs combine as a BALANCED OR tree
+    * (a left-deep reduce over thousands of ranges overflows the
+    * analyzer stack), and no ranges is lit(false). Each BETWEEN pushes
+    * to Parquet min/max pruning on the cell-sorted tables. */
+  def cellInRanges(ranges: Seq[(Long, Long)]): Column = {
+    def orTree(rs: IndexedSeq[(Long, Long)]): Column =
+      if (rs.length == 1) col("cell").between(rs.head._1, rs.head._2)
+      else orTree(rs.take(rs.length / 2)) || orTree(rs.drop(rs.length / 2))
+    val merged = Cell.coalesceRanges(ranges).toIndexedSeq
+    if (merged.isEmpty) lit(false) else orTree(merged)
+  }
+
   /** bbox filter in world coordinates (enumerate -b, enumerate.c:127-135;
     * bounds inclusive both ends). */
   def bboxFilter(points: DataFrame, left: Long, top: Long, right: Long, bottom: Long): DataFrame =
@@ -108,14 +122,9 @@ object TileOps {
     * the exact bbox re-filter runs on the surviving rows. */
   def bboxRangeScan(points: DataFrame, left: Long, top: Long, right: Long, bottom: Long,
                     maxRanges: Int = 32): DataFrame = {
-    val ranges = Cell.coverRanges(left, right, top, bottom, maxRanges)
     // degenerate/inverted bbox (e.g. left > right): no covering ranges
-    // -> empty result, matching bboxFilter on the same input (reduce on
-    // an empty seq would throw at plan-build time instead)
-    val rangePred =
-      if (ranges.isEmpty) lit(false)
-      else ranges.map { case (lo, hi) => col("cell").between(lo, hi) }.reduce(_ || _)
-    points.filter(rangePred)
+    // -> empty result, matching bboxFilter on the same input
+    points.filter(cellInRanges(Cell.coverRanges(left, right, top, bottom, maxRanges)))
       .filter(col("x32") >= left && col("x32") <= right &&
         col("y32") >= top && col("y32") <= bottom)
   }

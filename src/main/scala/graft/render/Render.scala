@@ -1,6 +1,6 @@
 package graft.render
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.encode.Feature
@@ -127,12 +127,14 @@ object Render {
     * metabrush mode always emits (meta can push any record's brush over
     * one pixel), and mercator compensation uses the worst-case (extreme
     * latitude) row scale. */
-  def brushSpills(p: RenderParams, zDraw: Int): Boolean = {
-    if (p.metabrush) return true
-    val (_, brush, _) = p.pointParams(zDraw)
-    val worstMerc = p.mercatorBrushScale(zDraw, 0) // row 0 = extreme latitude
-    brush * worstMerc * (p.tilesize / 256.0) * (p.tilesize / 256.0) > 1
-  }
+  def brushSpills(p: RenderParams, zDraw: Int): Boolean =
+    p.metabrush || pointBrush(p, zDraw, 0) > 1 // row 0 = extreme latitude
+
+  /** A point's brush area in pixels at zoom z on tile row `row`, before
+    * the metabrush meta factor: pointParams brush x mercator row scale x
+    * (tilesize/256)^2 (render.c:128-139 + 151-160). */
+  private def pointBrush(p: RenderParams, z: Int, row: Int): Double =
+    p.pointParams(z)._2 * p.mercatorBrushScale(z, row) * (p.tilesize / 256.0) * (p.tilesize / 256.0)
 
   /** Receiving-tile probe ring radius for circle mode: the reference
     * probes above=below=(int)(cloudsize(receiver)+1) tiles
@@ -352,12 +354,8 @@ object Render {
                   pointSpill: Boolean = true): Dataset[TileOut] = {
     val all = unionCmds(points.map(pointCmds(_, zDraw, p, emitSpill = pointSpill)),
       lines.map(lineCmds(_, zDraw, mapbits, p)))
-    val cmds = only match {
-      case Some(pred) =>
-        all.filter(c => pred(Cell.tileKeyX(c.tkey), Cell.tileKeyY(c.tkey)))
-      case None => all
-    }
-    processGrouped(cmds)(renderOne(_, _, mapbits, p, requireOwn))
+    val cmds = only.fold(all)(pred => all.filter(c => pred(Cell.tileKeyX(c.tkey), Cell.tileKeyY(c.tkey))))
+    processGrouped(cmds, requireOwn)(renderOne(_, _, mapbits, p))
   }
 
   /** Render a whole zoom pyramid of points in ONE pass + ONE shuffle:
@@ -379,100 +377,53 @@ object Render {
     val p2 = p.copy(tilesize = p.tilesize * 2)
     val cmds = unionCmds(points.map(pointCmds(_, zr, p2)), lines.map(lineCmds(_, zr, mapbits, p2)))
     val ts = p.tilesize
-    processGrouped(cmds) { (tkey, recs) =>
-      sortRecs(recs)
-      if (requireOwn && !recs.exists(_.own)) Iterator.empty
-      else {
-        val px = Cell.tileKeyX(tkey)
-        val py = Cell.tileKeyY(tkey)
-        val canvas = renderCanvasFresh(recs, zr, px, py, mapbits, p2, ignoreFurther = false)
-        // quadrants consumed lazily but strictly in sequence, so the
-        // ToneMap thread-local buffer is PNG-encoded before reuse
-        (0 until 4).iterator.map { q =>
-          val qx = q >> 1; val qy = q & 1
-          val sub = canvas.crop(qx * ts, qy * ts, ts, ts)
-          val rgba = ToneMap(sub, p)
-          TileOut(z, 2 * px + qx, 2 * py + qy, Png.encode(rgba, ts, ts))
-        }
+    processGrouped(cmds, requireOwn) { (tkey, recs) =>
+      val px = Cell.tileKeyX(tkey)
+      val py = Cell.tileKeyY(tkey)
+      val canvas = renderCanvasFresh(recs, zr, px, py, mapbits, p2, ignoreFurther = false)
+      // quadrants consumed lazily but strictly in sequence, so the
+      // ToneMap thread-local buffer is PNG-encoded before reuse
+      (0 until 4).iterator.map { q =>
+        val qx = q >> 1; val qy = q & 1
+        val sub = canvas.crop(qx * ts, qy * ts, ts, ts)
+        val rgba = ToneMap(sub, p)
+        TileOut(z, 2 * px + qx, 2 * py + qy, Png.encode(rgba, ts, ts))
       }
     }
   }
 
-  /** S9 raster-text debug backend (raster.c): every POINT draw position
-    * re-projected to "lat,lon" text, exactly as `render-raster` prints —
-    * the draw loop of renderCanvasInto with emission instead of
-    * rasterization (bb<=1 prints the drawPixel arg xsc-.5; brushes print
-    * the center; raster.c:82-96 re-projects via
-    * bx += x/width*scale with C trunc-toward-zero). Lines are omitted
-    * (the raster backend walks Bresenham pixels; use the PNG path). */
+  /** S9 raster-text debug backend (raster.c): every POINT draw of the
+    * tile re-projected to "lat,lon" text, exactly as `render-raster`
+    * prints — renderCanvasInto's loop run against a TextTarget instead
+    * of a Canvas. Lines are omitted (the raster backend walks Bresenham
+    * pixels; use the PNG path). */
   def rasterDebugDump(points: DataFrame, zDraw: Int, txSel: Int, tySel: Int,
                       mapbits: Int, p: RenderParams): Seq[String] = {
     val want = Cell.tileKey(zDraw, txSel, tySel)
     val recs = pointCmds(points, zDraw, p).filter(_.tkey == want).collect()
     sortRecs(recs)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val (_, brush0, _) = p.pointParams(zDraw)
-    val bPt0 = brush0 * p.mercatorBrushScale(zDraw, tySel) * (p.tilesize / 256.0) * (p.tilesize / 256.0)
-    var further = false
-    var cloudTodo = 0L
-    var cloudSlot = Long.MinValue
-    val noise = zDraw >= mapbits / 2 - 8
-    val noisebits = 32 - mapbits / 2
-    val ts = p.tilesize
-    val scale = 1L << (32 - zDraw)
-    def emit(x: Double, y: Double): Unit = {
-      var bx = (txSel.toLong * scale).toDouble + x / ts * scale
-      var by = (tySel.toLong * scale).toDouble + y / ts * scale
-      out += f"${Mercator.tileToLat(by.toLong, 32)}%.6f,${Mercator.tileToLon(bx.toLong, 32)}%.6f"
+    val text = new TextTarget(zDraw, txSel, tySel, p.tilesize)
+    renderCanvasInto(text, recs, zDraw, txSel, tySel, mapbits, p, ignoreFurther = false)
+    text.lines.toSeq
+  }
+
+  /** raster.c's draw backend: a pixel splat prints its drawPixel
+    * argument, a brush its center, each re-projected via
+    * bx += x/width*scale with C trunc-toward-zero (raster.c:82-96);
+    * lines print nothing. */
+  private final class TextTarget(z: Int, tx: Int, ty: Int, ts: Int) extends DrawTarget {
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    private val scale = 1L << (32 - z)
+    private def emit(x: Double, y: Double): Unit = {
+      val bx = (tx.toLong * scale).toDouble + x / ts * scale
+      val by = (ty.toLong * scale).toDouble + y / ts * scale
+      lines += f"${Mercator.tileToLat(by.toLong, 32)}%.6f,${Mercator.tileToLon(bx.toLong, 32)}%.6f"
     }
-    recs.foreach { r =>
-      val drawIt = r.slot == -1 || further || p.circle > 0
-      if (drawIt && r.meta <= p.maxmeta && r.vertices.length == 1) {
-        var x = Cell.decodeX(r.vertices(0))
-        var y = Cell.decodeY(r.vertices(0))
-        if (noise) {
-          var xi = x.toInt; var yi = y.toInt
-          var j = 0
-          while (j < noisebits) {
-            xi |= ((y.toInt >>> (2 * noisebits - 1 - j)) & 1) << j
-            yi |= ((x.toInt >>> (2 * noisebits - 1 - j)) & 1) << j
-            j += 1
-          }
-          x = xi.toLong & 0xFFFFFFFFL; y = yi.toLong & 0xFFFFFFFFL
-        }
-        var bb = bPt0
-        if (p.metabrush) bb *= r.meta
-        val xd = Mercator.worldToTileFracX(x, zDraw, txSel)
-        val yd = Mercator.worldToTileFracY(y, zDraw, tySel)
-        var xsc = xd * ts
-        var ysc = yd * ts
-        if (!p.antialias) { xsc = (xd * ts).toInt + .5; ysc = (yd * ts).toInt + .5 }
-        if (p.circle > 0) {
-          val size = p.cloudSize(zDraw, txSel, tySel) * ts
-          val (step0, _, _) = p.pointParams(zDraw)
-          val innerstep = if (step0 > 1 && size > .0625) step0 else 1
-          if (size < .5) {
-            if (bb <= 1) emit(xsc - .5, ysc - .5)
-            else { emit(xsc, ysc); if (r.slot == -1) further = true }
-          } else if (xsc + size >= 0 && ysc + size >= 0 && xsc - size <= ts && ysc - size <= ts) {
-            val rng = new GlibcRand(x * 37 + y)
-            if (r.slot != cloudSlot) { cloudTodo = 0L; cloudSlot = r.slot }
-            cloudTodo += r.meta
-            while (cloudTodo > 0) {
-              val rr = math.sqrt(rng.nextU())
-              val ang = rng.nextU() * 2 * math.Pi
-              val xp = xsc + size * rr * math.cos(ang)
-              val yp = ysc + size * rr * math.sin(ang)
-              if (bb <= 1) emit(xp - .5, yp - .5)
-              else { emit(xp, yp); if (r.slot == -1) further = true }
-              cloudTodo -= innerstep
-            }
-          }
-        } else if (bb <= 1) emit(xsc - .5, ysc - .5)
-        else { emit(xsc, ysc); if (r.slot == -1) further = true }
-      }
-    }
-    out.toSeq
+    def drawPixel(x: Double, y: Double, bright: Double, hue: Double): Unit = emit(x, y)
+    def drawBrush(x: Double, y: Double, bright: Double, brush: Double, hue: Double, gaussian: Boolean): Unit =
+      emit(x, y)
+    def drawClip(x0: Double, y0: Double, x1: Double, y1: Double, bright: Double, hue: Double,
+                 antialias: Boolean, thick: Double): Unit = ()
   }
 
   /** Full mixed tileset (points + polylines, every zoom) in ONE job and
@@ -498,7 +449,7 @@ object Render {
       else pyramidCmds(graft.ops.ReadBalance.fanOut(pointSource(pts, zooms, p)), zooms, p)
     }
     val lc = lines.map(ls => zooms.map(z => lineCmds(ls, z, mapbits, p)).reduce(_ union _))
-    processGrouped(unionCmds(pc, lc))(renderOne(_, _, mapbits, p, requireOwn = true))
+    processGrouped(unionCmds(pc, lc), requireOwn = true)(renderOne(_, _, mapbits, p))
   }
 
   /** Point and line commands feed ONE shuffle. */
@@ -538,29 +489,25 @@ object Render {
                         requireOwn: Boolean = true): Dataset[TileOut] = {
     val cmds = unionCmds(points.map(pointCmds(_, zDraw, p)), lines.map(lineCmds(_, zDraw, mapbits, p)))
     val ext = Mvt.Extent
-    processGrouped(cmds) { (tkey, recs) =>
+    processGrouped(cmds, requireOwn) { (tkey, recs) =>
       val z = Cell.tileKeyZ(tkey)
       val tx = Cell.tileKeyX(tkey)
       val ty = Cell.tileKeyY(tkey)
-      sortRecs(recs)
-      if (requireOwn && !recs.exists(_.own)) Iterator.empty
-      else {
-        def local(c: Long): (Int, Int) = {
-          val fx = Mercator.worldToTileFracX(Cell.decodeX(c), z, tx)
-          val fy = Mercator.worldToTileFracY(Cell.decodeY(c), z, ty)
-          ((fx * ext).toInt, (fy * ext).toInt)
-        }
-        val pts = recs.filter(r => r.vertices.length == 1 && r.slot == -1).map { r =>
-          val (x, y) = local(r.vertices(0))
-          Mvt.MvtFeature(Array(x), Array(y), r.meta)
-        }.toSeq
-        val lns = recs.filter(_.vertices.length > 1).map { r =>
-          val xy = r.vertices.map(local)
-          Mvt.MvtFeature(xy.map(_._1), xy.map(_._2), r.meta)
-        }.toSeq
-        if (pts.isEmpty && lns.isEmpty) Iterator.empty
-        else Iterator.single(TileOut(z, tx, ty, Mvt.encode(pts, lns, hasMeta = true)))
+      def local(c: Long): (Int, Int) = {
+        val fx = Mercator.worldToTileFracX(Cell.decodeX(c), z, tx)
+        val fy = Mercator.worldToTileFracY(Cell.decodeY(c), z, ty)
+        ((fx * ext).toInt, (fy * ext).toInt)
       }
+      val pts = recs.filter(r => r.vertices.length == 1 && r.slot == -1).map { r =>
+        val (x, y) = local(r.vertices(0))
+        Mvt.MvtFeature(Array(x), Array(y), r.meta)
+      }.toSeq
+      val lns = recs.filter(_.vertices.length > 1).map { r =>
+        val xy = r.vertices.map(local)
+        Mvt.MvtFeature(xy.map(_._1), xy.map(_._2), r.meta)
+      }.toSeq
+      if (pts.isEmpty && lns.isEmpty) Iterator.empty
+      else Iterator.single(TileOut(z, tx, ty, Mvt.encode(pts, lns, hasMeta = true)))
     }
   }
 
@@ -601,10 +548,18 @@ object Render {
       }
   }
 
-  private def processGrouped(cmds: Dataset[FeatCmd])(f: (Long, Array[FeatCmd]) => Iterator[TileOut]): Dataset[TileOut] = {
+  /** THE tile reducer behind every PNG/MVT finisher: one explicit tkey
+    * shuffle; each tile's commands reach `f` in reference order
+    * (sortRecs), and with requireOwn a tile that no record's first
+    * vertex lies in is dropped. */
+  private def processGrouped(cmds: Dataset[FeatCmd], requireOwn: Boolean)(
+      f: (Long, Array[FeatCmd]) => Iterator[TileOut]): Dataset[TileOut] = {
     val spark = cmds.sparkSession
     import spark.implicits._
-    streamGroups(cmds, Seq(col("tkey")), (c: FeatCmd) => c.tkey)(f)
+    streamGroups(cmds, Seq(col("tkey")), (c: FeatCmd) => c.tkey) { (tkey, recs) =>
+      if (requireOwn && !recs.exists(_.own)) Iterator.empty
+      else { sortRecs(recs); f(tkey, recs) }
+    }
   }
 
   /**
@@ -641,7 +596,10 @@ object Render {
         .map { zi =>
           val z = zArr(zi)
           val ty = Cell.tileY(cell, z)
-          (Cell.tileKey(z, Cell.tileX(cell, z), ty), ownSetsFurther(z, ty, meta, p))
+          // an own record sets `further` iff it draws a brush (bb > 1)
+          val b = pointBrush(p, z, ty)
+          val bb = if (p.metabrush) b * meta else b
+          (Cell.tileKey(z, Cell.tileX(cell, z), ty), meta <= p.maxmeta && bb > 1)
         }
     }.groupByKey(_._1)
       .agg(count(lit(1)).as[Long], max(col("_2")).as[Boolean])
@@ -653,8 +611,8 @@ object Render {
     val hotB = spark.sparkContext.broadcast(hotAgg)
 
     val cmds = pyramidCmds(src, zooms, p)
-    val cold = processGrouped(cmds.filter(c => !hotB.value.contains(c.tkey)))(
-      renderOne(_, _, mapbits, p, requireOwn = true))
+    val cold = processGrouped(cmds.filter(c => !hotB.value.contains(c.tkey)), requireOwn = true)(
+      renderOne(_, _, mapbits, p))
     // hot path: salt -> partial canvases -> merge -> tone map. BOTH
     // shuffles go through streamGroups (explicit repartition): a bare
     // groupByKey exchange here is exactly the tiny-but-CPU-heavy shape
@@ -662,6 +620,7 @@ object Render {
     // the hot path exists to parallelize (CLAUDE.md render-reducer
     // invariant; the cold path already did this via processGrouped).
     val saltExpr = expr(s"pmod(vertices[0] ^ meta, ${salts}L)")
+    val partialEnc = Encoders.tuple(Encoders.scalaLong, Encoders.kryo[Canvas])
     val partials = streamGroups(
       cmds.filter(c => hotB.value.contains(c.tkey)),
       Seq(col("tkey"), saltExpr),
@@ -672,48 +631,18 @@ object Render {
         val z = Cell.tileKeyZ(tkey)
         val canvas = renderCanvasFresh(recs, z, Cell.tileKeyX(tkey), Cell.tileKeyY(tkey), mapbits, p,
           ignoreFurther = hotB.value(tkey))
-        // ship hue planes only when a color ramp actually touched them:
-        // accessing cx/cy unconditionally would allocate and serialize
-        // two all-zero tilesize^2 double arrays per partial (3x the
-        // shuffle bytes of the hot path for nothing)
-        Iterator.single((tkey, canvas.image,
-          if (canvas.hasHue) canvas.cx else null,
-          if (canvas.hasHue) canvas.cy else null))
-    }
-    val hotTiles = streamGroups(partials, Seq(col("_1")),
-      (t: (Long, Array[Double], Array[Double], Array[Double])) => t._1) { (tkey, group) =>
+        // the partial canvas ships whole: its dirty-row span rides
+        // along (Canvas.merge walks only those rows) and its hue planes
+        // stay null unless a color ramp drew them
+        Iterator.single((tkey, canvas))
+    }(implicitly, partialEnc)
+    val hotTiles = streamGroups(partials, Seq(col("_1")), (t: (Long, Canvas)) => t._1) { (tkey, group) =>
       val z = Cell.tileKeyZ(tkey)
-      val merged = new Canvas(p.tilesize, p.tilesize)
-      // raw-array merge bypasses putPixel: mark the whole canvas dirty
-      merged.minY = 0
-      merged.maxY = p.tilesize - 1
-      group.foreach { case (_, img, cx, cy) =>
-        var i = 0
-        while (i < img.length) { merged.image(i) += img(i); i += 1 }
-        if (cx != null) {
-          val mcx = merged.cx; val mcy = merged.cy // allocates on first hue partial
-          i = 0
-          while (i < img.length) { mcx(i) += cx(i); mcy(i) += cy(i); i += 1 }
-        }
-      }
+      val merged = group.iterator.map(_._2).reduce(_ merge _)
       val rgba = ToneMap(merged, p)
       Iterator.single(TileOut(z, Cell.tileKeyX(tkey), Cell.tileKeyY(tkey), Png.encode(rgba, p.tilesize, p.tilesize)))
     }
     cold.union(hotTiles)
-  }
-
-  /** Would an own point record with this meta set the renderer's
-    * `further` flag on tile (z, ty)? Mirrors renderCanvasInto's brush
-    * arithmetic: bb = pointParams brush x mercator row scale x
-    * (tilesize/256)^2 [x meta under metabrush]; brushes with bb > 1
-    * draw and gate neighbor-spill drawing. */
-  private def ownSetsFurther(z: Int, ty: Int, meta: Long, p: RenderParams): Boolean = {
-    if (meta > p.maxmeta) return false
-    val (_, brush0, _) = p.pointParams(z)
-    val bb0 = brush0 * p.mercatorBrushScale(z, ty) *
-      (p.tilesize / 256.0) * (p.tilesize / 256.0)
-    val bb = if (p.metabrush) bb0 * meta else bb0
-    bb > 1
   }
 
   /** THE point-command emitter outside circle mode, for one zoom or a
@@ -761,19 +690,14 @@ object Render {
   }
 
   /** THE PNG tile finisher (renderTiles, renderPyramidAll and the salted
-    * path's cold tiles). */
-  private def renderOne(tkey: Long, recs: Array[FeatCmd], mapbits: Int, p: RenderParams,
-                        requireOwn: Boolean): Iterator[TileOut] = {
+    * path's cold tiles), over processGrouped's sorted tile commands. */
+  private def renderOne(tkey: Long, recs: Array[FeatCmd], mapbits: Int, p: RenderParams): Iterator[TileOut] = {
     val z = Cell.tileKeyZ(tkey)
     val tx = Cell.tileKeyX(tkey)
     val ty = Cell.tileKeyY(tkey)
-    sortRecs(recs)
-    if (requireOwn && !recs.exists(_.own)) Iterator.empty
-    else {
-      val canvas = renderCanvas(recs, z, tx, ty, mapbits, p)
-      val rgba = ToneMap(canvas, p)
-      Iterator.single(TileOut(z, tx, ty, Png.encode(rgba, p.tilesize, p.tilesize)))
-    }
+    val canvas = renderCanvas(recs, z, tx, ty, mapbits, p)
+    val rgba = ToneMap(canvas, p)
+    Iterator.single(TileOut(z, tx, ty, Png.encode(rgba, p.tilesize, p.tilesize)))
   }
 
   /** Reference processing order: slot, then packed-record memcmp order
@@ -797,9 +721,9 @@ object Render {
 
   private val canvasCache = new ThreadLocal[Canvas]
 
-  /** Per-tile canvas accumulation (process(), render.c:74-368).
-    * The canvas is a reused thread-local buffer: consumed (tone-mapped)
-    * before the next tile renders on the same thread. */
+  /** One tile's canvas: the draw loop on a reused thread-local buffer,
+    * consumed (tone-mapped) before the next tile renders on the same
+    * thread. */
   def renderCanvas(recs: Array[FeatCmd], z: Int, tx: Int, ty: Int,
                    mapbits: Int, p: RenderParams): Canvas = {
     var canvas = canvasCache.get()
@@ -811,9 +735,10 @@ object Render {
     canvas
   }
 
-  /** Fresh (escaping) canvas variant for the salted partial-aggregation
-    * path; ignoreFurther draws neighbor spill unconditionally (valid on
-    * hot tiles, whose own range always draws brushes). */
+  /** Fresh (escaping) canvas variant for retina parents and the salted
+    * partials; ignoreFurther presets the spill gate (a salted partial
+    * holds only a slice of the tile's own records, so the gate comes
+    * precomputed over all of them). */
   def renderCanvasFresh(recs: Array[FeatCmd], z: Int, tx: Int, ty: Int,
                         mapbits: Int, p: RenderParams, ignoreFurther: Boolean): Canvas = {
     val canvas = new Canvas(p.tilesize, p.tilesize)
@@ -821,12 +746,14 @@ object Render {
     canvas
   }
 
-  private def renderCanvasInto(canvas: Canvas, recs: Array[FeatCmd], z: Int, tx: Int, ty: Int,
+  /** THE draw loop (process(), render.c:74-368): every point and line
+    * record of a sorted tile becomes pixel, brush and clipped-line calls
+    * on `target` — a Canvas for PNG tiles, a TextTarget for the
+    * raster-text dump. */
+  private def renderCanvasInto(target: DrawTarget, recs: Array[FeatCmd], z: Int, tx: Int, ty: Int,
                                mapbits: Int, p: RenderParams, ignoreFurther: Boolean): Unit = {
-    val (_, brush0, brightPt0) = p.pointParams(z)
-    val mercScale = p.mercatorBrushScale(z, ty)
-    val brush = brush0 * mercScale
-    val bPt = brush * (p.tilesize / 256.0) * (p.tilesize / 256.0)
+    val (_, _, brightPt0) = p.pointParams(z)
+    val bPt = pointBrush(p, z, ty)
     val (thick0, brightLn0) = p.lineParams(z)
     var further = ignoreFurther
     val noise = z >= mapbits / 2 - 8
@@ -898,9 +825,9 @@ object Render {
             val innerstep = if (step0 > 1 && size > .0625) step0 else 1
             if (size < .5) {
               if (bb <= 1) {
-                canvas.drawPixel(xsc - .5, ysc - .5, bright * bb * r.meta / innerstep, hue)
+                target.drawPixel(xsc - .5, ysc - .5, bright * bb * r.meta / innerstep, hue)
               } else {
-                Raster.drawBrush(xsc, ysc, canvas, bright * r.meta / innerstep, bb, hue, p.gaussian)
+                target.drawBrush(xsc, ysc, bright * r.meta / innerstep, bb, hue, p.gaussian)
                 if (r.slot == -1) further = true
               }
             } else if (xsc + size >= 0 && ysc + size >= 0 &&
@@ -918,57 +845,43 @@ object Render {
                 val xp = xsc + size * rr * math.cos(ang)
                 val yp = ysc + size * rr * math.sin(ang)
                 if (bb <= 1) {
-                  canvas.drawPixel(xp - .5, yp - .5, bright * bb, hue)
+                  target.drawPixel(xp - .5, yp - .5, bright * bb, hue)
                 } else {
-                  Raster.drawBrush(xp, yp, canvas, bright, bb, hue, p.gaussian)
+                  target.drawBrush(xp, yp, bright, bb, hue, p.gaussian)
                   if (r.slot == -1) further = true
                 }
                 cloudTodo -= innerstep
               }
             }
           } else if (bb <= 1) {
-            canvas.drawPixel(xsc - .5, ysc - .5, bright * bb, hue)
+            target.drawPixel(xsc - .5, ysc - .5, bright * bb, hue)
           } else {
-            Raster.drawBrush(xsc, ysc, canvas, bright, bb, hue, p.gaussian)
+            target.drawBrush(xsc, ysc, bright, bb, hue, p.gaussian)
             if (r.slot == -1) further = true
           }
         } else {
           var bright = brightLn0
           if (p.metabright) bright *= r.meta
-          val xd = new Array[Double](n)
-          val yd = new Array[Double](n)
-          var j = 0
-          while (j < n) {
-            xd(j) = Mercator.worldToTileFracX(xs(j), z, tx)
-            yd(j) = Mercator.worldToTileFracY(ys(j), z, ty)
-            j += 1
-          }
           val ts = p.tilesize
           val thick1 = thick0 * ts / 256.0
+          def px(x: Long): Double = Mercator.worldToTileFracX(x, z, tx) * ts
           var kk = 1
           while (kk < n) {
-            var bright1 = bright
-            if (p.gps) {
-              bright1 = p.gpsAttenuate(bright1,
+            val bright1 =
+              if (p.gps) p.gpsAttenuate(bright,
                 (xs(kk) - xs(kk - 1)).toDouble, (ys(kk) - ys(kk - 1)).toDouble, z)
-            }
+              else bright
             if (bright1 != 0) {
-              val xk1 = xs(kk - 1)
-              val xk = xs(kk)
-              if (xk - xk1 >= (1L << 31)) {
-                // segment wraps westward: draw twice shifted (render.c:340-348)
-                val xdw = Mercator.worldToTileFracX(xk - (1L << 32), z, tx)
-                Raster.drawClip(xd(kk - 1) * ts, yd(kk - 1) * ts, xdw * ts, yd(kk) * ts, canvas, bright1, hue, p.antialias, thick1)
-                val xd1w = Mercator.worldToTileFracX(xk1 + (1L << 32), z, tx)
-                Raster.drawClip(xd1w * ts, yd(kk - 1) * ts, xd(kk) * ts, yd(kk) * ts, canvas, bright1, hue, p.antialias, thick1)
-              } else if (xk1 - xk >= (1L << 31)) {
-                val xd1w = Mercator.worldToTileFracX(xk1 - (1L << 32), z, tx)
-                Raster.drawClip(xd1w * ts, yd(kk - 1) * ts, xd(kk) * ts, yd(kk) * ts, canvas, bright1, hue, p.antialias, thick1)
-                val xdw = Mercator.worldToTileFracX(xk + (1L << 32), z, tx)
-                Raster.drawClip(xd(kk - 1) * ts, yd(kk - 1) * ts, xdw * ts, yd(kk) * ts, canvas, bright1, hue, p.antialias, thick1)
-              } else {
-                Raster.drawClip(xd(kk - 1) * ts, yd(kk - 1) * ts, xd(kk) * ts, yd(kk) * ts, canvas, bright1, hue, p.antialias, thick1)
-              }
+              val xa = xs(kk - 1)
+              val xb = xs(kk)
+              val ya = Mercator.worldToTileFracY(ys(kk - 1), z, ty) * ts
+              val yb = Mercator.worldToTileFracY(ys(kk), z, ty) * ts
+              def seg(x0: Long, x1: Long): Unit =
+                target.drawClip(px(x0), ya, px(x1), yb, bright1, hue, p.antialias, thick1)
+              // a segment across the antimeridian draws twice, shifted (render.c:340-348)
+              if (xb - xa >= (1L << 31)) { seg(xa, xb - (1L << 32)); seg(xa + (1L << 32), xb) }
+              else if (xa - xb >= (1L << 31)) { seg(xa - (1L << 32), xb); seg(xa, xb + (1L << 32)) }
+              else seg(xa, xb)
             }
             kk += 1
           }

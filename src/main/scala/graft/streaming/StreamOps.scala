@@ -269,30 +269,16 @@ object StreamOps {
             val affected: Set[Long] = keyed.filter(_._2).map(_._1).toSet
             val dataKeys: Set[Long] = keyed.map(_._1).toSet
             // one range scan covering every needed tile: the min-zoom
-            // ANCESTOR ranges contain all deeper tiles' records. Sorted
-            // adjacent ranges coalesce (Z-order neighbors fuse), and the
-            // OR combines as a BALANCED tree — a left-deep reduce over
-            // thousands of ranges overflows the analyzer stack.
+            // ANCESTOR ranges contain all deeper tiles' records
+            // (Z-order neighbors fuse in the coalesced predicate)
             val zmin = zArr.min
-            val raw = dataKeys.map { k =>
+            val ranges = dataKeys.map { k =>
               val dz = Cell.tileKeyZ(k) - zmin
-              Cell.tileKey(zmin, Cell.tileKeyX(k) >> dz, Cell.tileKeyY(k) >> dz)
-            }.map { k =>
-              (Cell.tileRangeLo(zmin, Cell.tileKeyX(k), Cell.tileKeyY(k)),
-                Cell.tileRangeHi(zmin, Cell.tileKeyX(k), Cell.tileKeyY(k)))
-            }.toSeq.sorted
-            val merged = raw.foldLeft(List.empty[(Long, Long)]) {
-              case ((lo0, hi0) :: rest, (lo, hi)) if lo <= hi0 + 1 =>
-                (lo0, math.max(hi0, hi)) :: rest
-              case (acc, r) => r :: acc
-            }.reverse
-            def orTree(cs: IndexedSeq[org.apache.spark.sql.Column]): org.apache.spark.sql.Column =
-              if (cs.length == 1) cs.head
-              else orTree(cs.take(cs.length / 2)) || orTree(cs.drop(cs.length / 2))
-            val cond = orTree(merged.map { case (lo, hi) =>
-              col("cell") >= lo && col("cell") <= hi
-            }.toIndexedSeq)
-            val subset = spark.read.parquet(snapshotDir).filter(cond)
+              val (ax, ay) = (Cell.tileKeyX(k) >> dz, Cell.tileKeyY(k) >> dz)
+              (Cell.tileRangeLo(zmin, ax, ay), Cell.tileRangeHi(zmin, ax, ay))
+            }.toSeq
+            val subset = spark.read.parquet(snapshotDir)
+              .filter(graft.query.TileOps.cellInRanges(ranges))
             // broadcast the affected-tile set instead of capturing it in
             // |zArr| task closures (the renderPyramidSalted hotB pattern)
             val affectedB = spark.sparkContext.broadcast(affected)

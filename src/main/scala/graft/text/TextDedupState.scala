@@ -109,23 +109,27 @@ object TextDedupState {
 
   /** Build the persisted state: batch-cluster `docs` (md5 pregroup +
     * capped LSH pairs + connected components — the q42 partition),
-    * land the bucketed band index, return the labels (doc_id, rep). */
+    * land the bucketed band index, return the labels (doc_id, rep).
+    * Every checkpoint made on the way is freed once the index is
+    * written; only the returned labels' stays. */
   def writeTextDedupState(docs: DataFrame, dir: String, table: String,
-                          buckets: Int): DataFrame = {
-    val p = prepare(docs)
-    val comp = graft.ops.Components
-      .connectedComponents(p.starEdges.unionByName(batchPairs(p.bands)))
-      .withColumnRenamed("node", "doc_id")
-    val labels = p.ids
-      .join(comp, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep"))
-      .localCheckpoint(true)
-    graft.ops.StateLease.writeBandIndex(table, dir, buckets, rebuild = true)(
-      p.bands
-        .join(labels, "doc_id")
-        .select(col("band"), col("band_key"), col("text_md5"), col("rep")))
-    labels
-  }
+                          buckets: Int): DataFrame =
+    graft.ops.Checkpoint.holding { hold =>
+      val p = prepare(docs)
+      p.checkpoints.foreach(hold)
+      val comp = graft.ops.Components
+        .connectedComponents(p.starEdges.unionByName(batchPairs(p.bands, hold)))
+        .withColumnRenamed("node", "doc_id")
+      val labels = p.ids
+        .join(comp, Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep"))
+        .localCheckpoint(true)
+      graft.ops.StateLease.writeBandIndex(table, dir, buckets, rebuild = true)(
+        p.bands
+          .join(labels, "doc_id")
+          .select(col("band"), col("band_key"), col("text_md5"), col("rep")))
+      labels
+    }
 
   /** Dedup a NEW prepared batch against the persisted band index
     * WITHOUT touching the old corpus: within the batch, the full

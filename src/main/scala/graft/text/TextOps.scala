@@ -422,15 +422,8 @@ object TextOps {
     * Hash collisions (~2^-62/pair) can only ADD a false hit — the safe
     * direction for a decontamination filter — and the oracle hashes
     * identically, so verification is exact. */
-  def contamination(docs: DataFrame, probes: DataFrame, n: Int): DataFrame = {
-    val docSh = docs.select(col("doc_id"),
-      explode(tokenShingleHashes(col("text"), n)).as("sh"))
-    val probeSh = probes.select(explode(tokenShingleHashes(col("text"), n)).as("sh"))
-      .distinct()
-    docSh.join(broadcast(probeSh), "sh")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("hits"), countDistinct(col("sh")).as("distinct_hits"))
-  }
+  def contamination(docs: DataFrame, probes: DataFrame, n: Int): DataFrame =
+    contaminationBy(docs, probes, tokenShingleHashes(_, n))
 
   /** Exact-substring decontamination — the complement of token-shingle
     * [[contamination]]: flag corpus documents sharing any `n`-CHARACTER
@@ -446,14 +439,19 @@ object TextOps {
     * materializing each window) and only (doc_id, hash) rows aggregate.
     * Collisions can only add a false hit (safe direction); the oracle
     * hashes identically. */
-  def substringContamination(docs: DataFrame, probes: DataFrame, n: Int): DataFrame = {
-    val docW = docs.select(col("doc_id"),
-      explode(charNgramHashes(col("text"), n)).as("wh"))
-    val probeW = probes.select(explode(charNgramHashes(col("text"), n)).as("wh"))
-      .distinct()
-    docW.join(broadcast(probeW), "wh")
+  def substringContamination(docs: DataFrame, probes: DataFrame, n: Int): DataFrame =
+    contaminationBy(docs, probes, charNgramHashes(_, n))
+
+  /** The one decontamination body: `hashes` maps a text column to its
+    * array of Long keys; the distinct probe keys broadcast, and matching
+    * corpus keys aggregate per doc to (doc_id, hits, distinct_hits). */
+  private def contaminationBy(docs: DataFrame, probes: DataFrame,
+                              hashes: Column => Column): DataFrame = {
+    val docH = docs.select(col("doc_id"), explode(hashes(col("text"))).as("h"))
+    val probeH = probes.select(explode(hashes(col("text"))).as("h")).distinct()
+    docH.join(broadcast(probeH), "h")
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("hits"), countDistinct(col("wh")).as("distinct_hits"))
+      .agg(count(lit(1)).as("hits"), countDistinct(col("h")).as("distinct_hits"))
   }
 
   /** Intra-corpus duplicate-SPAN detection (Lee et al.-style "dedup the
