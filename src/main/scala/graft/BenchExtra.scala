@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.functions.{col, lit}
 
 /**
  * Measurement-only companion to [[Bench]] (guide §1.4 noop-sink
@@ -17,6 +18,8 @@ import org.apache.spark.sql.execution.ExplainMode
  * Usage (same env contract as Bench):
  *   runMain graft.BenchExtra explain <dirTag> [query...]
  *   runMain graft.BenchExtra time [query...]
+ *   runMain graft.BenchExtra jobs <query>
+ *   runMain graft.BenchExtra rank <sortedDir> [reps]
  */
 object BenchExtra {
   /** Cumulative counters a query run drains: jobs launched, stages run,
@@ -45,6 +48,17 @@ object BenchExtra {
 
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  /** The pyramid's encode step: 60k generated image rows (seed 7),
+    * geotagged to (cell, meta) and written range-partitioned and sorted
+    * on (cell, meta), one file per range. */
+  private def writeSorted(spark: SparkSession, dir: String, cpus: Int): Unit =
+    graft.tables.ImageTable.generate(spark, 60000L, 7L, partitions = cpus * 2).select(
+      graft.functions.geotag_cell(col("phash")).as("cell"),
+      col("phash").bitwiseAND(lit(0xFFL)).as("meta"))
+      .repartitionByRange(cpus * 2, col("cell"))
+      .sortWithinPartitions(col("cell"), col("meta"))
+      .write.parquet(dir)
 
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
@@ -128,8 +142,45 @@ object BenchExtra {
         Thread.sleep(300)
         lines.forEach(l => println(l))
         println(f"total $name: $wall%.3f s")
+      case "rank" =>
+        // the rank layer alone: writeRankedSnapshot on a sorted table (the
+        // in-place path) and on the same rows behind a repartition (the
+        // shuffle path, chosen by the plan's shape); rep 0 warms up
+        val sorted = rest.headOption.getOrElse(sys.error("rank: <sortedDir> required"))
+        val reps = rest.lift(1).map(_.toInt).getOrElse(5)
+        require(reps >= 1, "rank: reps must be at least 1")
+        if (!new java.io.File(sorted).exists()) writeSorted(spark, sorted, cpus)
+        val out = java.nio.file.Files.createTempDirectory("benchextra-rank").toString
+        val probe = new Probe
+        spark.sparkContext.addSparkListener(probe)
+        // a fresh frame per rep: a reused one would reuse the repartition's
+        // shuffle files and hide part of the shuffle path's cost
+        def input(name: String): DataFrame = {
+          val points = spark.read.parquet(sorted).select(col("cell"), col("meta"))
+          if (name == "sorted") points else points.repartition(cpus)
+        }
+        val inputs = Seq("sorted", "repartitioned")
+        val walls = scala.collection.mutable.Map.empty[String, Seq[Double]].withDefaultValue(Nil)
+        println("input,rep,wall_s,jobs,shuffle_mb,path")
+        for (rep <- 0 to reps; name <- inputs) {
+          val df = input(name)
+          Thread.sleep(200)
+          val before = probe.snap()
+          val t0 = System.nanoTime()
+          graft.render.Render.writeRankedSnapshot(df, s"$out/$name")
+          val wall = (System.nanoTime() - t0) / 1e9
+          Thread.sleep(200)
+          val after = probe.snap()
+          val shuffle = after._4 - before._4
+          if (rep > 0) walls(name) :+= wall
+          println(f"$name,$rep,$wall%.3f,${after._1 - before._1},${shuffle / 1e6}%.2f," +
+            (if (shuffle == 0) "in-place" else "shuffle"))
+        }
+        inputs.foreach { name =>
+          println(f"median $name: ${walls(name).sorted.apply(walls(name).size / 2)}%.3f s over $reps reps")
+        }
       case other =>
-        sys.error(s"unknown BenchExtra mode '$other' (use explain|time|jobs)")
+        sys.error(s"unknown BenchExtra mode '$other' (use explain|time|jobs|rank)")
     }
     spark.stop()
   }

@@ -2,8 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Cell, Mercator, RenderParams}
-import graft.encode.Feature
+import graft.core.{Cell, Feature, Mercator, RenderParams}
 import graft.sinks.Sinks
 import graft.sources.{DatamapsSource, TextSource}
 
@@ -195,10 +194,11 @@ object Cli {
       val points = render_.withGlobalRank(
         feats.filter((f: Feature) => f.vertices.length == 1)
           .map(f => (f.cell, f.meta)).toDF("cell", "meta"))
-      val lines = feats.filter((f: Feature) => f.vertices.length > 1)
-      val tiles = render_.renderPyramidAll(Some(points), Some(lines), zooms, mapbits, p)
-      Sinks.writeTileset(tiles, out, pos.head)
-      points.unpersist()
+      try {
+        val lines = feats.filter((f: Feature) => f.vertices.length > 1)
+        val tiles = render_.renderPyramidAll(Some(points), Some(lines), zooms, mapbits, p)
+        Sinks.writeTileset(tiles, out, pos.head)
+      } finally points.unpersist()
     }
   }
 
@@ -398,56 +398,58 @@ object Cli {
     val points = render_.withGlobalRank(
       feats.filter((f: Feature) => f.vertices.length == 1)
         .map(f => (f.cell, f.meta)).toDF("cell", "meta"))
-    val lines = feats.filter((f: Feature) => f.vertices.length > 1)
+    try {
+      val lines = feats.filter((f: Feature) => f.vertices.length > 1)
 
-    if (flags.contains('A')) {
-      val Seq(z, lat1, lon1, lat2, lon2) = pos.tail.take(5)
-      val (rgba, w, h) = Sinks.assemble(Some(points), Some(lines), z.toInt,
-        lat1.toDouble, lon1.toDouble, lat2.toDouble, lon2.toDouble, mapbits, p)
-      System.out.write(graft.core.Png.encode(rgba, w, h)); System.out.flush()
-    } else {
-      val Seq(zs, xs, ys) = pos.tail.take(3)
-      val (z, x, y) = (zs.toInt, xs.toInt, ys.toInt)
-      // single-tile render: after rank assignment (global!), restrict the
-      // point scan to the target tile's neighbor-ring cell ranges — the
-      // Spark analog of the reference's per-range binary search. Cloud
-      // mode keeps the full scan (rings are latitude-dependent).
-      def ringFiltered(zz: Int, tx: Int, ty: Int) =
-        points.filter(graft.query.TileOps.cellInRanges(Cell.kRing(zz, tx, ty, 1)
-          .map { case (rx, ry) => (Cell.tileRangeLo(zz, rx, ry), Cell.tileRangeHi(zz, rx, ry)) }))
-      locally {
-        val tiles =
-          if (flags.contains('r'))
-            render_.renderRetinaTiles(
-              Some(if (p.circle > 0) points else ringFiltered(z - 1, x / 2, y / 2)),
-              Some(lines), z, mapbits, p, requireOwn = false)
-          else render_.renderTiles(
-            Some(if (p.circle > 0) points else ringFiltered(z, x, y)),
-            Some(lines), z, mapbits, p,
-            requireOwn = false, only = Some((tx, ty) => tx == x && ty == y))
-        val tile = tiles.collect().find(t => t.x == x && t.y == y)
-        tile match {
-          case Some(t) =>
-            opts.get('o') match {
-              case Some(outdir) =>
-                Sinks.writeTileset(spark.createDataset(Seq(t))(
-                  org.apache.spark.sql.Encoders.product[graft.render.TileOut]), outdir, pos.head)
-              case None => System.out.write(t.png); System.out.flush()
-            }
-          case None =>
-            // empty tile: tone-map an untouched canvas (background)
-            val bgPng = graft.core.Png.encode(
-              graft.core.ToneMap(new graft.core.Canvas(p.tilesize, p.tilesize), p),
-              p.tilesize, p.tilesize)
-            opts.get('o') match {
-              case Some(outdir) =>
-                Sinks.writeTileset(spark.createDataset(Seq(graft.render.TileOut(z, x, y, bgPng)))(
-                  org.apache.spark.sql.Encoders.product[graft.render.TileOut]), outdir, pos.head)
-              case None => System.out.write(bgPng); System.out.flush()
-            }
+      if (flags.contains('A')) {
+        val Seq(z, lat1, lon1, lat2, lon2) = pos.tail.take(5)
+        val (rgba, w, h) = Sinks.assemble(Some(points), Some(lines), z.toInt,
+          lat1.toDouble, lon1.toDouble, lat2.toDouble, lon2.toDouble, mapbits, p)
+        System.out.write(graft.core.Png.encode(rgba, w, h)); System.out.flush()
+      } else {
+        val Seq(zs, xs, ys) = pos.tail.take(3)
+        val (z, x, y) = (zs.toInt, xs.toInt, ys.toInt)
+        // single-tile render: after rank assignment (global!), restrict the
+        // point scan to the target tile's neighbor-ring cell ranges — the
+        // Spark analog of the reference's per-range binary search. Cloud
+        // mode keeps the full scan (rings are latitude-dependent).
+        def ringFiltered(zz: Int, tx: Int, ty: Int) =
+          points.filter(graft.query.TileOps.cellInRanges(Cell.kRing(zz, tx, ty, 1)
+            .map { case (rx, ry) => (Cell.tileRangeLo(zz, rx, ry), Cell.tileRangeHi(zz, rx, ry)) }))
+        locally {
+          val tiles =
+            if (flags.contains('r'))
+              render_.renderRetinaTiles(
+                Some(if (p.circle > 0) points else ringFiltered(z - 1, x / 2, y / 2)),
+                Some(lines), z, mapbits, p, requireOwn = false)
+            else render_.renderTiles(
+              Some(if (p.circle > 0) points else ringFiltered(z, x, y)),
+              Some(lines), z, mapbits, p,
+              requireOwn = false, only = Some((tx, ty) => tx == x && ty == y))
+          val tile = tiles.collect().find(t => t.x == x && t.y == y)
+          tile match {
+            case Some(t) =>
+              opts.get('o') match {
+                case Some(outdir) =>
+                  Sinks.writeTileset(spark.createDataset(Seq(t))(
+                    org.apache.spark.sql.Encoders.product[graft.render.TileOut]), outdir, pos.head)
+                case None => System.out.write(t.png); System.out.flush()
+              }
+            case None =>
+              // empty tile: tone-map an untouched canvas (background)
+              val bgPng = graft.core.Png.encode(
+                graft.core.ToneMap(new graft.core.Canvas(p.tilesize, p.tilesize), p),
+                p.tilesize, p.tilesize)
+              opts.get('o') match {
+                case Some(outdir) =>
+                  Sinks.writeTileset(spark.createDataset(Seq(graft.render.TileOut(z, x, y, bgPng)))(
+                    org.apache.spark.sql.Encoders.product[graft.render.TileOut]), outdir, pos.head)
+                case None => System.out.write(bgPng); System.out.flush()
+              }
+          }
         }
       }
-    }
+    } finally points.unpersist()
     }
   }
 

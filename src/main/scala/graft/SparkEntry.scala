@@ -747,7 +747,7 @@ object SparkEntry {
             graft.core.Cell.truncate(graft.core.Cell.encode(
               (bx + i * 65536L) & 0xFFFFFFFFL, (by + i * 32768L) & 0xFFFFFFFFL), 48)
           }.toArray
-          graft.encode.Feature(vs(0), vs, k % 256)
+          graft.core.Feature(vs(0), vs, k % 256)
         }
       graft.render.Render.lineTileCover(lines, 10, 48, graft.core.RenderParams())
     }),

@@ -1,4 +1,4 @@
-package graft.encode
+package graft.core
 
 /** A spatial feature: a polyline of cell-id vertices (n=1 = point) plus
   * an unsigned metadata value — the engine's fundamental abstraction

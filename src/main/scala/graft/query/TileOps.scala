@@ -55,7 +55,7 @@ object TileOps {
     * vertex (the reference's documented limitation), per-zoom length
     * normalized by tile span; segments longer than 6400 world units
     * (~200ft) are excluded as GPS jumps. */
-  def enumerateRollupFeatures(features: org.apache.spark.sql.Dataset[graft.encode.Feature],
+  def enumerateRollupFeatures(features: org.apache.spark.sql.Dataset[graft.core.Feature],
                               minZ: Int, maxZ: Int): DataFrame = {
     val spark = features.sparkSession
     import spark.implicits._

@@ -3,7 +3,6 @@ package graft.render
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.encode.Feature
 
 /** One rendered tile. */
 case class TileOut(z: Int, x: Int, y: Int, png: Array[Byte])
@@ -42,6 +41,8 @@ object Render {
   /** Add a global `rank` column over the (cell, meta)-sorted order —
     * the analog of the reference's file offset, needed for the
     * deterministic step-subsample at low zooms (render.c:165-167).
+    * `rankedOnFrozen` picks the path: in place for a sorted parquet
+    * table, otherwise a range shuffle.
     *
     * The RESULT is persisted (MEMORY_AND_DISK) and materialized; callers
     * release it with `.unpersist()` when the renders are done. Memory
@@ -49,53 +50,69 @@ object Render {
     * ~24 B/row columnar, so 10^12 rows is ~24 TB across the cluster,
     * which MEMORY_AND_DISK spills per-executor; at that scale prefer
     * writing the ranked snapshot to storage once and reading it back. */
-  def withGlobalRank(points: DataFrame): DataFrame = {
-    val (ranked0, frozen) = rankedOnFrozen(points)
-    val ranked = ranked0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the ranked cache while `frozen` is still pinned (the
-    // rank values are only valid on the frozen physical partitioning —
-    // a recompute could re-sample different range boundaries), then
-    // release the intermediate so long-running sessions don't leak it.
-    ranked.count()
-    frozen.unpersist()
-    ranked
-  }
+  def withGlobalRank(points: DataFrame): DataFrame =
+    rankedOnFrozen(points) { ranked =>
+      val cached = ranked.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cached.count()
+      cached
+    }(_.unpersist())
 
-  /** Shared rank computation: re-establish a total global order here —
-    * a parquet read does NOT preserve partition order (Spark packs
-    * splits by size), so ranks must come from a fresh range shuffle
-    * whose partition index IS the range order. Ties (equal cell+meta)
-    * may order differently across parallelism levels, but the sampled
-    * multiset is invariant. Returns the lazily-ranked DF plus the
-    * frozen cache handle the caller must consume-then-unpersist: the
-    * cache pins the physical partitioning between the count pass and
-    * the rank pass (the two jobs must see identical partitions).
-    * rank = partitionOffset + local index, computed entirely with
-    * codegen'd expressions: monotonically_increasing_id() packs
-    * (partitionId << 33) | localIndex deterministically on the frozen
-    * partitioning — no Row-object conversion on the (wide) scan. */
-  private def rankedOnFrozen(points: DataFrame): (DataFrame, DataFrame) = {
-    val spark = points.sparkSession
-    val parts = math.max(spark.sparkContext.defaultParallelism, points.rdd.getNumPartitions)
-    val sorted = points
-      .repartitionByRange(parts, col("cell"), col("meta"))
-      .sortWithinPartitions(col("cell"), col("meta"))
-    val frozen = sorted.cache()
-    val withMid = frozen.withColumn("_mid", monotonically_increasing_id())
-    val counts = withMid
-      .groupBy(shiftrightunsigned(col("_mid"), 33).as("pid"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val maxPid = if (counts.isEmpty) 0L else counts.keys.max
-    val offsets = (0L to maxPid).scanLeft(0L)((acc, i) => acc + counts.getOrElse(i, 0L))
-    val offsetMap = map((0L to maxPid).flatMap(i => Seq(lit(i), lit(offsets(i.toInt)))): _*)
-    val ranked = withMid
-      .withColumn("rank",
-        element_at(offsetMap, shiftrightunsigned(col("_mid"), 33)) +
-          col("_mid").bitwiseAND(lit((1L << 33) - 1)))
-      .drop("_mid")
-    (ranked, frozen)
-  }
+  /** Run `consume` (an action) on `points` with a global `rank` column
+    * and return its result; the one place that decides how to rank.
+    * `consume` must materialize what it returns: the shuffle path
+    * unpersists its pinned rows as soon as `consume` returns.
+    *
+    * In place: when `points` is a bare (cell, meta) projection of a
+    * parquet table whose footers put its non-empty files in one
+    * ascending `cell` order, rank = file offset + `_metadata.row_index`
+    * ([[InPlaceRank]]): no sort, no shuffle, and ranks that do not
+    * depend on how the scan splits the files. The pass also checks the
+    * order footers cannot show — (cell, meta) non-decreasing inside each
+    * file and across file boundaries, every row seen once. If that check
+    * fails, `discard` drops the first result and the shuffle path runs.
+    *
+    * Shuffle path (any other plan shape, a missing footer statistic,
+    * overlapping files, or a failed check): re-establish a total order
+    * with a range shuffle whose partition index IS the range order (a
+    * parquet read alone does not preserve partition order: Spark packs
+    * splits by size). The sorted rows are cached to pin the physical
+    * partitioning between the per-partition count job and the rank
+    * pass; rank = partitionOffset + local index via
+    * monotonically_increasing_id()'s (partitionId << 33) | localIndex,
+    * all codegen'd expressions.
+    *
+    * Either way, ties (equal cell and meta) may take different ranks on
+    * the two paths, but tied rows are identical, so the rank -> (cell,
+    * meta) map, and every sampled tile, is the same. */
+  private def rankedOnFrozen[T](points: DataFrame)(consume: DataFrame => T)(discard: T => Unit): T =
+    InPlaceRank.plan(points)
+      .flatMap { inPlace =>
+        val out = consume(inPlace.ranked)
+        if (inPlace.verified()) Some(out) else { discard(out); None }
+      }
+      .getOrElse {
+        val spark = points.sparkSession
+        val parts = math.max(spark.sparkContext.defaultParallelism, points.rdd.getNumPartitions)
+        val frozen = points
+          .repartitionByRange(parts, col("cell"), col("meta"))
+          .sortWithinPartitions(col("cell"), col("meta"))
+          .cache()
+        try {
+          val withMid = frozen.withColumn("_mid", monotonically_increasing_id())
+          val counts = withMid
+            .groupBy(shiftrightunsigned(col("_mid"), 33).as("pid"))
+            .agg(count(lit(1)).as("n"))
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+          val maxPid = if (counts.isEmpty) 0L else counts.keys.max
+          val offsets = (0L to maxPid).scanLeft(0L)((acc, i) => acc + counts.getOrElse(i, 0L))
+          val offsetMap = map((0L to maxPid).flatMap(i => Seq(lit(i), lit(offsets(i.toInt)))): _*)
+          consume(withMid
+            .withColumn("rank",
+              element_at(offsetMap, shiftrightunsigned(col("_mid"), 33)) +
+                col("_mid").bitwiseAND(lit((1L << 33) - 1)))
+            .drop("_mid"))
+        } finally frozen.unpersist()
+      }
 
   /** Rank once, persist to storage: write the narrow (cell, meta, rank)
     * projection as a parquet snapshot. At 10^12 rows this replaces
@@ -103,21 +120,18 @@ object Render {
     * read the ranked table back with an ordinary pruned parquet scan
     * (`readRankedSnapshot`), and the rank values are frozen at write
     * time, so every later session (and every re-render) sees the same
-    * deterministic step sample without re-sorting the corpus. */
-  def writeRankedSnapshot(points: DataFrame, dir: String): Unit = {
-    // write straight off the frozen partitioning — no intermediate
-    // executor persist of the ranked rows, and no extra materialization
-    // pass (the write IS the materialization)
-    val (ranked, frozen) = rankedOnFrozen(points)
-    try ranked.write.mode("overwrite").parquet(dir)
-    finally frozen.unpersist()
-  }
+    * deterministic step sample without re-sorting the corpus. The write
+    * IS the ranking pass: no executor persist of the ranked rows; when
+    * the in-place check fails, the shuffle path overwrites `dir`. */
+  def writeRankedSnapshot(points: DataFrame, dir: String): Unit =
+    rankedOnFrozen(points)(_.write.mode("overwrite").parquet(dir))(_ => ())
 
   /** Read a snapshot written by writeRankedSnapshot. Ranks are stored
-    * values — no shuffle, no cache pin; tile range filters push down to
-    * the (cell-clustered) parquet row groups. */
+    * values — no shuffle, no cache pin, and no schema-inference job (the
+    * schema is known); tile range filters push down to the
+    * (cell-clustered) parquet row groups. */
   def readRankedSnapshot(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    spark.read.schema("cell BIGINT, meta BIGINT, rank BIGINT").parquet(dir)
 
   /** Does a point rendered at zDraw use a brush larger than one pixel
     * anywhere (then splats may spill into adjacent tiles and the

@@ -2,8 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{BitPack, Cell, Mercator}
-import graft.encode.Feature
+import graft.core.{BitPack, Cell, Feature, Mercator}
 import java.nio.file.{Files, Paths}
 
 /** Output sinks of the engine beyond parquet: the reference's dump

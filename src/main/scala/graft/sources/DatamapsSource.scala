@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import graft.core.{BitPack, Cell}
-import graft.encode.Feature
+import graft.core.{BitPack, Cell, Feature}
 
 /**
  * Read the reference engine's own binary dataset format (the inverse of

@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import graft.core.{Cell, Mercator}
-import graft.encode.Feature
+import graft.core.{Cell, Feature, Mercator}
 
 /**
  * The reference's text ingest format as a Spark source (S1,

@@ -5,8 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
-import graft.core.Cell
-import graft.encode.Feature
+import graft.core.{Cell, Feature}
 import graft.sinks.Sinks
 import graft.sources.DatamapsSource
 

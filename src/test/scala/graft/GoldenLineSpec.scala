@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import graft.core._
-import graft.encode.Feature
 import graft.render.Render
 
 /** Golden tests for polyline rendering: the Spark pyramid line join +

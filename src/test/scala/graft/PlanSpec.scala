@@ -694,7 +694,7 @@ class PlanSpec extends AnyFunSuite {
     val lines = (0 until 50).map { i =>
       val c0 = graft.core.Cell.encode(1000000 * i, 2000000 * i)
       val c1 = graft.core.Cell.encode(1000000 * i + 50000000, 2000000 * i + 30000000)
-      graft.encode.Feature(c0, Array(c0, c1), i.toLong)
+      graft.core.Feature(c0, Array(c0, c1), i.toLong)
     }.toDS()
     val zooms = 0 to 8
     val p = graft.core.RenderParams()

@@ -145,7 +145,7 @@ class StreamingSaltSpec extends AnyFunSuite {
     val stream = graft.sources.TextSource.readStream(spark, dir, 16, 8)
     val q = StreamFixture.runToMemory(stream.toDF(), "txt_out")
     q.stop()
-    val streamed = spark.sql("SELECT * FROM txt_out").as[graft.encode.Feature].collect()
+    val streamed = spark.sql("SELECT * FROM txt_out").as[graft.core.Feature].collect()
       .map(f => (f.cell, f.vertices.toSeq, f.meta)).toSet
     assert(streamed == batch && batch.size == 3)
   }
