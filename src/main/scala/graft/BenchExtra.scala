@@ -20,6 +20,7 @@ import org.apache.spark.sql.functions.{col, lit}
  *   runMain graft.BenchExtra time [query...]
  *   runMain graft.BenchExtra jobs <query>
  *   runMain graft.BenchExtra rank <sortedDir> [reps]
+ *   runMain graft.BenchExtra read [table] [reps]
  */
 object BenchExtra {
   /** Cumulative counters a query run drains: jobs launched, stages run,
@@ -179,8 +180,35 @@ object BenchExtra {
         inputs.foreach { name =>
           println(f"median $name: ${walls(name).sorted.apply(walls(name).size / 2)}%.3f s over $reps reps")
         }
+      case "read" =>
+        // one table read two ways: spark.read.parquet (listing + schema
+        // inference job + relation resolution every time) and
+        // Bridge.parquetTable (resolved once per session); rep 0 warms up
+        val table = rest.headOption.getOrElse(s"$sfDir/lineitem.parquet")
+        val reps = rest.lift(1).map(_.toInt).getOrElse(20)
+        require(reps >= 1, "read: reps must be at least 1")
+        val probe = new Probe
+        spark.sparkContext.addSparkListener(probe)
+        val reads = Seq[(String, () => DataFrame)](
+          "inferred" -> (() => spark.read.parquet(table)),
+          "memoized" -> (() => org.apache.spark.sql.graft.Bridge.parquetTable(spark, table)))
+        val stats = scala.collection.mutable.Map.empty[String, Seq[(Double, Long)]].withDefaultValue(Nil)
+        for (rep <- 0 to reps; (name, read) <- reads) {
+          Thread.sleep(50)
+          val before = probe.snap()
+          val t0 = System.nanoTime()
+          read().queryExecution.analyzed
+          val ms = (System.nanoTime() - t0) / 1e6
+          Thread.sleep(200)
+          if (rep > 0) stats(name) :+= ((ms, probe.snap()._1 - before._1))
+        }
+        println("read,median_ms,jobs_per_read")
+        reads.foreach { case (name, _) =>
+          val xs = stats(name)
+          println(f"$name,${xs.map(_._1).sorted.apply(xs.size / 2)}%.2f,${xs.map(_._2).sum.toDouble / xs.size}%.2f")
+        }
       case other =>
-        sys.error(s"unknown BenchExtra mode '$other' (use explain|time|jobs|rank)")
+        sys.error(s"unknown BenchExtra mode '$other' (use explain|time|jobs|rank|read)")
     }
     spark.stop()
   }

@@ -8,6 +8,7 @@ import graft.query.TileOps
 import graft.join.{Knn, PipJoin}
 import graft.text.TextOps
 import graft.ann.Ann
+import org.apache.spark.sql.graft.Bridge
 
 /**
  * Driver contract: every implemented operator from SURVEY.md §2 has an
@@ -23,7 +24,7 @@ object SparkEntry {
   // ---------- shared derivations (Spark side) ----------
 
   private def li(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/lineitem.parquet")
+    Bridge.parquetTable(spark, s"$dir/lineitem.parquet")
 
   /** lineitem-derived point table: integer world coords + meta + cell. */
   private def points(spark: SparkSession, dir: String): DataFrame =
@@ -42,7 +43,7 @@ object SparkEntry {
        | FROM lineitem)""".stripMargin.replace("\n", " ")
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    Bridge.parquetTable(spark, s"$dir/documents.parquet")
 
   /** Deterministic PII planting for q53 (harness, not operator): the
     * synthetic corpus has no PII, so each doc gets an email always, an
@@ -171,7 +172,7 @@ object SparkEntry {
       "doc_id")
 
   private def emb(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    Bridge.parquetTable(spark, s"$dir/embeddings.parquet")
 
   // DuckDB: elementwise dot/cosine with the same left-to-right fold as
   // the engine's codegen kernels (bitwise-identical doubles); single
@@ -232,7 +233,7 @@ object SparkEntry {
     // U1/J3: multi-dataset bag union -> tile counts at z=4
     "q06_merge_union" -> ((s, d) => {
       val a = points(s, d).select(col("x32"), col("y32"))
-      val b = s.read.parquet(s"$d/orders.parquet").select(
+      val b = Bridge.parquetTable(s, s"$d/orders.parquet").select(
         x32(col("o_orderkey"), col("o_custkey")).as("x32"),
         y32(col("o_orderkey"), col("o_custkey")).as("y32"))
       a.unionByName(b)
@@ -253,7 +254,7 @@ object SparkEntry {
 
     // PIP: broadcast R-tree point-in-polygon join (scaled 26-bit coords)
     "q09_pip" -> ((s, d) => {
-      val nk = s.read.parquet(s"$d/nation.parquet")
+      val nk = Bridge.parquetTable(s, s"$d/nation.parquet")
         .select(col("n_nationkey").cast("long")).collect().map(_.getLong(0)).sorted
       val polys = PipJoin.scaled(PipJoin.trianglesFromKeys(nk.toSeq))
       val pts = points(s, d).select(
@@ -267,7 +268,7 @@ object SparkEntry {
       val pts = points(s, d).select(
         (col("l_orderkey") * 8 + col("l_linenumber")).as("id"),
         expr("x32 >> 8").as("x"), expr("y32 >> 8").as("y"))
-      val qs = s.read.parquet(s"$d/supplier.parquet")
+      val qs = Bridge.parquetTable(s, s"$d/supplier.parquet")
         .filter(col("s_suppkey") < 10)
         .select(col("s_suppkey").as("qid"),
           expr(s"${x32Sql("s_suppkey", "s_suppkey * 3 + 1")} >> 8").as("qx"),
@@ -496,7 +497,7 @@ object SparkEntry {
 
     // ---------- events (relational ops over the stream table) ----------
 
-    "q30_window_agg" -> ((s, d) => s.read.parquet(s"$d/events.parquet")
+    "q30_window_agg" -> ((s, d) => Bridge.parquetTable(s, s"$d/events.parquet")
       .select(col("event_type"),
         expr("unix_timestamp(ts) div 60").as("minute"),
         expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
@@ -565,7 +566,7 @@ object SparkEntry {
 
     // hash join + aggregation (lineitem x orders)
     "q33_join_agg" -> ((s, d) => {
-      val o = s.read.parquet(s"$d/orders.parquet")
+      val o = Bridge.parquetTable(s, s"$d/orders.parquet")
       li(s, d).join(o, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("cnt"),
@@ -590,7 +591,7 @@ object SparkEntry {
     // single-window path (PlanSpec asserts), so the oracle gate
     // validates the chunked implementation.
     "q45_asof_join" -> ((s, d) => {
-      val ev = s.read.parquet(s"$d/events.parquet")
+      val ev = Bridge.parquetTable(s, s"$d/events.parquet")
       val clicks = ev.filter(col("event_type") === "click")
       val views = ev.filter(col("event_type") === "view")
         .select(col("user_id"), col("ts"), col("event_id").as("view_id"))
@@ -605,11 +606,11 @@ object SparkEntry {
     // (hash equi-join on bucket ids; Catalyst alone would pick a
     // nested-loop/cartesian for the pure inequality condition)
     "q46_range_join" -> ((s, d) => {
-      val ev = s.read.parquet(s"$d/events.parquet")
+      val ev = Bridge.parquetTable(s, s"$d/events.parquet")
       val p = ev.filter(col("event_type") === "click")
         .select(col("event_id").as("pid"),
           expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("v"))
-      val i = s.read.parquet(s"$d/supplier.parquet")
+      val i = Bridge.parquetTable(s, s"$d/supplier.parquet")
         .select(col("s_suppkey").cast("long").as("iid"),
           expr("(s_suppkey * 1009) % 2000").cast("long").as("lo"),
           expr("(s_suppkey * 1009) % 2000 + 50 + (s_suppkey * 31) % 500").cast("long").as("hi"))
@@ -624,7 +625,7 @@ object SparkEntry {
       val pts = points(s, d).select(
         (col("l_orderkey") * 8 + col("l_linenumber")).as("id"),
         expr("x32 >> 8").as("x"), expr("y32 >> 8").as("y"))
-      val qs = s.read.parquet(s"$d/supplier.parquet")
+      val qs = Bridge.parquetTable(s, s"$d/supplier.parquet")
         .filter(col("s_suppkey") < 10)
         .select(col("s_suppkey").as("qid"),
           expr(s"${x32Sql("s_suppkey", "s_suppkey * 3 + 1")} >> 8").as("qx"),
@@ -635,7 +636,7 @@ object SparkEntry {
     // salient terms: top-3 per doc by tf among terms in <= 80% of docs
     // (integer-only keyword extraction; df cut replaces a stopword list)
     "q48_salient_terms" -> ((s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = Bridge.parquetTable(s, s"$d/documents.parquet")
       val maxDf = docs.count() * 4 / 5
       TextOps.salientTerms(docs, n = 3, maxDf = maxDf)
     }),
@@ -647,7 +648,7 @@ object SparkEntry {
     // Keys are one-pass 62-bit shingle hashes (the 100 TB shape); the
     // oracle recomputes the identical hash.
     "q49_contamination" -> ((s, d) => {
-      val all = s.read.parquet(s"$d/documents.parquet")
+      val all = Bridge.parquetTable(s, s"$d/documents.parquet")
       TextOps.contamination(
         all.filter(col("doc_id") >= 50), all.filter(col("doc_id") < 50), n = 4)
     }),
@@ -657,7 +658,7 @@ object SparkEntry {
     // that re-tokenizes differently (the complement of q49); rolling
     // char-30-gram hashes, one O(chars) pass per doc
     "q50_substr_contamination" -> ((s, d) => {
-      val all = s.read.parquet(s"$d/documents.parquet")
+      val all = Bridge.parquetTable(s, s"$d/documents.parquet")
       TextOps.substringContamination(
         all.filter(col("doc_id") >= 50), all.filter(col("doc_id") < 50), n = 30)
     }),
@@ -668,12 +669,12 @@ object SparkEntry {
     // frequency-capped so boilerplate can't go quadratic
     "q51_dup_spans" -> ((s, d) => {
       TextOps.duplicateSpans(
-        s.read.parquet(s"$d/documents.parquet"), n = 30, cap = 64)
+        Bridge.parquetTable(s, s"$d/documents.parquet"), n = 30, cap = 64)
     }),
 
     // SQL sessionization: gap > 600s starts a new session (lag + cumsum)
     "q35_sessions" -> ((s, d) => {
-      s.read.parquet(s"$d/events.parquet").createOrReplaceTempView("events_v")
+      Bridge.parquetTable(s, s"$d/events.parquet").createOrReplaceTempView("events_v")
       s.sql("""
         SELECT user_id, count(DISTINCT session_id) AS n_sessions, count(*) AS n_events
         FROM (
@@ -703,7 +704,7 @@ object SparkEntry {
 
     // semi/anti joins: orders with and without any lineitem in a range
     "q37_semi_anti" -> ((s, d) => {
-      val o = s.read.parquet(s"$d/orders.parquet")
+      val o = Bridge.parquetTable(s, s"$d/orders.parquet")
       val liBig = li(s, d).filter(col("l_quantity") >= 25)
       val withBig = o.join(liBig, col("o_orderkey") === col("l_orderkey"), "left_semi")
         .select(col("o_orderkey"), lit(1).as("has_big"))

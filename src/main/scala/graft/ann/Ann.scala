@@ -3,6 +3,7 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /**
  * Similarity search over an embedding column (array<float>) — the
@@ -304,7 +305,7 @@ object Ann {
     * Map-only + one partitioned append; the existing corpus is never
     * read or rewritten. */
   def appendIvfIndex(spark: SparkSession, vecs: DataFrame, dir: String): Unit = {
-    val (cids, cvecs) = collectCentroids(spark.read.parquet(s"$dir/centroids"))
+    val (cids, cvecs) = collectCentroids(Bridge.parquetTable(spark, s"$dir/centroids"))
     ivfAssign(vecs, cids, cvecs)
       .sortWithinPartitions(col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$dir/vectors")
@@ -317,13 +318,13 @@ object Ann {
     * the cell id exactly like the in-memory path. */
   def ivfTopKFromIndex(spark: SparkSession, dir: String, queries: DataFrame,
                        k: Int, nprobe: Int = 2): DataFrame = {
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = Bridge.parquetTable(spark, s"$dir/centroids")
     val (cids, cvecs) = collectCentroids(cents)
     val probes = queries.select(col("qid"), col("qvec"),
       explode(nearestCentroids(col("qvec"), cids, cvecs, nprobe)).as("cell"))
       .localCheckpoint(true)
     val cells = probes.select("cell").distinct().collect().map(_.getLong(0))
-    val asg = spark.read.parquet(s"$dir/vectors")
+    val asg = Bridge.parquetTable(spark, s"$dir/vectors")
     // partition-column type inference may read cell back as INT (small
     // cids): isin with Long literals would wrap the column in a cast,
     // which can defeat the plan-time pruning this collect exists to

@@ -34,9 +34,9 @@ object Png {
     * Adler-32 of its input. */
   private final class Segment(val bytes: Array[Byte], val adler: Int, val rawLen: Int)
 
-  /** 2^log2Rows identical rows of one pixel, as filter-0 scanlines of
+  /** `rows` identical rows of one pixel, as filter-0 scanlines of
     * `width` pixels in colour type `colorType`. */
-  private final case class RunKey(colorType: Int, width: Int, pixel: Int, log2Rows: Int)
+  private final case class RunKey(colorType: Int, width: Int, pixel: Int, rows: Int)
 
   // Per JVM, soft-bounded by the bytes it holds: past the bound it is
   // emptied and refills with the keys still in use. Segment bytes are a
@@ -86,8 +86,11 @@ object Png {
     *
     * IDAT is a zlib stream assembled from byte-aligned raw-deflate
     * segments: each maximal run of identical uniform rows of at least
-    * SpliceMinBytes is the cached segments for 2^k rows along the
-    * binary decomposition of the run length; each run of the other
+    * SpliceMinBytes is spliced from cached segments: in gray+alpha the
+    * segments for 2^k rows along the binary decomposition of the run
+    * length, in RGBA one segment for the whole run (each segment is a
+    * deflate block with its own code tables, which at 4 bytes a pixel
+    * cost more than the extra cache keys); each run of the other
     * rows is deflated on its own. The Adler-32 trailer is combined from
     * the segments' checksums. The output is a pure function of
     * (rgba, width, height). */
@@ -141,15 +144,18 @@ object Png {
       var e = runEnd(y)
       if (spliced(y, e)) {
         val px = pixelAt(rgba, y * stride)
-        val n = e - y
-        var k = 31 - Integer.numberOfLeadingZeros(n)
-        while (k >= 0) {
-          if ((n >>> k & 1) != 0) {
-            val seg = uniformRows(t, colorType, width, line, px, k)
-            adler = adlerCombine(adler, seg.adler, seg.rawLen)
-          }
-          k -= 1
+        def splice(rows: Int): Unit = {
+          val seg = uniformRows(t, colorType, width, line, px, rows)
+          adler = adlerCombine(adler, seg.adler, seg.rawLen)
         }
+        val n = e - y
+        if (gray) {
+          var k = 31 - Integer.numberOfLeadingZeros(n)
+          while (k >= 0) {
+            if ((n >>> k & 1) != 0) splice(1 << k)
+            k -= 1
+          }
+        } else splice(n)
       } else {
         var more = true
         while (more && e < height) {
@@ -235,16 +241,16 @@ object Png {
     }
   }
 
-  /** Appends the segment for 2^k uniform rows of pixel `px` onto t.out
+  /** Appends the segment for `rows` uniform rows of pixel `px` onto t.out
     * and returns it: from the cache, else deflated in place and cached. */
-  private def uniformRows(t: State, colorType: Int, width: Int, line: Int, px: Int, k: Int): Segment = {
-    val key = RunKey(colorType, width, px, k)
+  private def uniformRows(t: State, colorType: Int, width: Int, line: Int, px: Int, rows: Int): Segment = {
+    val key = RunKey(colorType, width, px, rows)
     val hit = runCache.get(key)
     if (hit != null) { t.out.put(hit.bytes); return hit }
     val pixel =
       if (colorType == 4) Array((px >>> 24).toByte, px.toByte)
       else Array((px >>> 24).toByte, (px >>> 16).toByte, (px >>> 8).toByte, px.toByte)
-    val len = line << k
+    val len = line * rows
     val raw = t.rowBuf(len)
     raw(0) = 0 // filter: none
     var j = 1

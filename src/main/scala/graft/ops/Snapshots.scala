@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -56,7 +57,7 @@ object Snapshots {
     df.write.mode("overwrite").parquet(dataDir)
     val files = listNames(Paths.get(dataDir))
       .filter(_.toString.endsWith(".parquet")).map(_.toString).sorted
-    val rows = df.sparkSession.read.parquet(dataDir).count()
+    val rows = df.sparkSession.read.schema(df.schema).parquet(dataDir).count()
     val manifest =
       s"""{"snapshot": $snap, "parents": [${parents.mkString(",")}],
          | "rows": $rows,
@@ -85,7 +86,7 @@ object Snapshots {
       .getOrElse(throw new IllegalStateException(s"no snapshot at $root"))
     def allFiles(s: Long): Seq[String] =
       manifestFiles(root, s) ++ manifestParents(root, s).flatMap(allFiles)
-    spark.read.parquet(allFiles(snap).distinct: _*)
+    Bridge.parquetTable(spark, allFiles(snap).distinct: _*)
   }
 
   /** Append: commit new data whose read() also includes the current

@@ -86,12 +86,12 @@ object ImageCuration {
             .filter(col("pixels") === col("b.pixels") && col("nid") === bitwise_not(col("b.mnid")))
             .select(col("nid"), col("cluster_size"))
 
-          informative.join(keptNids, "nid")
+          val kept = informative.join(keptNids, "nid")
             .select(col("image_id"), col("w"), col("h"), col("pixels"),
               col("dhash"), col("cluster_size"))
-            .write.mode("overwrite").parquet(outDir)
+          kept.write.mode("overwrite").parquet(outDir)
 
-          val out = spark.read.parquet(outDir)
+          val out = spark.read.schema(kept.schema).parquet(outDir)
           (out, ImageCurationCounts(nImages, nDecoded, nSized, nInformative, out.count()))
         } finally graft.ops.Checkpoint.release(scored)
       } finally graft.ops.Checkpoint.release(informative)

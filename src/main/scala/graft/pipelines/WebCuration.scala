@@ -123,12 +123,12 @@ object WebCuration {
         val seqs = TextOps.sequencePack(toks, "n_toks", "h", "doc_id", seqLen)
           .select(col("doc_id"), col("n_toks"), col("cum"),
             col("first_seq"), col("last_seq"))
-        kept.join(seqs, "doc_id")
+        val curated = kept.join(seqs, "doc_id")
           .select(col("doc_id"), col("url"), col("ts"), col("text"),
             col("n_toks"), col("cum"), col("first_seq"), col("last_seq"))
-          .write.mode("overwrite").parquet(outDir)
+        curated.write.mode("overwrite").parquet(outDir)
 
-        val out = spark.read.parquet(outDir)
+        val out = spark.read.schema(curated.schema).parquet(outDir)
         val agg = out.agg(count(lit(1)), coalesce(sum(col("n_toks")), lit(0L)),
           coalesce(max(col("last_seq")) + 1, lit(0L))).head()
         (out, CurationCounts(nPages, nExtracted, nLang, nQuality, nFluent,

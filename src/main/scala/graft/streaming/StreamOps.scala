@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
@@ -277,7 +278,7 @@ object StreamOps {
               val (ax, ay) = (Cell.tileKeyX(k) >> dz, Cell.tileKeyY(k) >> dz)
               (Cell.tileRangeLo(zmin, ax, ay), Cell.tileRangeHi(zmin, ax, ay))
             }.toSeq
-            val subset = spark.read.parquet(snapshotDir)
+            val subset = Bridge.parquetTable(spark, snapshotDir)
               .filter(graft.query.TileOps.cellInRanges(ranges))
             // broadcast the affected-tile set instead of capturing it in
             // |zArr| task closures (the renderPyramidSalted hotB pattern)
@@ -385,7 +386,7 @@ object StreamOps {
     Files.deleteIfExists(swapMarker)
     deleteRecursive(old)
     val ranked = graft.render.Render.withGlobalRank(
-      spark.read.parquet(snapshotDir).select(col("cell"), col("meta")))
+      Bridge.parquetTable(spark, snapshotDir).select(col("cell"), col("meta")))
     try {
       val tiles = graft.render.Render.renderPyramid(ranked, zooms, mapbits, p)
       graft.sinks.Sinks.writeTileset(tiles, tmp.toString, snapshotDir)

@@ -145,6 +145,24 @@ class PngSpec extends AnyFunSuite {
     assert(Png.decode(png)._1.sameElements(rgba))
   }
 
+  test("encode: an RGBA uniform run is one deflate segment, whatever its length") {
+    // row 0 random, rows 1-255 one orange pixel: one packed segment and
+    // one spliced segment, each ended by a full flush (00 00 FF FF)
+    val ts = 256
+    val rgba = new Array[Byte](4 * ts * ts)
+    new scala.util.Random(7).nextBytes(rgba)
+    for (i <- 4 * ts until rgba.length by 4) {
+      rgba(i) = 0xFF.toByte; rgba(i + 1) = 0x80.toByte; rgba(i + 2) = 0; rgba(i + 3) = 0x60
+    }
+    val png = Png.encode(rgba, ts, ts)
+    assert(png(25) == 6, s"colour type ${png(25)}")
+    val idat = chunks(png)._2
+    val flushes = idat.indices.count(i => i + 3 < idat.length &&
+      idat(i) == 0 && idat(i + 1) == 0 && idat(i + 2) == 0xFF.toByte && idat(i + 3) == 0xFF.toByte)
+    assert(flushes == 2, s"$flushes segments")
+    assert(Png.decode(png)._1.sameElements(rgba))
+  }
+
   test("decode: gray and gray+alpha PNGs written by ImageIO give their exact samples") {
     val w = 256; val h = 3
     for (alpha <- Seq(false, true)) {
