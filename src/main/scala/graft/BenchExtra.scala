@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, lit, pmod, shiftleft, xxhash64}
 
 /**
  * Measurement-only companion to [[Bench]] (guide §1.4 noop-sink
@@ -21,6 +21,7 @@ import org.apache.spark.sql.functions.{col, lit}
  *   runMain graft.BenchExtra jobs <query>
  *   runMain graft.BenchExtra rank <sortedDir> [reps]
  *   runMain graft.BenchExtra read [table] [reps]
+ *   runMain graft.BenchExtra dedup [rows] [reps] [--hot N]
  */
 object BenchExtra {
   /** Cumulative counters a query run drains: jobs launched, stages run,
@@ -60,6 +61,27 @@ object BenchExtra {
       .repartitionByRange(cpus * 2, col("cell"))
       .sortWithinPartitions(col("cell"), col("meta"))
       .write.parquet(dir)
+
+  /** perfbench's dedup input: `rows` generated image rows (seed 7) plus
+    * a same-pixels PNG copy (`<id>_re`) of every 50th, as parquet. */
+  private def writeDedupInput(spark: SparkSession, dir: String, rows: Long, cpus: Int): Unit = {
+    import spark.implicits._
+    val imgs = graft.tables.ImageTable.generate(spark, rows, 7L, partitions = cpus * 2)
+      .select("image_id", "bytes", "w", "h", "fmt")
+    val copies = imgs.filter(pmod(xxhash64(col("image_id")), lit(50)) === 0)
+      .as[(String, Array[Byte], Int, Int, String)]
+      .map { case (id, b, w, h, fmt) =>
+        (id + "_re", graft.media.Media.reencodePng(graft.media.Media.decode(id, b, w, h, fmt)), w, h, "png")
+      }.toDF("image_id", "bytes", "w", "h", "fmt")
+    imgs.unionByName(copies).write.parquet(dir)
+  }
+
+  /** `n` (nid, dhash) rows whose distinct hashes all share quarters 0
+    * and 1: one level-1 bucket (band 0) holds every one of them. */
+  private def hotBucket(spark: SparkSession, n: Long): DataFrame =
+    spark.range(n).select(col("id").as("nid"),
+      lit(0x5A5AA5A5L).bitwiseOR(
+        shiftleft((col("id") * 0x9E3779B1L).bitwiseAND(lit(0xFFFFFFFFL)), 32)).as("dhash"))
 
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
@@ -207,8 +229,66 @@ object BenchExtra {
           val xs = stats(name)
           println(f"$name,${xs.map(_._1).sorted.apply(xs.size / 2)}%.2f,${xs.map(_._2).sum.toDouble / xs.size}%.2f")
         }
+      case "dedup" =>
+        // the image dedup chain step by step (decode -> edges ->
+        // components -> names) on perfbench's dedup input, or with
+        // --hot N the edge pass alone over one level-1 bucket of N
+        // distinct hashes, whose recursion one task owns; rep 0 warms up
+        val hotAt = rest.indexOf("--hot")
+        val hot = if (hotAt < 0) None
+          else Some(rest.lift(hotAt + 1).getOrElse(sys.error("dedup: --hot needs N")).toLong)
+        val pos = if (hotAt < 0) rest else rest.patch(hotAt, Nil, 2)
+        val rows = pos.headOption.map(_.toLong).getOrElse(12000L)
+        val reps = pos.lift(1).map(_.toInt).getOrElse(5)
+        require(reps >= 1, "dedup: reps must be at least 1")
+        val probe = new Probe
+        val maxTaskMs = new java.util.concurrent.atomic.AtomicLong
+        spark.sparkContext.addSparkListener(probe)
+        spark.sparkContext.addSparkListener(new SparkListener {
+          override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+            maxTaskMs.accumulateAndGet(t.taskInfo.duration, math.max)
+        })
+        val walls = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(Double, Long)]]
+        def step[T](rep: Int, name: String)(body: => T): T = {
+          Thread.sleep(200)
+          val before = probe.snap()
+          maxTaskMs.set(0)
+          val t0 = System.nanoTime()
+          val out = body
+          val wall = (System.nanoTime() - t0) / 1e9
+          Thread.sleep(200)
+          val jobs = probe.snap()._1 - before._1
+          if (rep > 0) walls(name) = walls.getOrElse(name, Nil) :+ ((wall, jobs))
+          println(f"$name,$rep,$wall%.3f,$jobs,${maxTaskMs.get}")
+          out
+        }
+        println("step,rep,wall_s,jobs,max_task_ms")
+        hot match {
+          case Some(n) =>
+            val ids = hotBucket(spark, n).localCheckpoint(true)
+            for (rep <- 0 to reps)
+              step(rep, s"edges_hot$n")(noop(graft.media.Media.dupEdges(ids, maxHamming = 2)._1))
+          case None =>
+            val tmp = java.nio.file.Files.createTempDirectory("benchextra-dedup").toFile
+            val dir = s"$tmp/input"
+            writeDedupInput(spark, dir, rows, cpus)
+            try for (rep <- 0 to reps) {
+              val input = spark.read.parquet(dir)
+              val ids = step(rep, "decode")(graft.media.Media.dedupIds(input))
+              val edges = step(rep, "edges")(
+                graft.media.Media.dupEdges(ids, maxHamming = 2)._1.localCheckpoint(true))
+              val labels = step(rep, "components")(
+                graft.ops.Components.connectedComponents(edges).withColumnRenamed("node", "nid"))
+              step(rep, "names")(graft.media.Media.resolveNames(ids, labels)
+                .filter(col("image_id") =!= col("rep")).count())
+            } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+        }
+        walls.foreach { case (name, xs) =>
+          println(f"median $name: ${xs.map(_._1).sorted.apply(xs.size / 2)}%.3f s, " +
+            f"${xs.map(_._2).sum.toDouble / xs.size}%.1f jobs over $reps reps")
+        }
       case other =>
-        sys.error(s"unknown BenchExtra mode '$other' (use explain|time|jobs|rank|read)")
+        sys.error(s"unknown BenchExtra mode '$other' (use explain|time|jobs|rank|read|dedup)")
     }
     spark.stop()
   }

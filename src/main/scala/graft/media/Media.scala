@@ -1,6 +1,6 @@
 package graft.media
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import graft.core.Png
 
@@ -17,6 +17,12 @@ case class ImageFeatures(image_id: String, w: Int, h: Int,
  * binary columns with typed metadata (w, h, fmt); the pixel work
  * happens in batch-shaped mapPartitions. Payloads no codec in the JVM
  * can read are STUBBED with deterministic fakes (clearly marked).
+ *
+ * Image dedup is one chain in nid space: [[dedupIds]] (the one decode
+ * pass) -> [[dupEdges]] (ONE grouped banding pass, one shuffle: exact
+ * copies and every Hamming <= 2 pair, each edge once; the kernel is
+ * [[DupBands]]) -> ops.Components -> one name-resolve step. Batch,
+ * curation, the state writers and the image streams all run it.
  */
 object Media {
   /** Decode one payload. Real decoders: "raw" (interleaved RGB) and
@@ -227,145 +233,49 @@ object Media {
       .toDF("image_id", "dhash")
   }
 
-  private val chunkPairs = Seq((0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3))
-  private def otherTwo(i: Int, j: Int): (Int, Int) = {
-    val r = Seq(0, 1, 2, 3).filterNot(c => c == i || c == j)
-    (r(0), r(1))
-  }
-
-  /** One banding level over `bits`-bit residuals: each (doc_id, key,
-    * resid) row explodes into the six chunk-pair sub-bands of its
-    * residual (chunk = bits/4). Output key extends the parent key with
-    * (band, chunk_i, chunk_j); output resid packs the complementary two
-    * chunks (bits/2 wide). Pigeonhole: <= 2 differing bits touch at
-    * most two of the four chunks, so two hashes at Hamming <= 2 share
-    * at least one sub-band whose key matches EXACTLY.
-    *
-    * Key encoding: EXACT (lossless) packed Longs wherever the widths
-    * fit — the level-1 key is 3+32 bits and level 2 appends 3+16 more
-    * (54 total), so both pack into one shifted Long and the dominant
-    * level-1 groupBy/join shuffles 8-byte keys, not nested structs.
-    * The terminal level would need 65 bits, so it keys on a
-    * (parent-Long, sub-Long) struct pair — still exact, preserving the
-    * unconditional terminal all-pairs bound (a terminal bucket fixes
-    * 56 of 64 hash bits -> <= 2^8 distinct-hash members). */
-  private def subBands(members: DataFrame, bits: Int): DataFrame = {
-    val cs = bits / 4
-    val mask = (1L << cs) - 1
-    def chunk(n: Int) = shiftrightunsigned(col("resid"), n * cs).bitwiseAND(lit(mask))
-    members.select(col("doc_id"), col("dhash"),
-        explode(array(chunkPairs.zipWithIndex.map { case ((i, j), b) =>
-          val (k, l) = otherTwo(i, j)
-          val sub = lit(b.toLong << (2 * cs))
-            .bitwiseOR(shiftleft(chunk(i), cs)).bitwiseOR(chunk(j)) // 3 + 2*cs bits
-          val key =
-            if (bits == 16) struct(col("key").as("pk"), sub.as("sk"))
-            else shiftleft(col("key").cast("long"), 3 + 2 * cs).bitwiseOR(sub)
-          struct(key.as("key"),
-            shiftleft(chunk(k), cs).bitwiseOR(chunk(l)).as("resid"))
-        }: _*)).as("x"))
-      .select(col("doc_id"), col("dhash"), col("x.key").as("key"), col("x.resid").as("resid"))
-  }
-
-  /** Candidate pairs by recursive sub-banding. Buckets of <= cap members
-    * emit all pairs; hotter buckets RECURSE — their members share every
-    * hash bit except the bits/2-bit residual, which sub-bands again with
-    * the same pigeonhole guarantee. At bits == 16 a bucket fixes 56 of
-    * the 64 hash bits, so (with one row per DISTINCT hash) it holds at
-    * most 2^8 members and all-pairs is bounded — recursion terminates
-    * unconditionally, and NO true Hamming<=2 pair is ever dropped. This
-    * replaces the earlier star-pairs-to-bucket-min escape, whose
-    * unverifiable star edges had to be Hamming-filtered away, silently
-    * losing connectivity through any >cap band bucket. */
-  private def bandPairs(members: DataFrame, bits: Int, cap: Int,
-                        hold: DataFrame => DataFrame): DataFrame = {
-    val banded = subBands(members, bits)
-    // per-bucket stats via hash agg (map-side combine); singleton
-    // buckets — the vast majority — never rejoin (AQE broadcasts the
-    // small collided-stat set, cf. TextOps.cappedCandidatePairs)
-    val stats = banded.groupBy(col("key"))
-      .agg(count(lit(1)).as("bcnt"))
-      .filter(col("bcnt") >= 2)
-    // EAGER checkpoint of the (collided-members-only, candidate-sized)
-    // join result: its three consumers — the self-join's two sides and
-    // the hot-bucket recursion — would otherwise each re-evaluate the
-    // FULL corpus explode+groupBy, and every recursion level would
-    // re-derive its ancestors' (profiled: the level-1 pass alone ran
-    // ~4x per action, >half the dedup band phase, to produce pairs
-    // from a few thousand collided rows)
-    val collided = hold(banded.join(stats, Seq("key")).localCheckpoint(true))
-    val terminal = bits <= 16
-    val allowAll = if (terminal) collided else collided.filter(col("bcnt") <= cap)
-    // each side carries its member's ORIGINAL 64-bit hash (it rode the
-    // banding as one extra 8-byte column on candidate-sized rows), so
-    // the exact Hamming verify filters RIGHT HERE — the former
-    // re-attach joined the full distinct-hash table back TWICE per
-    // dedup (two corpus-sized shuffle joins) to recover dh_a/dh_b
-    val allPairs = allowAll.as("a").join(allowAll.as("b"),
-        col("a.key") === col("b.key") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("img_a"), col("b.doc_id").as("img_b"),
-        col("a.dhash").as("dh_a"), col("b.dhash").as("dh_b"))
-    if (terminal) allPairs
-    else {
-      val hot = collided.filter(col("bcnt") > cap)
-        .select(col("doc_id"), col("dhash"), col("key"), col("resid"))
-      allPairs.unionByName(bandPairs(hot, bits / 2, cap, hold))
-    }
-  }
-
-  /** Near-duplicate image pairs from dhashes via recursive chunk-pair
-    * banding: level 1 buckets on six 32-bit quarter-pair keys (<= 2
-    * differing bits leave some pair of 16-bit quarters untouched —
-    * pigeonhole); buckets hotter than the quadratic-safety cap recurse
-    * into sub-bands of their residual bits instead of degrading to
-    * star pairs, so recall is 1.0 for Hamming <= maxHamming
-    * UNCONDITIONALLY (see [[bandPairs]]). The exact Hamming check is a
-    * map-side filter on the candidate pairs (each side's 8-byte hash
-    * rides the banding) — band shuffles carry (id, hash, key) rows
-    * only, never payloads.
-    *
-    * Exact-duplicate hashes are collapsed INTERNALLY before banding
-    * (the terminal level's all-pairs bound needs one row per distinct
-    * hash — without this, a mega-cluster of identical images would go
-    * quadratic, the exact failure the old hot-bucket cap guarded):
-    * duplicates re-attach by Hamming-0 star edges to their group's min
-    * id. The output is therefore CONNECTIVITY-preserving — every true
-    * near-dup pair is in the same connected component of the result —
-    * not the full quadratic pair set when exact duplicates exist.
-    * Distinct-hash inputs get the complete verbatim pair set. The
-    * engine's own clustering does not call this: it bands its nid-space
-    * rep table directly ([[dupEdges]]). */
-  def imageNearDupPairs(hashes: DataFrame, maxHamming: Int = 2): DataFrame = {
-    val distinctH = hashes.groupBy(col("dhash")).agg(min(col("image_id")).as("image_id"))
-    val exactStars = hashes
-      .join(distinctH.select(col("dhash"), col("image_id").as("rep_id")), "dhash")
-      .filter(col("image_id") =!= col("rep_id"))
-      .select(col("rep_id").as("img_a"), col("image_id").as("img_b"))
-    verifiedPairs(distinctH.select(col("image_id").as("doc_id"), col("dhash")), maxHamming, identity)
-      .unionByName(exactStars)
-  }
-
-  /** Hamming-verified near-dup pairs (img_a, img_b) over ONE row per
-    * distinct hash (doc_id, dhash): recursive banding from level 1,
-    * then the exact Hamming check as a map-side filter. The distinct
-    * runs over (ids, hashes), but dh_a/dh_b are functions of the ids,
-    * so it dedupes (img_a, img_b). */
-  private def verifiedPairs(reps: DataFrame, maxHamming: Int,
-                            hold: DataFrame => DataFrame): DataFrame = {
+  /** Duplicate-graph edges over an (id, dhash) projection in ONE grouped
+    * pass: every row explodes into its six level-1 band keys
+    * ([[packedBandKeys]], the key the state index uses), the rows are
+    * hash-partitioned on the key and sorted by (key, dhash, id), and
+    * [[DupBands.edges]] streams each bucket: copies of a hash collapse
+    * to their min id with one star edge per other copy (from band 0),
+    * and distinct hashes at Hamming <= maxHamming pair up exactly once,
+    * from the first band they share; a bucket of more than
+    * [[DupBands.Cap]] distinct hashes recurses in the task over the
+    * sub-bands of its residual bits, down to the terminal level whose
+    * buckets fix 56 of the 64 bits (<= 2^8 distinct hashes). Recall at
+    * Hamming <= 2 is 1.0 unconditionally, and one exchange carries only
+    * (key, dhash, id) rows. */
+  private def bandEdges[I](hashes: DataFrame, id: String, maxHamming: Int)(
+      implicit rows: Encoder[(Long, Long, I)], pairs: Encoder[(I, I)]): Dataset[(I, I)] = {
     require(maxHamming <= 2, "chunk-pair banding only guarantees recall for Hamming <= 2")
-    val members = reps.select(col("doc_id"), col("dhash"), lit(0L).as("key"), col("dhash").as("resid"))
-    bandPairs(members, 64, cap = 64, hold).distinct()
-      .filter(graft.text.TextOps.hamming64(col("dh_a"), col("dh_b")) <= maxHamming)
-      .select(col("img_a"), col("img_b"))
+    hashes.select(explode(packedBandKeys(col("dhash"))).as("key"), col("dhash"), col(id))
+      .repartition(col("key"))
+      .sortWithinPartitions(col("key"), col("dhash"), col(id))
+      .as[(Long, Long, I)]
+      .mapPartitions(DupBands.edges(_, maxHamming))
+  }
+
+  /** Near-duplicate image pairs (img_a, img_b) from (image_id, dhash)
+    * rows, by the same one-pass banding as the engine's own dedup
+    * ([[bandEdges]]). Identical hashes collapse to their min image_id,
+    * and each other copy attaches to it by one Hamming-0 star edge: the
+    * output is CONNECTIVITY-preserving (every true near-dup pair lies in
+    * one connected component of it), not the full quadratic pair set
+    * when exact duplicates exist. Distinct-hash inputs get the complete
+    * pair set, each pair once. */
+  def imageNearDupPairs(hashes: DataFrame, maxHamming: Int = 2): DataFrame = {
+    val spark = hashes.sparkSession
+    import spark.implicits._
+    bandEdges[String](hashes, "image_id", maxHamming).toDF("img_a", "img_b")
   }
 
   // ---------- the dedup chain, entirely in nid space ----------
   //
-  // dedupIds -> dupEdges (exact pregroup + banded near-dup edges) ->
-  // Components -> nid labels -> one name-resolve step. Batch, phased,
-  // stateful and streaming-state clustering all run it; curation enters
-  // at dupEdges (imageDupLabelsNid) with its own one-pass features +
-  // dhash projection.
+  // dedupIds -> dupEdges (one grouped banding pass) -> Components -> nid
+  // labels -> one name-resolve step. Batch, phased, stateful and
+  // streaming-state clustering all run it; curation enters at dupEdges
+  // (imageDupLabelsNid) with its own one-pass features + dhash projection.
 
   /** images df (image_id, bytes, w, h, fmt) -> (image_id, dhash, nid):
     * the one payload-decode pass every dedup entry point starts from.
@@ -379,36 +289,15 @@ object Media {
     dhashes(images).withColumn("nid", xxhash64(col("image_id"))).localCheckpoint(true)
 
   /** Duplicate-graph edges (a, b) as nids over a [[dedupIds]]
-    * projection, plus the distinct-hash rep table (nid, dhash). Only
-    * nid + dhash are read: no image_id string rides any shuffle or
-    * checkpoint here.
-    *
-    * Exact pregroup first: identical dhashes (byte-identical and
-    * re-encoded copies — the BULK of web-corpus duplication) collapse by
-    * a plain hash aggregation, a star edge per member to the min nid, so
-    * banding sees ONE representative per distinct hash (a million-copy
-    * image contributes one band row, never a mega-bucket — and the
-    * terminal level's all-pairs bound holds). The grouped projection is
-    * eagerly checkpointed: the star edges, the banding and callers'
-    * rep-table reads would each re-run the groupBy+join otherwise.
-    *
-    * Then the rep table bands directly (it is one row per distinct hash
-    * BY CONSTRUCTION, so [[imageNearDupPairs]]' re-distinct and
-    * exact-star passes are skipped). `hold` registers every checkpoint
-    * made here, for a caller that frees them once the edges are
-    * materialized ([[graft.ops.Checkpoint.holding]]). */
-  private[graft] def dupEdges(ids: DataFrame, maxHamming: Int,
-                              hold: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
-    val slim = ids.select(col("nid"), col("dhash"))
-    val groups = slim.groupBy(col("dhash")).agg(min(col("nid")).as("grep"))
-    val withRep = hold(slim.join(groups, "dhash").localCheckpoint(true))
-    val exactEdges = withRep.filter(col("nid") =!= col("grep"))
-      .select(col("nid").as("a"), col("grep").as("b"))
-    val repIds = withRep.filter(col("nid") === col("grep")).drop("grep")
-    val nearEdges = verifiedPairs(repIds.select(col("nid").as("doc_id"), col("dhash")),
-      maxHamming, hold)
-      .select(col("img_a").as("a"), col("img_b").as("b"))
-    (exactEdges.unionByName(nearEdges), repIds)
+    * projection ([[bandEdges]]: exact copies and near pairs in one
+    * shuffle), plus the distinct-hash rep table (dhash, nid): a lazy
+    * aggregation that only the state writers read. Only nid + dhash are
+    * read: no image_id string rides any shuffle here. */
+  private[graft] def dupEdges(ids: DataFrame, maxHamming: Int): (DataFrame, DataFrame) = {
+    val spark = ids.sparkSession
+    import spark.implicits._
+    (bandEdges[Long](ids, "nid", maxHamming).toDF("a", "b"),
+      ids.groupBy(col("dhash")).agg(min(col("nid")).as("nid")))
   }
 
   /** Components over a dup-edge list: (nid, rep) for every node with an
@@ -416,20 +305,19 @@ object Media {
   private def componentLabels(edges: DataFrame): DataFrame =
     graft.ops.Components.connectedComponents(edges).withColumnRenamed("node", "nid")
 
-  /** The name-resolve step: (image_id, nid, rep) for every image, rep
-    * the image_id of its component's min nid (singletons label
-    * themselves). Only nids that ARE a component rep need resolving — a
-    * component-count-sized set — which keeps both joins broadcastable
-    * (an unrestricted name map would be a corpus x corpus shuffle join
-    * at scale). `hold` registers the labels checkpoint
-    * ([[graft.ops.Checkpoint.holding]]). */
-  private def resolveNames(ids: DataFrame, edges: DataFrame,
-                           hold: DataFrame => DataFrame = identity): DataFrame = {
-    val labels = hold(componentLabels(edges)
-      .localCheckpoint(true)) // duplicate-node-sized; feeds two joins + the rep set
+  /** The name-resolve step over component `labels` (nid, rep): (image_id,
+    * nid, rep) for every image, rep the image_id of its component's min
+    * nid (singletons label themselves). Only nids that ARE a component
+    * rep need resolving — a component-count-sized set — which keeps both
+    * joins broadcastable (an unrestricted name map would be a corpus x
+    * corpus shuffle join at scale). `hold` registers the labels
+    * checkpoint ([[graft.ops.Checkpoint.holding]]). */
+  private[graft] def resolveNames(ids: DataFrame, labels: DataFrame,
+                                  hold: DataFrame => DataFrame = identity): DataFrame = {
+    val held = hold(labels.localCheckpoint(true)) // duplicate-node-sized; feeds two joins + the rep set
     val repNames = ids.select(col("nid").as("rep"), col("image_id").as("rep_id"))
-      .join(labels.select(col("rep")).distinct(), "rep")
-    ids.select(col("image_id"), col("nid")).join(labels, Seq("nid"), "left")
+      .join(held.select(col("rep")).distinct(), "rep")
+    ids.select(col("image_id"), col("nid")).join(held, Seq("nid"), "left")
       .join(repNames, Seq("rep"), "left")
       .select(col("image_id"), col("nid"), coalesce(col("rep_id"), col("image_id")).as("rep"))
   }
@@ -445,33 +333,24 @@ object Media {
     * (`ids` needs only nid + dhash), so downstream per-cluster
     * aggregations move 8-byte keys only; attach names at the end by
     * joining back on nid. */
-  def imageDupLabelsNid(ids: DataFrame, maxHamming: Int = 2): DataFrame = {
-    // components checkpoint (or collect) the edges first, so the
-    // edge build's own checkpoints are dead once the labels exist
-    val labels = graft.ops.Checkpoint.holding { hold =>
-      componentLabels(dupEdges(ids, maxHamming, hold)._1)
-    }
-    ids.select(col("nid")).join(labels, Seq("nid"), "left")
+  def imageDupLabelsNid(ids: DataFrame, maxHamming: Int = 2): DataFrame =
+    ids.select(col("nid")).join(componentLabels(dupEdges(ids, maxHamming)._1), Seq("nid"), "left")
       .select(col("nid"), coalesce(col("rep"), col("nid")).as("rep"))
-  }
 
   /** [[imageDupClusters]] with per-phase wall timings for the bench:
     * returns (labels, decodeSec, bandSec) — decode = payload scan ->
-    * [[dedupIds]] (checkpoint-forced), band = pregroup + recursive
-    * banding + Hamming verify to the edge list (checkpoint-forced);
-    * components run eagerly inside the returned labels' construction,
-    * and the rep-name joins are what the caller's terminal action
-    * pays. */
+    * [[dedupIds]] (checkpoint-forced), band = the grouped banding pass
+    * to the edge list (checkpoint-forced); components run eagerly
+    * inside the returned labels' construction, and the rep-name joins
+    * are what the caller's terminal action pays. */
   def imageDupClustersPhased(images: DataFrame, maxHamming: Int = 2): (DataFrame, Double, Double) = {
     val t0 = System.nanoTime()
     val ids = dedupIds(images)
     val tDecode = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
-    val edges = graft.ops.Checkpoint.holding { hold =>
-      dupEdges(ids, maxHamming, hold)._1.localCheckpoint(true)
-    }
+    val edges = dupEdges(ids, maxHamming)._1.localCheckpoint(true)
     val tBand = (System.nanoTime() - t1) / 1e9
-    (resolveNames(ids, edges).drop("nid"), tDecode, tBand)
+    (resolveNames(ids, componentLabels(edges)).drop("nid"), tDecode, tBand)
   }
 
   // ---------- incremental image dedup against persisted state ----------
@@ -481,7 +360,7 @@ object Media {
     * (band << 32) | (quarter_i << 16) | quarter_j. */
   private def packedBandKeys(dhash: Column): Column = {
     def quarter(i: Int) = shiftrightunsigned(dhash, i * 16).bitwiseAND(lit(0xFFFFL))
-    array(chunkPairs.zipWithIndex.map { case ((i, j), b) =>
+    array(DupBands.chunks.toSeq.zipWithIndex.map { case ((i, j, _, _), b) =>
       lit(b.toLong << 32).bitwiseOR(shiftleft(quarter(i), 16)).bitwiseOR(quarter(j))
     }: _*)
   }
@@ -500,11 +379,10 @@ object Media {
     graft.ops.Checkpoint.holding { hold =>
       // ONE payload-decode pass feeds both the clustering and the index
       val ids = hold(dedupIds(images))
-      val (edges, repIds) = dupEdges(ids, maxHamming, hold)
-      val labels = resolveNames(ids, edges, hold).localCheckpoint(true)
-      // each distinct hash finds its label by its rep member's nid — the
-      // rep table already holds one (nid, dhash) per distinct hash, so no
-      // extra distinct pass runs here
+      val (edges, repIds) = dupEdges(ids, maxHamming)
+      val labels = resolveNames(ids, componentLabels(edges), hold).localCheckpoint(true)
+      // each distinct hash finds its label by its min member's nid: one
+      // index row per (distinct hash, band)
       val distinctHash = repIds.join(labels.select(col("nid"), col("rep")), "nid")
         .select(col("dhash"), col("rep"), xxhash64(col("rep")).as("rep_nid"))
       graft.ops.StateLease.writeBandIndex(table, dir, buckets, rebuild = true)(
@@ -521,7 +399,7 @@ object Media {
     * state ([[appendImageDedupState]]) reuse the same projection, so
     * the batch decodes ONCE.
     *
-    * Within the batch: the full recursive banding (recall 1.0 at
+    * Within the batch: the one grouped banding pass (recall 1.0 at
     * Hamming <= maxHamming). Across the batch/corpus boundary: new
     * hashes probe the bucketed level-1 band index — the corpus side
     * never shuffles; only (new-hash, band) rows do — and verify by
@@ -542,7 +420,7 @@ object Media {
   def incrementalImageDedup(ids: DataFrame, bandsTable: String, maxHamming: Int = 2,
                             hold: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
     val spark = ids.sparkSession
-    val (batchEdges, repIds) = dupEdges(ids, maxHamming, hold)
+    val (batchEdges, repIds) = dupEdges(ids, maxHamming)
     // boundary probe: new distinct hashes explode their 6 band keys and
     // join the BUCKETED index — corpus side shuffle-free — then verify
     // by exact Hamming against the matched member hash. The hit set is

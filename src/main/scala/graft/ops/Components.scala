@@ -141,26 +141,25 @@ object Components {
   def connectedComponentsWithStats(edges: DataFrame, maxIter: Int = 32,
                                    smallGraphEdges: Long = 1L << 20,
                                    hubDegree: Long = 1L << 20): (DataFrame, Seq[RoundStats]) = {
-    var cur = edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    var fp = fingerprint(cur)
-    var stats = Vector.empty[RoundStats]
-    val inputEdges = fp._1
+    // the checkpoint's own job counts the edges: the small-graph gate
+    // costs no action of its own
+    val (input, inputEdges) = org.apache.spark.sql.graft.Bridge.localCheckpointCounted(
+      edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+        .filter(col("a") =!= col("b"))
+        .distinct())
     // Small-graph fast path: a pair graph that fits on the driver skips
     // the ~6-shuffle-per-round distributed loop (same move Spark itself
     // makes when it broadcasts a small join side). The distributed path
     // below is the 100 TB shape; ComponentsSpec exercises both.
-    if (fp._1 <= smallGraphEdges) {
+    if (inputEdges <= smallGraphEdges) {
       val spark = edges.sparkSession
       import spark.implicits._
       val parent = scala.collection.mutable.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+        while (parent(r) != r) r = parent(r)
         var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+        while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
         r
       }
       // collect(), NOT toLocalIterator(): the iterator launches one job
@@ -168,21 +167,22 @@ object Components {
       // trips for a few MB of edges — it dominated every small-graph
       // caller's wall time), while the gate already bounds the pull at
       // smallGraphEdges (2^20) pairs of Longs ≈ 16 MB — driver-safe.
-      cur.select("a", "b").as[(Long, Long)].collect().foreach {
-        case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      input.as[(Long, Long)].collect().foreach { case (a, b) =>
+        parent.getOrElseUpdate(a, a)
+        parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      Checkpoint.release(cur)
-      val out = parent.keysIterator.map(v => (v, find(v))).toSeq ++
-        parent.values.map(r => { val rr = find(r); (rr, rr) }).toSeq.distinct
-      return (out.distinct.toDF("node", "rep")
-        .groupBy("node").agg(min(col("rep")).as("rep")), Nil)
+      Checkpoint.release(input)
+      // one row per node, rep = its root = the component min: a local
+      // relation, so reading the labels runs no job and no shuffle
+      return (parent.keysIterator.map(v => (v, find(v))).toSeq.toDF("node", "rep"), Nil)
     }
+    var cur = input
+    var fp = fingerprint(cur)
+    var stats = Vector.empty[RoundStats]
     var it = 0
-    // fingerprint already counted the edges — a cur.isEmpty here would
-    // launch a second job per connectedComponents call for the same bit
-    var converged = fp._1 == 0L
+    var converged = inputEdges == 0L
     while (!converged && it < maxIter) {
       // the round's two re-parent maps are dead once `next` is materialized
       val (next, lsHubs, ssHubs) = Checkpoint.holding { hold =>

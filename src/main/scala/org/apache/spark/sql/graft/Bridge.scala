@@ -9,6 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -69,6 +70,21 @@ object Bridge {
   /** A DataFrame over internal rows of `schema`. */
   def fromInternalRows(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** `df.localCheckpoint(eager = true)` plus its row count, from the
+    * same job: the checkpoint's rows are counted as they are stored, so
+    * a caller that needs both pays one job, not a second action. */
+  def localCheckpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      val rows = qe.executedPlan.execute().map(_.copy())
+      rows.localCheckpoint()
+      val n = rows.count()
+      (org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+        LogicalRDD.fromDataset(rows, ds, ds.isStreaming)), n)
+    }
+  }
 
   /** A memoized parquet read: the session's context (the entry dies
     * with it), the stamp of the files it was resolved from, and the

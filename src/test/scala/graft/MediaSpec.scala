@@ -406,10 +406,19 @@ class MediaSpec extends AnyFunSuite {
     val cRows = originals.drop(60) ++ Seq(re(45, "_rc"))
     val dir = java.nio.file.Files.createTempDirectory("dedupappend").toString
     val tbl = "dedup_append_bands"
+    // the index holds exactly one row per (distinct hash, level-1 band)
+    def sixPerHash(rows: Seq[graft.tables.ImageRow]): Unit = {
+      val distinct = Media.dhashes(spark.createDataset(rows).toDF()).select("dhash").distinct().count()
+      val perHash = spark.table(tbl).groupBy("dhash").count()
+      assert(perHash.count() == distinct, s"${perHash.count()} indexed hashes, $distinct distinct")
+      assert(perHash.filter(col("count") =!= 6).count() == 0, "a hash without exactly 6 band rows")
+    }
     Media.writeImageDedupState(spark.createDataset(aRows).toDF(), dir, tbl, buckets = 4)
+    sixPerHash(aRows)
     val (bl, _) = Media.incrementalImageDedup(Media.dedupIds(spark.createDataset(bRows).toDF()), tbl)
     val blM = bl.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     Media.appendImageDedupState(Media.dedupIds(spark.createDataset(bRows).toDF()), bl, tbl, dir, buckets = 4)
+    sixPerHash(aRows ++ bRows)
     val (cl, _) = Media.incrementalImageDedup(Media.dedupIds(spark.createDataset(cRows).toDF()), tbl)
     val clM = cl.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val b45 = originals(45).image_id

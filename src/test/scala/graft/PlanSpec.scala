@@ -114,16 +114,7 @@ class PlanSpec extends AnyFunSuite {
       || lshPlan.contains("BroadcastHashJoin"), lshPlan.take(1500))
   }
 
-  /** all physical nodes including those under adaptive wrappers. */
-  def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => Seq(a.inputPlan)
-      case s: org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec => Seq(s.plan)
-      case b: org.apache.spark.sql.execution.adaptive.BroadcastQueryStageExec => Seq(b.plan)
-      case other => other.children
-    }
-    p +: kids.flatMap(allNodes)
-  }
+  def allNodes(p: SparkPlan): Seq[SparkPlan] = SparkProbe.allNodes(p)
 
   // parquet-backed embeddings: a local relation constant-folds into a
   // LocalTableScan, hiding the real scan/exchange shapes
@@ -751,7 +742,7 @@ class PlanSpec extends AnyFunSuite {
     }
     try {
       val originals = (0L until 40L).map(i => graft.tables.ImageTable.row(42L, i))
-      // exact copies (the pregroup's stars) + re-encodes (banded pairs)
+      // exact copies (star edges) + re-encodes (near pairs)
       val copies = Seq(3, 9).map(i => originals(i).copy(image_id = originals(i).image_id + "_cp"))
       val reencodes = Seq(0, 7).map { i =>
         val o = originals(i)
@@ -759,8 +750,8 @@ class PlanSpec extends AnyFunSuite {
         o.copy(image_id = o.image_id + "_re", bytes = Media.reencodePng(img), fmt = "png")
       }
       val ids = Media.dedupIds(spark.createDataset(originals ++ copies ++ reencodes).toDF())
-      // every action from here on (pregroup + banding checkpoints, the
-      // final count) is captured; the decode pass above is not
+      // every action from here on (the banding pass and the final
+      // count) is captured; the decode pass above is not
       org.apache.spark.TestBus.drain(spark.sparkContext)
       spark.listenerManager.register(listener)
       val nEdges =

@@ -1,8 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
@@ -30,28 +28,7 @@ class TableReadSpec extends AnyFunSuite {
     path.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(path).toString
   }
 
-  /** Spark jobs started while `body` runs. A marker job after `body`
-    * flushes the listener queue: its start event arrives after every
-    * event `body` caused. */
-  private def jobsIn[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val tag = s"tableread-marker-${System.nanoTime()}"
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(p => p.getProperty("spark.job.description") == tag)) marker.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS), "marker job never reached the listener")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(l)
-  }
+  private def jobsIn[T](body: => T): (T, Int) = SparkProbe.jobsIn(spark)(body)
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 

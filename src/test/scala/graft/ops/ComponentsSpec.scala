@@ -50,6 +50,21 @@ class ComponentsSpec extends AnyFunSuite {
     }
   }
 
+  test("small graph: at most three jobs, and labels read without an exchange") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(77)
+    val edges = Seq.fill(400)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
+    val input = edges.toDF("a", "b").localCheckpoint(true)
+    val (labels, jobs) = graft.SparkProbe.jobsIn(spark)(Components.connectedComponents(input))
+    assert(jobs <= 3, s"the driver path ran $jobs jobs")
+    val exchanges = graft.SparkProbe.allNodes(labels.queryExecution.executedPlan).collect {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e
+    }
+    assert(exchanges.isEmpty, labels.queryExecution.executedPlan.toString)
+    assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      ufComponents(300, edges.filter { case (a, b) => a != b }))
+  }
+
   test("a 500-node chain collapses to one component (log-round convergence)") {
     val edges = (0L until 499L).map(i => (i, i + 1))
     val got = run(edges, distributed = true)

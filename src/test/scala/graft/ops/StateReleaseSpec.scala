@@ -35,7 +35,7 @@ class StateReleaseSpec extends AnyFunSuite {
   test("writeImageDedupState keeps only the returned labels' checkpoint") {
     import spark.implicits._
     val originals = (0L until 24L).map(i => ImageTable.row(91L, i))
-    // re-encoded copies: exact-pregroup edges, so components run
+    // re-encoded copies: exact-copy star edges, so components run
     val copies = originals.take(6).map { o =>
       val img = Media.decode(o.image_id, o.bytes, o.w, o.h, o.fmt)
       o.copy(image_id = o.image_id + "_re", bytes = Media.reencodePng(img), fmt = "png")
